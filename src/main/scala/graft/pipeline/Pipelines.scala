@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -206,7 +207,10 @@ object Pipelines {
     * registry appends' refresh-by-path cannot re-trigger the scan
     * and no later stage touches `textCol` again (IngestBatchSpec
     * pins one scan in the executed plan). History is never read at
-    * all — each registry probe joins its bucketed index table.
+    * all — each registry probe joins its bucketed index table. The
+    * survivors are pinned the same way, and the funnel counts are one
+    * aggregate over pinned frames: the lane chain runs once per call,
+    * and reading `survivors` afterwards is one job.
     *
     * Stage order is a documented choice: registries record their
     * stage's survivors BEFORE decontamination, so a future copy of a
@@ -270,16 +274,6 @@ object Pipelines {
             Dedup.shingles(col(textCol), p.shingleW), p.k)
             .as("__msig")))): _*)
       .localCheckpoint()
-    // funnel counts ride the pinned/checkpointed frames instead of
-    // re-executing the stage joins: nIn + nQuality in ONE aggregate
-    // over the pinned batch; nExact/nNear equal their kept sets BY
-    // CONSTRUCTION (each kept digest/signature names exactly one
-    // surviving batch row — IngestBatchSpec pins the funnels), so
-    // counting the checkpointed survivors is free of join work. At 3
-    // batches × 4 stages the saved jobs were ~40% of the q244 demo.
-    val hdr = derived.agg(count(lit(1)),
-      count(when(col("__len") >= minChars, 1))).head()
-    val (nIn, nQuality) = (hdr.getLong(0), hdr.getLong(1))
 
     val quality = derived.filter(col("__len") >= minChars)
 
@@ -289,49 +283,39 @@ object Pipelines {
     val exact = quality.join(
       keptDigests.select(col("h"), col("keep_id").as("doc_id")),
       Seq("doc_id", "h"), "left_semi")
-    val nExact = keptDigests.count()
 
     val keptNear = Registry.nearIngestSims(spark, nearReg,
       exact.select(col("doc_id"), col("simhash")), batchNo, tables,
       maxHamming)
     val near = exact.join(keptNear.select(col("doc_id")),
       Seq("doc_id"), "left_semi")
-    val nNear = keptNear.count()
 
     // optional Jaccard lane (the q249 registry) between the SimHash
     // and vector lanes: catches set-overlap duplicates whose hamming
     // distance passed the near gate — enabled when the caller
     // maintains a minhash registry; the signature derives in the one
     // text scan above at the registry's own (k, bands)
-    val (jac, nMinhash) = minhashReg match {
-      case Some(reg) =>
-        val keptM = Registry.minhashIngestSigs(spark, reg,
-          near.select(col("doc_id"), col("__msig").as("sig")),
-          batchNo, minMatches)
-        (near.join(keptM.select(col("doc_id")), Seq("doc_id"),
-          "left_semi"), keptM.count())
-      case None => (near, -1L)
-    }
+    val keptM = minhashReg.map(reg => Registry.minhashIngestSigs(spark,
+      reg, near.select(col("doc_id"), col("__msig").as("sig")),
+      batchNo, minMatches))
+    val jac = keptM.fold(near)(k =>
+      near.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
 
-    val (vec, nVec) = vecReg match {
-      case Some(reg) =>
-        // a doc with a NULL embedding cannot probe the vector lane
-        // (vecIngest excludes nulls whole), but it must NOT vanish
-        // from the corpus (r13 advisory #1): only non-null rows pass
-        // through the vec gate; null-embedding near-survivors rejoin
-        // the survivor set unchanged — unique TEXT with a missing
-        // embedding stays a survivor, documented convention
-        val withV = jac.filter(col("__vec").isNotNull)
-        val keptVec = Registry.vecIngest(spark, reg,
-          withV.select(col("doc_id"), col("__vec")), "doc_id", "__vec",
-          batchNo)
-        val noVec = jac.filter(col("__vec").isNull)
-        (withV.join(keptVec.select(col("vec_id").as("doc_id")),
-            Seq("doc_id"), "left_semi")
-          .unionByName(noVec),
-          keptVec.count() + noVec.count())
-      case None => (jac, if (nMinhash >= 0L) nMinhash else nNear)
-    }
+    // a doc with a NULL embedding cannot probe the vector lane
+    // (vecIngest excludes nulls whole), but it must NOT vanish from
+    // the corpus (r13 advisory #1): only non-null rows pass through
+    // the vec gate; null-embedding survivors rejoin the survivor set
+    // unchanged — unique TEXT with a missing embedding stays a
+    // survivor, documented convention
+    val keptVec = vecReg.map(reg => Registry.vecIngest(spark, reg,
+      jac.filter(col("__vec").isNotNull)
+        .select(col("doc_id"), col("__vec")), "doc_id", "__vec",
+      batchNo))
+    val vec = keptVec.fold(jac)(k =>
+      jac.filter(col("__vec").isNotNull)
+        .join(k.select(col("vec_id").as("doc_id")), Seq("doc_id"),
+          "left_semi")
+        .unionByName(jac.filter(col("__vec").isNull)))
 
     // decontamination: any shared distinct n-gram with the benchmark
     // flags the doc; the benchmark side is benchmark-bounded and
@@ -344,13 +328,53 @@ object Pipelines {
     val contaminated = vec
       .select(col("doc_id"), explode(col("__grams")).as("__g"))
       .join(benchGrams, Seq("__g"))
-      .select(col("doc_id")).distinct()
-    val clean = vec.join(contaminated, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("h"), col("simhash"))
-    val nClean = clean.count()
+      .select(col("doc_id"), lit(true).as("__dirty")).distinct()
+    // THE survivor pin: the lane chain and the decontamination join
+    // run once, here. Every pre-decontamination survivor keeps its
+    // gate verdict (and, for the funnel, whether it skipped the
+    // vector lane), so the counts below and every later read of
+    // `survivors` — the caller's corpus write — scan this pin instead
+    // of re-running the semi-join chain (IngestBatchSpec pins one job
+    // per survivor read)
+    val verdicts = vec.join(contaminated, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("h"), col("simhash"),
+        col("__dirty").isNull.as("__clean"),
+        (if (keptVec.isDefined) col("__vec").isNull else lit(false))
+          .as("__novec"))
+      .localCheckpoint()
 
-    IngestBatchResult(clean, nIn, nQuality, nExact, nNear, nVec,
-      nClean, nMinhash)
+    // every funnel count in ONE aggregate over frames already pinned —
+    // the batch projection, each lane's kept set and the verdicts — so
+    // no count re-executes a join. nExact/nNear/nMinhash equal their
+    // kept sets BY CONSTRUCTION (each kept digest/signature names
+    // exactly one surviving batch row — IngestBatchSpec pins the
+    // funnels); the vector lane's survivors are its kept set plus the
+    // null-embedding rows that skipped it.
+    val funnel = (Seq(
+      derived.select(lit(true).as("in"),
+        (col("__len") >= minChars).as("quality")),
+      keptDigests.select(lit(true).as("exact")),
+      keptNear.select(lit(true).as("near")),
+      verdicts.select(col("__clean").as("clean"),
+        col("__novec").as("novec"))) ++
+      keptM.map(_.select(lit(true).as("minhash"))) ++
+      keptVec.map(_.select(lit(true).as("vec"))))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val stages = funnel.columns.toSeq
+    val row = funnel.select(stages.map(s => count_if(col(s))): _*).head()
+    val c = stages.zipWithIndex.map { case (s, i) => s -> row.getLong(i) }
+      .toMap
+    val nMinhash = c.getOrElse("minhash", -1L)
+    val nVec =
+      if (keptVec.isDefined) c("vec") + c("novec")
+      else if (keptM.isDefined) nMinhash
+      else c("near")
+
+    IngestBatchResult(
+      verdicts.filter(col("__clean"))
+        .select(col("doc_id"), col("h"), col("simhash")),
+      c("in"), c("quality"), c("exact"), c("near"), nVec, c("clean"),
+      nMinhash)
   }
 
   /** Temperature-based mixture resampling (the α=0.5 data-mixing
@@ -477,6 +501,11 @@ object PipelineDriver {
         "no-op (registry and output untouched)")
       return false
     }
+    // generated classes Janino compiles for this batch (a JVM-wide
+    // counter: cache misses of the compiled-class cache, so a batch
+    // whose plans were all seen before reads near zero)
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiled0 = compiled
     def ensure(nm: String, p: String,
         create: (String, String) => Unit,
         attach: (String, String) => Unit): Unit =
@@ -501,10 +530,10 @@ object PipelineDriver {
       vecReg = if (hasVec) Some("graft_cli_vc") else None,
       vecCol = if (hasVec) Some("embedding") else None,
       minhashReg = if (minhash) Some("graft_cli_mh") else None)
+    r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
     println(s"[ingest] batch=$batchNo in=${r.nIn} q=${r.nQuality} " +
       s"exact=${r.nExact} near=${r.nNear} vec=${r.nVec} " +
-      s"clean=${r.nClean}")
-    r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
+      s"clean=${r.nClean} compiled=${compiled - compiled0}")
     fs.mkdirs(committed.getParent)
     fs.create(committed).close()
     // opt-in self-maintenance (r14 verdict #6): the fileStats trigger

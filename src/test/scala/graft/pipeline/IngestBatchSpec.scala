@@ -121,6 +121,39 @@ class IngestBatchSpec extends SparkSpec {
       "survivor re-read re-evaluated the batch text")
   }
 
+  test("the survivors are pinned: reading them after ingestBatch is " +
+      "ONE job — the lane chain and the decontamination join never " +
+      "re-run") {
+    val (ex, nr, vc) = freshRegs("onejob")
+    val bench = Seq((0L, longText("bench"))).toDF("doc_id", "text")
+    val b = Seq(
+      (1L, longText("oa"), vec(1)),
+      (2L, longText("ob"), null.asInstanceOf[Array[Float]]),
+      (3L, longText("oc") + " " + longText("bench"), vec(3))
+    ).toDF("doc_id", "text", "embedding")
+    val r = Pipelines.ingestBatch(spark, b, "doc_id", "text",
+      ex, nr, bench, "text", batchNo = 0, minChars = 100,
+      vecReg = Some(vc), vecCol = Some("embedding"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
+    val got = try {
+      val ids = r.survivors.select($"doc_id").as[Long].collect().toSet
+      org.apache.spark.GraftListenerDrain.drain(sc)
+      ids
+    } finally sc.removeSparkListener(counter)
+    assert(got == Set(1L, 2L))
+    assert(jobs.get() == 1,
+      s"reading the survivors launched ${jobs.get()} jobs")
+  }
+
   test("a NULL embedding skips the vector lane but the doc SURVIVES " +
       "on its text verdicts (r13 advisory #1: unique-text docs with " +
       "missing embeddings must not vanish)") {

@@ -42,7 +42,9 @@ import org.apache.spark.sql.execution.window.WindowExec
   * `--budget <file>` selects a budget file other than the default —
   * the expensive-tier sf0.1 budget (`PLAN_BUDGET.sf0.1.json`, r14
   * verdict #5) lives beside the full sf0.01 one because join-strategy
-  * choices read file statistics and can differ between SFs.
+  * choices read file statistics and can differ between SFs. Such a
+  * tier file names its own query set: the audit covers exactly its
+  * queries and never asks for full coverage.
   *
   * Cost note: building a query's DataFrame runs its eager stages
   * (fits, registry demo ingests) — a full audit costs about one
@@ -91,21 +93,51 @@ object PlanAudit {
     (sf, m)
   }
 
-  def main(args: Array[String]): Unit = {
-    val write = args.contains("--write")
+  /** The command line: `sfDir`, the query-name subset (empty = all),
+    * `--write`, and the budget file. `--budget` must name a file — a
+    * missing value, or one that is another flag, is rejected rather
+    * than read as a query name or silently replaced by the default.
+    */
+  final case class Args(sfDir: String, only: Set[String], write: Boolean,
+      budgetFile: String) {
+    /** Any budget file but the full default is a tier file: it names
+      * its own query set, so the audit covers exactly those queries.
+      */
+    def tier: Boolean = budgetFile != BudgetFile
+  }
+
+  def parseArgs(args: Array[String]): Args = {
     val budgetIdx = args.indexOf("--budget")
-    val budgetFile =
-      if (budgetIdx >= 0 && budgetIdx + 1 < args.length) args(budgetIdx + 1)
-      else BudgetFile
+    if (budgetIdx >= 0)
+      require(budgetIdx + 1 < args.length &&
+        !args(budgetIdx + 1).startsWith("--"),
+        "--budget needs a file name")
     val positional = args.zipWithIndex.collect {
       case (a, i) if !a.startsWith("--")
         && (budgetIdx < 0 || i != budgetIdx + 1) => a
     }
     require(positional.nonEmpty,
       "usage: PlanAudit <sfDir> [--write] [--budget <file>] [queryName...]")
-    val sfDir = positional.head
-    val only = positional.drop(1).toSet
+    Args(positional.head, positional.drop(1).toSet, args.contains("--write"),
+      if (budgetIdx >= 0) args(budgetIdx + 1) else BudgetFile)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cli = parseArgs(args)
+    val Args(sfDir, only, write, budgetFile) = cli
     val sfTag = sfDir.split("/").last
+    // a tier file that exists fixes the audited set, so the coverage
+    // check below always holds for it (and a --write refreshes the same
+    // queries); the full default file never does
+    val tierQueries =
+      if (cli.tier && Files.exists(Paths.get(budgetFile)))
+        Some(readBudget(budgetFile)._2.keySet)
+      else None
+    tierQueries.foreach { names =>
+      val unknown = names.diff(graft.SparkEntry.queries.keySet)
+      require(unknown.isEmpty,
+        s"$budgetFile budgets unknown queries: ${unknown.mkString(", ")}")
+    }
 
     val spark = graft.GraftSession.local(
       cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
@@ -117,7 +149,9 @@ object PlanAudit {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.contains(n) }
+      .filter { case (n, _) =>
+        (only.isEmpty || only.contains(n)) && tierQueries.forall(_(n))
+      }
     val audited = scala.collection.mutable.LinkedHashMap.empty[String, Counts]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
