@@ -1,9 +1,10 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.similarity.Ann
 import graft.text.TextFunctions
 
 /** Cross-run incremental dedup registry — the corpus-registry shape
@@ -73,9 +74,11 @@ object Registry {
     * is what licenses the recursive delete on re-create. The marker
     * body stamps the physical contract that must survive the session
     * boundary: `family buckets [key=value ...]` — bucket count
-    * (layout), row-schema version, and for the vec family the RHP
-    * plane count and hyperplane-hash version (both baked into every
-    * stored signature, so a mismatch silently re-admits duplicates).
+    * (layout), row-schema version, lease horizon, and each lane's
+    * physical parameters ([[Lane]]: minhash k/bands/shingle width,
+    * vec plane count and hyperplane-hash version — all baked into
+    * every stored signature, so a mismatch silently re-admits
+    * duplicates).
     */
   private val Marker = "_graft_registry"
 
@@ -220,6 +223,10 @@ object Registry {
       }
     } finally in.close()
   }
+
+  /** [[readMarker]], with a missing or unreadable marker as None. */
+  private def markerAt(fs: FileSystem, p: Path): Option[MarkerInfo] =
+    try readMarker(fs, p) catch { case _: java.io.IOException => None }
 
   /** One-time migration helper for registries created before the
     * marker existed: stamps ownership + layout into `path` so
@@ -379,17 +386,14 @@ object Registry {
     * which scales with the corpus), else [[DefaultLeaseMs]].
     */
   private def leaseHorizon(fs: FileSystem, dir: Path): Long =
-    (try readMarker(fs, dir) catch { case _: java.io.IOException => None })
-      .flatMap(_.extras.get("lease_ms")).map(_.toLong)
+    markerAt(fs, dir).flatMap(_.extras.get("lease_ms")).map(_.toLong)
       .getOrElse(DefaultLeaseMs)
 
   private def withLock[T](spark: SparkSession, path: String)(
       body: Lease => T): T = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotRetired(
-      try readMarker(fs, dir) catch { case _: java.io.IOException => None },
-      dir)
+    requireNotRetired(markerAt(fs, dir), dir)
     val lease = acquireLock(spark, path, leaseHorizon(fs, dir))
     try body(lease) finally releaseLock(spark, lease)
   }
@@ -431,23 +435,225 @@ object Registry {
     rows.filter(col("batch_no") <=> lit(batchNo))
   }
 
-  private val ExactDdl = "(h STRING, keep_id BIGINT, batch_no INT)"
-  private val NearDdl =
-    "(w INT, bucket BIGINT, doc_id BIGINT, simhash BIGINT, batch_no INT)"
-  private val VecDdl =
-    "(sig BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>, batch_no INT)"
-  private val MinDdl =
-    "(b INT, bucket STRING, doc_id BIGINT, sig ARRAY<STRING>, batch_no INT)"
+  // ---- registry lanes ----
+
+  /** One dedup registry family: exact digests, SimHash windows
+    * (near), MinHash bands or RHP-bucketed vectors. A lane holds only
+    * what differs between the families; [[create]], [[attach]],
+    * [[ingest]], [[compact]] and the stream twin
+    * ([[graft.streaming.Streams.registryMaintStream]]) are written
+    * once over it. Per lane:
+    *
+    *  - the table DDL and its bucket column;
+    *  - the marker stamps written at create — physical parameters
+    *    baked into every stored signature, read back at ingest
+    *    ([[resolve]]) instead of trusted from the caller, because a
+    *    probe signed differently matches nothing and silently
+    *    re-admits every duplicate;
+    *  - the signing step (text, or the embedding, → signature);
+    *  - the representative collapse: nulls dropped (a null key never
+    *    matches a join, so it would re-append every batch forever),
+    *    min id per signature;
+    *  - the explode of representatives into stored-row shape
+    *    (`stored`: none, windows, bands, or the RHP signature);
+    *  - the match predicate between a probe and a stored row sharing
+    *    its bucket keys (none: key equality is the match);
+    *  - the heal key a replay anti-joins its own prior rows on.
+    *
+    * A lane value carries its match parameters; the defaults are the
+    * documented ones.
+    */
+  sealed abstract class Lane(val family: String,
+      private[dedup] val ddl: String, val bucketCol: String,
+      private[dedup] val sigCol: String, private[dedup] val idCol: String,
+      private[dedup] val healKey: Seq[String],
+      private[dedup] val out: Seq[String]) {
+    private[dedup] def stamps: Map[String, String] = Map.empty
+    /** This lane at the physical parameters a marker stamped. */
+    private[dedup] def stamped(m: Map[String, String], at: Path): Lane = this
+    /** The signing step: a text (vec: embedding) column → signature. */
+    def sign(src: Column): Column
+    private[dedup] def signed(batch: DataFrame, id: String,
+        src: String): DataFrame =
+      batch.select(col(id).cast("long").as(idCol), sign(col(src)).as(sigCol))
+    private[dedup] def valid(sig: Column): Column = sig.isNotNull
+    private[dedup] def collapse(signed: DataFrame): DataFrame =
+      signed.filter(valid(col(sigCol))).groupBy(col(sigCol))
+        .agg(min(col(idCol)).as(idCol))
+    private[dedup] def stored(reps: DataFrame): DataFrame = reps
+    private[dedup] def probeKeys: Seq[String] = Seq(bucketCol)
+    private[dedup] def matches(p: Column, r: Column): Option[Column] = None
+  }
+
+  /** Byte-exact copies: one (content digest → first-seen keeper) row
+    * per digest, bucketed on the digest.
+    */
+  case object Exact extends Lane("exact",
+      "(h STRING, keep_id BIGINT, batch_no INT)", "h", "h", "keep_id",
+      Seq("h"), Seq("h", "keep_id")) {
+    def sign(text: Column): Column = TextFunctions.contentHash(text)
+  }
+
+  /** Hamming-close token distributions (SimHash): one row per
+    * (window, doc) — `w` the 15-bit window index, `bucket` its value.
+    * A doc drops iff a registered doc shares a window AND sits within
+    * `maxHamming` (the [[Dedup.bandedHammingPairs]] rule: recall is
+    * total below `tables` differing bits, the standard multi-table
+    * trade above). `tables` is physical — it decides which window
+    * rows every ingest stores — so it is a lane constant. Within-batch
+    * near pairs with distinct simhashes land together by contract.
+    */
+  final case class Near(maxHamming: Int = 20) extends Lane("near",
+      "(w INT, bucket BIGINT, doc_id BIGINT, simhash BIGINT, batch_no INT)",
+      "bucket", "simhash", "doc_id", Seq("w", "doc_id"),
+      Seq("doc_id", "simhash")) {
+    val tables = 2
+    def sign(text: Column) = Dedup.simhash60(TextFunctions.tokens(text))
+    /** Window t is the 15-bit slice at bits [60−15(t+1), 60−15t). */
+    override private[dedup] def stored(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), col("simhash"),
+          explode(array((0 until tables).map(t => struct(
+            lit(t).as("w"),
+            shiftright(col("simhash"), 60 - 15 * (t + 1))
+              .bitwiseAND(lit(32767L)).as("bucket"))): _*)).as("__wb"))
+        .select(col("__wb.w").as("w"), col("__wb.bucket").as("bucket"),
+          col("doc_id"), col("simhash"))
+    override private[dedup] def probeKeys = Seq("w", "bucket")
+    override private[dedup] def matches(p: Column, r: Column) =
+      Some(Dedup.hammingDist(p, r) <= maxHamming)
+  }
+
+  /** Set-overlap (Jaccard) copies — robust to reordering and local
+    * edits that move many simhash bits but few shingles. One row per
+    * (band, doc): `bucket` is the band digest; `sig` (the k-value
+    * signature) rides along as the verification payload. A doc drops
+    * iff a registered doc shares a band digest AND agrees on ≥
+    * `minMatches` of the k positions (the q102 estimator, kept
+    * integer-exact by thresholding the match COUNT). `k`, `bands` and
+    * the shingle width are stamped: the width shapes the sets being
+    * hashed, so it travels with the registry. Expected candidates per
+    * probe ≈ bands · rows / distinct buckets; a clustered corpus
+    * raises `bands`/`k` like the vec lane raises planes.
+    */
+  final case class Minhash(k: Int = 8, bands: Int = 4, shingleW: Int = 3,
+      minMatches: Int = 6) extends Lane("minhash",
+      "(b INT, bucket STRING, doc_id BIGINT, sig ARRAY<STRING>, batch_no INT)",
+      "bucket", "sig", "doc_id", Seq("b", "doc_id"), Seq("doc_id", "sig")) {
+    require(k % bands == 0, s"bands must divide k; got k=$k bands=$bands")
+    require(shingleW >= 1, s"shingleW must be >= 1; got $shingleW")
+    require(minMatches >= k / bands,
+      s"minMatches=$minMatches below one band's $k/$bands positions " +
+        "would drop docs no band can even propose")
+    override private[dedup] def stamps = Map("k" -> k.toString,
+      "bands" -> bands.toString, "w" -> shingleW.toString)
+    override private[dedup] def stamped(m: Map[String, String], at: Path) =
+      copy(k = m.get("k").fold(k)(_.toInt),
+        bands = m.get("bands").fold(bands)(_.toInt),
+        shingleW = m.get("w").fold(shingleW)(_.toInt))
+    def sign(text: Column): Column =
+      Dedup.minhashSignatureFast(Dedup.shingles(text, shingleW), k)
+    /** Widened before the k·MD5 kernel — the one registry kernel
+      * expensive enough to pay for the exchange (metered: sig pass
+      * 1.2 s as-scanned → ~0.5 s repartitioned; the md5/simhash
+      * kernels cost ~0.1 s serial and stay un-widened).
+      */
+    override private[dedup] def signed(batch: DataFrame, id: String,
+        src: String) =
+      super.signed(graft.ops.Parallelism.widen(batch.select(
+        col(id).cast("long").as("doc_id"), col(src).as("__mh_text")),
+        "doc_id"), "doc_id", "__mh_text")
+    /** Two null shapes: a null array (null text) and k nulls (empty
+      * shingle set — array_min of nothing is null per position).
+      */
+    override private[dedup] def valid(sig: Column) =
+      sig.isNotNull && size(filter(sig, x => x.isNotNull)) > 0
+    override private[dedup] def stored(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), col("sig"),
+          posexplode(Dedup.bandKeys(col("sig"), bands, k / bands)))
+        .select(col("pos").cast("int").as("b"), col("col").as("bucket"),
+          col("doc_id"), col("sig"))
+    override private[dedup] def matches(p: Column, r: Column) =
+      Some(size(filter(zip_with(p, r, (x, y) => x === y), m => m))
+        >= minMatches)
+  }
+
+  /** Embedding copies: one row per vector, keyed by its
+    * random-hyperplane signature. A vector drops iff a registered one
+    * shares its signature at rounded cosine ≥ `threshold` (the
+    * [[graft.similarity.Ann.lshDupPairs]] rule: exact copies share
+    * the signature at ANY plane count, so recall on true duplicates
+    * is total). `planes` and the hash version ([[RhpHashVersion]])
+    * are stamped.
+    *
+    * SIZE `planes` TO THE CORPUS: expected candidates per probe ≈
+    * rows / 2^planes, so ingest cost grows LINEARLY once 2^planes is
+    * small against the registry (PERF.md r13: at 8 planes a 5k-vector
+    * ingest went 4.3 s → 137 s as the registry grew 5k → 510k; flat
+    * at 16). Rule: planes ≳ log2(expected corpus) + a few bits; a
+    * corpus that outgrows its sizing migrates via [[rekeyVec]].
+    */
+  final case class Vec(planes: Int = 16, threshold: Double = 0.99,
+      roundTo: Int = 6) extends Lane("vec",
+      "(sig BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>, batch_no INT)",
+      "sig", "embedding", "vec_id", Seq("vec_id"), Seq("vec_id", "sig")) {
+    override private[dedup] def stamps =
+      Map("planes" -> planes.toString, "hash" -> RhpHashVersion)
+    override private[dedup] def stamped(m: Map[String, String], at: Path) = {
+      m.get("hash").foreach(h => require(h == RhpHashVersion,
+        s"'$at' was signed with hyperplane-hash '$h'; this binary " +
+          s"signs '$RhpHashVersion' — signatures would never match " +
+          "(every duplicate silently re-admitted); rekeyVec to migrate"))
+      copy(planes = m.get("planes").fold(planes)(_.toInt))
+    }
+    /** The embedding is its own signature; the RHP bucket key is
+      * derived once per representative.
+      */
+    def sign(v: Column): Column = v
+    override private[dedup] def collapse(signed: DataFrame) =
+      super.collapse(signed)
+        .withColumn("sig", Ann.rhpSignature(col("embedding"), planes))
+    override private[dedup] def stored(df: DataFrame): DataFrame =
+      df.select(col("sig"), col("vec_id"), col("embedding"))
+    override private[dedup] def matches(p: Column, r: Column) =
+      Some(round(Ann.dot(p, r) / (Ann.norm(p) * Ann.norm(r)), roundTo)
+        >= threshold)
+  }
+
+  private def laneOf(family: String): Lane =
+    Seq(Exact, Near(), Minhash(), Vec()).find(_.family == family)
+      .getOrElse(throw new IllegalStateException(
+        s"unknown registry family '$family'"))
 
   private def createTable(spark: SparkSession, name: String,
-      path: String, buckets: Int, ddl: String, bucketCol: String): Unit = {
+      path: String, buckets: Int, lane: Lane): Unit = {
     spark.sql(
-      s"""CREATE TABLE $name $ddl
+      s"""CREATE TABLE $name ${lane.ddl}
          |USING parquet
-         |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
+         |CLUSTERED BY (${lane.bucketCol}) SORTED BY (${lane.bucketCol})
          |INTO $buckets BUCKETS
          |LOCATION '$path'""".stripMargin)
     ()
+  }
+
+  /** Create or replace an EMPTY `lane` registry table `name` at
+    * `path`, bucketed on the lane's bucket column, its marker stamped
+    * with the lane's physical parameters.
+    */
+  def create(spark: SparkSession, lane: Lane, name: String, path: String,
+      buckets: Int, leaseMs: Long = DefaultLeaseMs): Unit = {
+    val data = prepareLocation(spark, name, path, lane.family, buckets,
+      lane.stamps ++ Map("schema" -> SchemaVersion.toString,
+        "lease_ms" -> leaseMs.toString))
+    createTable(spark, name, data, buckets, lane)
+  }
+
+  /** Whether `path` holds a graft registry (any family) — the
+    * create-or-attach decision a scheduled ingest job makes.
+    */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(new Path(p, Marker))
   }
 
   /** ATTACH an existing registry into THIS session's catalog without
@@ -455,15 +661,17 @@ object Registry {
     * in-memory catalog forgets tables when the session ends, so a
     * later job (the next day's ingest) must re-register the table
     * over the surviving files. Requires the [[Marker]] a prior
-    * create left (attaching a random directory is refused); the
-    * `buckets` count MUST match the create (it is physical layout —
-    * a mismatch silently breaks the exchange-free join, so record it
-    * with the path). RegistrySpec pins attach-then-ingest equals
-    * same-session continuation.
+    * create left (attaching a random directory is refused) and checks
+    * its stamps: the family must be `lane`'s and `buckets` must match
+    * the create (it is physical layout — a mismatch silently breaks
+    * the exchange-free join, so record it with the path); non-exact
+    * lanes need the per-row batch stamps of schema 2, and the vec
+    * lane this binary's hyperplane hash. The other physical
+    * parameters are read from the marker at ingest. RegistrySpec pins
+    * attach-then-ingest equals same-session continuation.
     */
-  private def attachTable(spark: SparkSession, name: String,
-      path: String, buckets: Int, ddl: String, bucketCol: String,
-      family: String, requireSchemaV2: Boolean): MarkerInfo = {
+  def attach(spark: SparkSession, lane: Lane, name: String, path: String,
+      buckets: Int): Unit = {
     require(SafeName.matches(name),
       s"registry name must match ${SafeName.regex}; got '$name'")
     require(!path.contains("'"),
@@ -478,149 +686,111 @@ object Registry {
     if (!fs.exists(p)) recoverCompact(spark, path)
     require(fs.exists(new Path(p, Marker)),
       s"'$path' is not a graft registry (no marker) — create() it first")
-    // the create stamped (family, buckets) into the marker; a
-    // mismatch means the caller is attaching the wrong registry or
-    // breaking the physical bucket layout — both silent corruptions
-    // without this check (legacy empty markers skip it)
+    // legacy empty markers skip the stamp checks
     val rawInfo = readMarker(fs, p)
     requireNotRetired(rawInfo, p)
-    val info = rawInfo.getOrElse(MarkerInfo(family, buckets, Map.empty))
-    require(info.family == family && info.buckets == buckets,
+    val info = rawInfo.getOrElse(MarkerInfo(lane.family, buckets, Map.empty))
+    require(info.family == lane.family && info.buckets == buckets,
       s"'$path' is a ${info.family} registry with ${info.buckets} " +
-        s"buckets; attach requested $family/$buckets")
-    if (requireSchemaV2)
+        s"buckets; attach requested ${lane.family}/$buckets")
+    if (lane != Exact)
       require(info.extras.get("schema").contains(SchemaVersion.toString),
-        s"'$path' is a legacy $family registry without per-row batch " +
-          "stamps (schema < 2) — replay-safe ingest cannot probe it; " +
-          "rebuild it (or rekeyVec for the vec family)")
+        s"'$path' is a legacy ${lane.family} registry without per-row " +
+          "batch stamps (schema < 2) — replay-safe ingest cannot probe " +
+          "it; rebuild it (or rekeyVec for the vec family)")
+    lane.stamped(info.extras, p) // refuses foreign stamps (vec hash)
     spark.sql(s"DROP TABLE IF EXISTS $name")
     // the table points at the LIVE data dir (pointer-resolved for
     // versioned registries, the root for legacy ones)
-    createTable(spark, name, liveDir(fs, p).toString, buckets, ddl,
-      bucketCol)
-    info
+    createTable(spark, name, liveDir(fs, p).toString, buckets, lane)
   }
 
-  /** Create or replace an EMPTY registry table `name` at `path`,
-    * bucketed on the digest column `h`.
+  /** `lane` at the physical parameters registry `name` was created
+    * with, read from its marker (legacy markers without a stamp keep
+    * the lane's own value) — the signing contract a caller deriving
+    * signatures in its own projection (the one-text-scan pipelines)
+    * must sign with.
     */
-  def create(spark: SparkSession, name: String, path: String,
-      buckets: Int, leaseMs: Long = DefaultLeaseMs): Unit = {
-    val data = prepareLocation(spark, name, path, "exact", buckets,
-      Map("schema" -> SchemaVersion.toString,
-        "lease_ms" -> leaseMs.toString))
-    createTable(spark, name, data, buckets, ExactDdl, "h")
+  def resolve(spark: SparkSession, lane: Lane, name: String): Lane = {
+    val root = registryRoot(tableLocation(spark, name))
+    val info = markerAt(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    info.foreach(i => require(i.family == lane.family,
+      s"'$name' is a ${i.family} registry, not ${lane.family}"))
+    lane.stamped(info.fold(Map.empty[String, String])(_.extras), root)
   }
 
-  /** Whether `path` holds a graft registry (any family) — the
-    * create-or-attach decision a scheduled ingest job makes.
-    */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(p, Marker))
-  }
-
-  /** [[attachTable]] for the exact-digest registry (schema'd with
-    * batch_no since v1 — legacy exact registries attach fine).
-    */
-  def attach(spark: SparkSession, name: String, path: String,
-      buckets: Int): Unit = {
-    attachTable(spark, name, path, buckets, ExactDdl, "h", "exact",
-      requireSchemaV2 = false)
-    ()
-  }
-
-  /** [[attachTable]] for the near-dup registry. */
-  def attachNear(spark: SparkSession, name: String, path: String,
-      buckets: Int): Unit = {
-    attachTable(spark, name, path, buckets, NearDdl, "bucket", "near",
-      requireSchemaV2 = true)
-    ()
-  }
-
-  /** [[attachTable]] for the vector registry — additionally
-    * validates the hyperplane-hash version so a binary with a
-    * different RHP kernel can never ingest unmatched signatures.
-    */
-  def attachVec(spark: SparkSession, name: String, path: String,
-      buckets: Int): Unit = {
-    val info = attachTable(spark, name, path, buckets, VecDdl, "sig",
-      "vec", requireSchemaV2 = true)
-    info.extras.get("hash").foreach(h => require(h == RhpHashVersion,
-      s"'$path' was signed with hyperplane-hash '$h'; this binary " +
-        s"signs '$RhpHashVersion' — signatures would never match " +
-        "(every duplicate silently re-admitted); rekeyVec to migrate"))
-  }
-
-  /** [[attachTable]] for the MinHash-band registry — validates the
-    * stamped (k, bands) like the vec family validates planes: both
-    * are baked into every stored signature and band bucket, so a
-    * probe signed differently would match nothing and re-admit every
-    * duplicate.
-    */
-  def attachMinhash(spark: SparkSession, name: String, path: String,
-      buckets: Int): Unit = {
-    attachTable(spark, name, path, buckets, MinDdl, "bucket",
-      "minhash", requireSchemaV2 = true)
-    ()
-  }
-
-  /** The batch rows that survive against the current registry:
-    * digests never seen before, one keeper per digest (min id
-    * WITHIN the batch). Pure read — [[ingest]] is the mutating
-    * form. Returns (h, keep_id).
+  /** The batch rows that survive against the current exact registry:
+    * digests never seen before, one keeper per digest (min id WITHIN
+    * the batch). Pure read — [[ingest]] is the mutating form.
+    * Returns (h, keep_id).
     */
   def dedupBatch(spark: SparkSession, name: String, batch: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val fresh = batch
-      .select(col(idCol).cast("long").as("keep_id"),
-        TextFunctions.contentHash(col(textCol)).as("h"))
-      .groupBy(col("h"))
-      .agg(min(col("keep_id")).as("keep_id"))
-    fresh.join(spark.table(name).select(col("h")), Seq("h"), "left_anti")
-  }
+      idCol: String, textCol: String): DataFrame =
+    Exact.collapse(Exact.signed(batch, idCol, textCol))
+      .join(spark.table(name).select(col("h")), Seq("h"), "left_anti")
 
-  /** Ingest one batch: append its surviving digests (tagged
-    * `batchNo`) to the registry and return them. Replay-idempotent
-    * under the batch-number contract: re-ingesting the same batch
-    * under a NEW number appends nothing and returns zero rows (its
-    * digests are history now); re-ingesting under the SAME number is
-    * a replay — it returns the original survivors and appends only
-    * whatever a crashed first attempt failed to commit.
+  /** Ingest one raw batch: [[Lane.sign]] `srcCol` (text, or the
+    * embedding for [[Vec]]) at the registry's stamped parameters,
+    * then [[ingest]] the signatures.
     */
-  def ingest(spark: SparkSession, name: String, batch: DataFrame,
-      idCol: String, textCol: String, batchNo: Int): DataFrame =
-    ingestDigests(spark, name,
-      batch.select(col(idCol).cast("long").as("keep_id"),
-          TextFunctions.contentHash(col(textCol)).as("h"))
-        .groupBy(col("h")).agg(min(col("keep_id")).as("keep_id")),
-      batchNo)
+  def ingest(spark: SparkSession, lane: Lane, name: String,
+      batch: DataFrame, idCol: String, srcCol: String,
+      batchNo: Int): DataFrame =
+    ingest(spark, lane, name,
+      resolve(spark, lane, name).signed(batch, idCol, srcCol), batchNo)
 
-  /** [[ingest]] over PRECOMPUTED batch digests — `digests` must be
-    * (h, keep_id), one row per digest (the batch's min-id
-    * representative). This is the entry a single-scan pipeline uses
+  /** Ingest one batch of PRECOMPUTED signatures — `signed` holds the
+    * lane's (id, signature) columns: (keep_id, h) for [[Exact]],
+    * (doc_id, simhash) for [[Near]], (doc_id, sig) for [[Minhash]]
+    * at the marker's parameters, (vec_id, embedding) for [[Vec]].
+    * This is the entry a single-scan pipeline uses
     * ([[graft.pipeline.Pipelines.ingestBatch]]): the caller derives
     * every text-dependent column in one projection and each registry
     * stage consumes its slice without re-reading the text.
+    *
+    * A batch row survives iff it is its signature's representative
+    * (min id within the batch) and no registered row matches it
+    * ([[Lane]]). History text is never read — signatures are the
+    * whole state. The survivors' rows append bucket-aligned
+    * (insertInto keeps the table's bucket spec), stamped `batchNo`;
+    * returns the survivors' [[Lane]] output columns.
     *
     * Replay safety (see the object doc): the probe anti-joins the
     * registry MINUS this batch's own prior rows (null-safe, so a
     * legacy null stamp still counts as "someone else's"), making the
     * survivor set a pure function of (batch, everyone-else's state);
     * the append then skips rows a crashed attempt already committed.
+    * Re-ingesting the same batch under a NEW number appends nothing
+    * and returns zero rows (its signatures are history now).
     */
-  def ingestDigests(spark: SparkSession, name: String,
-      digests: DataFrame, batchNo: Int): DataFrame = {
+  def ingest(spark: SparkSession, lane: Lane, name: String,
+      signed: DataFrame, batchNo: Int): DataFrame = {
     val loc = tableLocation(spark, name)
+    val l = resolve(spark, lane, name)
     withLock(spark, registryRoot(loc).toString) { lease =>
-      // NULL digests (md5 of a NULL text) are excluded WHOLE: a null
-      // key never matches the anti-join, so without this filter every
-      // batch would re-append its null-text rows as "fresh" forever —
-      // the same join-null-semantics hazard as the Concurrency r12 fix
-      val nonNull = digests.filter(col("h").isNotNull)
+      // reps PINNED: it feeds both the probe and the kept anti-join —
+      // un-materialized, the signature kernel and the collapse re-ran
+      // per reference, and an AQE join-strategy flip on the anti-join
+      // could re-run them again. One checkpoint of the batch-bounded
+      // representatives makes both harmless, and licenses dropping a
+      // distinct on the matched ids: the left_anti tests key
+      // existence, so duplicate matches (bounded by candidates per
+      // probe) change nothing.
+      val reps = l.collapse(signed).localCheckpoint()
       val others = spark.table(name)
-        .filter(!(col("batch_no") <=> lit(batchNo))).select(col("h"))
+        .filter(!(col("batch_no") <=> lit(batchNo)))
+      val keys = l.probeKeys
+      val fresh = l.matches(col(l.sigCol), col("__r")) match {
+        case None =>
+          reps.join(others.select(keys.map(col): _*), keys, "left_anti")
+        case Some(hit) =>
+          val matched = l.stored(reps)
+            .join(others.select(keys.map(col) :+ col(l.sigCol).as("__r"): _*),
+              keys)
+            .filter(hit).select(col(l.idCol))
+          reps.join(matched, Seq(l.idCol), "left_anti")
+      }
       // the survivor set must be pinned BEFORE the append, and plain
       // persist() is NOT enough: the insert refreshes the table by
       // path, which invalidates every cached plan referencing it —
@@ -628,19 +798,18 @@ object Registry {
       // the just-updated registry and vanish. localCheckpoint severs
       // the lineage (the plan becomes an RDD scan with no table
       // reference), so the refresh cannot touch it.
-      val kept = nonNull
-        .join(others, Seq("h"), "left_anti")
-        .withColumn("batch_no", lit(batchNo))
-        .select(col("h"), col("keep_id"), col("batch_no"))
-        .localCheckpoint()
-      // a replay only appends what the crashed attempt missed;
-      // insertInto keeps the table's bucket spec: rows hash to their
-      // bucket files on write, so the layout contract survives appends
+      val kept = fresh.select(reps.columns.map(col): _*).localCheckpoint()
       validateLease(spark, lease)
-      kept.join(ownRows(spark, name, loc, batchNo).select(col("h")),
-          Seq("h"), "left_anti")
+      // a replay only appends what the crashed attempt missed; the
+      // explicit re-select after the join restores the stored column
+      // order (the join key leads the join output, and insertInto
+      // binds by POSITION)
+      val rows = l.stored(kept)
+      rows.join(ownRows(spark, name, loc, batchNo)
+          .select(l.healKey.map(col): _*), l.healKey, "left_anti")
+        .select(rows.columns.map(col) :+ lit(batchNo).as("batch_no"): _*)
         .write.mode(SaveMode.Append).insertInto(name)
-      kept
+      kept.select(l.out.map(col): _*)
     }
   }
 
@@ -678,18 +847,17 @@ object Registry {
 
   /** Compact a registry table back to ONE file per bucket — the
     * small-files cure for the append-only ingest path. Every
-    * [[ingest]]/[[nearIngest]]/[[vecIngest]] append lays one file
-    * per bucket, so after 10³ ingests a bucketed scan opens 10³
-    * files per bucket: same bytes, three orders of magnitude more
-    * opens/footers/scheduler tasks — the classic small-files cliff
-    * ([[fileStats]] + [[CompactThreshold]] are the trigger).
-    * Compaction rewrites the SAME rows in the SAME bucket layout
-    * (first-seen keepers preserved verbatim — this is a file-layout
-    * operation, not a dedup pass), so probe plans before and after
-    * are identical and the exchange-free join contract survives;
-    * only the file count changes. Works for all three registry
-    * families — pass the table's bucket column (`h`, `bucket`,
-    * `sig`) and its bucket count.
+    * [[ingest]] append lays one file per bucket, so after 10³
+    * ingests a bucketed scan opens 10³ files per bucket: same bytes,
+    * three orders of magnitude more opens/footers/scheduler tasks —
+    * the classic small-files cliff ([[fileStats]] +
+    * [[CompactThreshold]] are the trigger). Compaction rewrites the
+    * SAME rows in the SAME bucket layout (first-seen keepers
+    * preserved verbatim — this is a file-layout operation, not a
+    * dedup pass), so probe plans before and after are identical and
+    * the exchange-free join contract survives; only the file count
+    * changes. Works for all four lanes: the bucket column comes from
+    * the marker's family, the bucket count from the marker.
     *
     * Run it out-of-band (the compaction window a nightly table
     * service owns): one scan + one hash exchange on the bucket
@@ -717,9 +885,8 @@ object Registry {
     * the bucket spec uses, so each of the `buckets` write tasks
     * holds exactly one bucket's rows and lays exactly one file.
     */
-  def compact(spark: SparkSession, name: String, bucketCol: String,
-      buckets: Int): Unit =
-    compactImpl(spark, name, bucketCol, buckets, crashBeforeSwap = false)
+  def compact(spark: SparkSession, name: String): Unit =
+    compactImpl(spark, name, crashBeforeSwap = false)
 
   /** [[compact]] with a crash-injection point for RegistrySpec:
     * `crashBeforeSwap = true` stops after the staged write, before
@@ -727,12 +894,14 @@ object Registry {
     * mid-compact leaves behind.
     */
   private[graft] def compactImpl(spark: SparkSession, name: String,
-      bucketCol: String, buckets: Int, crashBeforeSwap: Boolean): Unit = {
+      crashBeforeSwap: Boolean): Unit = {
     val root = registryRoot(tableLocation(spark, name))
     require(!root.toString.contains("'"),
       s"registry location must not contain a quote; got '$root'")
     withLock(spark, root.toString) { lease =>
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val info = markerAt(fs, root).getOrElse(throw new IllegalStateException(
+        s"'$root' has no stamped marker — stampMarker it before compacting"))
       val curV = liveVersion(fs, root) // None = legacy (data in root)
       val nextV = curV.map(_ + 1).getOrElse(0)
       val tmp = versionDir(root, nextV)
@@ -752,7 +921,7 @@ object Registry {
       // one file each.
       spark.sql(s"CREATE TABLE $tmpName LIKE $name LOCATION '$tmp'")
       val pinned = spark.table(name).localCheckpoint()
-      pinned.repartition(buckets, col(bucketCol))
+      pinned.repartition(info.buckets, col(laneOf(info.family).bucketCol))
         .write.mode(SaveMode.Append).insertInto(tmpName)
       pinned.unpersist()
       spark.sql(s"DROP TABLE $tmpName") // catalog only — files stay
@@ -774,393 +943,6 @@ object Registry {
     }
   }
 
-  // ---- near-duplicate registry (SimHash-banded) ----
-
-  /** Create or replace an EMPTY near-dup registry: one row per
-    * (window, doc) — `w` the 15-bit simhash window index, `bucket`
-    * that window's value — bucketed on the bucket key so ingest
-    * probes join the stored side exchange-free.
-    */
-  def createNear(spark: SparkSession, name: String, path: String,
-      buckets: Int, leaseMs: Long = DefaultLeaseMs): Unit = {
-    val data = prepareLocation(spark, name, path, "near", buckets,
-      Map("schema" -> SchemaVersion.toString,
-        "lease_ms" -> leaseMs.toString))
-    createTable(spark, name, data, buckets, NearDdl, "bucket")
-  }
-
-  /** The (w, bucket) window keys of a simhash — window t is the
-    * 15-bit slice at bits [60−15(t+1), 60−15t), the
-    * [[Dedup.bandedHammingPairs]] convention.
-    */
-  private def windowKeys(df: DataFrame, tables: Int): DataFrame =
-    df.select(col("doc_id"), col("simhash"),
-        explode(array((0 until tables).map(t => struct(
-          lit(t).as("w"),
-          shiftright(col("simhash"), 60 - 15 * (t + 1))
-            .bitwiseAND(lit(32767L)).as("bucket"))): _*)).as("__wb"))
-      .select(col("__wb.w").as("w"), col("__wb.bucket").as("bucket"),
-        col("doc_id"), col("simhash"))
-
-  /** Ingest one batch against the near-dup registry: a batch doc
-    * survives iff (a) it is its simhash's min-id representative
-    * within the batch (identical-simhash collapse — within-batch
-    * NEAR pairs with distinct simhashes land together by documented
-    * contract and are the next corpus pass's job), and (b) NO
-    * registered doc shares a 15-bit window AND sits within
-    * `maxHamming` (the banded-candidate match rule of
-    * [[Dedup.bandedHammingPairs]]: recall total below `tables`
-    * differing bits, the standard multi-table trade above). History
-    * TEXT is never read — 60-bit signatures are the whole state,
-    * ~16 bytes per registered doc per window. Survivors' window
-    * rows append bucket-aligned; returns (doc_id, simhash).
-    * `batchNo` follows the object-level batch-number contract.
-    */
-  def nearIngest(spark: SparkSession, name: String, batch: DataFrame,
-      idCol: String, textCol: String, batchNo: Int, tables: Int = 2,
-      maxHamming: Int = 20): DataFrame =
-    nearIngestSims(spark, name,
-      batch.select(Dedup.simhash60(
-          graft.text.TextFunctions.tokens(col(textCol))).as("simhash"),
-        col(idCol).cast("long").as("doc_id")),
-      batchNo, tables, maxHamming)
-
-  /** [[nearIngest]] over PRECOMPUTED signatures — `sims` must be
-    * (doc_id, simhash), one row per batch doc (duplicates by doc id
-    * are the caller's bug). Same single-scan rationale as
-    * [[ingestDigests]], same replay-safe self-exclusion: the probe
-    * ignores rows stamped with THIS batch number, so a replayed
-    * batch sees the registry exactly as its first attempt did.
-    */
-  def nearIngestSims(spark: SparkSession, name: String,
-      sims: DataFrame, batchNo: Int, tables: Int = 2,
-      maxHamming: Int = 20): DataFrame = {
-    val loc = tableLocation(spark, name)
-    withLock(spark, registryRoot(loc).toString) { lease =>
-      // reps PINNED (r16): it feeds both the probe explode and the
-      // kept anti-join — un-materialized, the batch's simhash
-      // subtree re-ran per reference, and any AQE join-strategy
-      // flip on the anti-join could re-run it again (the r15
-      // regression). One checkpoint of the batch-bounded
-      // (simhash, doc_id) rows makes both harmless, and licenses
-      // dropping the pre-anti-join distinct: the left_anti tests
-      // key existence, so duplicate matched ids (bounded by
-      // candidates-per-probe, the documented bucket-collision
-      // bound) change nothing — the distinct was a full exchange +
-      // aggregate per ingest (metered r15: near-lane ingest summed
-      // task time 7.1 s → ~1.2 s without it).
-      val reps = sims
-        .groupBy(col("simhash"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .localCheckpoint()
-      val probes = windowKeys(reps, tables)
-      val others = spark.table(name)
-        .filter(!(col("batch_no") <=> lit(batchNo)))
-      val matched = probes
-        .join(others.select(col("w"), col("bucket"),
-            col("simhash").as("__rs")),
-          Seq("w", "bucket"))
-        .filter(Dedup.hammingDist(col("simhash"), col("__rs"))
-          <= maxHamming)
-        .select(col("doc_id"))
-      // pinned before the append — same refresh-by-path hazard as
-      // [[ingest]], same localCheckpoint cure
-      val kept = reps.join(matched, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("simhash"))
-        .localCheckpoint()
-      validateLease(spark, lease)
-      windowKeys(kept, tables)
-        .join(ownRows(spark, name, loc, batchNo)
-          .select(col("w"), col("doc_id")),
-          Seq("w", "doc_id"), "left_anti")
-        .select(col("w"), col("bucket"), col("doc_id"), col("simhash"),
-          lit(batchNo).as("batch_no"))
-        .write.mode(SaveMode.Append).insertInto(name)
-      kept
-    }
-  }
-
-  // ---- MinHash-band registry (Jaccard-threshold near-dup) ----
-
-  /** Create or replace an EMPTY MinHash-band registry — the FOURTH
-    * registry modality: [[ingest]] catches byte-exact copies,
-    * [[nearIngest]] hamming-close token distributions (SimHash),
-    * [[vecIngest]] semantic/embedding duplicates; this lane catches
-    * SET-overlap duplicates (shared shingles — Jaccard), the
-    * classic MinHash trade: robust to reordering and local edits
-    * that move many simhash bits but few shingles. One row per
-    * (band, doc): `bucket` is the band digest, bucketed so ingest
-    * probes join the stored side exchange-free; `sig` (the k-value
-    * signature) rides along as the verification payload, exactly as
-    * the vec lane stores embeddings.
-    *
-    * `k` (signature length) and `bands` are PHYSICAL — baked into
-    * every stored signature and bucket — so the marker stamps them
-    * ([[attachMinhash]] validates; [[minhashIngest]] reads them
-    * back rather than trusting a caller default, the vec-planes
-    * discipline). Collision resolution: expected candidates per
-    * probe ≈ bands · rows / distinct-buckets; shingle-set diversity
-    * keeps band buckets near-unique, and a clustered corpus raises
-    * `bands`/`k` exactly like the vec lane raises planes.
-    */
-  def createMinhash(spark: SparkSession, name: String, path: String,
-      buckets: Int, k: Int = 8, bands: Int = 4,
-      shingleW: Int = 3, leaseMs: Long = DefaultLeaseMs): Unit = {
-    require(k % bands == 0, s"bands must divide k; got k=$k bands=$bands")
-    require(shingleW >= 1, s"shingleW must be >= 1; got $shingleW")
-    val data = prepareLocation(spark, name, path, "minhash", buckets,
-      Map("schema" -> SchemaVersion.toString,
-        "k" -> k.toString, "bands" -> bands.toString,
-        "w" -> shingleW.toString,
-        "lease_ms" -> leaseMs.toString))
-    createTable(spark, name, data, buckets, MinDdl, "bucket")
-  }
-
-  /** Ingest one batch against the MinHash-band registry: a batch doc
-    * survives iff (a) it is its full SIGNATURE's min-id
-    * representative within the batch (identical-signature collapse —
-    * the [[nearIngestSims]] convention), and (b) NO registered doc
-    * shares a band digest AND agrees on ≥ `minMatches` of the k
-    * signature positions (the q102 estimator: est-Jaccard =
-    * matches/k, kept integer-exact by thresholding on the match
-    * COUNT). History text/shingles never re-read — signatures are
-    * the whole state. Survivors' band rows append bucket-aligned;
-    * returns (doc_id, sig). `batchNo` follows the object-level
-    * batch-number contract (probe self-exclusion ⇒ replay-safe).
-    */
-  /** The (k, bands, shingleW) a minhash registry was created with —
-    * read from the marker, the physical contract a caller deriving
-    * signatures in its own projection (the one-text-scan pipelines)
-    * must sign with. All three are baked into every stored
-    * signature: k/bands shape the band digests, and the SHINGLE
-    * WIDTH shapes the sets being hashed — a probe shingled at a
-    * different width signs incompatibly and silently re-admits
-    * every Jaccard duplicate (r14 ADVICE #4), so the width travels
-    * with the registry instead of living in caller defaults.
-    */
-  final case class MinhashParams(k: Int, bands: Int, shingleW: Int)
-
-  def minhashParams(spark: SparkSession, name: String): MinhashParams = {
-    val root = registryRoot(tableLocation(spark, name))
-    val info = readMarker(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    MinhashParams(
-      info.flatMap(_.extras.get("k")).map(_.toInt).getOrElse(8),
-      info.flatMap(_.extras.get("bands")).map(_.toInt).getOrElse(4),
-      info.flatMap(_.extras.get("w")).map(_.toInt).getOrElse(3))
-  }
-
-  /** Widen a narrow batch to the session's parallelism before an
-    * expensive per-row kernel: the sf test tables are single-row-
-    * group parquet files Spark cannot split, so a kernel downstream
-    * of such a scan runs on 1-2 cores while the rest idle (guide
-    * §2.5 input-skew rule). Deterministic — hash-partitioned on
-    * `keyCol`, never round-robin, so task retries reproduce the
-    * same row placement — and pass-through for any batch already at
-    * ≥ defaultParallelism partitions: a well-partitioned production
-    * ingest pays nothing.
-    */
-  private def widen(spark: SparkSession, df: DataFrame,
-      keyCol: String): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(target, col(keyCol))
-  }
-
-  /** Shingle width comes FROM THE MARKER (never a caller default) —
-    * see [[MinhashParams]]. The batch is [[widen]]ed before the
-    * k·MD5 signature kernel — the one registry kernel expensive
-    * enough to pay for the exchange (metered r15/r16: sig pass 1.2 s
-    * as-scanned → ~0.5 s repartitioned; the simhash/md5 kernels of
-    * the near/exact lanes cost ~0.1 s serial and stay un-widened).
-    */
-  def minhashIngest(spark: SparkSession, name: String, batch: DataFrame,
-      idCol: String, textCol: String, batchNo: Int,
-      minMatches: Int = 6): DataFrame = {
-    val p = minhashParams(spark, name)
-    minhashIngestSigs(spark, name,
-      widen(spark, batch.select(col(idCol).cast("long").as("doc_id"),
-          col(textCol).as("__mh_text")), "doc_id")
-        .select(col("doc_id"),
-          Dedup.minhashSignatureFast(
-            Dedup.shingles(col("__mh_text"), p.shingleW), p.k).as("sig")),
-      batchNo, minMatches)
-  }
-
-  /** [[minhashIngest]] over PRECOMPUTED signatures — `sigs` must be
-    * (doc_id, sig) with sig the k-value signature at the MARKER's k
-    * ([[minhashParams]]). Same single-scan rationale as
-    * [[ingestDigests]], same replay-safe self-exclusion.
-    */
-  def minhashIngestSigs(spark: SparkSession, name: String,
-      sigs: DataFrame, batchNo: Int, minMatches: Int = 6): DataFrame = {
-    val loc = tableLocation(spark, name)
-    val MinhashParams(k, bands, _) = minhashParams(spark, name)
-    require(minMatches >= k / bands,
-      s"minMatches=$minMatches below one band's $k/$bands positions " +
-        "would drop docs no band can even propose")
-    withLock(spark, registryRoot(loc).toString) { lease =>
-      // NULL signatures are excluded WHOLE — a null band bucket never
-      // matches the probe join, so such docs would otherwise survive
-      // and append fresh rows every batch forever (the ingestDigests
-      // null-h / vecIngest null-embedding hazard in MinHash form, r14
-      // ADVICE #3). Two null shapes exist: a null ARRAY (null shingle
-      // input) and an array of k NULLS (empty shingle set — array_min
-      // of nothing is null per position), so the guard requires at
-      // least one non-null position.
-      // reps is PINNED (r16, the r15 "attempt 2" note): it feeds both
-      // the probe side and the kept anti-join, and un-materialized
-      // the signature kernel + collapse aggregate re-ran once per
-      // reference (exchange reuse does not survive AQE's replanning
-      // here — metered: the kept-pin job's summed task time carried
-      // the kernel twice). One cheap checkpoint of the batch-bounded
-      // (sig, doc_id) rows runs the kernel exactly once and makes
-      // every downstream join-strategy flip harmless.
-      val reps = sigs
-        .filter(col("sig").isNotNull &&
-          size(filter(col("sig"), x => x.isNotNull)) > 0)
-        .groupBy(col("sig"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .localCheckpoint()
-      val probes = reps.select(col("doc_id"), col("sig"),
-          posexplode(Dedup.bandKeys(col("sig"), bands, k / bands)))
-        .select(col("pos").cast("int").as("b"), col("col").as("bucket"),
-          col("doc_id"), col("sig"))
-      val others = spark.table(name)
-        .filter(!(col("batch_no") <=> lit(batchNo)))
-      val matched = probes
-        .join(others.select(col("bucket"), col("sig").as("__rsig")),
-          Seq("bucket"))
-        .filter(size(filter(zip_with(col("sig"), col("__rsig"),
-          (x, y) => x === y), m => m)) >= minMatches)
-        // no distinct: the left_anti below tests key existence, and
-        // reps is pinned so a join flip cannot re-run the kernel
-        .select(col("doc_id"))
-      val kept = reps.join(matched, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("sig"))
-        .localCheckpoint()
-      validateLease(spark, lease)
-      kept.select(col("doc_id"), col("sig"),
-          posexplode(Dedup.bandKeys(col("sig"), bands, k / bands)))
-        .join(ownRows(spark, name, loc, batchNo)
-          .select(col("b").as("__ob"), col("doc_id").as("__od")),
-          col("pos") === col("__ob") && col("doc_id") === col("__od"),
-          "left_anti")
-        .select(col("pos").cast("int").as("b"), col("col").as("bucket"),
-          col("doc_id"), col("sig"), lit(batchNo).as("batch_no"))
-        .write.mode(SaveMode.Append).insertInto(name)
-      kept
-    }
-  }
-
-  // ---- embedding near-duplicate registry (RHP-bucketed) ----
-
-  /** Create or replace an EMPTY vector registry: one row per
-    * registered vector, keyed by its random-hyperplane signature —
-    * bucketed on the signature so ingest probes join the stored
-    * side exchange-free. `planes` is stamped into the marker along
-    * with the hyperplane-hash version ([[RhpHashVersion]]): both are
-    * baked into every stored signature, so [[vecIngest]] reads them
-    * back from the marker instead of trusting a caller default — an
-    * attach-then-ingest with a different plane count would otherwise
-    * sign probes that match nothing and re-admit every duplicate.
-    *
-    * SIZE `planes` TO THE CORPUS — the O(batch) contract holds only
-    * while signature buckets stay bounded: expected candidates per
-    * probe ≈ registry_rows / 2^planes, so ingest cost grows
-    * LINEARLY with the registry once 2^planes is small against it.
-    * Measured (PERF.md r13): at planes=8 (256 buckets) a 5k-vector
-    * ingest degraded 4.3 s → 137 s as the registry grew 5k → 510k;
-    * at planes=16 the same sweep is flat. Rule: planes ≳
-    * log2(expected corpus) + a few bits of slack. A corpus that
-    * outgrows its create-time sizing migrates via [[rekeyVec]] —
-    * one O(registry) pass, no corpus access.
-    */
-  def createVec(spark: SparkSession, name: String, path: String,
-      buckets: Int, planes: Int = 16,
-      leaseMs: Long = DefaultLeaseMs): Unit = {
-    val data = prepareLocation(spark, name, path, "vec", buckets,
-      Map("schema" -> SchemaVersion.toString,
-        "planes" -> planes.toString, "hash" -> RhpHashVersion,
-        "lease_ms" -> leaseMs.toString))
-    createTable(spark, name, data, buckets, VecDdl, "sig")
-  }
-
-  /** Ingest one batch of vectors: a vector survives iff (a) it is
-    * its exact embedding's min-id representative within the batch,
-    * and (b) NO registered vector shares its RHP signature with
-    * rounded cosine ≥ `threshold` (the [[graft.similarity.Ann
-    * .lshDupPairs]] rule: exact re-ingested copies share the
-    * signature by construction, so recall on true duplicates is
-    * total; near-but-rotated vectors follow the standard LSH
-    * trade). The registry holds (sig, id, embedding) — at vector
-    * corpora the embedding IS the signature payload, and probe
-    * candidates are signature-bucket-bounded, never all-pairs.
-    * Third member of the registry family: exact digests ([[ingest]]),
-    * text SimHash windows ([[nearIngest]]), vectors here — one
-    * O(batch) ingest contract across modalities. The plane count and
-    * hash version come FROM THE MARKER the create stamped (r13
-    * advisory #3) — exact duplicates share the signature at ANY
-    * planes, but only if probe and history were signed identically.
-    * `batchNo` follows the object-level batch-number contract.
-    */
-  def vecIngest(spark: SparkSession, name: String, batch: DataFrame,
-      idCol: String, vecCol: String, batchNo: Int,
-      threshold: Double = 0.99, roundTo: Int = 6): DataFrame = {
-    import graft.similarity.Ann
-    val loc = tableLocation(spark, name)
-    val root = registryRoot(loc)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val info = readMarker(fs, root)
-    info.flatMap(_.extras.get("hash")).foreach(h =>
-      require(h == RhpHashVersion,
-        s"vec registry at '$loc' signed with '$h'; this binary signs " +
-          s"'$RhpHashVersion' — rekeyVec to migrate"))
-    // legacy pre-stamp markers fall back to the historical default
-    val planes = info.flatMap(_.extras.get("planes")).map(_.toInt)
-      .getOrElse(16)
-    withLock(spark, root.toString) { lease =>
-      // NULL embeddings are excluded WHOLE (documented convention):
-      // they carry no signature — the RHP kernel has nothing to hash —
-      // and a null signature key would dodge every probe join forever
-      // (the ingestDigests null-h hazard in vector form)
-      // reps PINNED + no matched distinct — the same r16 probe-lane
-      // shape as nearIngestSims/minhashIngestSigs: the RHP signature
-      // + embedding collapse runs exactly once, and the kept
-      // anti-join tolerates duplicate matched ids by key-existence
-      // semantics (bounded by candidates-per-signature-bucket).
-      val reps = batch.filter(col(vecCol).isNotNull)
-        .groupBy(col(vecCol).as("embedding"))
-        .agg(min(col(idCol).cast("long")).as("vec_id"))
-        .select(col("vec_id"), col("embedding"),
-          Ann.rhpSignature(col("embedding"), planes).as("sig"))
-        .localCheckpoint()
-      val others = spark.table(name)
-        .filter(!(col("batch_no") <=> lit(batchNo)))
-      val matched = reps
-        .join(others.select(col("sig"), col("embedding").as("__rv")),
-          Seq("sig"))
-        .filter(round(Ann.dot(col("embedding"), col("__rv")) /
-          (Ann.norm(col("embedding")) * Ann.norm(col("__rv"))), roundTo)
-          >= threshold)
-        .select(col("vec_id"))
-      // same refresh-by-path hazard, same localCheckpoint cure
-      val kept = reps.join(matched, Seq("vec_id"), "left_anti")
-        .select(col("sig"), col("vec_id"), col("embedding"))
-        .localCheckpoint()
-      // explicit re-select after the join: the join key leads the
-      // join output, and insertInto binds by POSITION — without this
-      // the sig column would silently receive vec_id values
-      validateLease(spark, lease)
-      kept.join(ownRows(spark, name, loc, batchNo).select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-        .select(col("sig"), col("vec_id"), col("embedding"),
-          lit(batchNo).as("batch_no"))
-        .write.mode(SaveMode.Append).insertInto(name)
-      kept.select(col("vec_id"), col("sig"))
-    }
-  }
-
   /** Migrate a vector registry to a HIGHER plane count — the escape
     * hatch for a corpus that outgrew its create-time sizing (r13
     * verdict #3): the O(batch) ingest contract decays once
@@ -1169,7 +951,7 @@ object Registry {
     * embeddings, so migration is ONE pass over the registry — never
     * the corpus: re-sign every stored embedding at `newPlanes` into
     * a fresh registry at `newPath` (marker stamped with the new
-    * count by [[createVec]]), preserving vec_id, embedding and
+    * count by [[create]]), preserving vec_id, embedding and
     * batch_no verbatim. Historical keep/drop verdicts are preserved
     * BY CONSTRUCTION (rows are copied, not re-adjudicated); future
     * ingests probe at the new plane count. Exact duplicates share
@@ -1179,13 +961,12 @@ object Registry {
     */
   def rekeyVec(spark: SparkSession, name: String, newName: String,
       newPath: String, buckets: Int, newPlanes: Int): Unit = {
-    import graft.similarity.Ann
     // the SOURCE lease is held for the whole pass: an ingest landing
     // in the old registry mid-rekey would be silently absent from the
     // new one. Lock order is source-then-destination, the documented
     // convention for any multi-registry operation.
     val srcRoot = registryRoot(tableLocation(spark, name))
-    // destination must be genuinely NEW (r14 ADVICE #2): createVec's
+    // destination must be genuinely NEW (r14 ADVICE #2): create's
     // prepareLocation recursively deletes a marker-bearing directory,
     // so newPath == source would destroy the registry before the
     // insert reads it — silent total data loss. Compare QUALIFIED
@@ -1200,7 +981,7 @@ object Registry {
       s"rekeyVec destination path must be outside the source " +
         s"registry at '$srcRoot'")
     withLock(spark, srcRoot.toString) { srcLease =>
-      createVec(spark, newName, newPath, buckets, planes = newPlanes)
+      create(spark, Vec(planes = newPlanes), newName, newPath, buckets)
       withLock(spark,
           registryRoot(tableLocation(spark, newName)).toString) { _ =>
         validateLease(spark, srcLease)

@@ -190,9 +190,8 @@ object Pipelines {
 
   /** Incremental-curate driver — ONE new batch through the whole
     * registry family in one call: quality floor → exact-digest
-    * registry ([[graft.dedup.Registry.ingestDigests]]) → SimHash
-    * near-dup registry ([[graft.dedup.Registry.nearIngestSims]]) →
-    * optional vector registry ([[graft.dedup.Registry.vecIngest]])
+    * registry → SimHash near-dup registry → optional vector registry
+    * (each a [[graft.dedup.Registry.ingest]] over its lane)
     * → n-gram decontamination against a benchmark corpus. This is
     * the operator a continuously-fed 100 TB corpus actually calls:
     * the per-modality registries (q237/q241/q242) each dedup a
@@ -219,13 +218,13 @@ object Pipelines {
     * reaches `survivors`.
     *
     * The optional vector lane (`vecCol` naming an embedding column
-    * on `batch`, `vecReg` a [[graft.dedup.Registry.createVec]]
+    * on `batch`, `vecReg` a [[graft.dedup.Registry.Vec]] lane
     * table) catches semantic duplicates whose TEXT the near-dup lane
     * missed — re-encoded or paraphrased copies sharing an embedding.
     * Rows with a NULL embedding skip the lane and survive on their
     * text verdicts alone (documented convention, r13 advisory #1).
     * An optional MINHASH lane (`minhashReg` naming a
-    * [[graft.dedup.Registry.createMinhash]] table) slots between the
+    * [[graft.dedup.Registry.Minhash]] lane table) slots between the
     * SimHash and vector stages — Jaccard/set-overlap duplicates, the
     * q249 rule — with its signature derived in the same single text
     * scan at the registry's stamped (k, bands); `nMinhash` reports
@@ -246,10 +245,11 @@ object Pipelines {
       bench: DataFrame, benchTextCol: String, batchNo: Int,
       minChars: Int = 100, n: Int = 3,
       vecReg: Option[String] = None, vecCol: Option[String] = None,
-      tables: Int = 2, maxHamming: Int = 20,
+      maxHamming: Int = 20,
       minhashReg: Option[String] = None,
       minMatches: Int = 6): IngestBatchResult = {
     import graft.dedup.Registry
+    import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
     require(vecReg.isDefined == vecCol.isDefined,
       "vecReg and vecCol come together (the vector lane needs both)")
     // the minhash lane signs with the REGISTRY's (k, bands, shingle
@@ -258,7 +258,9 @@ object Pipelines {
     // silently re-admits every Jaccard duplicate) — before the
     // one-text-scan projection so the signature derives in the same
     // pass as every other text-dependent column
-    val minP = minhashReg.map(r => Registry.minhashParams(spark, r))
+    val nearLane = Near(maxHamming)
+    val minhash = minhashReg.map(r =>
+      r -> Registry.resolve(spark, Minhash(minMatches = minMatches), r))
     val toks = TextFunctions.tokens(col(textCol))
     // THE one batch-text scan: every text-derived column in one
     // projection, eagerly pinned (localCheckpoint severs lineage, so
@@ -266,27 +268,23 @@ object Pipelines {
     val derived = batch.select(
       (col(idCol).cast("long").as("doc_id") +:
         length(col(textCol)).as("__len") +:
-        TextFunctions.contentHash(col(textCol)).as("h") +:
-        Dedup.simhash60(toks).as("simhash") +:
+        Exact.sign(col(textCol)).as("h") +:
+        nearLane.sign(col(textCol)).as("simhash") +:
         array_distinct(TextFunctions.ngramsFast(toks, n)).as("__grams") +:
         (vecCol.toSeq.map(c => col(c).as("__vec")) ++
-          minP.toSeq.map(p => Dedup.minhashSignatureFast(
-            Dedup.shingles(col(textCol), p.shingleW), p.k)
-            .as("__msig")))): _*)
+          minhash.toSeq.map(_._2.sign(col(textCol)).as("__msig")))): _*)
       .localCheckpoint()
 
     val quality = derived.filter(col("__len") >= minChars)
 
-    val keptDigests = Registry.ingestDigests(spark, exactReg,
-      quality.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id")),
-      batchNo)
+    val keptDigests = Registry.ingest(spark, Exact, exactReg,
+      quality.select(col("doc_id").as("keep_id"), col("h")), batchNo)
     val exact = quality.join(
       keptDigests.select(col("h"), col("keep_id").as("doc_id")),
       Seq("doc_id", "h"), "left_semi")
 
-    val keptNear = Registry.nearIngestSims(spark, nearReg,
-      exact.select(col("doc_id"), col("simhash")), batchNo, tables,
-      maxHamming)
+    val keptNear = Registry.ingest(spark, nearLane, nearReg,
+      exact.select(col("doc_id"), col("simhash")), batchNo)
     val near = exact.join(keptNear.select(col("doc_id")),
       Seq("doc_id"), "left_semi")
 
@@ -295,22 +293,21 @@ object Pipelines {
     // distance passed the near gate — enabled when the caller
     // maintains a minhash registry; the signature derives in the one
     // text scan above at the registry's own (k, bands)
-    val keptM = minhashReg.map(reg => Registry.minhashIngestSigs(spark,
-      reg, near.select(col("doc_id"), col("__msig").as("sig")),
-      batchNo, minMatches))
+    val keptM = minhash.map { case (reg, lane) =>
+      Registry.ingest(spark, lane, reg,
+        near.select(col("doc_id"), col("__msig").as("sig")), batchNo)
+    }
     val jac = keptM.fold(near)(k =>
       near.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
 
     // a doc with a NULL embedding cannot probe the vector lane
-    // (vecIngest excludes nulls whole), but it must NOT vanish from
+    // (its collapse excludes nulls whole), but it must NOT vanish from
     // the corpus (r13 advisory #1): only non-null rows pass through
     // the vec gate; null-embedding survivors rejoin the survivor set
     // unchanged — unique TEXT with a missing embedding stays a
     // survivor, documented convention
-    val keptVec = vecReg.map(reg => Registry.vecIngest(spark, reg,
-      jac.filter(col("__vec").isNotNull)
-        .select(col("doc_id"), col("__vec")), "doc_id", "__vec",
-      batchNo))
+    val keptVec = vecReg.map(reg => Registry.ingest(spark, Vec(), reg,
+      jac.filter(col("__vec").isNotNull), "doc_id", "__vec", batchNo))
     val vec = keptVec.fold(jac)(k =>
       jac.filter(col("__vec").isNotNull)
         .join(k.select(col("vec_id").as("doc_id")), Seq("doc_id"),
@@ -492,6 +489,7 @@ object PipelineDriver {
       compactThreshold: Int = graft.dedup.Registry.CompactThreshold)
       : Boolean = {
     import graft.dedup.Registry
+    import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
     val committed = new org.apache.hadoop.fs.Path(
       s"$regBase/_committed/batch_$batchNo")
     val fs = committed.getFileSystem(
@@ -506,23 +504,17 @@ object PipelineDriver {
     // whose plans were all seen before reads near zero)
     def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compiled0 = compiled
-    def ensure(nm: String, p: String,
-        create: (String, String) => Unit,
-        attach: (String, String) => Unit): Unit =
-      if (Registry.exists(spark, p)) attach(nm, p) else create(nm, p)
-    ensure("graft_cli_ex", s"$regBase/ex",
-      Registry.create(spark, _, _, buckets),
-      Registry.attach(spark, _, _, buckets))
-    ensure("graft_cli_nr", s"$regBase/nr",
-      Registry.createNear(spark, _, _, buckets),
-      Registry.attachNear(spark, _, _, buckets))
     val hasVec = docs.columns.contains("embedding")
-    if (hasVec) ensure("graft_cli_vc", s"$regBase/vc",
-      Registry.createVec(spark, _, _, buckets),
-      Registry.attachVec(spark, _, _, buckets))
-    if (minhash) ensure("graft_cli_mh", s"$regBase/mh",
-      Registry.createMinhash(spark, _, _, buckets),
-      Registry.attachMinhash(spark, _, _, buckets))
+    // one lane per registry dir, named graft_cli_<dir>
+    val lanes = Seq[(String, Registry.Lane)]("ex" -> Exact, "nr" -> Near()) ++
+      (if (hasVec) Seq("vc" -> Vec()) else Nil) ++
+      (if (minhash) Seq("mh" -> Minhash()) else Nil)
+    lanes.foreach { case (dir, lane) =>
+      val (nm, p) = (s"graft_cli_$dir", s"$regBase/$dir")
+      if (Registry.exists(spark, p))
+        Registry.attach(spark, lane, nm, p, buckets)
+      else Registry.create(spark, lane, nm, p, buckets)
+    }
     val r = Pipelines.ingestBatch(spark, docs, "doc_id", "text",
       "graft_cli_ex", "graft_cli_nr",
       bench.getOrElse(docs.limit(0)), "text", batchNo,
@@ -544,15 +536,13 @@ object PipelineDriver {
     // fenced lease as every other mutation. The reclaim of superseded
     // version dirs stays a separate vacuum decision (reader grace).
     if (autoCompact) {
-      val lanes = Seq("graft_cli_ex" -> "h", "graft_cli_nr" -> "bucket") ++
-        (if (hasVec) Seq("graft_cli_vc" -> "sig") else Nil) ++
-        (if (minhash) Seq("graft_cli_mh" -> "bucket") else Nil)
-      lanes.foreach { case (nm, bucketCol) =>
+      lanes.foreach { case (dir, _) =>
+        val nm = s"graft_cli_$dir"
         val st = Registry.fileStats(spark, nm)
         if (st.maxFilesPerBucket > compactThreshold) {
           println(s"[ingest] auto-compact $nm " +
             s"(files/bucket=${st.maxFilesPerBucket})")
-          Registry.compact(spark, nm, bucketCol, buckets)
+          Registry.compact(spark, nm)
         }
       }
     }

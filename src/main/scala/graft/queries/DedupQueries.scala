@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, Registry}
 import graft.io.Tables.table
 import graft.similarity.Ann
 import graft.text.{TextFunctions => T, Winnow}
@@ -78,6 +78,38 @@ object DedupQueries extends QueryPack {
         .withColumn("text", concat(col("text"), lit(" nd"),
           (col("doc_id") % 4).cast("string")))
         .withColumn("doc_id", col("doc_id") + 200000L))
+  }
+
+  /** `d` ∪ ' zz yy'-suffixed copies of doc_id<40 under id+300001
+    * (the +1 pushes each copy into the NEXT batch cycle so
+    * near-matches genuinely cross the batch boundary).
+    */
+  private def withZzCopies(d: DataFrame): DataFrame =
+    d.unionByName(d.filter(col("doc_id") < 40)
+      .select((col("doc_id") + 300001L).as("doc_id"),
+        concat(col("text"), lit(" zz yy")).as("text")))
+
+  /** The registry demo replay (q237, q241, q242, q249): a fresh
+    * `lane` registry at `$tmpdir/<dirName>/<tag>`, then `corpus`
+    * ingested IN ORDER as 3 batches by `idCol % 3`. Output one row per
+    * batch: (batch_no, n_in, n_kept).
+    */
+  private[queries] def laneReplay(s: SparkSession, dir: String,
+      lane: Registry.Lane, name: String, dirName: String,
+      corpus: DataFrame, idCol: String, srcCol: String): DataFrame = {
+    val tag = java.lang.Integer.toHexString(dir.hashCode)
+    val reg = s"${name}_$tag"
+    Registry.create(s, lane, reg,
+      s"${System.getProperty("java.io.tmpdir")}/$dirName/$tag", buckets = 8)
+    val rows = (0 until 3).map { b =>
+      val batch = corpus.filter(col(idCol) % 3 === b)
+      val nIn = batch.count()
+      (b, nIn, Registry.ingest(s, lane, reg, batch, idCol, srcCol, b).count())
+    }
+    import s.implicits._
+    rows.toDF("batch_no", "n_in", "n_kept")
+      .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
+      .orderBy(col("batch_no"))
   }
 
   /** q174/q176 share one (exact, approx) ANN ranking pair —
@@ -446,27 +478,12 @@ object DedupQueries extends QueryPack {
     // from-scratch dedup of the union under the (batch_no, id) tie
     // rule, which is exactly what the oracle replays. Output one
     // row per batch: (batch_no, n_in, n_kept).
-    "q237_dedup_registry" -> ((s, dir) => {
-      import graft.dedup.Registry
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      val name = s"graft_dedup_reg_$tag"
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_registry/$tag"
-      Registry.create(s, name, path, buckets = 8)
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val rows = (0 until 3).map { b =>
-        val batch = d.filter(col("doc_id") % 3 === b)
-        val nIn = batch.count()
-        val kept = Registry.ingest(s, name, batch, "doc_id", "text", b)
-        (b, nIn, kept.count())
-      }
-      import s.implicits._
-      rows.toDF("batch_no", "n_in", "n_kept")
-        .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
-        .orderBy(col("batch_no"))
-    }),
+    "q237_dedup_registry" -> ((s, dir) =>
+      laneReplay(s, dir, Registry.Exact, "graft_dedup_reg", "graft_registry",
+        table(s, dir, "documents").select(col("doc_id"), col("text")),
+        "doc_id", "text")),
 
-    // Cross-run incremental NEAR-dup registry (Registry.nearIngest):
+    // Cross-run incremental NEAR-dup registry (the Registry.Near lane):
     // q237's registry contract for NEAR duplicates — history is a
     // bucketed (window, bucket, simhash) signature table, ~16 bytes
     // per doc per window, and a new batch drops any doc whose
@@ -477,31 +494,14 @@ object DedupQueries extends QueryPack {
     // +1 pushes each copy into the NEXT batch cycle so near-matches
     // genuinely cross the batch boundary); 3 batches by doc_id % 3
     // ingest in order. Output (batch_no, n_in, n_kept).
-    "q241_near_registry" -> ((s, dir) => {
-      import graft.dedup.Registry
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      val name = s"graft_near_reg_$tag"
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_registry_near/$tag"
-      Registry.createNear(s, name, path, buckets = 8)
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.unionByName(d.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 300001L).as("doc_id"),
-          concat(col("text"), lit(" zz yy")).as("text")))
-      val rows = (0 until 3).map { b =>
-        val batch = corpus.filter(col("doc_id") % 3 === b)
-        val nIn = batch.count()
-        val kept = Registry.nearIngest(s, name, batch, "doc_id", "text", b)
-        (b, nIn, kept.count())
-      }
-      import s.implicits._
-      rows.toDF("batch_no", "n_in", "n_kept")
-        .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
-        .orderBy(col("batch_no"))
-    }),
+    "q241_near_registry" -> ((s, dir) =>
+      laneReplay(s, dir, Registry.Near(), "graft_near_reg",
+        "graft_registry_near", withZzCopies(
+          table(s, dir, "documents").select(col("doc_id"), col("text"))),
+        "doc_id", "text")),
 
-    // Cross-run incremental MINHASH-band registry
-    // (Registry.minhashIngest): the FOURTH registry modality — exact
+    // Cross-run incremental MINHASH-band registry (the
+    // Registry.Minhash lane): the FOURTH registry modality — exact
     // digests (q237), SimHash windows (q241), embeddings (q242), and
     // here SET-overlap (Jaccard) near-duplicates: a new batch's doc
     // drops iff a registered doc shares one of 4 MinHash band
@@ -514,29 +514,11 @@ object DedupQueries extends QueryPack {
     // catch); 3 batches by doc_id % 3. Output (batch_no, n_in,
     // n_kept); the oracle replays signatures, banding, and the
     // batch-chained survivor rule from scratch.
-    "q249_minhash_registry" -> ((s, dir) => {
-      import graft.dedup.Registry
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      val name = s"graft_min_reg_$tag"
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_registry_min/$tag"
-      Registry.createMinhash(s, name, path, buckets = 8, k = 8, bands = 4)
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.unionByName(d.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 300001L).as("doc_id"),
-          concat(col("text"), lit(" zz yy")).as("text")))
-      val rows = (0 until 3).map { b =>
-        val batch = corpus.filter(col("doc_id") % 3 === b)
-        val nIn = batch.count()
-        val kept = Registry.minhashIngest(s, name, batch, "doc_id",
-          "text", b)
-        (b, nIn, kept.count())
-      }
-      import s.implicits._
-      rows.toDF("batch_no", "n_in", "n_kept")
-        .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
-        .orderBy(col("batch_no"))
-    }),
+    "q249_minhash_registry" -> ((s, dir) =>
+      laneReplay(s, dir, Registry.Minhash(k = 8, bands = 4),
+        "graft_min_reg", "graft_registry_min", withZzCopies(
+          table(s, dir, "documents").select(col("doc_id"), col("text"))),
+        "doc_id", "text")),
 
     // Recall meter for the banded-hamming rule the near-dup registry
     // (q241) and simhashNearPairs run on: TRUTH = every pair at
@@ -552,10 +534,7 @@ object DedupQueries extends QueryPack {
     "q245_near_recall_meter" -> ((s, dir) => {
       val d = table(s, dir, "documents")
         .select(col("doc_id"), col("text")).filter(col("doc_id") < 200)
-      val corpus = d.unionByName(d.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 300001L).as("doc_id"),
-          concat(col("text"), lit(" zz yy")).as("text")))
-      val sims = corpus.select(col("doc_id"),
+      val sims = withZzCopies(d).select(col("doc_id"),
           Dedup.simhash60(T.tokens(col("text"))).as("simhash"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sims.count()

@@ -292,9 +292,9 @@ object PipelineQueries extends QueryPack {
         s"${System.getProperty("java.io.tmpdir")}/graft_registry_ing/$tag"
       val (exName, nrName, vcName) = (s"graft_ing_ex_$tag",
         s"graft_ing_nr_$tag", s"graft_ing_vc_$tag")
-      Registry.create(s, exName, s"$base/ex", buckets = 8)
-      Registry.createNear(s, nrName, s"$base/nr", buckets = 8)
-      Registry.createVec(s, vcName, s"$base/vc", buckets = 8)
+      Registry.create(s, Registry.Exact, exName, s"$base/ex", buckets = 8)
+      Registry.create(s, Registry.Near(), nrName, s"$base/nr", buckets = 8)
+      Registry.create(s, Registry.Vec(), vcName, s"$base/vc", buckets = 8)
       // doc_id < 500 caps the DEMO corpus at an absolute size (the
       // whole sf0.01 table; 4× less of sf0.1): the query demonstrates
       // the 4-stage chain and its oracle, and its write-path cost —
@@ -366,8 +366,8 @@ object PipelineQueries extends QueryPack {
       val base =
         s"${System.getProperty("java.io.tmpdir")}/graft_registry_rpl/$tag"
       val (exName, nrName) = (s"graft_rpl_ex_$tag", s"graft_rpl_nr_$tag")
-      Registry.create(s, exName, s"$base/ex", buckets = 8)
-      Registry.createNear(s, nrName, s"$base/nr", buckets = 8)
+      Registry.create(s, Registry.Exact, exName, s"$base/ex", buckets = 8)
+      Registry.create(s, Registry.Near(), nrName, s"$base/nr", buckets = 8)
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 200)
       // same fixture-prep pin as q244: 2 partitions for a 280-row demo

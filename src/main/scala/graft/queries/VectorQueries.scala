@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Registry
 import graft.io.Tables.table
 import graft.similarity.{Ann, Clustering, Pq}
 
@@ -111,7 +112,7 @@ object VectorQueries extends QueryPack {
     // cosine inside buckets. Injected exact copies hash to identical
     // signatures, so recall on true duplicates is total — the pair
     // set q80's all-pairs baseline finds for them is reproduced.
-    // Incremental VECTOR near-dup registry (Registry.vecIngest): the
+    // Incremental VECTOR near-dup registry (the Registry.Vec lane): the
     // q237/q241 ingest contract for embeddings — history is a
     // bucketed (sig, id, embedding) table keyed by the RHP
     // signature, and a new batch drops any vector matching a
@@ -120,27 +121,13 @@ object VectorQueries extends QueryPack {
     // vec_id<20 under id+100001 (the +1 pushes copies into a later
     // batch cycle); 3 batches by vec_id % 3 ingest in order.
     "q242_vec_registry" -> ((s, dir) => {
-      import graft.dedup.Registry
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      val name = s"graft_vec_reg_$tag"
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_registry_vec/$tag"
-      Registry.createVec(s, name, path, buckets = 8)
       val e = table(s, dir, "embeddings").select(col("vec_id"),
         col("embedding"))
-      val corpus = e.unionByName(e.filter(col("vec_id") < 20)
-        .withColumn("vec_id", col("vec_id") + 100001L))
-      val rows = (0 until 3).map { b =>
-        val batch = corpus.filter(col("vec_id") % 3 === b)
-        val nIn = batch.count()
-        val kept = Registry.vecIngest(s, name, batch,
-          "vec_id", "embedding", b)
-        (b, nIn, kept.count())
-      }
-      import s.implicits._
-      rows.toDF("batch_no", "n_in", "n_kept")
-        .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
-        .orderBy(col("batch_no"))
+      DedupQueries.laneReplay(s, dir, Registry.Vec(), "graft_vec_reg",
+        "graft_registry_vec",
+        e.unionByName(e.filter(col("vec_id") < 20)
+          .withColumn("vec_id", col("vec_id") + 100001L)),
+        "vec_id", "embedding")
     }),
 
     // Vector-registry PLANE MIGRATION (Registry.rekeyVec, r13
@@ -154,12 +141,12 @@ object VectorQueries extends QueryPack {
     // 16. Oracle replays both phases with the engine-exact signature
     // SQL. Output (batch_no, n_in, n_kept).
     "q247_vec_rekey" -> ((s, dir) => {
-      import graft.dedup.Registry
       val tag = java.lang.Integer.toHexString(dir.hashCode)
       val base =
         s"${System.getProperty("java.io.tmpdir")}/graft_registry_rekey/$tag"
       val (n8, n16) = (s"graft_rk8_$tag", s"graft_rk16_$tag")
-      Registry.createVec(s, n8, s"$base/p8", buckets = 8, planes = 8)
+      Registry.create(s, Registry.Vec(planes = 8), n8, s"$base/p8",
+        buckets = 8)
       val e = table(s, dir, "embeddings").select(col("vec_id"),
         col("embedding"))
       val corpus = e.unionByName(e.filter(col("vec_id") < 20)
@@ -167,11 +154,13 @@ object VectorQueries extends QueryPack {
       val b0 = corpus.filter(col("vec_id") % 2 === 0)
       val b1 = corpus.filter(col("vec_id") % 2 === 1)
       val n0 = (0, b0.count(),
-        Registry.vecIngest(s, n8, b0, "vec_id", "embedding", 0).count())
+        Registry.ingest(s, Registry.Vec(), n8, b0, "vec_id", "embedding", 0)
+          .count())
       Registry.rekeyVec(s, n8, n16, s"$base/p16", buckets = 8,
         newPlanes = 16)
       val n1 = (1, b1.count(),
-        Registry.vecIngest(s, n16, b1, "vec_id", "embedding", 1).count())
+        Registry.ingest(s, Registry.Vec(), n16, b1, "vec_id", "embedding",
+          1).count())
       import s.implicits._
       Seq(n0, n1).toDF("batch_no", "n_in", "n_kept")
         .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))

@@ -449,28 +449,29 @@ object Streams {
       graft.dedup.Registry.streamEpochBase(spark, registryName,
         checkpoint), id)
 
-  /** Streaming dedup-registry maintenance — [[graft.dedup
-    * .Registry]]'s ingestion twin: each micro-batch dedups against
-    * the persisted digest registry (anti-join whose stored side
-    * reads exchange-free off the bucket layout) and appends ONLY
-    * its own new digests, tagged with the batch id. The registry
-    * table IS the state — append-only, no versioned copies — so
-    * per-batch cost is O(batch) and history text is never
-    * rescanned. First-seen-wins across the whole stream: replaying
-    * the batches equals a from-scratch dedup of their union under
-    * the (batch_no, id) tie rule (StreamsSpec pins it). The
+  /** Streaming dedup-registry maintenance — the ingestion twin of
+    * [[graft.dedup.Registry.ingest]] for any lane: each micro-batch
+    * dedups against the persisted `lane` registry (a probe whose
+    * stored side reads exchange-free off the bucket layout) and
+    * appends ONLY its own survivors, stamped with the epoch-namespaced
+    * batch id. The registry table IS the state — append-only, no
+    * versioned copies — so per-batch cost is O(batch) and history
+    * text is never rescanned. First-seen-wins across the whole
+    * stream, and replay-safe like the direct ingest: replaying the
+    * batches equals the sequential ingest under the (batch_no, id)
+    * tie rule (StreamsSpec and RegistrySpec pin it per lane). The
     * optional handler receives each batch's survivors.
     */
-  def registryMaintStream(docs: DataFrame, idCol: String,
-      textCol: String, registryName: String, checkpoint: String)(
-      handler: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  def registryMaintStream(lane: graft.dedup.Registry.Lane,
+      docs: DataFrame, idCol: String, srcCol: String,
+      registryName: String, checkpoint: String)(
+      handler: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
-        handler(graft.dedup.Registry.ingest(s, registryName, batch,
-          idCol, textCol,
+        handler(graft.dedup.Registry.ingest(s, lane, registryName, batch,
+          idCol, srcCol,
           epochBatchNo(s, registryName, checkpoint, id)), id)
       }
       .start()
@@ -497,66 +498,8 @@ object Streams {
       }
       .start()
 
-  /** [[registryMaintStream]]'s NEAR-dup sibling: each micro-batch
-    * runs [[graft.dedup.Registry.nearIngest]] against the SimHash
-    * window registry — O(batch) per batch, signatures are the whole
-    * state, history text never rescanned. First-seen-wins across
-    * the stream (StreamsSpec pins the q241 survivor chain).
-    */
-  def nearRegistryMaintStream(docs: DataFrame, idCol: String,
-      textCol: String, registryName: String, checkpoint: String)(
-      handler: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        handler(graft.dedup.Registry.nearIngest(s, registryName, batch,
-          idCol, textCol,
-          epochBatchNo(s, registryName, checkpoint, id)), id)
-      }
-      .start()
-
-  /** [[registryMaintStream]]'s VECTOR sibling: each micro-batch runs
-    * [[graft.dedup.Registry.vecIngest]] against the RHP-signature
-    * registry — the q242 contract driven by a stream.
-    */
-  def vecRegistryMaintStream(vecs: DataFrame, idCol: String,
-      vecCol: String, registryName: String, checkpoint: String)(
-      handler: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        handler(graft.dedup.Registry.vecIngest(s, registryName, batch,
-          idCol, vecCol,
-          epochBatchNo(s, registryName, checkpoint, id)), id)
-      }
-      .start()
-
-  /** [[registryMaintStream]]'s MINHASH sibling: each micro-batch
-    * runs [[graft.dedup.Registry.minhashIngest]] against the
-    * band-bucketed signature registry — the q249 Jaccard lane driven
-    * by a stream, micro-batch ids as batch numbers (replay-safe like
-    * the rest of the family).
-    */
-  def minhashRegistryMaintStream(docs: DataFrame, idCol: String,
-      textCol: String, registryName: String, checkpoint: String)(
-      handler: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        handler(graft.dedup.Registry.minhashIngest(s, registryName,
-          batch, idCol, textCol,
-          epochBatchNo(s, registryName, checkpoint, id)), id)
-      }
-      .start()
-
   /** The FULL incremental-curate chain as an ingestion stream — the
-    * per-modality maintenance streams above composed the way a
+    * per-lane maintenance stream above composed the way a
     * production feed runs them: each micro-batch flows through
     * [[graft.pipeline.Pipelines.ingestBatch]] (quality → exact
     * registry → near registry → optional vector registry → n-gram

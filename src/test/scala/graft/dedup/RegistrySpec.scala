@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import Registry.{Exact, Minhash, Near, Vec}
 
 class RegistrySpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +23,7 @@ class RegistrySpec extends SparkSpec {
   private def freshReg(tag: String): (String, String) = {
     val name = s"graft_test_reg_$tag"
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/$tag"
-    Registry.create(spark, name, path, buckets = 4)
+    Registry.create(spark, Exact, name, path, buckets = 4)
     (name, path)
   }
 
@@ -35,10 +36,12 @@ class RegistrySpec extends SparkSpec {
       .toDF("doc_id", "text")
     val b1 = Seq((1L, "alpha"), (2L, "gamma"), (3L, "gamma"))
       .toDF("doc_id", "text")
-    val k0 = Registry.ingest(spark, name, b0, "doc_id", "text", 0)
-      .as[(String, Long, Int)].collect().toSet
-    val k1 = Registry.ingest(spark, name, b1, "doc_id", "text", 1)
-      .as[(String, Long, Int)].collect().toSet
+    val k0 = Registry.ingest(spark, Exact, name, b0, "doc_id", "text", 0)
+      .as[(String, Long)].collect().toSet.map((r: (String, Long)) =>
+        (r._1, r._2, 0))
+    val k1 = Registry.ingest(spark, Exact, name, b1, "doc_id", "text", 1)
+      .as[(String, Long)].collect().toSet.map((r: (String, Long)) =>
+        (r._1, r._2, 1))
     assert(k0.map(r => (r._2, r._3)) == Set((10L, 0), (11L, 0)))
     assert(k1.map(r => (r._2, r._3)) == Set((2L, 1)))
     // from-scratch replay over the union with the same tie rule
@@ -54,15 +57,17 @@ class RegistrySpec extends SparkSpec {
   test("re-ingesting an already-registered batch is idempotent: zero new rows") {
     val (name, _) = freshReg("idem")
     val b = Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text")
-    assert(Registry.ingest(spark, name, b, "doc_id", "text", 0).count() == 2L)
+    assert(Registry.ingest(spark, Exact, name, b, "doc_id", "text", 0)
+      .count() == 2L)
     val before = spark.table(name).count()
-    assert(Registry.ingest(spark, name, b, "doc_id", "text", 1).count() == 0L)
+    assert(Registry.ingest(spark, Exact, name, b, "doc_id", "text", 1)
+      .count() == 0L)
     assert(spark.table(name).count() == before)
   }
 
   test("batch dedup joins the registry without shuffling the registry side") {
     val (name, _) = freshReg("plan")
-    Registry.ingest(spark, name,
+    Registry.ingest(spark, Exact, name,
       (1L to 50L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       "doc_id", "text", 0)
     val batch = (40L to 90L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
@@ -78,12 +83,12 @@ class RegistrySpec extends SparkSpec {
 
   test("nearIngest: exact and near copies drop against history, novel docs survive") {
     val name = "graft_test_nreg_basic"
-    Registry.createNear(spark, name,
+    Registry.create(spark, Near(), name,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_nreg/basic", 4)
     val long = (1 to 60).map(i => s"tok$i").mkString(" ")
     val other = (1 to 60).map(i => s"zzz$i").mkString(" ")
     val b0 = Seq((10L, long), (11L, other)).toDF("doc_id", "text")
-    val k0 = Registry.nearIngest(spark, name, b0, "doc_id", "text", 0)
+    val k0 = Registry.ingest(spark, Near(), name, b0, "doc_id", "text", 0)
       .as[(Long, Long)].collect().toMap
     assert(k0.keySet == Set(10L, 11L))
     // batch 1: exact copy of 10, near copy of 10 (2 tokens swapped),
@@ -93,7 +98,7 @@ class RegistrySpec extends SparkSpec {
     val novel = (1 to 60).map(i => s"qqq$i").mkString(" ")
     val b1 = Seq((20L, long), (21L, near), (22L, novel))
       .toDF("doc_id", "text")
-    val k1 = Registry.nearIngest(spark, name, b1, "doc_id", "text", 1)
+    val k1 = Registry.ingest(spark, Near(), name, b1, "doc_id", "text", 1)
       .as[(Long, Long)].collect().toMap
     // the exact copy matches unconditionally (hamming 0 shares every
     // window); the others follow the banded rule, replayed here from
@@ -115,23 +120,23 @@ class RegistrySpec extends SparkSpec {
 
   test("nearIngest: identical-simhash docs collapse within a batch to the min id") {
     val name = "graft_test_nreg_batch"
-    Registry.createNear(spark, name,
+    Registry.create(spark, Near(), name,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_nreg/batch", 4)
     val t = (1 to 40).map(i => s"w$i").mkString(" ")
     val b = Seq((5L, t), (3L, t), (9L, "completely different words here " +
       (1 to 40).map(i => s"d$i").mkString(" "))).toDF("doc_id", "text")
-    val kept = Registry.nearIngest(spark, name, b, "doc_id", "text", 0)
+    val kept = Registry.ingest(spark, Near(), name, b, "doc_id", "text", 0)
       .as[(Long, Long)].collect().toMap
     assert(kept.keySet == Set(3L, 9L))
   }
 
   test("vecIngest: exact vector copies drop across batches, distinct vectors survive") {
     val name = "graft_test_vreg"
-    Registry.createVec(spark, name,
+    Registry.create(spark, Vec(), name,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_vreg/v1", 4)
     val a = Array.tabulate(64)(i => 0.1f * i)
     val b = Array.tabulate(64)(i => 1.0f - 0.02f * i)
-    val k0 = Registry.vecIngest(spark, name,
+    val k0 = Registry.ingest(spark, Vec(), name,
       Seq((10L, a), (11L, b)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 0)
       .select($"vec_id").as[Long].collect().toSet
@@ -141,7 +146,7 @@ class RegistrySpec extends SparkSpec {
     // same signature — drops), and an orthogonal-ish novel vector
     val bScaled = b.map(_ * 3f)
     val novel = Array.tabulate(64)(i => if (i % 2 == 0) 1f else -1f)
-    val k1 = Registry.vecIngest(spark, name,
+    val k1 = Registry.ingest(spark, Vec(), name,
       Seq((20L, a), (21L, bScaled), (22L, novel))
         .toDF("vec_id", "embedding"),
       "vec_id", "embedding", 1)
@@ -153,10 +158,10 @@ class RegistrySpec extends SparkSpec {
 
   test("vecIngest: identical embeddings collapse within a batch to the min id") {
     val name = "graft_test_vreg2"
-    Registry.createVec(spark, name,
+    Registry.create(spark, Vec(), name,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_vreg/v2", 4)
     val v = Array.tabulate(64)(i => 0.5f + 0.01f * i)
-    val kept = Registry.vecIngest(spark, name,
+    val kept = Registry.ingest(spark, Vec(), name,
       Seq((7L, v), (4L, v)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 0)
       .select($"vec_id").as[Long].collect().toSet
@@ -174,31 +179,31 @@ class RegistrySpec extends SparkSpec {
     val precious = new org.apache.hadoop.fs.Path(s"$victim/precious.txt")
     fs.create(precious).close()
     val e = intercept[IllegalArgumentException] {
-      Registry.create(spark, "graft_test_guard_reg", victim, 4)
+      Registry.create(spark, Exact, "graft_test_guard_reg", victim, 4)
     }
     assert(e.getMessage.contains("refusing to clear"))
     assert(fs.exists(precious), "unrelated data must survive the refusal")
     // (b) empty dir → accepted; re-create over the marker → accepted
     val ok = s"$base/ok"
     fs.mkdirs(new org.apache.hadoop.fs.Path(ok))
-    Registry.create(spark, "graft_test_guard_ok", ok, 4)
-    Registry.ingest(spark, "graft_test_guard_ok",
+    Registry.create(spark, Exact, "graft_test_guard_ok", ok, 4)
+    Registry.ingest(spark, Exact, "graft_test_guard_ok",
       Seq((1L, "x")).toDF("doc_id", "text"), "doc_id", "text", 0)
-    Registry.createNear(spark, "graft_test_guard_ok2", ok, 4)
+    Registry.create(spark, Near(), "graft_test_guard_ok2", ok, 4)
     assert(spark.table("graft_test_guard_ok2").count() == 0L)
     // (c) a name that would escape the identifier into SQL → rejected
     intercept[IllegalArgumentException] {
-      Registry.create(spark, "bad name; drop", s"$base/badname", 4)
+      Registry.create(spark, Exact, "bad name; drop", s"$base/badname", 4)
     }
     intercept[IllegalArgumentException] {
-      Registry.createVec(spark, "okname", s"$base/it's", 4)
+      Registry.create(spark, Vec(), "okname", s"$base/it's", 4)
     }
   }
 
   test("ingest probes read only index columns — history text can never " +
       "enter a plan (O(batch) contract, RegistryScaling measures it)") {
     val (name, _) = freshReg("oschema")
-    Registry.ingest(spark, name,
+    Registry.ingest(spark, Exact, name,
       (1L to 30L).map(i => (i, s"doc body $i")).toDF("doc_id", "text"),
       "doc_id", "text", 0)
     // the exact registry's scan projects the digest alone
@@ -210,11 +215,11 @@ class RegistrySpec extends SparkSpec {
     // stored state is digests / signatures (+ embeddings for vec)
     assert(spark.table(name).schema.fieldNames.toSet
       == Set("h", "keep_id", "batch_no"))
-    Registry.createNear(spark, "graft_test_reg_oschema_nr",
+    Registry.create(spark, Near(), "graft_test_reg_oschema_nr",
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/oschema_nr", 4)
     assert(spark.table("graft_test_reg_oschema_nr").schema.fieldNames.toSet
       == Set("w", "bucket", "doc_id", "simhash", "batch_no"))
-    Registry.createVec(spark, "graft_test_reg_oschema_vc",
+    Registry.create(spark, Vec(), "graft_test_reg_oschema_vc",
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/oschema_vc", 4)
     assert(spark.table("graft_test_reg_oschema_vc").schema.fieldNames.toSet
       == Set("sig", "vec_id", "embedding", "batch_no"))
@@ -254,10 +259,10 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_compact"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/compact"
-    Registry.create(spark, name, path, buckets = 4)
+    Registry.create(spark, Exact, name, path, buckets = 4)
     // 5 appends → file count grows with ingest count (the cliff)
     (0 until 5).foreach { b =>
-      Registry.ingest(spark, name,
+      Registry.ingest(spark, Exact, name,
         (1L to 20L).map(i => (b * 100L + i, s"text ${b * 100L + i}"))
           .toDF("doc_id", "text"),
         "doc_id", "text", b)
@@ -271,7 +276,7 @@ class RegistrySpec extends SparkSpec {
     val verdictBefore = Registry.dedupBatch(spark, name, probe,
       "doc_id", "text").as[(String, Long)].collect().toSet
 
-    Registry.compact(spark, name, "h", buckets = 4)
+    Registry.compact(spark, name)
 
     assert(partFiles(path) == 4,
       s"expected one file per bucket, got ${partFiles(path)}")
@@ -283,7 +288,7 @@ class RegistrySpec extends SparkSpec {
     assert(plan.contains("Bucketed: true"), plan.take(1500))
     assert(plan.contains("SelectedBucketsCount"), plan.take(1500))
     // and ingest keeps working against the compacted table
-    assert(Registry.ingest(spark, name,
+    assert(Registry.ingest(spark, Exact, name,
       Seq((999L, "novel text")).toDF("doc_id", "text"),
       "doc_id", "text", 9).count() == 1L)
   }
@@ -292,30 +297,30 @@ class RegistrySpec extends SparkSpec {
     val nname = "graft_test_nreg_compact"
     val npath =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_nreg/compact"
-    Registry.createNear(spark, nname, npath, buckets = 4)
+    Registry.create(spark, Near(), nname, npath, buckets = 4)
     (0 until 3).foreach { b =>
-      Registry.nearIngest(spark, nname,
+      Registry.ingest(spark, Near(), nname,
         Seq((b * 10L, (1 to 40).map(i => s"w${b}_$i").mkString(" ")))
           .toDF("doc_id", "text"),
         "doc_id", "text", b)
     }
     val nRows = spark.table(nname).count()
-    Registry.compact(spark, nname, "bucket", buckets = 4)
+    Registry.compact(spark, nname)
     assert(partFiles(npath) <= 4)
     assert(spark.table(nname).count() == nRows)
 
     val vname = "graft_test_vreg_compact"
     val vpath =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_vreg/compact"
-    Registry.createVec(spark, vname, vpath, buckets = 4)
+    Registry.create(spark, Vec(), vname, vpath, buckets = 4)
     (0 until 3).foreach { b =>
-      Registry.vecIngest(spark, vname,
+      Registry.ingest(spark, Vec(), vname,
         Seq((b * 10L, Array.tabulate(16)(i => (b + 1) * 0.1f + i)))
           .toDF("vec_id", "embedding"),
         "vec_id", "embedding", b)
     }
     val vRows = spark.table(vname).count()
-    Registry.compact(spark, vname, "sig", buckets = 4)
+    Registry.compact(spark, vname)
     assert(partFiles(vpath) <= 4)
     assert(spark.table(vname).count() == vRows)
   }
@@ -326,17 +331,17 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_attach"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/attach"
-    Registry.create(spark, name, path, buckets = 4)
-    Registry.ingest(spark, name,
+    Registry.create(spark, Exact, name, path, buckets = 4)
+    Registry.ingest(spark, Exact, name,
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       "doc_id", "text", 0)
     // simulate the next day's session: the in-memory catalog forgot
     // the table, the files survive
     spark.sql(s"DROP TABLE $name")
-    Registry.attach(spark, name, path, buckets = 4)
+    Registry.attach(spark, Exact, name, path, buckets = 4)
     assert(spark.table(name).count() == 2L)
     // first-seen continues against the attached history
-    val kept = Registry.ingest(spark, name,
+    val kept = Registry.ingest(spark, Exact, name,
       Seq((9L, "alpha"), (10L, "gamma")).toDF("doc_id", "text"),
       "doc_id", "text", 1)
     assert(kept.select($"keep_id").as[Long].collect().toSet == Set(10L))
@@ -351,18 +356,18 @@ class RegistrySpec extends SparkSpec {
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/notareg"
     fs.mkdirs(new org.apache.hadoop.fs.Path(bare))
     intercept[IllegalArgumentException] {
-      Registry.attach(spark, "graft_test_reg_attach2", bare, 4)
+      Registry.attach(spark, Exact, "graft_test_reg_attach2", bare, 4)
     }
     assert(Registry.exists(spark, path) && !Registry.exists(spark, bare))
     // the marker stamps (family, buckets): a bucket-count mismatch
     // (would silently break the exchange-free join layout) and a
     // family mismatch (schema corruption) are both refused
     val wrongB = intercept[IllegalArgumentException] {
-      Registry.attach(spark, "graft_test_reg_attach3", path, 8)
+      Registry.attach(spark, Exact, "graft_test_reg_attach3", path, 8)
     }
     assert(wrongB.getMessage.contains("exact registry with 4 buckets"))
     intercept[IllegalArgumentException] {
-      Registry.attachNear(spark, "graft_test_reg_attach4", path, 4)
+      Registry.attach(spark, Near(), "graft_test_reg_attach4", path, 4)
     }
   }
 
@@ -373,20 +378,20 @@ class RegistrySpec extends SparkSpec {
       .toDF("doc_id", "text")
     // twice: without the guard the null digest never matches the
     // anti-join and re-appends every batch
-    assert(Registry.ingest(spark, name, b, "doc_id", "text", 0)
+    assert(Registry.ingest(spark, Exact, name, b, "doc_id", "text", 0)
       .count() == 1L)
-    assert(Registry.ingest(spark, name, b, "doc_id", "text", 1)
+    assert(Registry.ingest(spark, Exact, name, b, "doc_id", "text", 1)
       .count() == 0L)
     assert(spark.table(name).count() == 1L)
 
     val vname = "graft_test_vreg_nulls"
-    Registry.createVec(spark, vname,
+    Registry.create(spark, Vec(), vname,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_vreg/nulls", 4)
     val vb = Seq((1L, Array(0.1f, 0.2f)), (2L, null.asInstanceOf[Array[Float]]))
       .toDF("vec_id", "embedding")
-    assert(Registry.vecIngest(spark, vname, vb, "vec_id", "embedding", 0)
+    assert(Registry.ingest(spark, Vec(), vname, vb, "vec_id", "embedding", 0)
       .count() == 1L)
-    assert(Registry.vecIngest(spark, vname, vb, "vec_id", "embedding", 1)
+    assert(Registry.ingest(spark, Vec(), vname, vb, "vec_id", "embedding", 1)
       .count() == 0L)
     assert(spark.table(vname).count() == 1L)
   }
@@ -397,48 +402,48 @@ class RegistrySpec extends SparkSpec {
     val (name, _) = freshReg("replay_same")
     val b0 = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
     val b1 = Seq((10L, "alpha"), (11L, "gamma")).toDF("doc_id", "text")
-    Registry.ingest(spark, name, b0, "doc_id", "text", 0)
-    val first = Registry.ingest(spark, name, b1, "doc_id", "text", 1)
-      .as[(String, Long, Int)].collect().toSet
+    Registry.ingest(spark, Exact, name, b0, "doc_id", "text", 0)
+    val first = Registry.ingest(spark, Exact, name, b1, "doc_id", "text", 1)
+      .as[(String, Long)].collect().toSet
     assert(first.map(_._2) == Set(11L))
     val rows = spark.table(name).as[(String, Long, Int)].collect().toSet
     // the replay: same batch number, same rows — NOT empty survivors
-    val replay = Registry.ingest(spark, name, b1, "doc_id", "text", 1)
-      .as[(String, Long, Int)].collect().toSet
+    val replay = Registry.ingest(spark, Exact, name, b1, "doc_id", "text", 1)
+      .as[(String, Long)].collect().toSet
     assert(replay == first, "replay must return the original survivors")
     assert(spark.table(name).as[(String, Long, Int)].collect().toSet
       == rows, "replay must append nothing")
 
     val nname = "graft_test_nreg_replay"
-    Registry.createNear(spark, nname,
+    Registry.create(spark, Near(), nname,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_nreg/replay", 4)
     val long = (1 to 40).map(i => s"rp$i").mkString(" ")
     val other = (1 to 40).map(i => s"qq$i").mkString(" ")
-    Registry.nearIngest(spark, nname,
+    Registry.ingest(spark, Near(), nname,
       Seq((1L, long)).toDF("doc_id", "text"), "doc_id", "text", 0)
-    val nFirst = Registry.nearIngest(spark, nname,
+    val nFirst = Registry.ingest(spark, Near(), nname,
       Seq((10L, long), (11L, other)).toDF("doc_id", "text"),
       "doc_id", "text", 1).select($"doc_id").as[Long].collect().toSet
     assert(nFirst == Set(11L))
     val nRows = spark.table(nname).count()
-    val nReplay = Registry.nearIngest(spark, nname,
+    val nReplay = Registry.ingest(spark, Near(), nname,
       Seq((10L, long), (11L, other)).toDF("doc_id", "text"),
       "doc_id", "text", 1).select($"doc_id").as[Long].collect().toSet
     assert(nReplay == nFirst && spark.table(nname).count() == nRows)
 
     val vname = "graft_test_vreg_replay"
-    Registry.createVec(spark, vname,
+    Registry.create(spark, Vec(), vname,
       s"${System.getProperty("java.io.tmpdir")}/graft_test_vreg/replay", 4)
     val a = Array.tabulate(16)(i => 0.1f * i - 0.7f)
     val b = Array.tabulate(16)(i => if (i % 2 == 0) 1f else -1f)
-    Registry.vecIngest(spark, vname,
+    Registry.ingest(spark, Vec(), vname,
       Seq((1L, a)).toDF("vec_id", "embedding"), "vec_id", "embedding", 0)
-    val vFirst = Registry.vecIngest(spark, vname,
+    val vFirst = Registry.ingest(spark, Vec(), vname,
       Seq((10L, a), (11L, b)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 1).select($"vec_id").as[Long].collect().toSet
     assert(vFirst == Set(11L))
     val vRows = spark.table(vname).count()
-    val vReplay = Registry.vecIngest(spark, vname,
+    val vReplay = Registry.ingest(spark, Vec(), vname,
       Seq((10L, a), (11L, b)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 1).select($"vec_id").as[Long].collect().toSet
     assert(vReplay == vFirst && spark.table(vname).count() == vRows)
@@ -451,11 +456,11 @@ class RegistrySpec extends SparkSpec {
     // digests were committed before the process died (a mid-append
     // task-commit boundary)
     val half = Seq((1L, "aa"), (2L, "bb")).toDF("doc_id", "text")
-    Registry.ingest(spark, name, half, "doc_id", "text", 7)
+    Registry.ingest(spark, Exact, name, half, "doc_id", "text", 7)
     // the retry runs the FULL batch under the same number
     val full = Seq((1L, "aa"), (2L, "bb"), (3L, "cc"), (4L, "dd"))
       .toDF("doc_id", "text")
-    val replay = Registry.ingest(spark, name, full, "doc_id", "text", 7)
+    val replay = Registry.ingest(spark, Exact, name, full, "doc_id", "text", 7)
       .select($"keep_id").as[Long].collect().toSet
     assert(replay == Set(1L, 2L, 3L, 4L),
       "replay survivors must cover the whole batch")
@@ -469,12 +474,12 @@ class RegistrySpec extends SparkSpec {
     val b = Seq((1L, "x")).toDF("doc_id", "text")
     val held = Registry.acquireLock(spark, path) // another writer
     val e = intercept[IllegalStateException] {
-      Registry.ingest(spark, name, b, "doc_id", "text", 0)
+      Registry.ingest(spark, Exact, name, b, "doc_id", "text", 0)
     }
     assert(e.getMessage.contains("locked by another writer"))
     assert(spark.table(name).count() == 0L, "failed writer must not append")
     Registry.releaseLock(spark, held)
-    assert(Registry.ingest(spark, name, b, "doc_id", "text", 0)
+    assert(Registry.ingest(spark, Exact, name, b, "doc_id", "text", 0)
       .count() == 1L, "ingest proceeds once the lease is free")
     // stale lease (crashed writer): backdate the lock file beyond the
     // lease horizon — the next writer takes over instead of wedging
@@ -486,7 +491,7 @@ class RegistrySpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(path).getName + ".lock")
     val old = System.currentTimeMillis() - Registry.DefaultLeaseMs - 60000L
     fs.setTimes(lk, old, old)
-    assert(Registry.ingest(spark, name,
+    assert(Registry.ingest(spark, Exact, name,
       Seq((2L, "y")).toDF("doc_id", "text"), "doc_id", "text", 1)
       .count() == 1L, "stale lease must be taken over")
     assert(!fs.exists(lk), "takeover ingest must release its lease")
@@ -537,9 +542,9 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_crashcompact"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/crashcompact"
-    Registry.create(spark, name, path, buckets = 4)
+    Registry.create(spark, Exact, name, path, buckets = 4)
     (0 until 3).foreach { b =>
-      Registry.ingest(spark, name,
+      Registry.ingest(spark, Exact, name,
         (1L to 20L).map(i => (b * 100L + i, s"cc ${b * 100L + i}"))
           .toDF("doc_id", "text"), "doc_id", "text", b)
     }
@@ -548,7 +553,7 @@ class RegistrySpec extends SparkSpec {
     val filesBefore = partFiles(path)
     // the crash: process dies after the staged write, before the
     // pointer create (the commit point)
-    Registry.compactImpl(spark, name, "h", 4, crashBeforeSwap = true)
+    Registry.compactImpl(spark, name, crashBeforeSwap = true)
     assert(partFiles(path) == filesBefore,
       "live registry files must be untouched by a crashed compact " +
         "(the pointer still names _v0)")
@@ -570,14 +575,14 @@ class RegistrySpec extends SparkSpec {
       .map(_.getPath.toString)
     assert(spark.read.parquet(stagedFiles.toIndexedSeq: _*).count()
       == rowsBefore.size.toLong)
-    Registry.attach(spark, "graft_test_reg_crashcompact_b", path, 4)
+    Registry.attach(spark, Exact, "graft_test_reg_crashcompact_b", path, 4)
     assert(spark.table("graft_test_reg_crashcompact_b")
       .as[(String, Long, Int)].collect().toSet == rowsBefore,
       "attach after the crash must resolve the OLD (pointed) version")
     // re-running compact to completion: pointer lands, one file per
     // bucket, rows and verdicts unchanged; the superseded _v0 stays
     // on disk (reader grace) until vacuum reclaims it
-    Registry.compact(spark, name, "h", 4)
+    Registry.compact(spark, name)
     assert(partFiles(path) == 4)
     assert(spark.table(name).as[(String, Long, Int)].collect().toSet
       == rowsBefore)
@@ -598,23 +603,23 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_legacy"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/legacy"
-    Registry.create(spark, name, path, buckets = 4)
-    Registry.ingest(spark, name,
+    Registry.create(spark, Exact, name, path, buckets = 4)
+    Registry.ingest(spark, Exact, name,
       (1L to 20L).map(i => (i, s"lg $i")).toDF("doc_id", "text"),
       "doc_id", "text", 0)
     val rows = spark.table(name).as[(String, Long, Int)].collect().toSet
     legacyize(name, path)
     // attach resolves the root as the live dir (no pointers)
-    Registry.attach(spark, name, path, 4)
+    Registry.attach(spark, Exact, name, path, 4)
     assert(spark.table(name).as[(String, Long, Int)].collect().toSet
       == rows, "legacy layout must serve verbatim")
-    assert(Registry.ingest(spark, name,
+    assert(Registry.ingest(spark, Exact, name,
       Seq((99L, "lg novel")).toDF("doc_id", "text"),
       "doc_id", "text", 1).count() == 1L, "legacy ingest works")
     val all = spark.table(name).as[(String, Long, Int)].collect().toSet
     // first compact migrates: pointer + _v0, root part-files
     // superseded (kept for attached readers), vacuum reclaims them
-    Registry.compact(spark, name, "h", 4)
+    Registry.compact(spark, name)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -638,9 +643,9 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_reader"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/reader"
-    Registry.create(spark, name, path, buckets = 4)
+    Registry.create(spark, Exact, name, path, buckets = 4)
     (0 until 4).foreach { b =>
-      Registry.ingest(spark, name,
+      Registry.ingest(spark, Exact, name,
         (1L to 25L).map(i => (b * 100L + i, s"rd ${b * 100L + i}"))
           .toDF("doc_id", "text"), "doc_id", "text", b)
     }
@@ -679,7 +684,7 @@ class RegistrySpec extends SparkSpec {
     reader.start()
     try {
       (0 until 4).foreach { _ =>
-        Registry.compact(spark, name, "h", 4)
+        Registry.compact(spark, name)
         if (stop.get())
           throw new IllegalStateException("reader died mid-run",
             failure.get())
@@ -703,13 +708,12 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_mreg"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_mreg/basic"
-    Registry.createMinhash(spark, name, path, buckets = 4, k = 8,
-      bands = 4)
+    Registry.create(spark, Minhash(k = 8, bands = 4), name, path, buckets = 4)
     val long = (1 to 60).map(i => s"mk$i").mkString(" ")
     val other = (1 to 60).map(i => s"zz$i").mkString(" ")
     // batch 0: two distinct docs + an exact copy of the first
     // (within-batch identical-signature collapse to the min id)
-    val k0 = Registry.minhashIngest(spark, name,
+    val k0 = Registry.ingest(spark, Minhash(), name,
       Seq((11L, long), (10L, long), (12L, other)).toDF("doc_id", "text"),
       "doc_id", "text", 0)
       .select($"doc_id").as[Long].collect().toSet
@@ -721,7 +725,7 @@ class RegistrySpec extends SparkSpec {
     val near = ((1 to 30).map(i => s"mk$i") ++ Seq("EDIT") ++
       (32 to 60).map(i => s"mk$i")).mkString(" ")
     val novel = (1 to 60).map(i => s"qq$i").mkString(" ")
-    val k1 = Registry.minhashIngest(spark, name,
+    val k1 = Registry.ingest(spark, Minhash(), name,
       Seq((20L, long), (21L, near), (22L, novel)).toDF("doc_id", "text"),
       "doc_id", "text", 1)
       .select($"doc_id").as[Long].collect().toSet
@@ -745,22 +749,21 @@ class RegistrySpec extends SparkSpec {
     // replay: same batch number returns the ORIGINAL survivors and
     // appends nothing
     val rows = spark.table(name).count()
-    val k1r = Registry.minhashIngest(spark, name,
+    val k1r = Registry.ingest(spark, Minhash(), name,
       Seq((20L, long), (21L, near), (22L, novel)).toDF("doc_id", "text"),
       "doc_id", "text", 1)
       .select($"doc_id").as[Long].collect().toSet
     assert(k1r == k1 && spark.table(name).count() == rows)
     // marker: (k, bands) stamped; attach validates family
-    Registry.attachMinhash(spark, "graft_test_mreg_b", path, 4)
+    Registry.attach(spark, Minhash(), "graft_test_mreg_b", path, 4)
     assert(spark.table("graft_test_mreg_b").count() == rows)
     intercept[IllegalArgumentException] {
-      Registry.attachNear(spark, "graft_test_mreg_c", path, 4)
+      Registry.attach(spark, Near(), "graft_test_mreg_c", path, 4)
     }
     // a probe that no band could even propose is a caller error
     intercept[IllegalArgumentException] {
-      Registry.minhashIngest(spark, name,
-        Seq((30L, long)).toDF("doc_id", "text"), "doc_id", "text", 2,
-        minMatches = 1)
+      Registry.ingest(spark, Minhash(minMatches = 1), name,
+        Seq((30L, long)).toDF("doc_id", "text"), "doc_id", "text", 2)
     }
   }
 
@@ -770,8 +773,8 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_reg_recover"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_reg/recover"
-    Registry.create(spark, name, path, buckets = 4)
-    Registry.ingest(spark, name,
+    Registry.create(spark, Exact, name, path, buckets = 4)
+    Registry.ingest(spark, Exact, name,
       (1L to 20L).map(i => (i, s"rc $i")).toDF("doc_id", "text"),
       "doc_id", "text", 0)
     val rows = spark.table(name).as[(String, Long, Int)].collect().toSet
@@ -785,27 +788,27 @@ class RegistrySpec extends SparkSpec {
     require(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(s"$path.compact-old")))
     assert(Registry.recoverCompact(spark, path), "restore must happen")
-    Registry.attach(spark, name, path, 4)
+    Registry.attach(spark, Exact, name, path, 4)
     assert(spark.table(name).as[(String, Long, Int)].collect().toSet
       == rows, "restored registry must hold every row")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path.compact-old"))
       && !fs.exists(new org.apache.hadoop.fs.Path(s"$path.compact-tmp")),
       "recovery must consume the staging/backup dirs")
     // and it still ingests
-    assert(Registry.ingest(spark, name,
+    assert(Registry.ingest(spark, Exact, name,
       Seq((99L, "rc novel")).toDF("doc_id", "text"), "doc_id", "text", 1)
       .count() == 1L)
     // attach AUTO-recovers the same crash state (r14 verdict #3) —
     // no manual recoverCompact step
     require(fs.rename(new org.apache.hadoop.fs.Path(path),
       new org.apache.hadoop.fs.Path(s"$path.compact-old")))
-    Registry.attach(spark, "graft_test_reg_recover_b", path, 4)
+    Registry.attach(spark, Exact, "graft_test_reg_recover_b", path, 4)
     assert(spark.table("graft_test_reg_recover_b").count()
       == rows.size.toLong + 1L)
     // a missing path that is NOT a crashed compaction stays a
     // pointed error
     val e = intercept[IllegalStateException] {
-      Registry.attach(spark, "graft_test_reg_recover_c",
+      Registry.attach(spark, Exact, "graft_test_reg_recover_c",
         s"$path-nonexistent", 4)
     }
     assert(e.getMessage.contains("not a crashed compaction"))
@@ -822,9 +825,9 @@ class RegistrySpec extends SparkSpec {
     val b1 = Seq((10L, a), (11L, c)).toDF("vec_id", "embedding")
 
     // lane 1: created at 8 planes, outgrown, re-keyed to 16
-    Registry.createVec(spark, "graft_test_vreg_rk8",
-      s"$tmp/graft_test_vreg/rk8", 4, planes = 8)
-    Registry.vecIngest(spark, "graft_test_vreg_rk8", b0,
+    Registry.create(spark, Vec(planes = 8), "graft_test_vreg_rk8",
+      s"$tmp/graft_test_vreg/rk8", 4)
+    Registry.ingest(spark, Vec(), "graft_test_vreg_rk8", b0,
       "vec_id", "embedding", 0)
     Registry.rekeyVec(spark, "graft_test_vreg_rk8",
       "graft_test_vreg_rk16", s"$tmp/graft_test_vreg/rk16", 4,
@@ -833,23 +836,23 @@ class RegistrySpec extends SparkSpec {
     assert(spark.table("graft_test_vreg_rk16")
       .select($"vec_id", $"batch_no").as[(Long, Int)].collect().toSet
       == Set((1L, 0), (2L, 0)))
-    val k1 = Registry.vecIngest(spark, "graft_test_vreg_rk16", b1,
+    val k1 = Registry.ingest(spark, Vec(), "graft_test_vreg_rk16", b1,
       "vec_id", "embedding", 1)
       .select($"vec_id").as[Long].collect().toSet
 
     // lane 2: created at 16 planes from the start, replayed
-    Registry.createVec(spark, "graft_test_vreg_rkref",
-      s"$tmp/graft_test_vreg/rkref", 4, planes = 16)
-    Registry.vecIngest(spark, "graft_test_vreg_rkref", b0,
+    Registry.create(spark, Vec(planes = 16), "graft_test_vreg_rkref",
+      s"$tmp/graft_test_vreg/rkref", 4)
+    Registry.ingest(spark, Vec(), "graft_test_vreg_rkref", b0,
       "vec_id", "embedding", 0)
-    val k1Ref = Registry.vecIngest(spark, "graft_test_vreg_rkref", b1,
+    val k1Ref = Registry.ingest(spark, Vec(), "graft_test_vreg_rkref", b1,
       "vec_id", "embedding", 1)
       .select($"vec_id").as[Long].collect().toSet
     assert(k1 == k1Ref, s"rekeyed $k1 vs reference $k1Ref")
     assert(k1 == Set(11L), "exact re-ingested copy must drop at 16 planes")
     // the re-keyed registry's marker stamps the NEW plane count:
     // attach at 16 succeeds
-    Registry.attachVec(spark, "graft_test_vreg_rk16b",
+    Registry.attach(spark, Vec(), "graft_test_vreg_rk16b",
       s"$tmp/graft_test_vreg/rk16", 4)
     assert(spark.table("graft_test_vreg_rk16b").count()
       == spark.table("graft_test_vreg_rk16").count())
@@ -863,38 +866,38 @@ class RegistrySpec extends SparkSpec {
     val tmp = System.getProperty("java.io.tmpdir")
     // (a) legacy near registry: marker without schema=2 → refused
     val legacyNear = s"$tmp/graft_test_nreg/legacy"
-    Registry.createNear(spark, "graft_test_nreg_legacy", legacyNear, 4)
+    Registry.create(spark, Near(), "graft_test_nreg_legacy", legacyNear, 4)
     val mk = new org.apache.hadoop.fs.Path(legacyNear, "_graft_registry")
     val out = fs.create(mk, true)
     out.write("near 4\n".getBytes("UTF-8")); out.close()
     val e1 = intercept[IllegalArgumentException] {
-      Registry.attachNear(spark, "graft_test_nreg_legacy2", legacyNear, 4)
+      Registry.attach(spark, Near(), "graft_test_nreg_legacy2", legacyNear, 4)
     }
     assert(e1.getMessage.contains("legacy"))
     // (b) vec registry signed with a foreign hyperplane hash → refused
     val foreignVec = s"$tmp/graft_test_vreg/foreign"
-    Registry.createVec(spark, "graft_test_vreg_foreign", foreignVec, 4)
+    Registry.create(spark, Vec(), "graft_test_vreg_foreign", foreignVec, 4)
     val mkv = new org.apache.hadoop.fs.Path(foreignVec, "_graft_registry")
     val outv = fs.create(mkv, true)
     outv.write("vec 4 schema=2 planes=16 hash=other9\n".getBytes("UTF-8"))
     outv.close()
     val e2 = intercept[IllegalArgumentException] {
-      Registry.attachVec(spark, "graft_test_vreg_foreign2", foreignVec, 4)
+      Registry.attach(spark, Vec(), "graft_test_vreg_foreign2", foreignVec, 4)
     }
     assert(e2.getMessage.contains("hyperplane-hash"))
     // (c) a legacy EXACT registry that lost its marker (the pre-r14
     // in-place compact destroyed it): stampMarker migrates, attach works
     val lost = s"$tmp/graft_test_reg/lostmarker"
-    Registry.create(spark, "graft_test_reg_lost", lost, 4)
-    Registry.ingest(spark, "graft_test_reg_lost",
+    Registry.create(spark, Exact, "graft_test_reg_lost", lost, 4)
+    Registry.ingest(spark, Exact, "graft_test_reg_lost",
       Seq((1L, "legacy row")).toDF("doc_id", "text"), "doc_id", "text", 0)
     legacyize("graft_test_reg_lost", lost)
     fs.delete(new org.apache.hadoop.fs.Path(lost, "_graft_registry"), false)
     intercept[IllegalArgumentException] {
-      Registry.attach(spark, "graft_test_reg_lost2", lost, 4)
+      Registry.attach(spark, Exact, "graft_test_reg_lost2", lost, 4)
     }
     Registry.stampMarker(spark, lost, "exact", 4)
-    Registry.attach(spark, "graft_test_reg_lost2", lost, 4)
+    Registry.attach(spark, Exact, "graft_test_reg_lost2", lost, 4)
     assert(spark.table("graft_test_reg_lost2").count() == 1L)
     // re-stamping an already-marked dir is refused
     intercept[IllegalArgumentException] {
@@ -906,7 +909,7 @@ class RegistrySpec extends SparkSpec {
       "grows one per ingest, compact resets it to one") {
     val (name, _) = freshReg("fstats")
     (0 until 3).foreach { b =>
-      Registry.ingest(spark, name,
+      Registry.ingest(spark, Exact, name,
         (1L to 30L).map(i => (b * 100L + i, s"fs ${b * 100L + i}"))
           .toDF("doc_id", "text"), "doc_id", "text", b)
     }
@@ -914,7 +917,7 @@ class RegistrySpec extends SparkSpec {
     assert(s.buckets == 4 && s.maxFilesPerBucket == 3 && s.bytes > 0L,
       s.toString)
     assert(s.maxFilesPerBucket < Registry.CompactThreshold)
-    Registry.compact(spark, name, "h", 4)
+    Registry.compact(spark, name)
     val after = Registry.fileStats(spark, name)
     assert(after.maxFilesPerBucket == 1 && after.files == 4, after.toString)
   }
@@ -922,7 +925,7 @@ class RegistrySpec extends SparkSpec {
   test("survivors returned by ingest are pinned before the append (not vanished)") {
     val (name, _) = freshReg("pin")
     val b = Seq((7L, "seven"), (8L, "eight")).toDF("doc_id", "text")
-    val kept = Registry.ingest(spark, name, b, "doc_id", "text", 0)
+    val kept = Registry.ingest(spark, Exact, name, b, "doc_id", "text", 0)
     // consuming AFTER the append must still show the survivors
     assert(kept.count() == 2L)
   }
@@ -931,9 +934,9 @@ class RegistrySpec extends SparkSpec {
       "path) — prepareLocation would destroy the registry it is " +
       "about to read") {
     val tmp = System.getProperty("java.io.tmpdir")
-    Registry.createVec(spark, "graft_test_vreg_selfrk",
-      s"$tmp/graft_test_vreg/selfrk", 4, planes = 8)
-    Registry.vecIngest(spark, "graft_test_vreg_selfrk",
+    Registry.create(spark, Vec(planes = 8), "graft_test_vreg_selfrk",
+      s"$tmp/graft_test_vreg/selfrk", 4)
+    Registry.ingest(spark, Vec(), "graft_test_vreg_selfrk",
       Seq((1L, Array(1f, 2f, 3f, 4f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 0)
     intercept[IllegalArgumentException] {
@@ -956,9 +959,8 @@ class RegistrySpec extends SparkSpec {
     val tmp = System.getProperty("java.io.tmpdir")
     val srcPath = s"$tmp/graft_test_vreg/tomb8"
     val dstPath = s"$tmp/graft_test_vreg/tomb16"
-    Registry.createVec(spark, "graft_test_vreg_tomb8", srcPath, 4,
-      planes = 8)
-    Registry.vecIngest(spark, "graft_test_vreg_tomb8",
+    Registry.create(spark, Vec(planes = 8), "graft_test_vreg_tomb8", srcPath, 4)
+    Registry.ingest(spark, Vec(), "graft_test_vreg_tomb8",
       Seq((1L, Array(1f, 0f, 2f, 0f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 0)
     Registry.rekeyVec(spark, "graft_test_vreg_tomb8",
@@ -966,14 +968,14 @@ class RegistrySpec extends SparkSpec {
     // a stale job config still pointing at the OLD path: attach fails
     // naming the successor
     val e1 = intercept[IllegalStateException] {
-      Registry.attachVec(spark, "graft_test_vreg_tomb8_again", srcPath, 4)
+      Registry.attach(spark, Vec(), "graft_test_vreg_tomb8_again", srcPath, 4)
     }
     assert(e1.getMessage.contains(dstPath),
       s"attach error must name the successor: ${e1.getMessage}")
     // ... and a session that still holds the old TABLE attached: every
     // mutating call re-reads the marker under the lock and aborts too
     val e2 = intercept[IllegalStateException] {
-      Registry.vecIngest(spark, "graft_test_vreg_tomb8",
+      Registry.ingest(spark, Vec(), "graft_test_vreg_tomb8",
         Seq((9L, Array(0f, 1f, 0f, 2f))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", 1)
     }
@@ -981,7 +983,7 @@ class RegistrySpec extends SparkSpec {
     assert(spark.table("graft_test_vreg_tomb8").count() == 1L,
       "the refused ingest must not have appended")
     // the successor ingests normally
-    assert(Registry.vecIngest(spark, "graft_test_vreg_tomb16",
+    assert(Registry.ingest(spark, Vec(), "graft_test_vreg_tomb16",
       Seq((9L, Array(0f, 1f, 0f, 2f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", 1).count() == 1L)
   }
@@ -992,18 +994,17 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_mreg_null"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_mreg/null"
-    Registry.createMinhash(spark, name, path, buckets = 4, k = 8,
-      bands = 4)
+    Registry.create(spark, Minhash(k = 8, bands = 4), name, path, buckets = 4)
     val real = (1 to 40).map(i => s"nn$i").mkString(" ")
     val b0 = Seq((1L, null: String), (2L, real)).toDF("doc_id", "text")
-    val k0 = Registry.minhashIngest(spark, name, b0, "doc_id", "text", 0)
+    val k0 = Registry.ingest(spark, Minhash(), name, b0, "doc_id", "text", 0)
       .select($"doc_id").as[Long].collect().toSet
     assert(k0 == Set(2L), "null-text doc must not survive the lane")
     val rows = spark.table(name).count()
     assert(spark.table(name).filter($"sig".isNull).count() == 0L,
       "no null signature rows may land in the registry")
     // later batches with null docs: no unbounded re-append
-    val k1 = Registry.minhashIngest(spark, name,
+    val k1 = Registry.ingest(spark, Minhash(), name,
       Seq((3L, null: String), (4L, real)).toDF("doc_id", "text"),
       "doc_id", "text", 1)
       .select($"doc_id").as[Long].collect().toSet
@@ -1017,12 +1018,12 @@ class RegistrySpec extends SparkSpec {
     val name = "graft_test_mreg_w5"
     val path =
       s"${System.getProperty("java.io.tmpdir")}/graft_test_mreg/w5"
-    Registry.createMinhash(spark, name, path, buckets = 4, k = 8,
-      bands = 4, shingleW = 5)
-    val p = Registry.minhashParams(spark, name)
-    assert(p == Registry.MinhashParams(8, 4, 5))
+    Registry.create(spark, Minhash(k = 8, bands = 4, shingleW = 5), name,
+      path, buckets = 4)
+    val p = Registry.resolve(spark, Minhash(), name)
+    assert(p == Minhash(8, 4, 5))
     val doc = (1 to 40).map(i => s"wv$i").mkString(" ")
-    Registry.minhashIngest(spark, name,
+    Registry.ingest(spark, Minhash(), name,
       Seq((1L, doc)).toDF("doc_id", "text"), "doc_id", "text", 0)
     // the STORED signature equals the w=5 signing, not w=3
     def sigAt(w: Int) = Seq((0L, doc)).toDF("doc_id", "text")
@@ -1033,5 +1034,102 @@ class RegistrySpec extends SparkSpec {
     assert(stored == sigAt(5), "registry must sign at the marker's w")
     assert(stored != sigAt(3), "w=5 and w=3 signatures must differ " +
       "on this fixture (otherwise the test proves nothing)")
+  }
+
+  // ---- one table-driven spec over every lane ----
+
+  /** A lane with three raw batches: b0 holds 12 distinct items plus a
+    * within-batch copy (id 13 = item 1), b1 re-sends items 1-6 (ids
+    * 21-26, dropped by history) next to 6 new ones (27-32), b2 re-sends
+    * items 7-10 (41-44) next to 4 new ones (45-48). Distinct items are
+    * unrelated (disjoint tokens, seeded-PRNG vectors), so every lane's
+    * verdicts are exactly the first-seen copies.
+    */
+  private final case class LaneCase(lane: Registry.Lane, idCol: String,
+      srcCol: String, batches: Seq[org.apache.spark.sql.DataFrame])
+
+  private val laneSurvivors =
+    Seq((1L to 12L).toSet, (27L to 32L).toSet, (45L to 48L).toSet)
+
+  private def laneBatches[T](item: String => T)(
+      toDf: Seq[(Long, T)] => org.apache.spark.sql.DataFrame) = {
+    def ids(from: Long, keys: Seq[String]) =
+      keys.zipWithIndex.map { case (k, i) => (from + i, item(k)) }
+    val a = (1 to 12).map(i => s"a$i")
+    Seq(ids(1L, a :+ "a1"),
+      ids(21L, a.take(6) ++ (1 to 6).map(i => s"b$i")),
+      ids(41L, a.slice(6, 10) ++ (1 to 4).map(i => s"c$i"))).map(toDf)
+  }
+
+  private def laneCases: Seq[LaneCase] = {
+    val text = laneBatches(k =>
+      (1 to 40).map(i => s"${k}x$i").mkString(" "))(_.toDF("doc_id", "text"))
+    val vecs = laneBatches { k =>
+      val r = new scala.util.Random(k.hashCode)
+      Array.fill(16)(r.nextFloat() - 0.5f)
+    }(_.toDF("vec_id", "embedding"))
+    Seq(LaneCase(Exact, "doc_id", "text", text),
+      LaneCase(Near(), "doc_id", "text", text),
+      LaneCase(Minhash(), "doc_id", "text", text),
+      LaneCase(Vec(), "vec_id", "embedding", vecs))
+  }
+
+  for (c <- laneCases) test(s"lane ${c.lane.family}: create → ingest → " +
+      "replay → compact → attach → ingest keeps every verdict, and the " +
+      "stream twin's survivors equal the direct ingest's") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_test_lane/" +
+      c.lane.family
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val name = s"graft_test_lane_${c.lane.family}"
+    def ingest(reg: String, b: Int): Set[Long] =
+      Registry.ingest(spark, c.lane, reg, c.batches(b), c.idCol, c.srcCol, b)
+        .select(col(c.lane.idCol)).as[Long].collect().toSet
+    def rows(reg: String) = spark.table(reg).collect().toSet
+
+    Registry.create(spark, c.lane, name, s"$base/reg", buckets = 4)
+    assert(ingest(name, 0) == laneSurvivors(0))
+    assert(ingest(name, 1) == laneSurvivors(1))
+    val before = rows(name)
+    assert(ingest(name, 1) == laneSurvivors(1),
+      "the replay must return the original survivors")
+    assert(rows(name) == before && spark.table(name).count() == before.size,
+      "the replay must append no rows")
+
+    Registry.compact(spark, name)
+    val st = Registry.fileStats(spark, name)
+    assert(st.maxFilesPerBucket == 1 && st.files <= 4,
+      s"compaction must leave one file per bucket: $st")
+    assert(rows(name) == before, "compaction must not change a row")
+
+    Registry.attach(spark, c.lane, s"${name}_b", s"$base/reg", 4)
+    assert(rows(s"${name}_b") == before)
+    assert(ingest(s"${name}_b", 2) == laneSurvivors(2),
+      "the attached table must give the same verdicts")
+
+    // the stream twin over the same three batches, one micro-batch
+    // each: every batch lands while no query runs (a file source
+    // listing a half-committed write would split it across
+    // micro-batches), then a restart from the checkpoint consumes it
+    Registry.create(spark, c.lane, s"${name}_s", s"$base/streamed", 4)
+    val streamed =
+      new java.util.concurrent.ConcurrentHashMap[Long, Set[Long]]()
+    c.batches.foreach { b =>
+      b.write.mode("append").parquet(s"$base/in")
+      val q = graft.streaming.Streams.registryMaintStream(c.lane,
+        spark.readStream.schema(b.schema).parquet(s"$base/in"), c.idCol,
+        c.srcCol, s"${name}_s", s"$base/chk") { (kept, id) =>
+        streamed.put(id,
+          kept.select(col(c.lane.idCol)).as[Long].collect().toSet)
+        ()
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert((0L to 2L).map(streamed.get) == laneSurvivors)
+    // the foreachBatch session's appends need a refresh to be seen here
+    spark.sql(s"REFRESH TABLE ${name}_s")
+    assert(rows(s"${name}_s") == rows(s"${name}_b"),
+      "stream twin and direct ingest must build the same registry")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.dedup.Registry
+import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
 
 /** The incremental-curate driver's contract: every stage drops
   * exactly the docs its registry/gate owns, replaying batches equals
@@ -18,9 +19,9 @@ class IngestBatchSpec extends SparkSpec {
   private def freshRegs(tag: String): (String, String, String) = {
     val (ex, nr, vc) = (s"graft_ib_ex_$tag", s"graft_ib_nr_$tag",
       s"graft_ib_vc_$tag")
-    Registry.create(spark, ex, s"$tmp/graft_ib/$tag/ex", 4)
-    Registry.createNear(spark, nr, s"$tmp/graft_ib/$tag/nr", 4)
-    Registry.createVec(spark, vc, s"$tmp/graft_ib/$tag/vc", 4)
+    Registry.create(spark, Exact, ex, s"$tmp/graft_ib/$tag/ex", 4)
+    Registry.create(spark, Near(), nr, s"$tmp/graft_ib/$tag/nr", 4)
+    Registry.create(spark, Vec(), vc, s"$tmp/graft_ib/$tag/vc", 4)
     (ex, nr, vc)
   }
 
@@ -244,7 +245,7 @@ class IngestBatchSpec extends SparkSpec {
     // append landed (same digest derivation ingestBatch uses)
     val b1 = Seq((10L, longText("mb"), vec(2)), (11L, longText("ma"), vec(3)))
       .toDF("doc_id", "text", "embedding")
-    Registry.ingestDigests(spark, ex,
+    Registry.ingest(spark, Exact, ex,
       b1.filter(length(col("text")) >= 100)
         .select(graft.text.TextFunctions.contentHash(col("text")).as("h"),
           col("doc_id").as("keep_id"))
@@ -268,11 +269,11 @@ class IngestBatchSpec extends SparkSpec {
       "registries, and the signature derives in the one text scan") {
     val (ex, nr, vc) = freshRegs("mh4")
     val mh = "graft_ib_mh_mh4"
-    Registry.createMinhash(spark, mh, s"$tmp/graft_ib/mh4/mh", 4)
+    Registry.create(spark, Minhash(), mh, s"$tmp/graft_ib/mh4/mh", 4)
     // the MANUAL ground-truth chain runs on its own registries
     val (ex2, nr2, vc2) = freshRegs("mh4b")
     val mh2 = "graft_ib_mh_mh4b"
-    Registry.createMinhash(spark, mh2, s"$tmp/graft_ib/mh4b/mh", 4)
+    Registry.create(spark, Minhash(), mh2, s"$tmp/graft_ib/mh4b/mh", 4)
     val bench = Seq((0L, longText("bench"))).toDF("doc_id", "text")
     val a = longText("ja")
     // batch 0 seeds; batch 1 mixes exact / near / jaccard-ish /
@@ -299,23 +300,23 @@ class IngestBatchSpec extends SparkSpec {
     // (empty bench keeps decontam a no-op in both paths)
     val manual = Seq(b0, b1).zipWithIndex.map { case (rows, b) =>
       val batch = df(rows).filter(length(col("text")) >= 100)
-      val kd = Registry.ingestDigests(spark, ex2,
+      val kd = Registry.ingest(spark, Exact, ex2,
         batch.select(graft.text.TextFunctions.contentHash(col("text"))
             .as("h"), col("doc_id").as("keep_id"))
           .groupBy(col("h")).agg(min(col("keep_id")).as("keep_id")), b)
       val exact = batch.join(kd.select(col("h"),
           col("keep_id").as("doc_id")).drop("h")
           .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      val kn = Registry.nearIngestSims(spark, nr2,
+      val kn = Registry.ingest(spark, Near(), nr2,
         exact.select(col("doc_id"), graft.dedup.Dedup.simhash60(
           graft.text.TextFunctions.tokens(col("text"))).as("simhash")), b)
       val near = exact.join(kn.select(col("doc_id")), Seq("doc_id"),
         "left_semi")
-      val km = Registry.minhashIngest(spark, mh2, near, "doc_id",
+      val km = Registry.ingest(spark, Minhash(), mh2, near, "doc_id",
         "text", b)
       val jac = near.join(km.select(col("doc_id")), Seq("doc_id"),
         "left_semi")
-      val kv = Registry.vecIngest(spark, vc2,
+      val kv = Registry.ingest(spark, Vec(), vc2,
         jac.select(col("doc_id"), col("embedding")), "doc_id",
         "embedding", b)
       jac.join(kv.select(col("vec_id").as("doc_id")), Seq("doc_id"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
+import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -572,8 +573,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val base = Files.createTempDirectory("graft-reg-stream").toString
     val name = "graft_stream_reg_spec"
-    graft.dedup.Registry.create(spark, name, s"$base/reg", buckets = 4)
-    val q = Streams.registryMaintStream(
+    graft.dedup.Registry.create(spark, Exact, name, s"$base/reg", buckets = 4)
+    val q = Streams.registryMaintStream(Exact,
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
       name, s"$base/chk")()
     try {
@@ -604,10 +605,10 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val base = Files.createTempDirectory("graft-reg-epoch").toString
     val name = "graft_stream_reg_epoch"
-    graft.dedup.Registry.create(spark, name, s"$base/reg", buckets = 4)
+    graft.dedup.Registry.create(spark, Exact, name, s"$base/reg", buckets = 4)
     // lineage A: registers alpha/beta in ITS micro-batch 0
     val inA = MemoryStream[(Long, String)]
-    val qA = Streams.registryMaintStream(
+    val qA = Streams.registryMaintStream(Exact,
       inA.toDF().toDF("doc_id", "text"), "doc_id", "text",
       name, s"$base/chkA")()
     try {
@@ -619,7 +620,7 @@ class StreamsSpec extends SparkSpec {
     // batch-0 rows and re-admit alpha; under epochs it must drop.
     val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
     val inB = MemoryStream[(Long, String)]
-    val qB = Streams.registryMaintStream(
+    val qB = Streams.registryMaintStream(Exact,
       inB.toDF().toDF("doc_id", "text"), "doc_id", "text",
       name, s"$base/chkB") { (survivors, _) =>
       kept ++= survivors.select($"keep_id").as[Long].collect()
@@ -656,8 +657,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val base = Files.createTempDirectory("graft-ingest-stream").toString
     def long(salt: String) = (1 to 30).map(i => s"ig${salt}x$i").mkString(" ")
-    graft.dedup.Registry.create(spark, "graft_ingstr_ex", s"$base/ex", 4)
-    graft.dedup.Registry.createNear(spark, "graft_ingstr_nr", s"$base/nr", 4)
+    graft.dedup.Registry.create(spark, Exact, "graft_ingstr_ex", s"$base/ex", 4)
+    graft.dedup.Registry.create(spark, Near(), "graft_ingstr_nr",
+      s"$base/nr", 4)
     val bench = Seq((0L, long("bench"))).toDF("doc_id", "text")
     val funnels =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
@@ -693,8 +695,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val base = Files.createTempDirectory("graft-ingest-replay").toString
     def long(salt: String) = (1 to 30).map(i => s"ir${salt}x$i").mkString(" ")
-    graft.dedup.Registry.create(spark, "graft_ingrp_ex", s"$base/ex", 4)
-    graft.dedup.Registry.createNear(spark, "graft_ingrp_nr", s"$base/nr", 4)
+    graft.dedup.Registry.create(spark, Exact, "graft_ingrp_ex", s"$base/ex", 4)
+    graft.dedup.Registry.create(spark, Near(), "graft_ingrp_nr", s"$base/nr", 4)
     val bench = Seq((0L, long("bench"))).toDF("doc_id", "text")
     // the recommended handler shape: idempotent per-batch Overwrite
     def sink(r: graft.pipeline.Pipelines.IngestBatchResult,
@@ -741,8 +743,8 @@ class StreamsSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-ingest-restart").toString
     def long(salt: String) = (1 to 30).map(i => s"rs${salt}x$i").mkString(" ")
     val a = long("aa")
-    graft.dedup.Registry.create(spark, "graft_ingrs_ex", s"$base/ex", 4)
-    graft.dedup.Registry.createNear(spark, "graft_ingrs_nr", s"$base/nr", 4)
+    graft.dedup.Registry.create(spark, Exact, "graft_ingrs_ex", s"$base/ex", 4)
+    graft.dedup.Registry.create(spark, Near(), "graft_ingrs_nr", s"$base/nr", 4)
     val bench = Seq((0L, long("bench"))).toDF("doc_id", "text")
     val schema = Seq((0L, "")).toDF("doc_id", "text").schema
     def sink(r: graft.pipeline.Pipelines.IngestBatchResult,
@@ -771,8 +773,9 @@ class StreamsSpec extends SparkSpec {
       s"got $corpus")
     // registry state equals the direct sequential chain on fresh
     // registries (same batches, same numbers, no stream)
-    graft.dedup.Registry.create(spark, "graft_ingrs_ex2", s"$base/ex2", 4)
-    graft.dedup.Registry.createNear(spark, "graft_ingrs_nr2",
+    graft.dedup.Registry.create(spark, Exact, "graft_ingrs_ex2",
+      s"$base/ex2", 4)
+    graft.dedup.Registry.create(spark, Near(), "graft_ingrs_nr2",
       s"$base/nr2", 4)
     Seq((b0, 0), (b1, 1)).foreach { case (rows, b) =>
       graft.pipeline.Pipelines.ingestBatch(spark,
@@ -824,8 +827,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val base = Files.createTempDirectory("graft-nreg-stream").toString
     val name = "graft_stream_nreg_spec"
-    graft.dedup.Registry.createNear(spark, name, s"$base/reg", buckets = 4)
-    val q = Streams.nearRegistryMaintStream(
+    graft.dedup.Registry.create(spark, Near(), name, s"$base/reg", buckets = 4)
+    val q = Streams.registryMaintStream(Near(),
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
       name, s"$base/chk")()
     try {
@@ -847,9 +850,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val base = Files.createTempDirectory("graft-mreg-stream").toString
     val name = "graft_stream_mreg_spec"
-    graft.dedup.Registry.createMinhash(spark, name, s"$base/reg",
+    graft.dedup.Registry.create(spark, Minhash(), name, s"$base/reg",
       buckets = 4)
-    val q = Streams.minhashRegistryMaintStream(
+    val q = Streams.registryMaintStream(Minhash(),
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
       name, s"$base/chk")()
     try {
@@ -871,8 +874,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, Seq[Float])]
     val base = Files.createTempDirectory("graft-vreg-stream").toString
     val name = "graft_stream_vreg_spec"
-    graft.dedup.Registry.createVec(spark, name, s"$base/reg", buckets = 4)
-    val q = Streams.vecRegistryMaintStream(
+    graft.dedup.Registry.create(spark, Vec(), name, s"$base/reg", buckets = 4)
+    val q = Streams.registryMaintStream(Vec(),
       input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
       name, s"$base/chk")()
     try {

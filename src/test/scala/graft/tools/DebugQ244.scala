@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Registry
 import graft.io.Tables.table
+import graft.dedup.Registry.{Exact, Near, Vec}
 
 /** Scratch: replicate q244's stages for a sfDir and dump per-batch
   * survivor ids per stage to /tmp/debug_q244 for DuckDB diffing.
@@ -18,9 +19,9 @@ object DebugQ244 {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_registry_dbg/$tag"
     val (exName, nrName, vcName) = (s"graft_dbg_ex_$tag",
       s"graft_dbg_nr_$tag", s"graft_dbg_vc_$tag")
-    Registry.create(s, exName, s"$base/ex", buckets = 8)
-    Registry.createNear(s, nrName, s"$base/nr", buckets = 8)
-    Registry.createVec(s, vcName, s"$base/vc", buckets = 8)
+    Registry.create(s, Exact, exName, s"$base/ex", buckets = 8)
+    Registry.create(s, Near(), nrName, s"$base/nr", buckets = 8)
+    Registry.create(s, Vec(), vcName, s"$base/vc", buckets = 8)
     val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val e = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val b0 = d.join(e, col("doc_id") === col("vec_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Registry
+import graft.dedup.Registry.{Exact, Near, Vec}
 
 /** Empirical O(batch) proof for the registry family (r12 verdict #2):
   * grow each registry 10×/100× with synthetic batches, then time the
@@ -66,17 +67,18 @@ object RegistryScaling {
 
     if (run("exact")) {
     // ---- exact digest registry: fixed 10k-doc batch at 10k / 100k / 1M
-    Registry.create(spark, "graft_scal_ex", s"$tmp/graft_scal/ex", buckets)
+    Registry.create(spark, Exact, "graft_scal_ex", s"$tmp/graft_scal/ex",
+      buckets)
     def growEx(n: Long): Unit = {
-      Registry.ingest(spark, "graft_scal_ex",
+      Registry.ingest(spark, Exact, "graft_scal_ex",
         textBatch(spark, next, n), "doc_id", "text", nextBatch())
       next += n
     }
     def probeEx(label: String): Unit = {
-      Registry.compact(spark, "graft_scal_ex", "h", buckets)
+      Registry.compact(spark, "graft_scal_ex")
       val regRows = spark.table("graft_scal_ex").count()
       val ms = timeMs {
-        Registry.ingest(spark, "graft_scal_ex",
+        Registry.ingest(spark, Exact, "graft_scal_ex",
           textBatch(spark, next, 10000), "doc_id", "text", nextBatch())
       }
       next += 10000
@@ -90,18 +92,19 @@ object RegistryScaling {
 
     if (run("near")) {
     // ---- near-dup registry (signature probes): fixed 10k batch
-    Registry.createNear(spark, "graft_scal_nr", s"$tmp/graft_scal/nr", buckets)
+    Registry.create(spark, Near(), "graft_scal_nr", s"$tmp/graft_scal/nr",
+      buckets)
     next = 0L
     def growNr(n: Long): Unit = {
-      Registry.nearIngestSims(spark, "graft_scal_nr",
+      Registry.ingest(spark, Near(), "graft_scal_nr",
         simBatch(spark, next, n), nextBatch())
       next += n
     }
     def probeNr(): Unit = {
-      Registry.compact(spark, "graft_scal_nr", "bucket", buckets)
+      Registry.compact(spark, "graft_scal_nr")
       val regRows = spark.table("graft_scal_nr").count()
       val ms = timeMs {
-        Registry.nearIngestSims(spark, "graft_scal_nr",
+        Registry.ingest(spark, Near(), "graft_scal_nr",
           simBatch(spark, next, 10000), nextBatch())
       }
       next += 10000
@@ -115,18 +118,19 @@ object RegistryScaling {
 
     if (run("vec")) {
     // ---- vector registry: fixed 5k batch at 5k / 50k / 500k
-    Registry.createVec(spark, "graft_scal_vc", s"$tmp/graft_scal/vc", buckets)
+    Registry.create(spark, Vec(), "graft_scal_vc", s"$tmp/graft_scal/vc",
+      buckets)
     next = 0L
     def growVc(n: Long): Unit = {
-      Registry.vecIngest(spark, "graft_scal_vc",
+      Registry.ingest(spark, Vec(), "graft_scal_vc",
         vecBatch(spark, next, n), "vec_id", "embedding", nextBatch())
       next += n
     }
     def probeVc(): Unit = {
-      Registry.compact(spark, "graft_scal_vc", "sig", buckets)
+      Registry.compact(spark, "graft_scal_vc")
       val regRows = spark.table("graft_scal_vc").count()
       val ms = timeMs {
-        Registry.vecIngest(spark, "graft_scal_vc",
+        Registry.ingest(spark, Vec(), "graft_scal_vc",
           vecBatch(spark, next, 5000), "vec_id", "embedding",
           nextBatch())
       }
@@ -145,18 +149,18 @@ object RegistryScaling {
     // candidates/probe ~ rows/256); rekey to 16 planes — ONE pass
     // over the stored rows, corpus untouched — and the SAME probe
     // returns to the flat O(batch) curve.
-    Registry.createVec(spark, "graft_scal_v8", s"$tmp/graft_scal/v8",
-      buckets, planes = 8)
+    Registry.create(spark, Vec(planes = 8), "graft_scal_v8",
+      s"$tmp/graft_scal/v8", buckets)
     next = 0L
     Seq(100000L, 400000L, 1500000L).foreach { n =>
-      Registry.vecIngest(spark, "graft_scal_v8",
+      Registry.ingest(spark, Vec(), "graft_scal_v8",
         vecBatch(spark, next, n), "vec_id", "embedding", nextBatch())
       next += n
     }
-    Registry.compact(spark, "graft_scal_v8", "sig", buckets)
+    Registry.compact(spark, "graft_scal_v8")
     val regRows = spark.table("graft_scal_v8").count()
     val msAt8 = timeMs {
-      Registry.vecIngest(spark, "graft_scal_v8",
+      Registry.ingest(spark, Vec(), "graft_scal_v8",
         vecBatch(spark, next, 5000), "vec_id", "embedding", nextBatch())
     }
     next += 5000
@@ -165,7 +169,7 @@ object RegistryScaling {
         s"$tmp/graft_scal/v16", buckets, newPlanes = 16)
     }
     val msAt16 = timeMs {
-      Registry.vecIngest(spark, "graft_scal_v16",
+      Registry.ingest(spark, Vec(), "graft_scal_v16",
         vecBatch(spark, next, 5000), "vec_id", "embedding", nextBatch())
     }
     next += 5000

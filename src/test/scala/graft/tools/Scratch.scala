@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.dedup.Registry.{Exact, Near, Vec}
 
 /** Disposable scratch main for interactive debugging. */
 object Scratch {
@@ -18,9 +19,9 @@ object Scratch {
     val tmp = System.getProperty("java.io.tmpdir")
     val base = s"$tmp/graft_scratch_q244_${System.nanoTime()}"
     t("create x3") {
-      Registry.create(spark, "scr_ex", s"$base/ex", 8)
-      Registry.createNear(spark, "scr_nr", s"$base/nr", 8)
-      Registry.createVec(spark, "scr_vc", s"$base/vc", 8)
+      Registry.create(spark, Exact, "scr_ex", s"$base/ex", 8)
+      Registry.create(spark, Near(), "scr_nr", s"$base/nr", 8)
+      Registry.create(spark, Vec(), "scr_vc", s"$base/vc", 8)
     }
     val d = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 500)
@@ -61,21 +62,21 @@ object Scratch {
       count(when(col("__len") >= 100, 1))).head())
     val quality = derived.filter(col("__len") >= 100)
     val keptD = t("ingestDigests") {
-      Registry.ingestDigests(spark, "scr_ex",
+      Registry.ingest(spark, Exact, "scr_ex",
         quality.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id")), 3)
     }
     t("keptD.count")(keptD.count())
     val exact = quality.join(keptD.select(col("h"),
       col("keep_id").as("doc_id")), Seq("doc_id", "h"), "left_semi")
     val keptN = t("nearIngestSims") {
-      Registry.nearIngestSims(spark, "scr_nr",
+      Registry.ingest(spark, Near(), "scr_nr",
         exact.select(col("doc_id"), col("simhash")), 3)
     }
     t("keptN.count")(keptN.count())
     val near = exact.join(keptN.select(col("doc_id")), Seq("doc_id"),
       "left_semi")
     val keptV = t("vecIngest") {
-      Registry.vecIngest(spark, "scr_vc",
+      Registry.ingest(spark, Vec(), "scr_vc",
         near.filter(col("__vec").isNotNull)
           .select(col("doc_id"), col("__vec")), "doc_id", "__vec", 3)
     }

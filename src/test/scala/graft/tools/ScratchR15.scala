@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
+import graft.dedup.Registry.{Minhash, Near}
 
 /** r15 optimization scratch: stage-level timings for the registry
   * ingest path (q249 shape), with a listener reporting jobs, stages,
@@ -70,12 +71,12 @@ object ScratchR15 {
     val tag = "scratch_" + java.lang.Integer.toHexString(sfDir.hashCode)
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_scr15/$tag"
     val name = s"graft_scr15_$tag"
-    Registry.createMinhash(spark, name, path, buckets = 8, k = 8, bands = 4)
+    Registry.create(spark, Minhash(k = 8, bands = 4), name, path, buckets = 8)
     (0 until 3).foreach { b =>
       val batch = corpus.filter(col("doc_id") % 3 === b)
       meter.verbose = b == 2
       time(s"minhashIngest batch $b") {
-        Registry.minhashIngest(spark, name, batch, "doc_id", "text", b)
+        Registry.ingest(spark, Minhash(), name, batch, "doc_id", "text", b)
           .count()
       }
       meter.verbose = false
@@ -83,11 +84,11 @@ object ScratchR15 {
     // near-lane comparison
     val pathN = s"${System.getProperty("java.io.tmpdir")}/graft_scr15n/$tag"
     val nameN = s"graft_scr15n_$tag"
-    Registry.createNear(spark, nameN, pathN, buckets = 8)
+    Registry.create(spark, Near(), nameN, pathN, buckets = 8)
     (0 until 3).foreach { b =>
       val batch = corpus.filter(col("doc_id") % 3 === b)
       time(s"nearIngest batch $b") {
-        Registry.nearIngest(spark, nameN, batch, "doc_id", "text", b)
+        Registry.ingest(spark, Near(), nameN, batch, "doc_id", "text", b)
           .count()
       }
     }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
+import graft.dedup.Registry.{Exact, Minhash, Near}
 
 /** r16 optimization scratch: phase-level timing with a deterministic
   * listener drain (ADVICE r15: atomic counters + waitUntilEmpty, not
@@ -118,14 +119,14 @@ object ScratchR16 {
         val tag = "r16_" + java.lang.Integer.toHexString(
           (sfDir + System.nanoTime()).hashCode)
         val base = s"${System.getProperty("java.io.tmpdir")}/graft_scr16/$tag"
-        Registry.createMinhash(spark, s"mh_$tag", s"$base/mh", buckets = 8)
-        Registry.create(spark, s"ex_$tag", s"$base/ex", buckets = 8)
-        Registry.createNear(spark, s"nr_$tag", s"$base/nr", buckets = 8)
+        Registry.create(spark, Minhash(), s"mh_$tag", s"$base/mh", buckets = 8)
+        Registry.create(spark, Exact, s"ex_$tag", s"$base/ex", buckets = 8)
+        Registry.create(spark, Near(), s"nr_$tag", s"$base/nr", buckets = 8)
         (0 until 3).foreach { b =>
           val batch = corpus.filter(col("doc_id") % 3 === b)
           verbose.set(b == 2)
           time(s"minhashIngest batch $b") {
-            Registry.minhashIngest(spark, s"mh_$tag", batch, "doc_id",
+            Registry.ingest(spark, Minhash(), s"mh_$tag", batch, "doc_id",
               "text", b).count()
           }
           verbose.set(false)
@@ -134,8 +135,8 @@ object ScratchR16 {
           val batch = corpus.filter(col("doc_id") % 3 === b)
           verbose.set(b == 2)
           time(s"exact ingest batch $b") {
-            Registry.ingest(spark, s"ex_$tag", batch, "doc_id", "text", b)
-              .count()
+            Registry.ingest(spark, Exact, s"ex_$tag", batch, "doc_id",
+              "text", b).count()
           }
           verbose.set(false)
         }
@@ -143,7 +144,7 @@ object ScratchR16 {
           val batch = corpus.filter(col("doc_id") % 3 === b)
           verbose.set(b == 2)
           time(s"nearIngest batch $b") {
-            Registry.nearIngest(spark, s"nr_$tag", batch, "doc_id",
+            Registry.ingest(spark, Near(), s"nr_$tag", batch, "doc_id",
               "text", b).count()
           }
           verbose.set(false)
