@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, Registry}
 import graft.io.Tables.table
+import graft.ops.CacheRelease
 import graft.similarity.Ann
 import graft.text.{TextFunctions => T, Winnow}
 
@@ -29,43 +30,26 @@ object DedupQueries extends QueryPack {
         .withColumn("doc_id", col("doc_id") + 100000L))
   }
 
-  /** q44/q45 both need the LSH candidate pairs over the same doc
-    * slice — memoized per sfDir (the GraphQueries/MlQueries pattern)
-    * so the minhash+banding self-join runs once per Verify/Bench run.
-    * The result is tiny (candidate pairs), so it is persisted and
-    * materialized here.
+  /** q44/q45/q102 share the LSH candidate pairs over the same doc
+    * slice, so the minhash+banding self-join runs once per session.
+    * The result is tiny (candidate pairs), so it is pinned.
     */
-  private val lshCandCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private[queries] val lshCands = FitStore.slot((s, dir) =>
+    FitStore.pinned(Dedup.lshCandidates(table(s, dir, "documents")
+      .filter(col("doc_id") < 200), "doc_id", "text")))
 
-  private def lshCands(s: SparkSession, dir: String): DataFrame =
-    lshCandCache.computeIfAbsent(Memo.key(s, dir), _ => {
-      val c = Dedup.lshCandidates(table(s, dir, "documents")
-        .filter(col("doc_id") < 200), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    })
-
-  /** q89 and q95 both need the multiprobe SimHash near-pair edges
-    * over the full documents table — memoized per sfDir like the LSH
-    * candidates so the simhash + two band self-joins run once.
+  /** q89, q113 and PipelineQueries (q95/q134 components, q139) share
+    * the multiprobe SimHash near-pair edges over the full documents
+    * table, so the simhash + two band self-joins run once.
     */
-  private val simhashPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[queries] def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairCache.computeIfAbsent(Memo.key(s, dir), _ => {
-      val sims = table(s, dir, "documents")
-        .select(col("doc_id"),
-          Dedup.simhash60(graft.text.TextFunctions.tokens(col("text")))
-            .as("simhash"))
-      val p = Dedup.simhashNearPairs(sims, "doc_id", "simhash",
-        tables = 2, maxHamming = 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    })
+  private[queries] val simhashPairs = FitStore.slot { (s, dir) =>
+    val sims = table(s, dir, "documents")
+      .select(col("doc_id"),
+        Dedup.simhash60(graft.text.TextFunctions.tokens(col("text")))
+          .as("simhash"))
+    FitStore.pinned(Dedup.simhashNearPairs(sims, "doc_id", "simhash",
+      tables = 2, maxHamming = 20))
+  }
 
   /** documents ∪ near-variant copies: every 7th doc re-appears at
     * +200000 with a 4-char suffix — edit distance 4 from its source,
@@ -112,28 +96,18 @@ object DedupQueries extends QueryPack {
       .orderBy(col("batch_no"))
   }
 
-  /** q174/q176 share one (exact, approx) ANN ranking pair —
-    * memoized per sfDir like the LSH candidates so the cosine
-    * baseline and the LSH pass each run once per session, and both
-    * meters provably measure the same ranking.
+  /** q174/q176 share one (exact, approx) ANN ranking pair, so the
+    * cosine baseline and the LSH pass each run once per session, and
+    * both meters provably measure the same ranking.
     */
-  private val annMeterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
-  private def annMeterLists(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    annMeterCache.computeIfAbsent(Memo.key(s, dir), _ => {
-      val emb = table(s, dir, "embeddings")
-      val exact = Ann.cosineTopK(emb, emb.filter(col("vec_id") < 20),
-        "vec_id", "embedding", 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val approx = Ann.lshTopK(emb, "vec_id", "embedding",
-        planes = 8, k = 5)
-        .filter(col("query_id") < 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      exact.count(); approx.count()
-      (exact, approx)
-    })
+  private val annMeterLists = FitStore.slot { (s, dir) =>
+    val emb = table(s, dir, "embeddings")
+    val exact = FitStore.pinned(Ann.cosineTopK(emb,
+      emb.filter(col("vec_id") < 20), "vec_id", "embedding", 5))
+    val approx = FitStore.pinned(Ann.lshTopK(emb, "vec_id", "embedding",
+      planes = 8, k = 5).filter(col("query_id") < 20))
+    (exact, approx)
+  }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // EXACT set-similarity join by prefix filtering (dedup.SetJoin)
@@ -317,12 +291,12 @@ object DedupQueries extends QueryPack {
         col("simhash").as("sim_a"))
       val b = sims.select(col("bucket"), col("doc_id").as("id_b"),
         col("simhash").as("sim_b"))
-      a.join(b, "bucket")
+      CacheRelease.afterFirstUse(a.join(b, "bucket")
         .filter(col("id_a") < col("id_b"))
         .withColumn("hamming", Dedup.hammingDist(col("sim_a"), col("sim_b")))
         .filter(col("hamming") <= 20)
         .select(col("id_a"), col("id_b"), col("hamming"))
-        .orderBy(col("id_a"), col("id_b"))
+        .orderBy(col("id_a"), col("id_b")), sims)
     }),
 
     // Multi-table SimHash near-pairs: two 15-bit windows of the
@@ -373,15 +347,16 @@ object DedupQueries extends QueryPack {
         col("sh").as("sh_a"))
       val b = side.select(col("doc_id").as("id_b"), col("sig").as("sig_b"),
         col("sh").as("sh_b"))
-      lshCands(s, dir).join(a, "id_a").join(b, "id_b")
-        .withColumn("est_jaccard",
-          round(size(filter(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => x === y), m => m)) / lit(8.0), 4))
-        .withColumn("jaccard",
-          round(size(array_intersect(col("sh_a"), col("sh_b"))) /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
-        .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-        .orderBy(col("id_a"), col("id_b"))
+      CacheRelease.afterFirstUse(
+        lshCands(s, dir).join(a, "id_a").join(b, "id_b")
+          .withColumn("est_jaccard",
+            round(size(filter(zip_with(col("sig_a"), col("sig_b"),
+              (x, y) => x === y), m => m)) / lit(8.0), 4))
+          .withColumn("jaccard",
+            round(size(array_intersect(col("sh_a"), col("sh_b"))) /
+              size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 4))
+          .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
+          .orderBy(col("id_a"), col("id_b")), side)
     }),
 
     // Brute-force cosine top-5 (correctness baseline for ANN).

@@ -17,45 +17,32 @@ object GraphQueries extends QueryPack {
 
   private def toks = TextFunctions.tokens(col("text"))
 
-  /** q66/q67 both need the corpus-level PageRank over the same
-    * co-occurrence graph — memoized per sfDir (same pattern as
-    * MlQueries.fittedLda) so the 10-iteration power loop runs once
-    * per Verify/Bench run instead of twice. The cached DataFrame is
-    * already persisted by [[TextRank.pagerank]].
+  /** q66/q67 share the corpus-level PageRank over one co-occurrence
+    * graph, so the 10-iteration power loop runs once per session. The
+    * scores are already persisted by [[TextRank.pagerank]].
     */
-  private val scoresCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val corpusScores = FitStore.slot((s, dir) =>
+    TextRank.wordScores(
+      table(s, dir, "documents").select(toks.as("toks")), "toks", Iters))
 
-  private def corpusScores(s: SparkSession, dir: String): DataFrame =
-    scoresCache.computeIfAbsent(Memo.key(s, dir), _ =>
-      TextRank.wordScores(
-        table(s, dir, "documents").select(toks.as("toks")), "toks", Iters))
-
-  /** q181 and q220 walk the SAME thresholded co-order graph — the
-    * 1.2M-pair order self-join is the dominant cost of both, so the
-    * edge list is memoized per sfDir and persisted (it is the ~4k-
-    * row graph AFTER the support cut, cheap to hold; the pair
-    * volume is paid once per run).
+  /** q181, q220 and the k-core query walk the SAME thresholded
+    * co-order graph — the 1.2M-pair order self-join is the dominant
+    * cost of each, so the edge list (the ~4k-row graph AFTER the
+    * support cut, cheap to hold) is pinned and the pair volume is paid
+    * once per session.
     */
-  private val edgesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def coorderEdges(s: SparkSession, dir: String): DataFrame =
-    edgesCache.computeIfAbsent(Memo.key(s, dir), _ => {
-      val li = table(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = li.join(li.select(col("o"), col("p").as("p2")), "o")
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("pa"), col("p2").as("pb"))
-        .groupBy(col("pa"), col("pb"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2)
-        .select(col("pa"), col("pb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      e
-    })
+  private val coorderEdges = FitStore.slot { (s, dir) =>
+    val li = table(s, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    FitStore.pinned(li.join(li.select(col("o"), col("p").as("p2")), "o")
+      .filter(col("p") < col("p2"))
+      .select(col("p").as("pa"), col("p2").as("pb"))
+      .groupBy(col("pa"), col("pb"))
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") >= 2)
+      .select(col("pa"), col("pb")))
+  }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Corpus-level PageRank word scores over the co-occurrence graph.
@@ -78,7 +65,7 @@ object GraphQueries extends QueryPack {
       // order is multiplicity, not co-occurrence — support must
       // count CO-ORDERS (the q182 discipline; this corpus carries
       // duplicate lines by design, see q177's uniqueness rule).
-      // Edge list memoized with q220 (coorderEdges).
+      // Edge list shared with q220 (coorderEdges).
       graft.graph.Triangles.stats(coorderEdges(s, dir), "pa", "pb")
     }),
 

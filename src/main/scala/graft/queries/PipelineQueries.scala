@@ -32,22 +32,14 @@ object PipelineQueries extends QueryPack {
     lpad((col("doc_id") % 10000).cast("string"), 3, "0"), lit("-"),
     lpad(((col("doc_id") * 7) % 10000).cast("string"), 4, "0"))
 
-  /** Near-dup components (SimHash pairs → union-find), memoized per
-    * sfDir so q95 and q134 share one contraction + one cache (the
-    * simhashPairs input is itself memoized in DedupQueries).
+  /** Near-dup components (SimHash pairs → union-find), shared by q95
+    * and q134; the shared simhashPairs edges are built inside this
+    * build on first use.
     */
-  private val compCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dupComponents(s: SparkSession, dir: String): DataFrame =
-    compCache.computeIfAbsent(Memo.key(s, dir), _ => {
-      val c = Components.connectedComponents(
-        table(s, dir, "documents").select(col("doc_id")),
-        DedupQueries.simhashPairs(s, dir), "doc_id", "id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    })
+  private val dupComponents = FitStore.slot((s, dir) =>
+    FitStore.pinned(Components.connectedComponents(
+      table(s, dir, "documents").select(col("doc_id")),
+      DedupQueries.simhashPairs(s, dir), "doc_id", "id_a", "id_b")))
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Context-window chunking: 64-token windows every 48 tokens

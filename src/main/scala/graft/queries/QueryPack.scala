@@ -22,21 +22,3 @@ trait QueryPack {
   def defs: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
 }
-
-/** Memo-key helper for the per-pack shared-fit caches (LSH
-  * candidates, LDA fits, LM scores, …). A persisted DataFrame is
-  * bound to the SparkSession that built it, so keying by sfDir alone
-  * would hand a later session a plan referencing a possibly-stopped
-  * session (ADVICE r6); the session UUID makes a fresh session
-  * rebuild instead.
-  */
-private[queries] object Memo {
-  // Own uuid-per-session-instance map (sessionUUID is private[sql]):
-  // identity-keyed, a handful of sessions per JVM.
-  private val ids =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-
-  def key(s: SparkSession, dir: String): String =
-    ids.computeIfAbsent(s,
-      _ => java.util.UUID.randomUUID().toString) + "|" + dir
-}

@@ -1,9 +1,11 @@
 package graft.topic
 
-import org.apache.spark.ml.clustering.LDA
+import org.apache.spark.ml.clustering.{LDA, LDAModel}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, Word2Vec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.ops.CacheRelease
 
 /** Topic-model and embedding operators (SURVEY.md M12/M13/M15;
   * reference NewsLDA.scala:74-127, NewsLDAModel.scala:25-116,
@@ -32,23 +34,60 @@ object Topics {
     (model, model.transform(df))
   }
 
-  /** LDA topics (M12/M13): k topics over token counts, fixed seed.
-    * Returns (topic, top term strings, rounded weights).
+  /** A fitted LDA model (M12/M13) with the vocabulary it indexes and
+    * its vectorized input, and the two views the reference takes off
+    * one fit (NewsLDA describes topics, then tags documents).
+    * `vectorized` is persisted; whoever holds the fit releases it.
     */
+  final case class LdaFit(vocabulary: Array[String], model: LDAModel,
+      vectorized: DataFrame) {
+
+    /** (topic, comma-joined top term strings, rounded first weight). */
+    def topics(termsPerTopic: Int = 5): DataFrame = {
+      val vocab = vocabulary
+      val toWords = udf((idx: Seq[Int]) => idx.map(vocab(_)))
+      model.describeTopics(termsPerTopic)
+        .select(col("topic"),
+          array_join(toWords(col("termIndices")), ",").as("top_terms"),
+          round(element_at(col("termWeights"), 1), 4).as("w1"))
+        .orderBy(col("topic"))
+    }
+
+    /** (id, argmax topic) per document. The fit input is coalesced
+      * small; per-doc variational inference in `transform` is
+      * CPU-bound, so it is spread back across the session's cores.
+      */
+    def dominantTopic(idCol: String): DataFrame = {
+      val dominant = udf((v: org.apache.spark.ml.linalg.Vector) => v.argmax)
+      model.transform(vectorized.repartition(
+          vectorized.sparkSession.sparkContext.defaultParallelism))
+        .select(col(idCol), dominant(col("topicDistribution")).as("topic"))
+    }
+  }
+
+  /** Fit LDA: k topics over token counts, fixed seed. */
+  def fitLda(df: DataFrame, tokensCol: String, k: Int,
+      maxIter: Int = 10, vocabSize: Int = 1000, seed: Long = 42L): LdaFit = {
+    val (cvModel, vectorized) = countVectorize(df, tokensCol, vocabSize)
+    // Online LDA launches several tiny RDD jobs per iteration, each
+    // inheriting the session's full partition count — at a corpus of
+    // thousands of docs 32-way tasks are pure scheduler overhead
+    // multiplied by maxIter. Coalescing the persisted fit input to a
+    // handful of partitions more than halves the fit time; at real
+    // scale the partition count follows the data and this coalesce is
+    // the knob that keeps tasks ~100 MB.
+    val vec = vectorized.coalesce(8).persist()
+    val model = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
+      .setFeaturesCol("features").fit(vec.select("features"))
+    LdaFit(cvModel.vocabulary, model, vec)
+  }
+
+  /** LDA topics (M12/M13): [[LdaFit.topics]] of one [[fitLda]]. */
   def ldaTopics(df: DataFrame, tokensCol: String, k: Int,
       maxIter: Int = 10, vocabSize: Int = 1000, seed: Long = 42L,
       termsPerTopic: Int = 5): DataFrame = {
-    val (cvModel, vectorized) = countVectorize(df, tokensCol, vocabSize)
-    val lda = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
-      .setFeaturesCol("features")
-    val model = lda.fit(vectorized.select("features"))
-    val vocab = cvModel.vocabulary
-    val toWords = udf((idx: Seq[Int]) => idx.map(vocab(_)))
-    model.describeTopics(termsPerTopic)
-      .select(col("topic"),
-        array_join(toWords(col("termIndices")), ",").as("top_terms"),
-        round(element_at(col("termWeights"), 1), 4).as("w1"))
-      .orderBy(col("topic"))
+    val f = fitLda(df, tokensCol, k, maxIter, vocabSize, seed)
+    CacheRelease.afterFirstUse(f.topics(termsPerTopic), f.vectorized)
   }
 
   /** Full-parameter LDA fit with model evaluation (M13 full surface;
@@ -76,7 +115,7 @@ object Topics {
     import spark.implicits._
     val (_, vectorized) = countVectorize(df, tokensCol, vocabSize)
     val feats = vectorized.select("features")
-      .coalesce(8) // see MlQueries.fittedLda: tiny per-iteration jobs
+      .coalesce(8) // see fitLda: tiny per-iteration jobs
       .persist()
     val model = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
       .setOptimizer(optimizer)
@@ -94,16 +133,14 @@ object Topics {
         "est_doc_concentration")
   }
 
-  /** Per-document dominant topic from the fitted LDA model. */
+  /** Per-document dominant topic: [[LdaFit.dominantTopic]] of one
+    * [[fitLda]].
+    */
   def ldaDominantTopic(df: DataFrame, idCol: String, tokensCol: String,
       k: Int, maxIter: Int = 10, vocabSize: Int = 1000,
       seed: Long = 42L): DataFrame = {
-    val (_, vectorized) = countVectorize(df, tokensCol, vocabSize)
-    val model = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
-      .setFeaturesCol("features").fit(vectorized.select("features"))
-    val dominant = udf((v: org.apache.spark.ml.linalg.Vector) => v.argmax)
-    model.transform(vectorized)
-      .select(col(idCol), dominant(col("topicDistribution")).as("topic"))
+    val f = fitLda(df, tokensCol, k, maxIter, vocabSize, seed)
+    CacheRelease.afterFirstUse(f.dominantTopic(idCol), f.vectorized)
   }
 
   /** Word2Vec embeddings (M15): token sequences → word vectors,

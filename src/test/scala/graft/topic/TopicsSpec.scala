@@ -33,6 +33,18 @@ class TopicsSpec extends SparkSpec {
     assert(out(3L) == out(4L))
   }
 
+  test("one fitLda feeds both the topics and the dominant-topic view") {
+    val fit = Topics.fitLda(docs, "toks", k = 2, maxIter = 20)
+    try {
+      val topics = fit.topics().as[(Int, String, Double)].collect()
+      assert(topics.map(_._1).toSeq == Seq(0, 1))
+      assert(topics.flatMap(_._2.split(",")).toSet.subsetOf(fit.vocabulary.toSet))
+      val dom = fit.dominantTopic("id").as[(Long, Int)].collect().toMap
+      assert(dom.keySet == Set(1L, 2L, 3L, 4L))
+      assert(dom.values.forall(t => t >= 0 && t < 2))
+    } finally fit.vectorized.unpersist()
+  }
+
   test("ldaModelMetrics: online and em both converge with finite metrics") {
     for (opt <- Seq("online", "em")) {
       val row = Topics.ldaModelMetrics(docs, "toks", k = 2,
