@@ -1090,25 +1090,7 @@ object Registry {
       checkpoint: String): Int = {
     val root = registryRoot(tableLocation(spark, name))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ck = new Path(checkpoint)
-    fs.mkdirs(ck)
-    def readSmall(p: Path): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    val nonceFile = new Path(ck, "_graft_stream_id")
-    val nonce =
-      if (fs.exists(nonceFile)) readSmall(nonceFile)
-      else {
-        val tok = java.util.UUID.randomUUID().toString
-        try {
-          val o = fs.create(nonceFile, false)
-          o.write(tok.getBytes("UTF-8")); o.close(); tok
-        } catch { // lost the create race — the winner's nonce stands
-          case _: java.io.IOException => readSmall(nonceFile)
-        }
-      }
+    val nonce = streamNonce(spark, checkpoint)
     val dir = new Path(root, "_epochs")
     fs.mkdirs(dir)
     def claimed(): Option[Int] =
@@ -1129,6 +1111,38 @@ object Registry {
         if (ok) won = k else k += 1
       }
       won
+    }
+  }
+
+  /** A checkpoint lineage's identity: the nonce in
+    * `<checkpoint>/_graft_stream_id`, created by the first caller.
+    */
+  private[graft] def streamNonce(spark: SparkSession,
+      checkpoint: String): String = {
+    val ck = new Path(checkpoint)
+    val fs = ck.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(ck)
+    claimFile(fs, new Path(ck, "_graft_stream_id"),
+      java.util.UUID.randomUUID().toString)
+  }
+
+  /** Store `token` in `p` unless it exists (atomic
+    * create-no-overwrite) and return the stored token — `token`, or
+    * the one a racing writer stored first.
+    */
+  private[graft] def claimFile(fs: FileSystem, p: Path,
+      token: String): String = {
+    def stored(): String = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+    }
+    if (fs.exists(p)) stored()
+    else try {
+      val o = fs.create(p, false)
+      o.write(token.getBytes("UTF-8")); o.close(); token
+    } catch { // lost the create race — the winner's token stands
+      case _: java.io.IOException => stored()
     }
   }
 

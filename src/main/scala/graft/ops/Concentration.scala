@@ -35,8 +35,9 @@ object Concentration {
 
   /** The same gate off a pre-aggregated (group, count) table — the
     * counts are a mergeable monoid, so a streaming maintenance pass
-    * (`Streams.concentrationMaintStream`) keeps them per batch and
-    * this computes the corpus gate from GROUP rows alone.
+    * (`Streams.maintainStream(Maintained.groupCounts(…))`) keeps them
+    * per batch and this computes the corpus gate from GROUP rows
+    * alone.
     */
   def ofCounts(counts: DataFrame, groupCol: String,
       cntCol: String): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables.table
 import graft.streaming.Streams
+import graft.streaming.Streams.Maintained
 
 /** Event-time windowing surface (SURVEY.md §2.11 extension). The
   * exact `window()` expressions used by the streaming module run
@@ -220,8 +221,8 @@ object EventQueries extends QueryPack {
         table(s, dir, "events"), "event_type", "value")
     }),
 
-    // Incremental transition maintenance (Streams
-    // .transitionsMaintainBatch): the corpus split at its time
+    // Incremental transition maintenance (Streams.maintainBatch of
+    // Maintained.transitions): the corpus split at its time
     // midpoint, the matrix computed via the maintenance path —
     // per-half bigrams + the per-user boundary closure — and the
     // oracle hash-verifies it equals the from-scratch q180 matrix.
@@ -229,32 +230,20 @@ object EventQueries extends QueryPack {
     // state: the cut position must not matter, and the oracle
     // proves it doesn't.
     "q206_incr_transitions" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val mid = ev.agg((min(unix_micros(col("ts")))
-        + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(2L)).cast("long").as("__cut"))
-      val cut = ev.crossJoin(broadcast(mid))
-      Streams.transitionsMaintainBatch(
-        cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
-        cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"),
-        "user_id", "event_type", "ts", "event_id")
+      val (a, b) = halves(table(s, dir, "events"))
+      Streams.maintainBatch(Maintained.transitions("user_id",
+        "event_type", "ts", "event_id"), a, b)
     }),
 
-    // q206's proof for the length-n generalization (Streams
-    // .pathsMaintainBatch, len=3): the midpoint cut puts thousands
+    // q206's proof for the length-n generalization
+    // (Maintained.paths, len=3): the midpoint cut puts thousands
     // of users' length-3 windows across the boundary, and the
     // oracle (the from-scratch q185 path counts) hash-verifies the
     // trailing-tail/head closure counted each one exactly once.
     "q207_incr_paths" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val mid = ev.agg((min(unix_micros(col("ts")))
-        + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(2L)).cast("long").as("__cut"))
-      val cut = ev.crossJoin(broadcast(mid))
-      Streams.pathsMaintainBatch(
-        cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
-        cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"),
-        "user_id", "event_type", "ts", "event_id", len = 3)
+      val (a, b) = halves(table(s, dir, "events"))
+      Streams.maintainBatch(Maintained.paths("user_id", "event_type",
+        "ts", "event_id", len = 3), a, b)
     }),
 
     // EWMA control-chart gate (ops.ControlChart): the per-entity
@@ -269,23 +258,17 @@ object EventQueries extends QueryPack {
       graft.ops.ControlChart.ewmaSummary(table(s, dir, "events"),
         "user_id", "value", "ts", "event_id", "event_type")),
 
-    // The q206 cut-invariance proof for the EWMA gate (Streams
-    // .ewmaMaintainBatch): the midpoint cut puts many users'
+    // The q206 cut-invariance proof for the EWMA gate
+    // (Maintained.ewma): the midpoint cut puts many users'
     // depth-8 history windows across the boundary; the maintenance
     // path gates the second half's head rows against the first
     // half's trailing state, and the oracle (the from-scratch q208
     // summary) hash-verifies every row was gated exactly once with
     // its exact full history.
     "q209_incr_ewma" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val mid = ev.agg((min(unix_micros(col("ts")))
-        + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(2L)).cast("long").as("__cut"))
-      val cut = ev.crossJoin(broadcast(mid))
-      Streams.ewmaMaintainBatch(
-        cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
-        cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"),
-        "user_id", "value", "ts", "event_id", "event_type")
+      val (a, b) = halves(table(s, dir, "events"))
+      Streams.maintainBatch(Maintained.ewma("user_id", "value", "ts",
+        "event_id", "event_type"), a, b)
     }),
 
     // Multi-touch conversion attribution (ops.EventAnalytics
@@ -311,14 +294,8 @@ object EventQueries extends QueryPack {
     // touches, and the oracle (the from-scratch q218 summary)
     // hash-verifies the three additive passes reassemble exactly.
     "q229_incr_attribution" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val mid = ev.agg((min(unix_micros(col("ts")))
-        + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(2L)).cast("long").as("__cut"))
-      val cut = ev.crossJoin(broadcast(mid))
-      Streams.attributionMaintainBatch(
-        cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
-        cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"),
+      val (a, b) = halves(table(s, dir, "events"))
+      Streams.attributionMaintainBatch(a, b,
         "user_id", "event_type", "ts", "event_id",
         convType = "purchase", touchTypes = Seq("view", "click"),
         windowMs = 3L * 24 * 3600 * 1000)
@@ -335,23 +312,17 @@ object EventQueries extends QueryPack {
         "user_id", "value", "ts", "event_id")
         .orderBy(col("user_id"), col("version")).limit(500)),
 
-    // The q206 cut-invariance proof for INTERVAL state (Streams
-    // .scd2MaintainBatch): the midpoint cut severs every user's
+    // The q206 cut-invariance proof for INTERVAL state
+    // (Maintained.scd2): the midpoint cut severs every user's
     // change chain; the maintenance path must close the first
     // half's current rows at the second half's first surviving
     // change, collapse cross-boundary no-ops, and renumber
     // versions — and the oracle (the from-scratch q219 intervals)
     // hash-verifies all of it.
     "q222_incr_scd2" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val mid = ev.agg((min(unix_micros(col("ts")))
-        + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(2L)).cast("long").as("__cut"))
-      val cut = ev.crossJoin(broadcast(mid))
-      Streams.scd2MaintainBatch(
-        cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
-        cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"),
-        "user_id", "value", "ts", "event_id")
+      val (a, b) = halves(table(s, dir, "events"))
+      Streams.maintainBatch(Maintained.scd2("user_id", "value", "ts",
+        "event_id"), a, b)
         .orderBy(col("user_id"), col("version")).limit(500)
     }),
 
@@ -410,6 +381,19 @@ object EventQueries extends QueryPack {
         .orderBy(col("n"))
     })
   )
+
+  /** The events cut at their ts midpoint: (first half, second half) —
+    * the split the q206/q207/q209/q222/q229 cut-invariance queries
+    * maintain across.
+    */
+  private def halves(ev: DataFrame): (DataFrame, DataFrame) = {
+    val mid = ev.agg((min(unix_micros(col("ts")))
+      + (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
+        / lit(2L)).cast("long").as("__cut"))
+    val cut = ev.crossJoin(broadcast(mid))
+    (cut.filter(unix_micros(col("ts")) < col("__cut")).drop("__cut"),
+      cut.filter(unix_micros(col("ts")) >= col("__cut")).drop("__cut"))
+  }
 
   def oracles: Map[String, String] = Map(
     // exact-integer credit replay: 1e6 div n + remainder-to-last

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -476,28 +477,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming count-min maintenance — [[graft.ops.CountMin]]'s
-    * ingestion twin: each micro-batch sketches ONLY its own rows and
-    * merges counter-wise with the prior version (the d·w-bounded
-    * mergeable monoid; merge == sketch-of-union is spec-pinned in
-    * CountMinSpec), so the stream is never rescanned and state stays
-    * d·w rows regardless of stream length. Frequency estimates read
-    * off the maintained sketch at any point via
-    * [[graft.ops.CountMin.estimate]]. StreamsSpec pins maintained ==
-    * from-scratch over the batches' union.
-    */
-  def cmsMaintStream(events: DataFrame, keyCol: String, d: Int,
-      w: Int, stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.CountMin.sketch(batch, keyCol, d, w))(
-          (prior, fresh) => graft.ops.CountMin.merge(prior, fresh))
-      }
-      .start()
-
   /** The FULL incremental-curate chain as an ingestion stream — the
     * per-lane maintenance stream above composed the way a
     * production feed runs them: each micro-batch flows through
@@ -541,459 +520,348 @@ object Streams {
       }
       .start()
 
-  /** Streaming HLL maintenance — [[graft.ops.Hll]]'s ingestion
-    * twin: each micro-batch registers ONLY its own keys and
-    * max-merges with the prior version (the register monoid —
-    * merge == registers-of-union is HllSpec-pinned), so state stays
-    * ≤ |groups|·m rows regardless of stream length and the distinct
-    * estimate reads off the maintained registers at any point via
-    * [[graft.ops.Hll.estimate]]. StreamsSpec pins maintained ==
-    * from-scratch over the batches' union.
-    */
-  def hllMaintStream(events: DataFrame, keyCol: String,
-      groupCols: Seq[String], stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.Hll.registers(batch, keyCol, groupCols))(
-          (prior, fresh) => graft.ops.Hll.merge(prior, fresh, groupCols))
-      }
-      .start()
+  // ---- versioned state maintenance ----
 
-  /** Streaming rollup maintenance — [[graft.ops.Incremental]] driven
-    * by a stream: each micro-batch aggregates ONLY its own rows into
-    * a mergeable state and merges with the previous state version;
-    * the base corpus is never rescanned, so per-batch cost is
-    * O(batch) + O(groups). State versions are batchId-keyed dirs —
-    * re-processing a batch after a restart overwrites the same
-    * version, so the maintenance is idempotent under the
-    * checkpoint's replay contract (at production scale the version
-    * pointer lives in a catalog/transaction log; the directory
-    * convention is this sandbox's stand-in). StreamsSpec pins the
-    * maintained state against the from-scratch aggregate.
+  /** One incrementally maintained state family — only what differs
+    * between the maintained operators: the state of one batch
+    * (`of`), the fold of a batch's state into the previous version
+    * (`merge(prior, fresh)`), the seed of a first version (`first`)
+    * and the read of a state in the batch operator's output shape
+    * (`read`). [[maintainStream]] keeps it live per micro-batch;
+    * [[maintainBatch]] runs the same steps over two batch halves, so
+    * a stream and its batch twin cannot drift. Each family's merge
+    * equals its operator over the union of the batches (StreamsSpec
+    * pins it per family).
     */
-  def rollupMaintStream(events: DataFrame, groupCol: String,
-      valCol: String, stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.Incremental.aggState(batch, groupCol, valCol))(
-          (prior, fresh) => graft.ops.Incremental.merge(prior, fresh))
-      }
-      .start()
+  final case class Maintained(of: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame,
+      first: DataFrame => DataFrame = identity,
+      read: DataFrame => DataFrame = identity)
 
-  /** Streaming transition-matrix maintenance — the
-    * [[graft.ops.EventAnalytics.transitionCounts]] twin. Unlike the
-    * funnel/retention states (pure sets, order-free), a bigram
-    * count is ORDER-SENSITIVE across the batch boundary: the last
-    * event of a user's stream in batch i and their first event in
-    * batch i+1 form a transition no single batch sees. The state is
-    * therefore two relations in one tagged table: the (from, to, n)
-    * count monoid (`__kind = "c"`) and one boundary row per user —
-    * their latest event (`__kind = "u"`). Each batch contributes its
-    * in-batch bigrams, its per-user first rows (consumed by the
-    * merge to close boundary transitions against the prior state's
-    * last rows, then dropped), and its per-user last rows. Per-batch
-    * cost O(batch) + O(users); events are never rescanned.
-    *
-    * Ordering contract (stated, not assumed silently): batches must
-    * partition each user's stream in event-time order — the same
-    * ingestion-order contract the sessionization and CDC twins
-    * carry. A late event invalidates bigrams already counted; the
-    * recovery is a from-scratch rebuild over the versioned base,
-    * exactly as for the rollup family. StreamsSpec pins maintained
-    * == from-scratch over boundary-straddling users.
-    */
-  def transitionsMaintStream(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, idCol: String,
-      stateDir: String, checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val fresh = transitionState(batch, userCol, typeCol, tsCol,
-          idCol)
-        val merged =
-          latestVersion(batch.sparkSession, stateDir, id) match {
-            case Some(prior) => mergeTransitions(prior, fresh)
-            case None => fresh.filter(col("__kind") =!= "f")
+  object Maintained {
+    import graft.ops.{ControlChart, CountMin, DistinctSketch,
+      EventAnalytics, Hll, Incremental}
+
+    /** Count-min sketch ([[graft.ops.CountMin]]): counter-wise merge,
+      * d·w rows whatever the stream length; point estimates via
+      * [[graft.ops.CountMin.estimate]].
+      */
+    def cms(keyCol: String, d: Int, w: Int): Maintained =
+      Maintained(CountMin.sketch(_, keyCol, d, w), CountMin.merge)
+
+    /** HLL registers ([[graft.ops.Hll]]): max-merge, ≤ |groups|·m
+      * rows; distinct estimates via [[graft.ops.Hll.estimate]].
+      */
+    def hll(keyCol: String, groupCols: Seq[String]): Maintained =
+      Maintained(Hll.registers(_, keyCol, groupCols),
+        Hll.merge(_, _, groupCols))
+
+    /** Per-group rollup ([[graft.ops.Incremental]]): counts and sums
+      * add, min/max fold; [[graft.ops.Incremental.finish]] reads it.
+      */
+    def rollup(groupCol: String, valCol: String): Maintained =
+      Maintained(Incremental.aggState(_, groupCol, valCol),
+        Incremental.merge(_, _))
+
+    /** Per-group row counts `(groupCol, __c)` — the corpus
+      * composition gate kept live: [[graft.ops.Concentration.ofCounts]]
+      * reads entropy/Gini/top-share off the group rows alone.
+      */
+    def groupCounts(groupCol: String): Maintained = Maintained(
+      _.groupBy(col(groupCol)).agg(count(lit(1)).as("__c")),
+      (prior, fresh) => prior.unionByName(fresh)
+        .groupBy(col(groupCol)).agg(sum(col("__c")).as("__c")))
+
+    /** KMV k-min hash set ([[graft.ops.DistinctSketch]]): union, then
+      * re-take the k smallest — ≤ 2k longs per merge.
+      */
+    def kmv(keyCol: String, k: Int): Maintained = Maintained(
+      DistinctSketch.sketchOf(_, col(keyCol), k),
+      (prior, fresh) => prior.unionByName(fresh).distinct()
+        .orderBy(col("__h")).limit(k))
+
+    /** Funnel state ([[graft.ops.EventAnalytics.funnelState]] —
+      * distinct step-typed (user, type, ts) rows), merged by union +
+      * distinct: bounded by step-typed activity, and any funnel form
+      * (ordered or windowed) runs over it at read time.
+      */
+    def funnel(userCol: String, typeCol: String, tsCol: String,
+        steps: Seq[String]): Maintained = Maintained(
+      EventAnalytics.funnelState(_, userCol, typeCol, tsCol, steps),
+      distinctUnion)
+
+    /** Retention state: the (user, week) pair set
+      * ([[graft.ops.EventAnalytics.userWeeks]]) that
+      * [[graft.ops.EventAnalytics.retentionTriangle]] reads. A late
+      * EARLIER event moves a user's cohort with no special casing —
+      * the cohort min is taken at read time, which is why the state
+      * is the pair set and not precomputed cohorts.
+      */
+    def userWeeks(userCol: String, tsCol: String): Maintained =
+      Maintained(EventAnalytics.userWeeks(_, userCol, tsCol),
+        distinctUnion)
+
+    /** SCD2 validity intervals
+      * ([[graft.ops.EventAnalytics.scd2Intervals]]): each batch
+      * collapses its own changes, and the merge applies one boundary
+      * rule per key — a batch's first change that repeats the prior
+      * current value is a no-op (the prior current row extends
+      * through it); otherwise the prior current row closes at the
+      * batch's first surviving change. Versions shift by the prior
+      * per-key maximum. O(batch + keys): the history body is
+      * carried, never recomputed.
+      */
+    def scd2(keyCol: String, valCol: String, tsCol: String,
+        idCol: String): Maintained = Maintained(
+      EventAnalytics.scd2Intervals(_, keyCol, valCol, tsCol, idCol),
+      mergeScd2(_, _, keyCol))
+
+    /** Transition counts
+      * ([[graft.ops.EventAnalytics.transitionCounts]]) — bigrams are
+      * order-sensitive across the cut: a user's last event before it
+      * and first event after it form a transition no single batch
+      * sees. The tail is each user's last event, and the boundary
+      * joins it to the fresh first event.
+      */
+    def transitions(userCol: String, typeCol: String, tsCol: String,
+        idCol: String): Maintained =
+      boundaryTail(userCol, tsCol, idCol, depth = 1,
+        Seq("from_type", "to_type"), Seq("n"),
+        Seq(col("from_type"), col("to_type")))(
+        // transitionCounts' bigrams without its closing orderBy, which
+        // would add a Sort and a range Exchange per half to q206
+        _.withColumn("__from", lag(col(typeCol), 1).over(Window
+            .partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))))
+          .filter(col("__from").isNotNull)
+          .select(col("__from").as("from_type"), col(typeCol).as("to_type"))
+          .groupBy(col("from_type"), col("to_type"))
+          .agg(count(lit(1)).as("n")),
+        Seq("__type" -> col(typeCol)),
+        (pu, ff) => pu.select(col("__user"), col("__type").as("__lt"))
+          .join(ff.select(col("__user"), col("__type").as("__ft")),
+            "__user")
+          .groupBy(col("__lt").as("from_type"), col("__ft").as("to_type"))
+          .agg(count(lit(1)).as("n")))
+
+    /** Length-`len` path counts
+      * ([[graft.ops.EventAnalytics.pathCounts]]) — the transition
+      * family generalized: a window can span up to `len` batches, so
+      * the tail is each user's trailing `len−1` events. Every
+      * spanning window has a UNIQUE batch where it ENDS; the boundary
+      * counts exactly the windows that START in the prior tail and
+      * END in the fresh head (an origin-tag test on the oldest lag
+      * and the current row), so none is double-counted and none
+      * missed, even across 3+ tiny batches.
+      */
+    def paths(userCol: String, typeCol: String, tsCol: String,
+        idCol: String, len: Int): Maintained =
+      boundaryTail(userCol, tsCol, idCol, depth = len - 1,
+        Seq("path"), Seq("n"), Seq(col("n").desc, col("path")))(
+        EventAnalytics.pathCounts(_, userCol, typeCol, tsCol, idCol,
+          len),
+        Seq("__type" -> col(typeCol)),
+        { (pu, ff) =>
+          val (seg, w) = segment(pu, ff)
+          val steps = (len - 1 to 0 by -1).map { off =>
+            if (off == 0) col("__type") else lag(col("__type"), off).over(w)
           }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/v$id")
+          val startO = lag(col("__o"), len - 1).over(w)
+          seg.select(concat_ws(">", steps: _*).as("path"),
+              (steps.map(_.isNotNull).reduce(_ && _) &&
+                col("__o") === "B" && startO === "T").as("__take"))
+            .filter(col("__take"))
+            .groupBy(col("path")).agg(count(lit(1)).as("n"))
+        })
+
+    /** The EWMA gate summary ([[graft.ops.ControlChart.ewmaSummary]])
+      * — per-row windowed state at depth 8: a row is gated in the
+      * UNIQUE batch that contains it. Rows with 8 in-batch priors are
+      * gated in-batch; the boundary gates exactly the fresh head rows
+      * (first ≤ 8 per user) over the prior tail (trailing ≤ 8 per
+      * user), which supplies every stream prior a head row can need.
+      * Users with genuinely short history stay ungated in both paths.
+      */
+    def ewma(userCol: String, valCol: String, tsCol: String,
+        idCol: String, typeCol: String, k: Int = 3): Maintained =
+      boundaryTail(userCol, tsCol, idCol, ControlChart.Depth,
+        Seq(typeCol), Seq("n_gated", "n_spike", "n_dip", "sum_absdev"),
+        Seq(col(typeCol)))(
+        ControlChart.ewmaSummary(_, userCol, valCol, tsCol, idCol,
+          typeCol, k),
+        Seq(typeCol -> col(typeCol),
+          "__xq" -> floor(col(valCol) * 100).cast("long")),
+        { (pu, ff) =>
+          val (seg, w) = segment(pu, ff)
+          val (dev, status) = ControlChart.gateColumns(col("__xq"), w, k)
+          ControlChart.summarize(seg
+            .select(col(typeCol), dev.as("dev"), status.as("status"),
+              col("__o"))
+            .filter(col("__o") === "B"), typeCol)
+        })
+
+    /** The order-sensitive families' shared state (transitions,
+      * paths, EWMA): one tagged table holding the count monoid
+      * (`__kind = "c"`, columns `keys ++ sums`) and per-user boundary
+      * rows (`__user`, `__ts`, `__id` and the family's `edge`
+      * payload; other columns null). A batch contributes its in-batch
+      * `counts`, its first `depth` rows per user ("f", consumed by the
+      * merge, dropped from a first version) and its last `depth` rows
+      * per user ("u", the next tail). The merge sums prior counts,
+      * fresh counts and `boundary(prior tail, fresh head)` per key,
+      * and keeps each user's newest `depth` rows of the prior tail ∪
+      * the fresh tail.
+      *
+      * Ordering contract: batches partition each user's stream in
+      * (ts, id) order — the ingestion-order contract of the
+      * sessionization and CDC twins. Under it the fresh tail is newer
+      * than the prior tail, so the newest `depth` of their union are
+      * the fresh rows topped up from the prior tail. A late event
+      * invalidates counts already taken; the recovery is a
+      * from-scratch rebuild over the versioned base. Per-batch cost
+      * O(batch) + O(users·depth); events are never rescanned.
+      */
+    private def boundaryTail(userCol: String, tsCol: String,
+        idCol: String, depth: Int, keys: Seq[String], sums: Seq[String],
+        order: Seq[Column])(counts: DataFrame => DataFrame,
+        edge: Seq[(String, Column)],
+        boundary: (DataFrame, DataFrame) => DataFrame): Maintained = {
+      val ks = keys ++ sums
+      val carried = edge.toMap
+      val payload = edge.map(_._1).filterNot(ks.contains)
+      def nul(df: DataFrame, c: String) =
+        lit(null).cast(df.schema(c).dataType).as(c)
+      // each user's first `depth` rows under `w`; one row is an
+      // equality filter, the form q206's plan has always had
+      def topDepth(w: WindowSpec, df: DataFrame) = df
+        .withColumn("__rn", row_number().over(w))
+        .filter(if (depth == 1) col("__rn") === 1 else col("__rn") <= depth)
+      def of(batch: DataFrame): DataFrame = {
+        val byUser = Window.partitionBy(col(userCol))
+        val c = counts(batch)
+        def edgeRows(kind: String, w: WindowSpec) = topDepth(w, batch)
+          .select((lit(kind).as("__kind") +:
+            ks.map(k => carried.get(k).fold(nul(c, k))(_.as(k)))) ++
+            Seq(col(userCol).as("__user"), col(tsCol).as("__ts"),
+              col(idCol).as("__id")) ++
+            payload.map(p => carried(p).as(p)): _*)
+        val f = edgeRows("f", byUser.orderBy(col(tsCol), col(idCol)))
+        c.select((lit("c").as("__kind") +: ks.map(col)) ++
+            (Seq("__user", "__ts", "__id") ++ payload).map(nul(f, _)): _*)
+          .unionByName(f)
+          .unionByName(edgeRows("u",
+            byUser.orderBy(col(tsCol).desc, col(idCol).desc)))
       }
-      .start()
-
-  /** The two-phase maintenance path as a batch computation (q206):
-    * state from `first`, merge of `second`'s contribution, counts
-    * out. The incremental path's result must equal the from-scratch
-    * matrix whatever the cut — which is exactly what the q206
-    * oracle hash-verifies (the q175 incremental-aggregate
-    * discipline applied to ORDER-SENSITIVE state).
-    */
-  def transitionsMaintainBatch(first: DataFrame, second: DataFrame,
-      userCol: String, typeCol: String, tsCol: String,
-      idCol: String): DataFrame = {
-    val s0 = transitionState(first, userCol, typeCol, tsCol, idCol)
-      .filter(col("__kind") =!= "f")
-    val s1 = mergeTransitions(s0,
-      transitionState(second, userCol, typeCol, tsCol, idCol))
-    transitionsFromState(s1)
-  }
-
-  /** The counts relation of a maintained transition state, in the
-    * batch operator's output shape.
-    */
-  def transitionsFromState(state: DataFrame): DataFrame =
-    state.filter(col("__kind") === "c")
-      .select(col("from_type"), col("to_type"), col("n"))
-      .orderBy(col("from_type"), col("to_type"))
-
-  /** One batch's contribution: in-batch bigram counts ("c"),
-    * per-user first rows ("f", merge-time boundary closers),
-    * per-user last rows ("u", the next boundary state).
-    */
-  private def transitionState(batch: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, idCol: String): DataFrame = {
-    val wAsc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol))
-      .orderBy(col(tsCol).desc, col(idCol).desc)
-    val tT = batch.schema(typeCol).dataType
-    val nullT = lit(null).cast(tT)
-    val nullU = lit(null).cast(batch.schema(userCol).dataType)
-    val nullTs = lit(null).cast(batch.schema(tsCol).dataType)
-    val nullId = lit(null).cast(batch.schema(idCol).dataType)
-    val counts = batch
-      .withColumn("__from", lag(col(typeCol), 1).over(wAsc))
-      .filter(col("__from").isNotNull)
-      .select(col("__from").as("from_type"), col(typeCol).as("to_type"))
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(lit("c").as("__kind"), col("from_type"), col("to_type"),
-        col("n"), nullU.as("__user"), nullTs.as("__ts"),
-        nullId.as("__id"), nullT.as("__type"))
-    def edge(kind: String,
-        w: org.apache.spark.sql.expressions.WindowSpec) = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(lit(kind).as("__kind"), nullT.as("from_type"),
-        nullT.as("to_type"), lit(null).cast("long").as("n"),
-        col(userCol).as("__user"), col(tsCol).as("__ts"),
-        col(idCol).as("__id"), col(typeCol).as("__type"))
-    counts.unionByName(edge("f", wAsc)).unionByName(edge("u", wDesc))
-  }
-
-  private def mergeTransitions(prior: DataFrame,
-      fresh: DataFrame): DataFrame = {
-    val sch = fresh.schema
-    def nul(f: String) = lit(null).cast(sch(f).dataType).as(f)
-    val pu = prior.filter(col("__kind") === "u")
-    val ff = fresh.filter(col("__kind") === "f")
-    val fu = fresh.filter(col("__kind") === "u")
-    val bare = Seq("from_type", "to_type", "n").map(col)
-    val boundary = pu
-      .select(col("__user"), col("__type").as("__lt"))
-      .join(ff.select(col("__user"), col("__type").as("__ft")), "__user")
-      .groupBy(col("__lt").as("from_type"), col("__ft").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val counts = prior.filter(col("__kind") === "c").select(bare: _*)
-      .unionByName(fresh.filter(col("__kind") === "c").select(bare: _*))
-      .unionByName(boundary)
-      .groupBy(col("from_type"), col("to_type"))
-      .agg(sum(col("n")).as("n"))
-      .select(lit("c").as("__kind"), col("from_type"), col("to_type"),
-        col("n"), nul("__user"), nul("__ts"), nul("__id"),
-        nul("__type"))
-    val last = fu.unionByName(
-      pu.join(fu.select(col("__user")), Seq("__user"), "left_anti")
-        .select(fu.columns.toSeq.map(col): _*))
-    counts.unionByName(last)
-  }
-
-  /** Streaming path-mining maintenance —
-    * [[graft.ops.EventAnalytics.pathCounts]]'s twin, the
-    * transition twin generalized from bigrams to length-`len`
-    * windows. A window can span up to `len` batches, so the boundary
-    * state is each user's trailing `len−1` events (the transition
-    * state's last-row, pluralized). Correctness argument: every
-    * window either sits inside one batch (counted by the in-batch
-    * pass) or spans batches — and a spanning window has a UNIQUE
-    * batch where it ENDS. The merge counts exactly the windows that
-    * START in the prior tail and END in the batch head (an
-    * origin-tag test on the oldest lag and the current row over the
-    * contiguous tail++head segment), so no window is double-counted
-    * and none is missed, even across 3+ tiny batches. Same
-    * ingestion-order contract and versioned-base recovery as the
-    * transition twin; per-batch cost O(batch) + O(users·len).
-    */
-  def pathsMaintStream(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, idCol: String, len: Int,
-      stateDir: String, checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val fresh = pathState(batch, userCol, typeCol, tsCol, idCol,
-          len)
-        val merged =
-          latestVersion(batch.sparkSession, stateDir, id) match {
-            case Some(prior) => mergePaths(prior, fresh, len)
-            case None => fresh.filter(col("__kind") =!= "f")
-          }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/v$id")
+      def merge(prior: DataFrame, fresh: DataFrame): DataFrame = {
+        val pu = prior.filter(col("__kind") === "u")
+        val bare = ks.map(col)
+        val sumAggs = sums.map(s => sum(col(s)).as(s))
+        val merged = prior.filter(col("__kind") === "c").select(bare: _*)
+          .unionByName(fresh.filter(col("__kind") === "c").select(bare: _*))
+          .unionByName(boundary(pu, fresh.filter(col("__kind") === "f")))
+          .groupBy(keys.map(col): _*).agg(sumAggs.head, sumAggs.tail: _*)
+          .select((lit("c").as("__kind") +: bare) ++
+            fresh.columns.drop(1 + ks.size).map(nul(fresh, _)): _*)
+        // the kind is stamped above the window: a filter cannot pass a
+        // window, but `'u' = 'c'` folds, so reading counts prunes this
+        val tail = topDepth(Window.partitionBy(col("__user"))
+            .orderBy(col("__ts").desc, col("__id").desc),
+          pu.unionByName(fresh.filter(col("__kind") === "u")))
+          .select(lit("u").as("__kind") +: fresh.columns.tail.map(col): _*)
+        merged.unionByName(tail)
       }
-      .start()
-
-  /** The two-phase path maintenance as a batch computation (q207) —
-    * the q206 cut-invariance proof for the length-n generalization:
-    * at corpus scale the midpoint cut puts THOUSANDS of users'
-    * windows across the boundary, a far richer exercise of the
-    * tail/head closure than any fixture.
-    */
-  def pathsMaintainBatch(first: DataFrame, second: DataFrame,
-      userCol: String, typeCol: String, tsCol: String, idCol: String,
-      len: Int): DataFrame = {
-    val s0 = pathState(first, userCol, typeCol, tsCol, idCol, len)
-      .filter(col("__kind") =!= "f")
-    val s1 = mergePaths(s0,
-      pathState(second, userCol, typeCol, tsCol, idCol, len), len)
-    pathsFromState(s1)
-  }
-
-  /** The counts relation of a maintained path state, in the batch
-    * operator's output shape.
-    */
-  def pathsFromState(state: DataFrame): DataFrame =
-    state.filter(col("__kind") === "c")
-      .select(col("path"), col("n"))
-      .orderBy(col("n").desc, col("path"))
-
-  private def pathState(batch: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, idCol: String,
-      len: Int): DataFrame = {
-    val wAsc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol))
-      .orderBy(col(tsCol).desc, col(idCol).desc)
-    def nulOf(c: String) = lit(null).cast(batch.schema(c).dataType)
-    val counts = graft.ops.EventAnalytics
-      .pathCounts(batch, userCol, typeCol, tsCol, idCol, len)
-      .select(lit("c").as("__kind"), col("path"), col("n"),
-        nulOf(userCol).as("__user"), nulOf(tsCol).as("__ts"),
-        nulOf(idCol).as("__id"), nulOf(typeCol).as("__type"))
-    def edge(kind: String,
-        w: org.apache.spark.sql.expressions.WindowSpec) = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= len - 1)
-      .select(lit(kind).as("__kind"),
-        lit(null).cast("string").as("path"),
-        lit(null).cast("long").as("n"), col(userCol).as("__user"),
-        col(tsCol).as("__ts"), col(idCol).as("__id"),
-        col(typeCol).as("__type"))
-    counts.unionByName(edge("f", wAsc)).unionByName(edge("u", wDesc))
-  }
-
-  private def mergePaths(prior: DataFrame, fresh: DataFrame,
-      len: Int): DataFrame = {
-    val sch = fresh.schema
-    def nul(f: String) = lit(null).cast(sch(f).dataType).as(f)
-    val pu = prior.filter(col("__kind") === "u")
-    val ff = fresh.filter(col("__kind") === "f")
-    val fu = fresh.filter(col("__kind") === "u")
-    // tail ++ head is a CONTIGUOUS segment of each user's stream, so
-    // subset lags equal stream lags for any window inside it
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__user")).orderBy(col("__ts"), col("__id"))
-    val tagged = pu.withColumn("__o", lit("T"))
-      .unionByName(ff.withColumn("__o", lit("B")))
-    val steps = (len - 1 to 0 by -1).map { off =>
-      if (off == 0) col("__type") else lag(col("__type"), off).over(w)
+      Maintained(of, merge, first = _.filter(col("__kind") =!= "f"),
+        read = _.filter(col("__kind") === "c").select(ks.map(col): _*)
+          .orderBy(order: _*))
     }
-    val startO = lag(col("__o"), len - 1).over(w)
-    val boundary = tagged
-      .select(concat_ws(">", steps: _*).as("path"),
-        (steps.map(_.isNotNull).reduce(_ && _) &&
-          col("__o") === "B" && startO === "T").as("__take"))
-      .filter(col("__take"))
-      .groupBy(col("path")).agg(count(lit(1)).as("n"))
-    val bare = Seq("path", "n").map(col)
-    val counts = prior.filter(col("__kind") === "c").select(bare: _*)
-      .unionByName(fresh.filter(col("__kind") === "c").select(bare: _*))
-      .unionByName(boundary)
-      .groupBy(col("path")).agg(sum(col("n")).as("n"))
-      .select(lit("c").as("__kind"), col("path"), col("n"),
-        nul("__user"), nul("__ts"), nul("__id"), nul("__type"))
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__user"))
-      .orderBy(col("__ts").desc, col("__id").desc)
-    val last = pu.unionByName(fu)
-      .withColumn("__rn", row_number().over(wDesc))
-      .filter(col("__rn") <= len - 1).drop("__rn")
-    counts.unionByName(last)
+
+    /** The prior tail ++ fresh head, origin-tagged (`__o` T/B), and
+      * the per-user stream-order window over it. The two form a
+      * CONTIGUOUS segment of each user's stream, so in-segment lags
+      * equal stream lags for any head row.
+      */
+    private def segment(pu: DataFrame,
+        ff: DataFrame): (DataFrame, WindowSpec) =
+      (pu.withColumn("__o", lit("T"))
+        .unionByName(ff.withColumn("__o", lit("B"))),
+        Window.partitionBy(col("__user")).orderBy(col("__ts"), col("__id")))
   }
 
-  /** Streaming EWMA-gate maintenance —
-    * [[graft.ops.ControlChart]]'s twin: the spike/dip summary kept
-    * live per micro-batch. Order-sensitive state, the path-twin
-    * discipline at window length Depth+1: a row is gated in the
-    * UNIQUE batch that CONTAINS it, and its depth-8 history either
-    * sits in the same batch (the in-batch pass — any row with ≥8
-    * in-batch priors) or reaches into prior batches. The merge
-    * gates exactly the fresh head rows (first ≤8 per user — the
-    * only rows with <8 in-batch priors) over the contiguous
-    * tail++head segment, where the prior tail (trailing ≤8 per
-    * user) supplies every stream prior a head row can need. No row
-    * double-gated, none missed, users with genuinely short history
-    * stay ungated in both paths. Per-batch cost O(batch) +
-    * O(users·8); the corpus is never rescanned.
+  /** Keep `m` live over a stream: each micro-batch computes ONLY its
+    * own state (`m.of`), merges it into the newest prior version
+    * (`m.first` seeds an empty state dir) and writes it to
+    * `stateDir/v<id>`. Events are never rescanned; per-batch cost is
+    * the batch plus the state. Replay-safe: a re-delivered batch
+    * merges against the version BEFORE its id, so it rewrites
+    * `v<id>` with the same rows. A state dir belongs to one
+    * checkpoint lineage (see [[latestVersion]]). At production scale
+    * the version pointer lives in a catalog or transaction log; the
+    * directory convention stands in for it here.
     */
-  def ewmaMaintStream(events: DataFrame, userCol: String,
-      valCol: String, tsCol: String, idCol: String, typeCol: String,
-      k: Int, stateDir: String, checkpoint: String): StreamingQuery =
+  def maintainStream(m: Maintained, events: DataFrame, stateDir: String,
+      checkpoint: String): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val fresh = ewmaState(batch, userCol, valCol, tsCol, idCol,
-          typeCol, k)
-        val merged =
-          latestVersion(batch.sparkSession, stateDir, id) match {
-            case Some(prior) => mergeEwma(prior, fresh, typeCol, k)
-            case None => fresh.filter(col("__kind") =!= "f")
-          }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/v$id")
+        maintainVersioned(m, batch, stateDir, checkpoint, id)
       }
       .start()
 
-  /** The two-phase EWMA maintenance as a batch computation (q209):
-    * the q206 cut-invariance proof for per-row windowed STATE — the
-    * from-scratch q208 summary is the oracle, so the check is that
-    * the cut position doesn't matter.
+  /** [[maintainStream]]'s two steps as one batch computation: the
+    * state of `first`, merged with `second`'s, read out. Its result
+    * must equal the family's operator over `first ∪ second` wherever
+    * the cut falls — what the q206/q207/q209/q222 oracles
+    * hash-verify (the q175 incremental discipline applied to
+    * order-sensitive and interval state).
     */
-  def ewmaMaintainBatch(first: DataFrame, second: DataFrame,
-      userCol: String, valCol: String, tsCol: String, idCol: String,
-      typeCol: String, k: Int = 3): DataFrame = {
-    val s0 = ewmaState(first, userCol, valCol, tsCol, idCol,
-      typeCol, k).filter(col("__kind") =!= "f")
-    val s1 = mergeEwma(s0, ewmaState(second, userCol, valCol, tsCol,
-      idCol, typeCol, k), typeCol, k)
-    ewmaFromState(s1, typeCol)
-  }
+  def maintainBatch(m: Maintained, first: DataFrame,
+      second: DataFrame): DataFrame =
+    m.read(m.merge(m.first(m.of(first)), m.of(second)))
 
-  /** The summary relation of a maintained EWMA state, in the batch
-    * operator's output shape.
-    */
-  def ewmaFromState(state: DataFrame, typeCol: String): DataFrame =
-    state.filter(col("__kind") === "c")
-      .select(col(typeCol), col("n_gated"), col("n_spike"),
-        col("n_dip"), col("sum_absdev"))
-      .orderBy(col(typeCol))
+  private def distinctUnion(prior: DataFrame,
+      fresh: DataFrame): DataFrame =
+    prior.unionByName(fresh).distinct()
 
-  /** One batch's contribution: the in-batch gate summary ("c"),
-    * per-user leading ≤8 rows ("f", the merge-time boundary
-    * candidates), per-user trailing ≤8 rows ("u", the next
-    * boundary's history).
-    */
-  private def ewmaState(batch: DataFrame, userCol: String,
-      valCol: String, tsCol: String, idCol: String, typeCol: String,
-      k: Int): DataFrame = {
-    import graft.ops.ControlChart
-    val wAsc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(userCol))
-      .orderBy(col(tsCol).desc, col(idCol).desc)
-    def nulOf(c: String) = lit(null).cast(batch.schema(c).dataType)
-    val counts = ControlChart.ewmaSummary(batch, userCol, valCol,
-      tsCol, idCol, typeCol, k)
-      .select(lit("c").as("__kind"), col(typeCol), col("n_gated"),
-        col("n_spike"), col("n_dip"), col("sum_absdev"),
-        nulOf(userCol).as("__user"), nulOf(tsCol).as("__ts"),
-        nulOf(idCol).as("__id"), lit(null).cast("long").as("__xq"))
-    def edge(kind: String,
-        w: org.apache.spark.sql.expressions.WindowSpec) = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= ControlChart.Depth)
-      .select(lit(kind).as("__kind"), col(typeCol),
-        lit(null).cast("long").as("n_gated"),
-        lit(null).cast("long").as("n_spike"),
-        lit(null).cast("long").as("n_dip"),
-        lit(null).cast("long").as("sum_absdev"),
-        col(userCol).as("__user"), col(tsCol).as("__ts"),
-        col(idCol).as("__id"),
-        floor(col(valCol) * 100).cast("long").as("__xq"))
-    counts.unionByName(edge("f", wAsc)).unionByName(edge("u", wDesc))
-  }
-
-  private def mergeEwma(prior: DataFrame, fresh: DataFrame,
-      typeCol: String, k: Int): DataFrame = {
-    import graft.ops.ControlChart
-    val sch = fresh.schema
-    def nul(f: String) = lit(null).cast(sch(f).dataType).as(f)
-    val pu = prior.filter(col("__kind") === "u")
-    val ff = fresh.filter(col("__kind") === "f")
-    val fu = fresh.filter(col("__kind") === "u")
-    // tail ++ head is a CONTIGUOUS segment of each user's stream,
-    // so in-segment lags equal stream lags for any head row
+  private def mergeScd2(prior: DataFrame, fresh: DataFrame,
+      keyCol: String): DataFrame = {
+    val cols = Seq(keyCol, "version", "value_fx", "valid_from_us",
+      "valid_to_us", "is_current").map(col)
+    // each key's prior summit: current value and max version
+    val summit = prior.filter(col("is_current"))
+      .select(col(keyCol), col("value_fx").as("__curfx"))
+      .join(prior.groupBy(col(keyCol))
+        .agg(max(col("version")).as("__vmax")), keyCol)
+    // boundary rule: the batch's first change collapses iff it
+    // repeats the prior current value
+    val f = fresh.join(summit, Seq(keyCol), "left")
+    val surviving = f.filter(col("__curfx").isNull ||
+      col("version") > 1 || col("value_fx") =!= col("__curfx"))
+    // recompute the surviving-fresh chain per key: version renumber
+    // and valid_to re-chain (dropping v1 breaks both)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__user")).orderBy(col("__ts"), col("__id"))
-    val tagged = pu.withColumn("__o", lit("T"))
-      .unionByName(ff.withColumn("__o", lit("B")))
-    val (dev, status) = ControlChart.gateColumns(col("__xq"), w, k)
-    val seg = tagged
-      .select(col(typeCol), dev.as("dev"), status.as("status"),
-        col("__o"))
-      .filter(col("__o") === "B")
-    val boundary = ControlChart.summarize(seg, typeCol)
-    val bare = Seq(typeCol, "n_gated", "n_spike", "n_dip",
-      "sum_absdev").map(col)
-    val counts = prior.filter(col("__kind") === "c").select(bare: _*)
-      .unionByName(fresh.filter(col("__kind") === "c")
-        .select(bare: _*))
-      .unionByName(boundary)
-      .groupBy(col(typeCol))
-      .agg(sum(col("n_gated")).as("n_gated"),
-        sum(col("n_spike")).as("n_spike"),
-        sum(col("n_dip")).as("n_dip"),
-        sum(col("sum_absdev")).as("sum_absdev"))
-      .select(lit("c").as("__kind"), col(typeCol), col("n_gated"),
-        col("n_spike"), col("n_dip"), col("sum_absdev"),
-        nul("__user"), nul("__ts"), nul("__id"), nul("__xq"))
-    val wDesc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__user"))
-      .orderBy(col("__ts").desc, col("__id").desc)
-    val last = pu.unionByName(fu)
-      .withColumn("__rn", row_number().over(wDesc))
-      .filter(col("__rn") <= ControlChart.Depth).drop("__rn")
-    counts.unionByName(last)
+      .partitionBy(col(keyCol)).orderBy(col("valid_from_us"))
+    val chained = surviving
+      .withColumn("version",
+        (row_number().over(w) + coalesce(col("__vmax"), lit(0)))
+          .cast("int"))
+      .withColumn("valid_to_us",
+        lead(col("valid_from_us"), 1).over(w))
+      .withColumn("is_current", col("valid_to_us").isNull)
+      .select(cols: _*)
+    // keys whose fresh rows ALL collapsed (single no-op change):
+    // prior current stays open; otherwise it closes at the first
+    // surviving fresh change
+    val firstSurv = chained.groupBy(col(keyCol))
+      .agg(min(col("valid_from_us")).as("__close"))
+    val priorAdj = prior.join(firstSurv, Seq(keyCol), "left")
+      .withColumn("valid_to_us",
+        when(col("is_current") && col("__close").isNotNull,
+          col("__close")).otherwise(col("valid_to_us")))
+      .withColumn("is_current",
+        col("is_current") && col("__close").isNull)
+      .select(cols: _*)
+    priorAdj.unionByName(chained)
   }
 
-  /** Streaming corpus-composition maintenance — the
-    * [[graft.ops.Concentration]] gate kept live over an ingest
-    * stream: per-group counts are a mergeable monoid, so each
-    * micro-batch aggregates only its own rows and merges into the
-    * versioned state; `Concentration.ofCounts` then reads the gate
-    * (entropy/Gini/top-share) from GROUP rows alone at any time.
-    * Per-batch cost O(batch) + O(groups); the corpus is never
-    * rescanned. StreamsSpec pins maintained == from-scratch.
-    */
-  def concentrationMaintStream(events: DataFrame, groupCol: String,
-      stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          batch.groupBy(col(groupCol)).agg(count(lit(1)).as("__c")))(
-          (prior, fresh) => prior.unionByName(fresh)
-            .groupBy(col(groupCol)).agg(sum(col("__c")).as("__c")))
-      }
-      .start()
 
   /** The two-phase attribution maintenance as a batch computation
     * (q229) — the cut-invariance discipline for TIME-HORIZON state:
@@ -1045,127 +913,22 @@ object Streams {
       .orderBy(col("touch_type"))
   }
 
-  /** Streaming SCD2 history maintenance —
-    * [[graft.ops.EventAnalytics.scd2Intervals]] kept live: each
-    * micro-batch computes its OWN interval relation (in-batch
-    * collapse included) and merges against the prior state with one
-    * boundary rule per key — if the batch's first change equals the
-    * prior current value, that change is a no-op (drop it, the
-    * prior current row extends through it); otherwise the prior
-    * current row closes at the batch's first change. Versions shift
-    * by the prior per-key maximum. The merge touches each key's
-    * CURRENT row plus the batch's own rows — O(batch + keys), the
-    * history body is carried, never recomputed.
+
+  /** Write `m`'s state of one micro-batch as `stateDir/v<id>`: the
+    * batch's state merged into the newest prior version, or seeded
+    * by `m.first` on an empty state dir. Re-processing a batch after
+    * a restart overwrites the same version with the same rows, so
+    * maintenance stays idempotent under the checkpoint's replay
+    * contract.
     */
-  def scd2MaintStream(events: DataFrame, keyCol: String,
-      valCol: String, tsCol: String, idCol: String, stateDir: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val fresh = graft.ops.EventAnalytics.scd2Intervals(batch,
-          keyCol, valCol, tsCol, idCol)
-        val merged =
-          latestVersion(batch.sparkSession, stateDir, id) match {
-            case Some(prior) => mergeScd2(prior, fresh, keyCol)
-            case None => fresh
-          }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/v$id")
+  private def maintainVersioned(m: Maintained, batch: DataFrame,
+      stateDir: String, checkpoint: String, id: Long): Unit = {
+    val fresh = m.of(batch)
+    val merged =
+      latestVersion(batch.sparkSession, stateDir, checkpoint, id) match {
+        case Some(prior) => m.merge(prior, fresh)
+        case None => m.first(fresh)
       }
-      .start()
-
-  /** The two-phase SCD2 maintenance as a batch computation (q222):
-    * intervals from `first`, merged with `second`'s — the q206
-    * cut-invariance discipline for INTERVAL state, proved by the
-    * from-scratch q219 oracle.
-    */
-  def scd2MaintainBatch(first: DataFrame, second: DataFrame,
-      keyCol: String, valCol: String, tsCol: String,
-      idCol: String): DataFrame = {
-    val s0 = graft.ops.EventAnalytics.scd2Intervals(first, keyCol,
-      valCol, tsCol, idCol)
-    val s1 = graft.ops.EventAnalytics.scd2Intervals(second, keyCol,
-      valCol, tsCol, idCol)
-    mergeScd2(s0, s1, keyCol)
-  }
-
-  private def mergeScd2(prior: DataFrame, fresh: DataFrame,
-      keyCol: String): DataFrame = {
-    val cols = Seq(keyCol, "version", "value_fx", "valid_from_us",
-      "valid_to_us", "is_current").map(col)
-    // each key's prior summit: current value and max version
-    val summit = prior.filter(col("is_current"))
-      .select(col(keyCol), col("value_fx").as("__curfx"))
-      .join(prior.groupBy(col(keyCol))
-        .agg(max(col("version")).as("__vmax")), keyCol)
-    // boundary rule: the batch's first change collapses iff it
-    // repeats the prior current value
-    val f = fresh.join(summit, Seq(keyCol), "left")
-    val surviving = f.filter(col("__curfx").isNull ||
-      col("version") > 1 || col("value_fx") =!= col("__curfx"))
-    // recompute the surviving-fresh chain per key: version renumber
-    // and valid_to re-chain (dropping v1 breaks both)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(keyCol)).orderBy(col("valid_from_us"))
-    val chained = surviving
-      .withColumn("version",
-        (row_number().over(w) + coalesce(col("__vmax"), lit(0)))
-          .cast("int"))
-      .withColumn("valid_to_us",
-        lead(col("valid_from_us"), 1).over(w))
-      .withColumn("is_current", col("valid_to_us").isNull)
-      .select(cols: _*)
-    // keys whose fresh rows ALL collapsed (single no-op change):
-    // prior current stays open; otherwise it closes at the first
-    // surviving fresh change
-    val firstSurv = chained.groupBy(col(keyCol))
-      .agg(min(col("valid_from_us")).as("__close"))
-    val priorAdj = prior.join(firstSurv, Seq(keyCol), "left")
-      .withColumn("valid_to_us",
-        when(col("is_current") && col("__close").isNotNull,
-          col("__close")).otherwise(col("valid_to_us")))
-      .withColumn("is_current",
-        col("is_current") && col("__close").isNull)
-      .select(cols: _*)
-    priorAdj.unionByName(chained)
-  }
-
-  /** Streaming distinct-cardinality maintenance — the
-    * [[graft.ops.DistinctSketch]] KMV sketch kept live over an
-    * ingest stream: k-min hash sets are a mergeable monoid (union
-    * then re-take the k smallest), so each micro-batch sketches
-    * only its own rows and merges ≤ 2k longs into the versioned
-    * state; `DistinctSketch`-style estimates read off the state at
-    * any time. The distinct-count twin of the concentration
-    * maintainer; StreamsSpec pins maintained == from-scratch.
-    */
-  def kmvMaintStream(events: DataFrame, keyCol: String, k: Int,
-      stateDir: String, checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.DistinctSketch.sketchOf(batch, col(keyCol), k))(
-          (prior, fresh) => prior.unionByName(fresh).distinct()
-            .orderBy(col("__h")).limit(k))
-      }
-      .start()
-
-  /** The shared versioned-state-dir mechanics of every foreachBatch
-    * maintenance stream (rollup, funnel, retention): merge the
-    * batch's state with the latest prior version and write
-    * batchId-keyed — re-processing a batch after a restart
-    * overwrites the same version, so maintenance stays idempotent
-    * under the checkpoint's replay contract.
-    */
-  private def maintainVersioned(stateDir: String, id: Long,
-      newState: DataFrame)(
-      mergeFn: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val merged = latestVersion(newState.sparkSession, stateDir, id) match {
-      case Some(prior) => mergeFn(prior, newState)
-      case None => newState
-    }
     merged.coalesce(1).write.mode("overwrite")
       .parquet(s"$stateDir/v$id")
   }
@@ -1173,9 +936,28 @@ object Streams {
   /** The newest state version strictly before `id` (None on a fresh
     * state dir) — shared by the maintainers and by gates that must
     * screen a batch against PRIOR state before merging it in.
+    *
+    * It first binds `stateDir` to one checkpoint lineage. Micro-batch
+    * ids restart at 0 under a NEW checkpoint, so a second lineage
+    * would find no version before its batch 0 and overwrite `v0`
+    * with its own batch alone, stranding the first lineage's later
+    * versions. The first batch therefore records its checkpoint's
+    * stream nonce ([[graft.dedup.Registry.streamNonce]]) as
+    * `stateDir/_graft_stream_id`, and a batch of any other
+    * checkpoint fails here, before it reads or writes a version. A
+    * restart or replay of the same checkpoint passes. A state dir
+    * written before the nonce file existed is claimed by the first
+    * stream that touches it.
     */
   private def latestVersion(spark: SparkSession, stateDir: String,
-      id: Long): Option[DataFrame] = {
+      checkpoint: String, id: Long): Option[DataFrame] = {
+    val nonce = graft.dedup.Registry.streamNonce(spark, checkpoint)
+    val owner = new org.apache.hadoop.fs.Path(stateDir, "_graft_stream_id")
+    val fs = owner.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (graft.dedup.Registry.claimFile(fs, owner, nonce) != nonce)
+      throw new IllegalStateException(s"state dir $stateDir belongs to " +
+        s"another stream lineage; checkpoint $checkpoint would restart " +
+        "at batch 0 and overwrite its versions")
     val prior = Option(new java.io.File(stateDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("v"))
@@ -1205,63 +987,19 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val bl = graft.ops.Bloom
-        val words = latestVersion(batch.sparkSession, stateDir, id) match {
+        val words = latestVersion(batch.sparkSession, stateDir,
+          checkpoint, id) match {
           case Some(prior) => bl.fitWords(prior, mBits)
           case None => new Array[Long]((mBits + 63) / 64)
         }
         handler(batch.withColumn("probably_seen",
           bl.containsCol(words, mBits, kHash, col(keyCol))), id)
-        maintainVersioned(stateDir, id,
-          bl.positions(batch, keyCol, mBits, kHash))(
-          (prior, fresh) => prior.unionByName(fresh).distinct())
+        maintainVersioned(
+          Maintained(bl.positions(_, keyCol, mBits, kHash), distinctUnion),
+          batch, stateDir, checkpoint, id)
       }
       .start()
 
-  /** Streaming funnel maintenance — the event-analytics twin of
-    * [[rollupMaintStream]]: each micro-batch compacts to the
-    * funnel-relevant state ([[graft.ops.EventAnalytics.funnelState]]
-    * — distinct step-typed (user, type, ts) rows) and merges by
-    * union + distinct with the prior version; the event stream is
-    * never rescanned, and state is bounded by step-typed user
-    * activity, not stream length. Any funnel form — ordered or
-    * windowed — runs over the maintained state at read time;
-    * StreamsSpec pins maintained == from-scratch for both.
-    */
-  def funnelMaintStream(events: DataFrame, userCol: String,
-      typeCol: String, tsCol: String, steps: Seq[String],
-      stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.EventAnalytics.funnelState(
-            batch, userCol, typeCol, tsCol, steps))(
-          (prior, fresh) => prior.unionByName(fresh).distinct())
-      }
-      .start()
-
-  /** Streaming retention maintenance: the (user, week) pair state
-    * ([[graft.ops.EventAnalytics.userWeeks]]) maintained per
-    * micro-batch; the triangle
-    * ([[graft.ops.EventAnalytics.retentionTriangle]]) reads off the
-    * maintained state — users × active weeks rows, never events.
-    * A user's cohort can legitimately move when an EARLIER event
-    * arrives late; the min inside the finish step handles that
-    * without any special casing, which is exactly why the state is
-    * the pair set and not precomputed cohorts.
-    */
-  def retentionMaintStream(events: DataFrame, userCol: String,
-      tsCol: String, stateDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainVersioned(stateDir, id,
-          graft.ops.EventAnalytics.userWeeks(batch, userCol, tsCol))(
-          (prior, fresh) => prior.unionByName(fresh).distinct())
-      }
-      .start()
 
   /** Streaming n-gram-overlap decontamination — the stream twin of
     * [[graft.dedup.Dedup.ngramOverlapAcross]] (q150; the GPT-3

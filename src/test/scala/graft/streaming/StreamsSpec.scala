@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
+import graft.streaming.Streams.Maintained
 
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -799,8 +800,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(String, String)]
     val base = Files.createTempDirectory("graft-hll").toString
     val stateDir = s"$base/state"
-    val q = Streams.hllMaintStream(
-      input.toDF().toDF("g", "k"), "k", Seq("g"), stateDir, s"$base/chk")
+    val q = Streams.maintainStream(Maintained.hll("k", Seq("g")),
+      input.toDF().toDF("g", "k"), stateDir, s"$base/chk")
     try {
       val b1 = (1 to 400).map(i => ("a", s"u${i % 150}")) ++
         (1 to 100).map(i => ("b", s"v$i"))
@@ -896,8 +897,8 @@ class StreamsSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-cms").toString
     val stateDir = s"$base/state"
     val (d, w) = (3, 64)
-    val q = Streams.cmsMaintStream(
-      input.toDF().toDF("k"), "k", d, w, stateDir, s"$base/chk")
+    val q = Streams.maintainStream(Maintained.cms("k", d, w),
+      input.toDF().toDF("k"), stateDir, s"$base/chk")
     try {
       val batch1 = (0 until 300).map(i => s"k${i % 40}")
       val batch2 = (0 until 200).map(i => s"k${i % 55}")
@@ -925,9 +926,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long, Long)]
     val base = Files.createTempDirectory("graft-trans").toString
     val stateDir = s"$base/state"
-    val q = Streams.transitionsMaintStream(
-      input.toDF().toDF("u", "t", "ts", "id"), "u", "t", "ts", "id",
-      stateDir, s"$base/chk")
+    val m = Maintained.transitions("u", "t", "ts", "id")
+    val q = Streams.maintainStream(m,
+      input.toDF().toDF("u", "t", "ts", "id"), stateDir, s"$base/chk")
     try {
       // u1 straddles b1/b2, u2 straddles b2/b3, u3 only in b1 —
       // every boundary case: closed transition, carried last row
@@ -938,7 +939,7 @@ class StreamsSpec extends SparkSpec {
       input.addData(b2: _*); q.processAllAvailable()
       input.addData(b3: _*); q.processAllAvailable()
       val state = spark.read.parquet(s"$stateDir/v2")
-      val maintained = Streams.transitionsFromState(state)
+      val maintained = m.read(state)
         .as[(String, String, Long)].collect().toList
       val scratch = graft.ops.EventAnalytics.transitionCounts(
           (b1 ++ b2 ++ b3).toDF("u", "t", "ts", "id"),
@@ -960,10 +961,10 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, Double, Long, Long)]
     val base = Files.createTempDirectory("graft-scd2").toString
     val stateDir = s"$base/state"
-    val q = Streams.scd2MaintStream(
+    val q = Streams.maintainStream(Maintained.scd2("u", "v", "ts", "id"),
       input.toDF().toDF("u", "v", "ts0", "id")
         .withColumn("ts", timestamp_micros($"ts0")),
-      "u", "v", "ts", "id", stateDir, s"$base/chk")
+      stateDir, s"$base/chk")
     try {
       // u1: change, boundary NO-OP (1.0 again), change, change —
       // the cross-boundary collapse and the close both exercise;
@@ -1006,8 +1007,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[String]
     val base = Files.createTempDirectory("graft-kmv").toString
     val stateDir = s"$base/state"
-    val q = Streams.kmvMaintStream(
-      input.toDF().toDF("k"), "k", k = 32, stateDir, s"$base/chk")
+    val q = Streams.maintainStream(Maintained.kmv("k", k = 32),
+      input.toDF().toDF("k"), stateDir, s"$base/chk")
     try {
       val b1 = (0 until 300).map(i => s"u${i % 170}")
       val b2 = (0 until 300).map(i => s"u${i % 110 + 120}")
@@ -1028,9 +1029,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, Double, Long, Long, String)]
     val base = Files.createTempDirectory("graft-ewma").toString
     val stateDir = s"$base/state"
-    val q = Streams.ewmaMaintStream(
-      input.toDF().toDF("u", "v", "ts", "id", "t"),
-      "u", "v", "ts", "id", "t", k = 3, stateDir, s"$base/chk")
+    val m = Maintained.ewma("u", "v", "ts", "id", "t", k = 3)
+    val q = Streams.maintainStream(m,
+      input.toDF().toDF("u", "v", "ts", "id", "t"), stateDir, s"$base/chk")
     try {
       // u1: 13 flat observations then a spike, split 5/5/3 so rows
       // 9-10 gate across one boundary and 11-13 across two; u2 has
@@ -1045,7 +1046,7 @@ class StreamsSpec extends SparkSpec {
       input.addData(b2: _*); q.processAllAvailable()
       input.addData(b3: _*); q.processAllAvailable()
       val state = spark.read.parquet(s"$stateDir/v2")
-      val maintained = Streams.ewmaFromState(state, "t")
+      val maintained = m.read(state)
         .as[(String, Long, Long, Long, Long)].collect().toList
       val scratch = graft.ops.ControlChart.ewmaSummary(
           (b1 ++ b2 ++ b3).toDF("u", "v", "ts", "id", "t"),
@@ -1071,9 +1072,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long, Long)]
     val base = Files.createTempDirectory("graft-paths").toString
     val stateDir = s"$base/state"
-    val q = Streams.pathsMaintStream(
-      input.toDF().toDF("u", "t", "ts", "id"), "u", "t", "ts", "id",
-      len = 3, stateDir, s"$base/chk")
+    val m = Maintained.paths("u", "t", "ts", "id", len = 3)
+    val q = Streams.maintainStream(m,
+      input.toDF().toDF("u", "t", "ts", "id"), stateDir, s"$base/chk")
     try {
       // u1's stream A B | C D | E: NO window fits a single batch —
       // every one spans 2 or 3 of them; u2 mixes in-batch (X Y Z X)
@@ -1087,7 +1088,7 @@ class StreamsSpec extends SparkSpec {
       input.addData(b2: _*); q.processAllAvailable()
       input.addData(b3: _*); q.processAllAvailable()
       val state = spark.read.parquet(s"$stateDir/v2")
-      val maintained = Streams.pathsFromState(state)
+      val maintained = m.read(state)
         .as[(String, Long)].collect().toList
       val scratch = graft.ops.EventAnalytics.pathCounts(
           (b1 ++ b2 ++ b3).toDF("u", "t", "ts", "id"),
@@ -1109,8 +1110,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[String]
     val base = Files.createTempDirectory("graft-conc").toString
     val stateDir = s"$base/state"
-    val q = Streams.concentrationMaintStream(
-      input.toDF().toDF("g"), "g", stateDir, s"$base/chk")
+    val q = Streams.maintainStream(Maintained.groupCounts("g"),
+      input.toDF().toDF("g"), stateDir, s"$base/chk")
     try {
       val batch1 = (0 until 120).map(i => s"s${i % 4}")
       val batch2 = (0 until 90).map(i => s"s${i % 7}")
@@ -1162,8 +1163,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(String, Double)]
     val base = Files.createTempDirectory("graft-rollup").toString
     val stateDir = s"$base/state"
-    val q = Streams.rollupMaintStream(
-      input.toDF().toDF("g", "v"), "g", "v", stateDir, s"$base/chk")
+    val q = Streams.maintainStream(Maintained.rollup("g", "v"),
+      input.toDF().toDF("g", "v"), stateDir, s"$base/chk")
     try {
       val batch1 = (0 until 300).map(i => (s"g${i % 3}", i * 0.37))
       val batch2 = (300 until 500).map(i => (s"g${i % 4}", i * 0.37))
@@ -1201,9 +1202,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Timestamp)]
     val base = Files.createTempDirectory("graft-funnel").toString
     val steps = Seq("view", "click", "purchase")
-    val q = Streams.funnelMaintStream(
+    val q = Streams.maintainStream(
+      Maintained.funnel("user_id", "event_type", "ts", steps),
       input.toDF().toDF("user_id", "event_type", "ts"),
-      "user_id", "event_type", "ts", steps,
       s"$base/state", s"$base/chk")
     try {
       // u1's chain is SPLIT ACROSS BATCHES (view in batch 0, the
@@ -1235,9 +1236,8 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp)]
     val base = Files.createTempDirectory("graft-retention").toString
-    val q = Streams.retentionMaintStream(
-      input.toDF().toDF("user_id", "ts"),
-      "user_id", "ts", s"$base/state", s"$base/chk")
+    val q = Streams.maintainStream(Maintained.userWeeks("user_id", "ts"),
+      input.toDF().toDF("user_id", "ts"), s"$base/state", s"$base/chk")
     try {
       val wk = 7 * 86400
       // batch 0: u1 active weeks 1 and 2; u2 week 1
@@ -1293,6 +1293,157 @@ class StreamsSpec extends SparkSpec {
       // at this fill (600 bits of 16384) new keys are mostly new
       assert((201L to 250L).count(b1(_)) < 5)
     } finally q.stop()
+  }
+
+  // ---- maintainStream / maintainBatch over every family ----
+
+  private val famTypes = Seq("view", "click", "purchase", "noise", "view")
+
+  /** Batch `b` of the family fixture: 3 users × 4 events, ts and id
+    * rising across batches (the ordering contract); user 1's value
+    * repeats across both cuts (SCD2 no-ops), user 2 spikes in batch 2.
+    */
+  private def famBatch(b: Int) = (0 until 12).map { i =>
+    (i % 3 + 1L, famTypes((i + b) % 5),
+      new Timestamp((b * 100L + i) * 72000000L), b * 100L + i,
+      ((i * 7 + b * 3) % 5).toDouble + (if (i == 10 && b == 2) 40.0 else 0.0),
+      s"k${(i * 5 + b) % 9}", s"g${i % 4}")
+  }.toDF("u", "t", "ts", "id", "v", "k", "g")
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toString).sorted
+
+  /** Every file under `dir` with its bytes, for byte-identity checks. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val ps = Files.walk(root)
+    try ps.iterator().asScala.filter(Files.isRegularFile(_))
+      .map((p: Path) => root.relativize(p).toString ->
+        Files.readAllBytes(p).toSeq).toMap
+    finally ps.close()
+  }
+
+  import graft.ops.{CountMin, DistinctSketch, EventAnalytics, Hll, Incremental}
+
+  // (family, maintained value, from-scratch operator in `read`'s
+  // shape, the on-disk state schema — pinned so the format cannot drift)
+  private val families: Seq[(String, Maintained,
+      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      String)] = Seq(
+    ("cms", Maintained.cms("k", 3, 64), CountMin.sketch(_, "k", 3, 64),
+      "struct<__r:int,__b:bigint,__n:bigint>"),
+    ("hll", Maintained.hll("k", Seq("g")), Hll.registers(_, "k", Seq("g")),
+      "struct<g:string,bucket:int,r:int>"),
+    ("rollup", Maintained.rollup("g", "v"), Incremental.aggState(_, "g", "v"),
+      "struct<g:string,n:bigint,sum_fx:bigint,min_fx:bigint,max_fx:bigint>"),
+    ("groupCounts", Maintained.groupCounts("g"),
+      _.groupBy($"g").agg(count(lit(1)).as("__c")),
+      "struct<g:string,__c:bigint>"),
+    ("kmv", Maintained.kmv("k", 8), DistinctSketch.sketchOf(_, $"k", 8),
+      "struct<__h:bigint>"),
+    ("funnel", Maintained.funnel("u", "t", "ts", Seq("view", "click", "purchase")),
+      EventAnalytics.funnelState(_, "u", "t", "ts", Seq("view", "click", "purchase")),
+      "struct<u:bigint,t:string,ts:timestamp>"),
+    ("userWeeks", Maintained.userWeeks("u", "ts"),
+      EventAnalytics.userWeeks(_, "u", "ts"),
+      "struct<__u:bigint,__wk:bigint>"),
+    ("scd2", Maintained.scd2("u", "v", "ts", "id"),
+      EventAnalytics.scd2Intervals(_, "u", "v", "ts", "id"),
+      "struct<u:bigint,version:int,value_fx:bigint,valid_from_us:bigint," +
+        "valid_to_us:bigint,is_current:boolean>"),
+    ("transitions", Maintained.transitions("u", "t", "ts", "id"),
+      EventAnalytics.transitionCounts(_, "u", "t", "ts", "id"),
+      "struct<__kind:string,from_type:string,to_type:string,n:bigint," +
+        "__user:bigint,__ts:timestamp,__id:bigint,__type:string>"),
+    ("paths", Maintained.paths("u", "t", "ts", "id", len = 3),
+      EventAnalytics.pathCounts(_, "u", "t", "ts", "id", len = 3),
+      "struct<__kind:string,path:string,n:bigint,__user:bigint," +
+        "__ts:timestamp,__id:bigint,__type:string>"),
+    ("ewma", Maintained.ewma("u", "v", "ts", "id", "t"),
+      graft.ops.ControlChart.ewmaSummary(_, "u", "v", "ts", "id", "t"),
+      "struct<__kind:string,t:string,n_gated:bigint,n_spike:bigint," +
+        "n_dip:bigint,sum_absdev:bigint,__user:bigint,__ts:timestamp," +
+        "__id:bigint,__xq:bigint>"))
+
+  families.foreach { case (family, m, scratch, schema) =>
+    test(s"maintained $family: 3 streamed batches == from-scratch, the " +
+        "batch twin == read(v1), a replayed batch rewrites only its " +
+        "version, state schema pinned") {
+      import java.nio.file.{Files, Paths}
+      val base = Files.createTempDirectory(s"graft-maint-$family").toString
+      val (stateDir, chk) = (s"$base/state", s"$base/chk")
+      val src = famBatch(0).schema
+      def runOnce(): Unit = {
+        val q = Streams.maintainStream(m,
+          spark.readStream.schema(src).parquet(s"$base/in"), stateDir, chk)
+        try q.processAllAvailable() finally q.stop()
+      }
+      // each batch lands while no query runs, then a restart from the
+      // checkpoint takes it as one micro-batch
+      (0 to 2).foreach { b =>
+        famBatch(b).write.mode("append").parquet(s"$base/in")
+        runOnce()
+      }
+      def v(id: Int) = spark.read.parquet(s"$stateDir/v$id")
+      // (a) maintained == the operator over the union
+      val all = famBatch(0).unionByName(famBatch(1)).unionByName(famBatch(2))
+      assert(rows(m.read(v(2))) == rows(scratch(all)))
+      // (b) the batch twin equals the stream's second version
+      assert(rows(Streams.maintainBatch(m, famBatch(0), famBatch(1))) ==
+        rows(m.read(v(1))))
+      // (d) the on-disk state format
+      (0 to 2).foreach(id => assert(v(id).schema.simpleString == schema))
+      // (c) drop batch 2's commit: the restart re-delivers batch 2
+      val before = (snapshot(s"$stateDir/v0"), snapshot(s"$stateDir/v1"))
+      val v2Rows = rows(v(2))
+      val v2Files = snapshot(s"$stateDir/v2").keySet
+      Seq("commits/2", "commits/.2.crc")
+        .foreach(f => Files.deleteIfExists(Paths.get(s"$chk/$f")))
+      runOnce()
+      assert(Files.exists(Paths.get(s"$chk/commits/2")), "batch 2 re-ran")
+      assert(snapshot(s"$stateDir/v2").keySet != v2Files,
+        "the replay rewrites v2")
+      assert(rows(v(2)) == v2Rows, "the replay writes the same rows")
+      assert((snapshot(s"$stateDir/v0"), snapshot(s"$stateDir/v1")) ==
+        before, "the replay leaves the earlier versions untouched")
+    }
+  }
+
+  test("maintainStream lineage: a fresh checkpoint on a maintained " +
+      "state dir fails before it writes, leaving the history intact") {
+    import java.nio.file.Files
+    implicit val sqlCtx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-lineage").toString
+    val stateDir = s"$base/state"
+    val m = Maintained.groupCounts("g")
+    val inA = MemoryStream[String]
+    val qA = Streams.maintainStream(m, inA.toDF().toDF("g"), stateDir,
+      s"$base/chkA")
+    try {
+      inA.addData("a", "b"); qA.processAllAvailable()
+      inA.addData("a", "c"); qA.processAllAvailable()
+    } finally qA.stop()
+    val history = snapshot(stateDir)
+    assert(history.keys.exists(_.startsWith("v1")))
+    // lineage B: a NEW checkpoint restarts micro-batch ids at 0 — its
+    // batch 0 must not overwrite lineage A's v0
+    val inB = MemoryStream[String]
+    val qB = Streams.maintainStream(m, inB.toDF().toDF("g"), stateDir,
+      s"$base/chkB")
+    val err = try {
+      inB.addData("z"); intercept[Exception](qB.processAllAvailable())
+    } finally qB.stop()
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("another stream lineage")), err)
+    assert(snapshot(stateDir) == history, "v0/v1 must stay byte-identical")
+    // the owning lineage still resumes
+    val qA2 = Streams.maintainStream(m, inA.toDF().toDF("g"), stateDir,
+      s"$base/chkA")
+    try { inA.addData("c"); qA2.processAllAvailable() } finally qA2.stop()
+    assert(spark.read.parquet(s"$stateDir/v2").as[(String, Long)]
+      .collect().toSet == Set(("a", 2L), ("b", 1L), ("c", 2L)))
   }
 
   test("stripBoilerplateStream scrubs arriving docs against a batch hot set") {
