@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
 import graft.text.TextFunctions
 
 /** Deduplication operators for large text corpora (SURVEY.md M11 +
@@ -78,35 +79,40 @@ object Dedup {
     minhashSigUdf(k)(shingles)
 
   private def minhashSigUdf(k: Int) = udf { (sh: Seq[String]) =>
+    // empty shingle set ⇒ k nulls, matching array_min([]) = null
     if (sh == null) null
-    else {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-      // null elements are skipped, matching the expression form:
-      // md5(concat(seed, ':', null)) is null and array_min ignores nulls.
-      val shBytes = sh.iterator
-        .map(x => if (x == null) null else x.getBytes("UTF-8")).toArray
-      val mins = Array.ofDim[Array[Byte]](k)
-      var s = 0
-      while (s < k) {
-        val prefix = (s.toString + ":").getBytes("UTF-8")
-        var j = 0
-        while (j < shBytes.length) {
-          if (shBytes(j) != null) {
-            digest.reset()
-            digest.update(prefix)
-            digest.update(shBytes(j))
-            val d = digest.digest()
-            if (mins(s) == null || unsignedLess(d, mins(s))) mins(s) = d
-          }
-          j += 1
+    else minhashHex(sh, k, java.security.MessageDigest.getInstance("MD5"))
+      .toSeq
+  }
+
+  /** The k per-seed minima of md5(s"$seed:$shingle") over `sh`, as
+    * lowercase hex (null where `sh` has no non-null shingle) — the
+    * shared core of both compiled kernels. Null shingles are skipped,
+    * matching the expression form: md5(concat(seed, ':', null)) is
+    * null and array_min ignores nulls.
+    */
+  private def minhashHex(sh: Seq[String], k: Int,
+      digest: java.security.MessageDigest): Array[String] = {
+    val shBytes = sh.iterator
+      .map(x => if (x == null) null else x.getBytes("UTF-8")).toArray
+    val mins = Array.ofDim[Array[Byte]](k)
+    var s = 0
+    while (s < k) {
+      val prefix = (s.toString + ":").getBytes("UTF-8")
+      var j = 0
+      while (j < shBytes.length) {
+        if (shBytes(j) != null) {
+          digest.reset()
+          digest.update(prefix)
+          digest.update(shBytes(j))
+          val d = digest.digest()
+          if (mins(s) == null || unsignedLess(d, mins(s))) mins(s) = d
         }
-        s += 1
+        j += 1
       }
-      // empty shingle set ⇒ k nulls, matching array_min([]) = null
-      mins.toSeq.map(m =>
-        if (m == null) null
-        else m.map(b => f"$b%02x").mkString)
+      s += 1
     }
+    mins.map(m => if (m == null) null else m.map(b => f"$b%02x").mkString)
   }
 
   private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
@@ -149,27 +155,7 @@ object Dedup {
     else {
       val rowsPerBand = k / bands
       val digest = java.security.MessageDigest.getInstance("MD5")
-      val shBytes = sh.iterator
-        .map(x => if (x == null) null else x.getBytes("UTF-8")).toArray
-      val mins = Array.ofDim[Array[Byte]](k)
-      var s = 0
-      while (s < k) {
-        val prefix = (s.toString + ":").getBytes("UTF-8")
-        var j = 0
-        while (j < shBytes.length) {
-          if (shBytes(j) != null) {
-            digest.reset()
-            digest.update(prefix)
-            digest.update(shBytes(j))
-            val d = digest.digest()
-            if (mins(s) == null || unsignedLess(d, mins(s))) mins(s) = d
-          }
-          j += 1
-        }
-        s += 1
-      }
-      val hex = mins.map(m =>
-        if (m == null) null else m.map(b => f"$b%02x").mkString)
+      val hex = minhashHex(sh, k, digest)
       // band b = md5("band$b:" + array_join(slice(sig), "|")),
       // byte-for-byte like bandKeys' expression — array_join SKIPS
       // null elements, so an empty shingle set (all-null signature)
@@ -194,21 +180,21 @@ object Dedup {
     // plants `size(bands) > 0 AND isnotnull(bands)` under the Generate,
     // and CollapseProject substitutes the whole shingle+minhash pipeline
     // into that filter — evaluated interpreted, per conjunct, per row
-    // (measured 3 s vs 0.2 s on 200 sf0.1 docs). Persisting the column
+    // (measured 3 s vs 0.2 s on 200 sf0.1 docs). Caching the column
     // first makes the inferred filter read a cached value. Also: both
-    // sides of the self-join read this.
-    val sigs = docs
+    // sides of the self-join read this, so it is filled once before
+    // the self-join races it.
+    val sigs = Pin.cache(docs
       .select(col(idCol),
-        bandKeysFast(shingles(col(textCol), w), k, bands).as("bands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count() // materialize once before the self-join races it
+        bandKeysFast(shingles(col(textCol), w), k, bands).as("bands")),
+      eager = true)
     val keyed = sigs.select(col(idCol), explode(col("bands")).as("band"))
     val a = keyed.select(col("band"), col(idCol).as("id_a"))
     val b = keyed.select(col("band"), col(idCol).as("id_b"))
-    a.join(b, "band")
+    Pin.untilUsed(a.join(b, "band")
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
+      .distinct(), sigs)
   }
 
   /** Exact Jaccard similarity on shingle sets for candidate pairs —
@@ -217,18 +203,18 @@ object Dedup {
     */
   def jaccardOnCandidates(docs: DataFrame, candidates: DataFrame,
       idCol: String, textCol: String, w: Int = 3): DataFrame = {
-    // persisted: joined twice (id_a and id_b sides)
-    val sh = docs.select(col(idCol), shingles(col(textCol), w).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached: joined twice (id_a and id_b sides)
+    val sh = Pin.cache(
+      docs.select(col(idCol), shingles(col(textCol), w).as("sh")))
     val a = sh.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    candidates.join(a, "id_a").join(b, "id_b")
+    Pin.untilUsed(candidates.join(a, "id_a").join(b, "id_b")
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard",
         round(col("inter") / col("uni").cast("double"), 4))
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
-        col("jaccard"))
+        col("jaccard")), sh)
   }
 
   /** SimHash over tokens, 60 bits derived from md5 nibbles (15 hex
@@ -319,10 +305,8 @@ object Dedup {
       maxHamming: Int): DataFrame = {
     require(tables >= 1 && width * tables <= totalBits,
       s"$tables ${width}-bit tables must fit $totalBits bits")
-    // persisted: every table's self-join reads (id, hash)
-    val sims = df.select(col(idCol), col(simCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sims.count()
+    // cached: every table's self-join reads (id, hash)
+    val sims = Pin.cache(df.select(col(idCol), col(simCol)), eager = true)
     val perTable = (0 until tables).map { t =>
       val bucket = shiftright(col(simCol), totalBits - width * (t + 1))
         .bitwiseAND(lit((1L << width) - 1))
@@ -339,7 +323,7 @@ object Dedup {
       .withColumn("hamming", hammingDist(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    graft.ops.CacheRelease.afterFirstUse(out, sims)
+    Pin.untilUsed(out, sims)
   }
 
   /** Exact-substring duplicate spans (the token-window form of
@@ -799,18 +783,17 @@ object Dedup {
       s"window must be >= 2 (window-1 sort neighbors per record); got $window")
     val keyed = docs.select(col(idCol), col(textCol))
       .withColumn("__sk", substring(col(textCol), 1, keyLen))
-    val idx = graft.ops.Relational
+    // filled now: referenced by both sides of the join
+    val idx = Pin.cache(graft.ops.Relational
       .zipWithIndex(keyed, "__ix", Seq(col("__sk"), col(idCol)))
       .withColumn("__sh", shingles(col(textCol), 3))
       .select(col("__ix"), col(idCol).as("__id"), col("__sh"),
-        size(col("__sh")).as("__l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    idx.count() // materialize: referenced by both sides of the join
+        size(col("__sh")).as("__l")), eager = true)
     val probes = idx.select(col("__ix"), col("__id").as("__ida"),
         col("__sh").as("__sa"), col("__l").as("__la"),
         explode(sequence(col("__ix") + 1,
           col("__ix") + (window - 1))).as("__ib"))
-    probes
+    Pin.untilUsed(probes
       .join(idx.select(col("__ix").as("__ib"), col("__id").as("__idb"),
         col("__sh").as("__sb"), col("__l").as("__lb")), "__ib")
       .withColumn("inter",
@@ -822,6 +805,6 @@ object Dedup {
         greatest(col("__ida"), col("__idb")).as("id_b"),
         col("inter"), col("uni"),
         expr("inter * 1000000 div uni").as("jacc_e6"))
-      .orderBy(col("id_a"), col("id_b"))
+      .orderBy(col("id_a"), col("id_b")), idx)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
 import graft.similarity.Ann
 import graft.text.TextFunctions
 
@@ -754,7 +755,8 @@ object Registry {
     * ([[Lane]]). History text is never read — signatures are the
     * whole state. The survivors' rows append bucket-aligned
     * (insertInto keeps the table's bucket spec), stamped `batchNo`;
-    * returns the survivors' [[Lane]] output columns.
+    * returns the survivors' [[Lane]] output columns — a view of a cut
+    * the caller releases with `graft.ops.Pin.release`.
     *
     * Replay safety (see the object doc): the probe anti-joins the
     * registry MINUS this batch's own prior rows (null-safe, so a
@@ -777,7 +779,7 @@ object Registry {
       // distinct on the matched ids: the left_anti tests key
       // existence, so duplicate matches (bounded by candidates per
       // probe) change nothing.
-      val reps = l.collapse(signed).localCheckpoint()
+      val reps = Pin.cut(l.collapse(signed))
       val others = spark.table(name)
         .filter(!(col("batch_no") <=> lit(batchNo)))
       val keys = l.probeKeys
@@ -791,14 +793,16 @@ object Registry {
             .filter(hit).select(col(l.idCol))
           reps.join(matched, Seq(l.idCol), "left_anti")
       }
-      // the survivor set must be pinned BEFORE the append, and plain
-      // persist() is NOT enough: the insert refreshes the table by
-      // path, which invalidates every cached plan referencing it —
+      // the survivor set must be pinned BEFORE the append, and a
+      // cache is NOT enough: the insert refreshes the table by path,
+      // which invalidates every cached plan referencing it —
       // including the survivors, which would lazily recompute against
-      // the just-updated registry and vanish. localCheckpoint severs
-      // the lineage (the plan becomes an RDD scan with no table
-      // reference), so the refresh cannot touch it.
-      val kept = fresh.select(reps.columns.map(col): _*).localCheckpoint()
+      // the just-updated registry and vanish. A cut severs the
+      // lineage (the plan becomes an RDD scan with no table
+      // reference), so the refresh cannot touch it. `reps` is dead
+      // once `kept` is cut; `kept` is the caller's to release.
+      val kept = Pin.cut(fresh.select(reps.columns.map(col): _*))
+      Pin.release(reps)
       validateLease(spark, lease)
       // a replay only appends what the crashed attempt missed; the
       // explicit re-select after the join restores the stored column
@@ -920,10 +924,10 @@ object Registry {
       // RDD-pinned source the repartition lands one task per bucket,
       // one file each.
       spark.sql(s"CREATE TABLE $tmpName LIKE $name LOCATION '$tmp'")
-      val pinned = spark.table(name).localCheckpoint()
-      pinned.repartition(info.buckets, col(laneOf(info.family).bucketCol))
+      val pinned = Pin.cut(spark.table(name))
+      try pinned.repartition(info.buckets, col(laneOf(info.family).bucketCol))
         .write.mode(SaveMode.Append).insertInto(tmpName)
-      pinned.unpersist()
+      finally Pin.release(pinned)
       spark.sql(s"DROP TABLE $tmpName") // catalog only — files stay
       if (!crashBeforeSwap) {
         validateLease(spark, lease)

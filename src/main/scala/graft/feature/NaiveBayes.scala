@@ -3,7 +3,8 @@ package graft.feature
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Pin
 
 /** Multinomial Naive Bayes text classifier — closed-form train
   * (group counts + Laplace smoothing) and score, no gradient loop.
@@ -49,17 +50,16 @@ object NaiveBayes {
     */
   def classify(train: DataFrame, test: DataFrame, idCol: String,
       toksCol: String, labelCol: String): DataFrame = {
-    // sparse (label, term) counts — persisted: V, per-label totals
+    // sparse (label, term) counts — cached: V, per-label totals
     // and the contribution deltas are all derived from it. The train
     // pass widens on a token-array hash (labels are few — hashing on
     // the label would collapse parallelism; the array hash is
     // deterministic): off an unsplittable single-row-group scan the
     // explode + partial aggregate ran on one core (r16).
-    val tl = graft.ops.Parallelism.widen(train, col(toksCol))
+    val tl = Pin.cache(graft.ops.Parallelism.widen(train, col(toksCol))
       .select(col(labelCol).as("__l"), explode(col(toksCol)).as("__t"))
-      .groupBy(col("__l"), col("__t")).agg(count(lit(1)).as("__c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    tl.count()
+      .groupBy(col("__l"), col("__t")).agg(count(lit(1)).as("__c")),
+      eager = true)
     val vv = tl.agg(countDistinct(col("__t")).cast("double").as("__v"))
     val ls = tl.groupBy(col("__l"))
       .agg(sum(col("__c")).cast("double").as("__tot"))
@@ -81,14 +81,13 @@ object NaiveBayes {
             (log(col("__c") + lit(1.0)) - log(col("__tot") + col("__v"))))
           .cast("long") - col("__miss")).as("__d"))
     // test term counts, restricted to the train vocabulary —
-    // persisted: the in-vocab token total m_d and the sparse score
+    // cached: the in-vocab token total m_d and the sparse score
     // join both read it. Bounded by test (doc,term) pairs.
-    val dt = graft.ops.Parallelism.widen(test, idCol)
+    val dt = Pin.cache(graft.ops.Parallelism.widen(test, idCol)
       .select(col(idCol), explode(col(toksCol)).as("__t"))
       .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__cnt"))
-      .join(tl.select(col("__t")).distinct(), Seq("__t"), "leftsemi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    dt.count()
+      .join(tl.select(col("__t")).distinct(), Seq("__t"), "leftsemi"),
+      eager = true)
     val md = dt.groupBy(col(idCol)).agg(sum(col("__cnt")).as("__m"))
     val sp = dt.join(delta, "__t")
       .groupBy(col(idCol), col("__l"))
@@ -103,7 +102,7 @@ object NaiveBayes {
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") === 1)
       .select(col(idCol), col("__l").as("pred"), col("__score").as("score_fx"))
-    graft.ops.CacheRelease.afterFirstUse(out, tl, dt)
+    Pin.untilUsed(out, tl, dt)
   }
 
   /** A fitted NB model compacted to a driver-side artifact: labels
@@ -167,11 +166,10 @@ object NaiveBayes {
       vocabCap: Int = 100000,
       warnGb: Double = graft.ops.ShardedBroadcast.DefaultWarnGb,
       onWarn: String => Unit = m => System.err.println(m)): CompactModel = {
-    val tl = train
+    val tl = Pin.cache(train
       .select(col(labelCol).as("__l"), explode(col(toksCol)).as("__t"))
-      .groupBy(col("__l"), col("__t")).agg(count(lit(1)).as("__c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    tl.count()
+      .groupBy(col("__l"), col("__t")).agg(count(lit(1)).as("__c")),
+      eager = true)
     try {
       val vv = tl.agg(countDistinct(col("__t")).cast("double").as("__v"))
       val ls = tl.groupBy(col("__l"))
@@ -185,7 +183,7 @@ object NaiveBayes {
           floor(lit(1e6) * log(col("__nl") / col("__n")))
             .cast("long").as("__prior"),
           floor(lit(1e6) * (log(lit(1.0)) - log(col("__tot") + col("__v"))))
-            .cast("long").as("__miss"))
+            .cast("long").as("__miss"), col("__v"))
         .orderBy(col("__l"))
         .collect()
       val labels = labRows.map(_.getString(0))
@@ -206,9 +204,13 @@ object NaiveBayes {
             " GB) — use classify()'s join path instead of a compact" +
             " broadcast model at this scale.")
       }
+      // the top-k keeps at most |vocab| rows: sized by vocabCap alone,
+      // its selector buffer is O(vocabCap) whatever the vocabulary
+      val vocab = labRows.headOption.fold(0L)(_.getDouble(3).toLong)
       val kept = tl.groupBy(col("__t"))
         .agg(sum(col("__c")).as("__ct"))
-        .orderBy(col("__ct").desc, col("__t")).limit(vocabCap)
+        .orderBy(col("__ct").desc, col("__t"))
+        .limit(math.min(vocabCap.toLong, vocab).toInt)
         .select(col("__t"))
       val deltaRows = tl.join(kept, "__t")
         .join(broadcast(ls), "__l")
@@ -225,6 +227,6 @@ object NaiveBayes {
         t -> d
       }
       CompactModel(labels, labRows.map(_.getLong(1)), miss, delta)
-    } finally tl.unpersist()
+    } finally Pin.release(tl)
   }
 }

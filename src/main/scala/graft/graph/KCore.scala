@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** k-core decomposition by iterative peeling (Seidman 1983) — the
   * community-density filter beside [[Triangles]]: repeatedly drop
   * every node of degree < k until none remains; what survives is
@@ -25,12 +27,12 @@ object KCore {
   /** The k-core's edges, plus each surviving node's in-core degree
     * as `coreNodes`. Throws if `maxRounds` is hit before the
     * fixpoint — an engine that silently stopped early would report
-    * a supergraph of the core.
+    * a supergraph of the core. Each round is a cut (loop scope); the
+    * returned core is the last one, which the caller releases.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, maxRounds: Int = 16): DataFrame = {
-    var cur = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint()
+    var cur = Pin.cut(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
     var prevEdges = -1L
     var curEdges = cur.count()
     var round = 0
@@ -42,11 +44,10 @@ object KCore {
         .unionByName(cur.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("n"))
-      cur = cur
+      cur = Pin.next(cur)(Pin.cut(cur
         .join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
+        .select(col("a"), col("b"))))
       prevEdges = curEdges
       curEdges = cur.count()
       round += 1
@@ -60,9 +61,9 @@ object KCore {
   def coreDegrees(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, maxRounds: Int = 16): DataFrame = {
     val core = kCore(edges, srcCol, dstCol, k, maxRounds)
-    core.select(col("a").as("node"))
+    Pin.untilUsed(core.select(col("a").as("node"))
       .unionByName(core.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("node"))
+      .orderBy(col("node")), core)
   }
 }

@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Pin
 
 /** Semi-supervised label propagation over a similarity graph —
   * spread trusted labels (a curated subset, a high-confidence
@@ -25,8 +26,10 @@ import org.apache.spark.storage.StorageLevel
   * is the co-partitioned join the components contraction also
   * uses), one (dst,label) vote aggregate with map-side partial, one
   * per-dst argmax via `WindowGroupLimit`-prunable row_number, one
-  * left join back. Each round persists+materializes — bounded
-  * lineage, no driver iteration beyond the fixed loop count.
+  * left join back. Each round is an eager cache that releases the
+  * round before it; the last is released after the result's first
+  * action — bounded lineage, no driver iteration beyond the fixed
+  * loop count.
   */
 object LabelProp {
 
@@ -34,15 +37,13 @@ object LabelProp {
       labelCol: String, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val sym = edges
+    val sym = Pin.cache(edges
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .unionByName(edges.select(col(dstCol).as("__src"),
-        col(srcCol).as("__dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    var cur = nodes.select(col(idCol).as("__id"), col(labelCol).as("__lbl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    cur.count()
+        col(srcCol).as("__dst"))), eager = true)
+    var cur = Pin.cache(
+      nodes.select(col(idCol).as("__id"), col(labelCol).as("__lbl")),
+      eager = true)
     try {
       (1 to rounds).foreach { _ =>
         val votes = sym
@@ -55,15 +56,12 @@ object LabelProp {
         val winner = votes.withColumn("__rk", row_number().over(w))
           .filter(col("__rk") === 1)
           .select(col("__dst").as("__id"), col("__lbl").as("__new"))
-        val next = cur.join(winner, Seq("__id"), "left")
+        cur = Pin.next(cur)(Pin.cache(cur.join(winner, Seq("__id"), "left")
           .select(col("__id"),
-            coalesce(col("__lbl"), col("__new")).as("__lbl"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        cur.unpersist()
-        cur = next
+            coalesce(col("__lbl"), col("__new")).as("__lbl")), eager = true))
       }
-      cur.select(col("__id").as(idCol), col("__lbl").as(labelCol))
-    } finally sym.unpersist()
+      Pin.untilUsed(
+        cur.select(col("__id").as(idCol), col("__lbl").as(labelCol)), cur)
+    } finally Pin.release(sym)
   }
 }

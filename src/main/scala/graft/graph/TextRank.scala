@@ -2,9 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.Relational
+import graft.ops.{Pin, Relational}
 import graft.text.TextFunctions
 
 /** TextRank keyword scoring (SURVEY.md M5; reference
@@ -45,7 +44,8 @@ object TextRank {
   /** PageRank over an edge list: fixed-iteration by default
     * (`tol = 0`), or the reference's iterate-until-δ contract when
     * `tol > 0` (`iterations` then caps the rounds). Returns
-    * (word, score) with scores rounded to `roundTo`.
+    * (word, score) with scores rounded to `roundTo`, as an eager
+    * [[graft.ops.Pin.cache]] the caller releases.
     *
     * Implemented as the classic co-partitioned RDD power loop rather
     * than a DataFrame join loop: adjacency lists are hash-partitioned
@@ -72,11 +72,10 @@ object TextRank {
       spark.sparkContext.defaultParallelism)
     // Adjacency lists: source degree is the array length, so the
     // degree "join" of the reference (and our first cut) is free.
-    val links = edges.select(col("a"), col("b")).as[(String, String)]
-      .rdd
+    val links = Pin.cache(edges.select(col("a"), col("b"))
+      .as[(String, String)].rdd
       .groupByKey(part)
-      .mapValues(_.toArray)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .mapValues(_.toArray))
     val n = links.count() // materializes the cache; |vocab|
     var ranks = links.mapValues(_ => 1.0 / n) // co-partitioned: narrow
     def step(r: org.apache.spark.rdd.RDD[(String, Double)]) = {
@@ -110,10 +109,10 @@ object TextRank {
       var it = 0
       var converged = false
       while (it < iterations && !converged) {
-        val next = step(ranks).persist(StorageLevel.MEMORY_AND_DISK)
+        val next = Pin.cache(step(ranks))
         val delta = ranks.join(next, part).values
           .map { case (a, b) => math.abs(a - b) }.max()
-        lastCached.foreach(_.unpersist(blocking = false))
+        lastCached.foreach(Pin.release(_))
         lastCached = Some(next)
         ranks = next
         converged = delta <= tol
@@ -128,12 +127,11 @@ object TextRank {
     // caches until the ContextCleaner got around to it. Rounding is
     // applied with the same Column `round` as before (HALF_UP), so
     // scores are bit-identical to the DataFrame loop's.
-    val out = ranks.toDF("word", "score")
-      .select(col("word"), round(col("score"), roundTo).as("score"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    links.unpersist(blocking = false)
-    lastCached.foreach(_.unpersist(blocking = false))
+    val out = Pin.cache(ranks.toDF("word", "score")
+      .select(col("word"), round(col("score"), roundTo).as("score")),
+      eager = true)
+    Pin.release(links)
+    lastCached.foreach(Pin.release(_))
     out
   }
 
@@ -149,15 +147,15 @@ object TextRank {
     * the DataFrame loop is oracle-replayable and AQE-planned.
     * `staticPageRank` scores are per-node mass summing to ~N, so
     * they are rescaled by 1/N to match the DataFrame loop's
-    * distribution semantics (identical ranking either way).
+    * distribution semantics (identical ranking either way). Like
+    * [[pagerank]], the result is an eager cache the caller releases.
     */
   def wordScoresGraphX(docs: DataFrame, tokensCol: String,
       iterations: Int = 10, roundTo: Int = 4): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     val spark = docs.sparkSession
     import spark.implicits._
-    val edgesDf = coocEdges(docs, tokensCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDf = Pin.cache(coocEdges(docs, tokensCol))
     // Distributed id assignment: word → long via zipWithIndex, joined
     // onto both edge endpoints. An earlier cut collectAsMap'd the
     // vocab to the driver and broadcast it — vocab-sized today, but a
@@ -166,9 +164,8 @@ object TextRank {
     // web-corpus vocab. zipWithIndex costs one extra pass (partition
     // offsets) + two vocab-sized shuffle joins; nothing touches the
     // driver.
-    val vocabIds = edgesDf.select(col("a").as("word")).distinct()
-      .rdd.map(_.getString(0)).zipWithIndex()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vocabIds = Pin.cache(edgesDf.select(col("a").as("word")).distinct()
+      .rdd.map(_.getString(0)).zipWithIndex())
     val n = vocabIds.count()
     val edgeRdd = edgesDf.rdd
       .map(r => (r.getString(0), r.getString(1)))
@@ -179,15 +176,13 @@ object TextRank {
     val graph = Graph.fromEdges[Double, Double](edgeRdd, 1.0)
     val ranks = graph.staticPageRank(iterations, resetProb = 0.15).vertices
     val idToWord = vocabIds.map { case (w, id) => (id, w) }
-    val out = ranks.join(idToWord)
+    val out = Pin.cache(ranks.join(idToWord)
       .map { case (_, (score, word)) =>
         (word, math.rint(score / n * math.pow(10, roundTo))
           / math.pow(10, roundTo))
-      }.toDF("word", "score")
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    vocabIds.unpersist(blocking = false)
-    edgesDf.unpersist(blocking = false)
+      }.toDF("word", "score"), eager = true)
+    Pin.release(vocabIds)
+    Pin.release(edgesDf)
     out
   }
 

@@ -57,19 +57,19 @@ object Concurrency {
     // row count truncated by the /2.
     val complete = intervals
       .filter(col(startCol).isNotNull && col(endCol).isNotNull)
-    val d = complete
+    // materialized NOW (eager): the carry/peak/count broadcast
+    // subqueries all launch before a lazy cache fills — raced, each
+    // would compute the full upstream build (the round-1
+    // persist-then-count rule)
+    val d = Pin.cache(complete
       .select(unix_micros(col(startCol)).as("t"), lit(1L).as("delta"))
       .unionByName(complete
         .select(unix_micros(col(endCol)).as("t"),
           lit(-1L).as("delta")))
       // floor division correct for negative epochs too (pre-1970)
       .withColumn("__b",
-        floor(col("t") / lit(bandWidthUs.toDouble)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize NOW: the carry/peak/count broadcast subqueries all
-    // launch before a lazy cache fills — raced, each would compute
-    // the full upstream build (the round-1 persist-then-count rule)
-    d.count()
+        floor(col("t") / lit(bandWidthUs.toDouble)).cast("long")),
+      eager = true)
     val carryW = Window.orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val carries = d.groupBy(col("__b"))
@@ -94,6 +94,6 @@ object Concurrency {
         max(struct(col("running"), (-col("t")).as("__nt"))).as("__pk"))
       .select(col("n_intervals"), col("__pk.running").as("peak"),
         (-col("__pk.__nt")).as("peak_at_us"))
-    graft.ops.CacheRelease.afterFirstUse(out, d)
+    Pin.untilUsed(out, d)
   }
 }

@@ -71,18 +71,17 @@ object DistinctSketch {
     * `|K∩A∩B| · est_u div k_u` — integer end-to-end, so the whole
     * report (not just the inputs) hash-replays in SQL.
     *
-    * Each sketch is persisted before reuse (referenced by the union
+    * Each sketch is cached before reuse (referenced by the union
     * AND the membership join — the re-inline lesson; the cache is
-    * ≤ k rows, the corpus scans run exactly once each).
+    * ≤ k rows, the corpus scans run exactly once each) and released
+    * after the report's first action.
     */
   def overlapReport(a: DataFrame, keyA: Column,
       b: DataFrame, keyB: Column, k: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sa = sketchOf(a, keyA, k).persist(lvl); sa.count()
-    val sb = sketchOf(b, keyB, k).persist(lvl); sb.count()
-    val su = sa.unionByName(sb).distinct()
-      .orderBy(col("__h")).limit(k).persist(lvl)
-    su.count()
+    val sa = Pin.cache(sketchOf(a, keyA, k), eager = true)
+    val sb = Pin.cache(sketchOf(b, keyB, k), eager = true)
+    val su = Pin.cache(sa.unionByName(sb).distinct()
+      .orderBy(col("__h")).limit(k), eager = true)
     def est1(m: DataFrame, p: String) =
       m.agg(count(lit(1)).as(s"k_$p"), max(col("__h")).as(s"__hk_$p"))
         .select(col(s"k_$p"),
@@ -92,11 +91,11 @@ object DistinctSketch {
             .as(s"est_$p"))
     val inter = su.join(sa, "__h").join(sb, "__h")
       .agg(count(lit(1)).as("inter_in_k"))
-    est1(sa, "a").crossJoin(est1(sb, "b")).crossJoin(est1(su, "u"))
-      .crossJoin(inter)
+    Pin.untilUsed(est1(sa, "a").crossJoin(est1(sb, "b"))
+      .crossJoin(est1(su, "u")).crossJoin(inter)
       .select(col("k_a"), col("est_a"), col("k_b"), col("est_b"),
         col("k_u"), col("est_u"), col("inter_in_k"),
-        expr("inter_in_k * est_u div k_u").as("est_inter"))
+        expr("inter_in_k * est_u div k_u").as("est_inter")), sa, sb, su)
   }
 
   /** The KMV cardinality report for `keyCol`:

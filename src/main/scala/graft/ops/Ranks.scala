@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Corpus-wide rank normalization without a corpus-wide window —
   * the third instance of the banded-prefix pattern (q126 sums,
@@ -27,9 +26,8 @@ object Ranks {
     */
   def pctRankBanded(df: DataFrame, valueCol: String,
       outCol: String): DataFrame = {
-    val hist = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    hist.count()
+    val hist = Pin.cache(
+      df.groupBy(col(valueCol)).agg(count(lit(1)).as("__c")), eager = true)
     val w = Window.orderBy(col(valueCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     val pct = hist
@@ -38,7 +36,7 @@ object Ranks {
       .select(col(valueCol),
         floor(lit(1e6) * col("__below") / col("__n")).cast("long")
           .as(outCol))
-    CacheRelease.afterFirstUse(df.join(broadcast(pct), valueCol), hist)
+    Pin.untilUsed(df.join(broadcast(pct), valueCol), hist)
   }
 
   /** Cross-group quantile-normalized selection gate — the "one

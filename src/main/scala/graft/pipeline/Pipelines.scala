@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.ops.{Labels, Relational}
+import graft.ops.{Labels, Pin, Relational}
 import graft.text.{Html, TextFunctions, Tfidf}
 
 /** Runnable pipeline compositions (SURVEY.md §3 E2/E3 and §7's
@@ -182,7 +182,8 @@ object Pipelines {
     * survivors, vector-registry survivors (= nNear when no vector
     * lane is configured), and decontamination survivors. `survivors`
     * is the final (doc_id, h, simhash) relation — the rows a caller
-    * appends to the corpus.
+    * appends to the corpus. It reads a cut ([[graft.ops.Pin]]): the
+    * caller releases it with `Pin.release(survivors)` once done.
     */
   final case class IngestBatchResult(survivors: DataFrame,
       nIn: Long, nQuality: Long, nExact: Long, nNear: Long,
@@ -263,17 +264,16 @@ object Pipelines {
       r -> Registry.resolve(spark, Minhash(minMatches = minMatches), r))
     val toks = TextFunctions.tokens(col(textCol))
     // THE one batch-text scan: every text-derived column in one
-    // projection, eagerly pinned (localCheckpoint severs lineage, so
-    // the registry appends' table refreshes cannot reach back here)
-    val derived = batch.select(
+    // projection, cut (the cut severs lineage, so the registry
+    // appends' table refreshes cannot reach back here)
+    val derived = Pin.cut(batch.select(
       (col(idCol).cast("long").as("doc_id") +:
         length(col(textCol)).as("__len") +:
         Exact.sign(col(textCol)).as("h") +:
         nearLane.sign(col(textCol)).as("simhash") +:
         array_distinct(TextFunctions.ngramsFast(toks, n)).as("__grams") +:
         (vecCol.toSeq.map(c => col(c).as("__vec")) ++
-          minhash.toSeq.map(_._2.sign(col(textCol)).as("__msig")))): _*)
-      .localCheckpoint()
+          minhash.toSeq.map(_._2.sign(col(textCol)).as("__msig")))): _*))
 
     val quality = derived.filter(col("__len") >= minChars)
 
@@ -333,12 +333,11 @@ object Pipelines {
     // `survivors` — the caller's corpus write — scan this pin instead
     // of re-running the semi-join chain (IngestBatchSpec pins one job
     // per survivor read)
-    val verdicts = vec.join(contaminated, Seq("doc_id"), "left_outer")
+    val verdicts = Pin.cut(vec.join(contaminated, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("h"), col("simhash"),
         col("__dirty").isNull.as("__clean"),
         (if (keptVec.isDefined) col("__vec").isNull else lit(false))
-          .as("__novec"))
-      .localCheckpoint()
+          .as("__novec")))
 
     // every funnel count in ONE aggregate over frames already pinned —
     // the batch projection, each lane's kept set and the verdicts — so
@@ -346,7 +345,10 @@ object Pipelines {
     // kept sets BY CONSTRUCTION (each kept digest/signature names
     // exactly one surviving batch row — IngestBatchSpec pins the
     // funnels); the vector lane's survivors are its kept set plus the
-    // null-embedding rows that skipped it.
+    // null-embedding rows that skipped it. After it, only `verdicts`
+    // is read again: the batch projection and the kept sets are
+    // released here, the verdicts cut by the caller.
+    val kept = Seq(keptDigests, keptNear) ++ keptM ++ keptVec
     val funnel = (Seq(
       derived.select(lit(true).as("in"),
         (col("__len") >= minChars).as("quality")),
@@ -358,7 +360,9 @@ object Pipelines {
       keptVec.map(_.select(lit(true).as("vec"))))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val stages = funnel.columns.toSeq
-    val row = funnel.select(stages.map(s => count_if(col(s))): _*).head()
+    val row =
+      try funnel.select(stages.map(s => count_if(col(s))): _*).head()
+      finally Pin.release(derived +: kept: _*)
     val c = stages.zipWithIndex.map { case (s, i) => s -> row.getLong(i) }
       .toMap
     val nMinhash = c.getOrElse("minhash", -1L)
@@ -522,7 +526,8 @@ object PipelineDriver {
       vecReg = if (hasVec) Some("graft_cli_vc") else None,
       vecCol = if (hasVec) Some("embedding") else None,
       minhashReg = if (minhash) Some("graft_cli_mh") else None)
-    r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
+    try r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
+    finally Pin.release(r.survivors)
     println(s"[ingest] batch=$batchNo in=${r.nIn} q=${r.nQuality} " +
       s"exact=${r.nExact} near=${r.nNear} vec=${r.nVec} " +
       s"clean=${r.nClean} compiled=${compiled - compiled0}")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.feature.Features
 import graft.io.Tables.table
-import graft.ops.CacheRelease
+import graft.ops.Pin
 import graft.pipeline.Pipelines
 import graft.text.{Bpe, UnigramLm, TextFunctions => T}
 
@@ -24,6 +24,7 @@ import graft.text.{Bpe, UnigramLm, TextFunctions => T}
   * hash-compare verifies.
   */
 object CurationQueries extends QueryPack {
+  import Fragments.{bandSql, minhashSql, shingles, toks}
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact-substring duplicate spans: corpus ∪ suffix-splices of
@@ -124,14 +125,14 @@ object CurationQueries extends QueryPack {
     "q140_quality_ensemble" -> ((s, dir) => {
       val (qE4, repE4) =
         Features.qualitySignalsE4(col("text"), T.tokens(col("text")))
-      val base = table(s, dir, "documents")
-        .select(col("doc_id"), qE4.as("q_e4"), repE4.as("rep_e4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      base.count() // three consumers (two histograms + final read)
+      // three consumers (two histograms + final read)
+      val base = Pin.cache(table(s, dir, "documents")
+        .select(col("doc_id"), qE4.as("q_e4"), repE4.as("rep_e4")),
+        eager = true)
       val ranked = graft.ops.Ranks.pctRankBanded(
         graft.ops.Ranks.pctRankBanded(base, "q_e4", "q_pct"),
         "rep_e4", "rep_pct")
-      CacheRelease.afterFirstUse(ranked.select(col("doc_id"),
+      Pin.untilUsed(ranked.select(col("doc_id"),
           floor((col("q_pct") + (lit(1000000L) - col("rep_pct")))
             / lit(2.0)).cast("long").as("ens_fx"))
         .orderBy(col("ens_fx").desc, col("doc_id"))
@@ -187,15 +188,14 @@ object CurationQueries extends QueryPack {
       def sig(df: DataFrame, as: String) = df.select(col("doc_id").as(as),
         Dedup.minhashSignatureFast(Dedup.shingles(col("text"), 3), 8)
           .as(s"__sig_$as"))
-      val sigT = sig(train, "left_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigT.count() // materialize before candidate + estimate reuse
+      // filled before candidate + estimate reuse
+      val sigT = Pin.cache(sig(train, "left_id"), eager = true)
       val sigB = sig(bench, "right_id")
       val cands = Dedup.lshCandidatesFromSigs(
         sigT.withColumnRenamed("__sig_left_id", "__sig"), "left_id",
         sigB.withColumnRenamed("__sig_right_id", "__sig"), "right_id",
         "__sig", k = 8, bands = 4)
-      CacheRelease.afterFirstUse(cands.join(sigT, "left_id")
+      Pin.untilUsed(cands.join(sigT, "left_id")
         .join(broadcast(sigB), "right_id")
         .withColumn("__m", size(filter(
           zip_with(col("__sig_left_id"), col("__sig_right_id"),
@@ -656,38 +656,25 @@ object CurationQueries extends QueryPack {
     })
   )
 
-  /** q116/q117 share the scoring pass (persisted, materialized by
-    * the first query's action), so the two-scan featurize→weight→score
+  /** q116/q117 share the scoring pass (a lazy cache, filled by the
+    * first query's action), so the two-scan featurize→weight→score
     * chain runs once per session.
     */
   private val dsirScores = FitStore.slot((s, dir) =>
-    graft.pipeline.Dsir.importanceScores(
+    FitStore.owned(Pin.cache(graft.pipeline.Dsir.importanceScores(
       table(s, dir, "documents"), "doc_id", "text",
-      col("lang") === "en", buckets = 4096)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      col("lang") === "en", buckets = 4096))))
 
   /** q119/q127 share the LM fit+scoring pass (perplexityScores
-    * persists its own output).
+    * caches its own output).
     */
   private val lmScores = FitStore.slot { (s, dir) =>
     val d = table(s, dir, "documents")
-    graft.text.NgramLm.perplexityScores(d, "doc_id", "text",
-      d.filter(col("lang") === "en" && pmod(col("doc_id"), lit(7)) === 0))
+    FitStore.owned(graft.text.NgramLm.perplexityScores(d, "doc_id", "text",
+      d.filter(col("lang") === "en" && pmod(col("doc_id"), lit(7)) === 0)))
   }
 
   // ---- oracle SQL ----
-
-  private val toks = "string_split(text, ' ')"
-
-  private val shingles =
-    s"list_distinct(list_transform(range(1, len($toks) - 1), " +
-      s"i -> array_to_string($toks[i:i+2], ' ')))"
-
-  private def minhashSql(seed: Int): String =
-    s"list_min(list_transform(sh, x -> md5('$seed:' || x)))"
-
-  private def bandSql(b: Int): String =
-    s"md5('band$b:' || mh${2 * b} || '|' || mh${2 * b + 1})"
 
   private def ngramSql(l: String, n: Int): String =
     s"list_transform(generate_series(1, len($l) - ${n - 1}), " +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, Registry}
 import graft.io.Tables.table
-import graft.ops.CacheRelease
+import graft.ops.Pin
 import graft.similarity.Ann
 import graft.text.{TextFunctions => T, Winnow}
 
@@ -20,6 +20,7 @@ import graft.text.{TextFunctions => T, Winnow}
   * for real rather than assuming a dup-free base table.
   */
 object DedupQueries extends QueryPack {
+  import Fragments.{bandSql, cosineCte, minhashSql, shingles, toks}
 
   /** documents ∪ copies of doc_id<50 shifted by +100000. */
   private def withInjectedDups(s: SparkSession, dir: String): DataFrame = {
@@ -88,13 +89,20 @@ object DedupQueries extends QueryPack {
     val rows = (0 until 3).map { b =>
       val batch = corpus.filter(col(idCol) % 3 === b)
       val nIn = batch.count()
-      (b, nIn, Registry.ingest(s, lane, reg, batch, idCol, srcCol, b).count())
+      (b, nIn,
+        keptCount(Registry.ingest(s, lane, reg, batch, idCol, srcCol, b)))
     }
     import s.implicits._
     rows.toDF("batch_no", "n_in", "n_kept")
       .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
       .orderBy(col("batch_no"))
   }
+
+  /** The row count of a registry ingest's survivors, then their cut
+    * released.
+    */
+  private[queries] def keptCount(kept: DataFrame): Long =
+    try kept.count() finally Pin.release(kept)
 
   /** q174/q176 share one (exact, approx) ANN ranking pair, so the
     * cosine baseline and the LSH pass each run once per session, and
@@ -280,18 +288,17 @@ object DedupQueries extends QueryPack {
     // SimHash near-pairs: bucket by 16-bit prefix (equi-join), then
     // Hamming-distance filter inside buckets.
     "q47_simhash_pairs" -> ((s, dir) => {
-      // persisted: both self-join sides read the simhashes
-      val sims = table(s, dir, "documents")
+      // cached: both self-join sides read the simhashes
+      val sims = Pin.cache(table(s, dir, "documents")
         .select(col("doc_id"),
           Dedup.simhash60(graft.text.TextFunctions.tokens(col("text")))
             .as("simhash"))
-        .withColumn("bucket", shiftright(col("simhash"), 44))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("bucket", shiftright(col("simhash"), 44)))
       val a = sims.select(col("bucket"), col("doc_id").as("id_a"),
         col("simhash").as("sim_a"))
       val b = sims.select(col("bucket"), col("doc_id").as("id_b"),
         col("simhash").as("sim_b"))
-      CacheRelease.afterFirstUse(a.join(b, "bucket")
+      Pin.untilUsed(a.join(b, "bucket")
         .filter(col("id_a") < col("id_b"))
         .withColumn("hamming", Dedup.hammingDist(col("sim_a"), col("sim_b")))
         .filter(col("hamming") <= 20)
@@ -338,16 +345,15 @@ object DedupQueries extends QueryPack {
     // in for.
     "q102_minhash_est" -> ((s, dir) => {
       val docs = table(s, dir, "documents").filter(col("doc_id") < 200)
-      val side = docs.select(col("doc_id"),
+      val side = Pin.cache(docs.select(col("doc_id"),
         Dedup.minhashSignatureFast(Dedup.shingles(col("text"), 3), 8)
           .as("sig"),
-        Dedup.shingles(col("text"), 3).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Dedup.shingles(col("text"), 3).as("sh")))
       val a = side.select(col("doc_id").as("id_a"), col("sig").as("sig_a"),
         col("sh").as("sh_a"))
       val b = side.select(col("doc_id").as("id_b"), col("sig").as("sig_b"),
         col("sh").as("sh_b"))
-      CacheRelease.afterFirstUse(
+      Pin.untilUsed(
         lshCands(s, dir).join(a, "id_a").join(b, "id_b")
           .withColumn("est_jaccard",
             round(size(filter(zip_with(col("sig_a"), col("sig_b"),
@@ -509,24 +515,21 @@ object DedupQueries extends QueryPack {
     "q245_near_recall_meter" -> ((s, dir) => {
       val d = table(s, dir, "documents")
         .select(col("doc_id"), col("text")).filter(col("doc_id") < 200)
-      val sims = withZzCopies(d).select(col("doc_id"),
-          Dedup.simhash60(T.tokens(col("text"))).as("simhash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sims.count()
+      val sims = Pin.cache(withZzCopies(d).select(col("doc_id"),
+          Dedup.simhash60(T.tokens(col("text"))).as("simhash")),
+        eager = true)
       val a = sims.select(col("doc_id").as("id_a"),
         col("simhash").as("sim_a"))
       val b = sims.select(col("doc_id").as("id_b"),
         col("simhash").as("sim_b"))
       val h = Dedup.hammingDist(col("sim_a"), col("sim_b"))
-      val truth = a.crossJoin(b).filter(col("id_a") < col("id_b"))
+      val truth = Pin.cache(a.crossJoin(b).filter(col("id_a") < col("id_b"))
         .withColumn("__h", h).filter(col("__h") <= 20)
         .withColumn("ham_band", when(col("__h") <= 5, "00-05")
           .when(col("__h") <= 12, "06-12").otherwise("13-20"))
-        .select(col("id_a"), col("id_b"), col("ham_band"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      truth.count()
+        .select(col("id_a"), col("id_b"), col("ham_band")), eager = true)
       import s.implicits._
-      val rows = Seq(2, 4).flatMap { t =>
+      val rows = try Seq(2, 4).flatMap { t =>
         val found = Dedup.bandedHammingPairs(sims, "doc_id", "simhash",
             totalBits = 60, width = 15, tables = t, maxHamming = 20)
           .select(col("id_a"), col("id_b"), lit(1L).as("__f"))
@@ -537,8 +540,7 @@ object DedupQueries extends QueryPack {
           .as[(String, Long, Long)].collect().toSeq
           .map { case (band, nt, nf) =>
             (t, band, nt, nf, nf * 1000000L / nt) }
-      }
-      sims.unpersist(); truth.unpersist()
+      } finally Pin.release(sims, truth)
       rows.toDF("tables", "ham_band", "n_truth", "n_found", "recall_e6")
         .select(col("tables").cast("int"), col("ham_band"),
           col("n_truth"), col("n_found"), col("recall_e6"))
@@ -556,18 +558,6 @@ object DedupQueries extends QueryPack {
   )
 
   // ---- oracle SQL builders (shared fragments) ----
-
-  private val toks = "string_split(text, ' ')"
-  /** 3-shingles as a distinct list. */
-  private val shingles =
-    s"list_distinct(list_transform(range(1, len($toks) - 1), " +
-      s"i -> array_to_string($toks[i:i+2], ' ')))"
-
-  private def minhashSql(seed: Int, sh: String = "sh"): String =
-    s"list_min(list_transform($sh, x -> md5('$seed:' || x)))"
-
-  private def bandSql(b: Int): String =
-    s"md5('band$b:' || mh${2 * b} || '|' || mh${2 * b + 1})"
 
   private val sigCte = {
     val mhs = (0 until 8).map(i => s"${minhashSql(i)} AS mh$i").mkString(", ")
@@ -594,10 +584,6 @@ object DedupQueries extends QueryPack {
        |  SELECT doc_id, cast(sum(CASE WHEN vote > 0
        |    THEN 1::BIGINT << i ELSE 0::BIGINT END) as bigint) AS simhash
        |  FROM votes GROUP BY doc_id)""".stripMargin
-
-  private val cosineCte =
-    """e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      |      FROM embeddings)""".stripMargin
 
   /** Shared CTE chain for the q174/q176 ANN meters: the exact top-5
     * (`ex`) and the LSH top-5 (`ap`, with rank) for queries < 20 —

@@ -6,7 +6,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+
+import graft.ops.Pin
 
 /** The one store for the fits several queries share (LDA, LSH
   * candidates, SimHash pairs, LM scores, …): the reference fits a
@@ -25,13 +26,15 @@ import org.apache.spark.storage.StorageLevel
   * inside a concurrent map's atomic compute cannot do (the JDK map
   * throws "Recursive update").
   *
-  * Release is explicit and bounded by the session's lifetime: the
-  * first entry for a `SparkContext` registers one listener whose
-  * `onApplicationEnd` drops that context's entries and unpersists the
-  * frames built through [[FitStore.pinned]]. The keys are strong on
-  * purpose — weak keys cannot work here, because every cached
-  * DataFrame strongly references its session, so a weakly keyed
-  * session would never become unreachable while its entry lives.
+  * Release is explicit and bounded by the session's lifetime — the
+  * session scope of [[graft.ops.Pin]]: the first entry for a
+  * `SparkContext` registers one listener whose `onApplicationEnd`
+  * drops that context's entries and releases every pin handed to
+  * [[FitStore.owned]], directly or through [[FitStore.pinned]]. The
+  * keys are strong on purpose — weak keys cannot work here, because
+  * every cached DataFrame strongly references its session, so a
+  * weakly keyed session would never become unreachable while its
+  * entry lives.
   */
 private[queries] object FitStore {
 
@@ -43,14 +46,17 @@ private[queries] object FitStore {
 
   def slot[A](build: (SparkSession, String) => A): Slot[A] = new Slot(build)
 
-  /** Persist `df` (MEMORY_AND_DISK), materialize it with one `count`,
-    * and have the store unpersist it when its context ends.
+  /** An eager [[Pin.cache]] of `df` (one `count`), released when its
+    * context ends.
     */
-  def pinned(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    pins.put(df, df.sparkSession.sparkContext)
-    df
+  def pinned(df: DataFrame): DataFrame = owned(Pin.cache(df, eager = true))
+
+  /** Session scope for a pin made elsewhere — a fit that pins its own
+    * output, a lazy cache, a cut: released when its context ends.
+    */
+  def owned(pin: DataFrame): DataFrame = {
+    pins.put(pin, pin.sparkSession.sparkContext)
+    pin
   }
 
   private final case class Key(s: SparkSession, dir: String, slot: Slot[_])
@@ -83,14 +89,14 @@ private[queries] object FitStore {
     }
   }
 
-  /** Drop every entry of `sc`'s sessions and unpersist the frames they
-    * pinned — what the application-end listener runs.
+  /** Drop every entry of `sc`'s sessions and release the pins they
+    * own — what the application-end listener runs.
     */
   private[queries] def release(sc: SparkContext): Unit = {
     entries.keys.filter(_.s.sparkContext eq sc).foreach(entries.remove)
     pins.collect { case (df, c) if c eq sc => df }.foreach { df =>
       pins.remove(df)
-      try df.unpersist(blocking = false)
+      try Pin.release(df)
       catch { case NonFatal(_) => () } // the context may be stopping
     }
   }

@@ -3,10 +3,27 @@ package graft.queries
 /** Oracle-SQL fragments shared across query packs. */
 private[queries] object Fragments {
 
-  /** DuckDB SQL computing [[graft.similarity.Ann.rhpSignature]] for a
-    * 64-dim double-list expression `v` — same integer hash, same
-    * double arithmetic order, so the signatures agree bit-for-bit.
-    */
+  /** The whitespace token list of `text` ([[graft.text.TextFunctions.tokens]]). */
+  val toks = "string_split(text, ' ')"
+
+  /** 3-shingles of `text` as a distinct list ([[graft.dedup.Dedup.shingles]]). */
+  val shingles =
+    s"list_distinct(list_transform(range(1, len($toks) - 1), " +
+      s"i -> array_to_string($toks[i:i+2], ' ')))"
+
+  /** MinHash value `seed` over the shingle list `sh`. */
+  def minhashSql(seed: Int, sh: String = "sh"): String =
+    s"list_min(list_transform($sh, x -> md5('$seed:' || x)))"
+
+  /** LSH band key `b` over the minhash columns `mh<2b>`, `mh<2b+1>`. */
+  def bandSql(b: Int): String =
+    s"md5('band$b:' || mh${2 * b} || '|' || mh${2 * b + 1})"
+
+  /** `e(vec_id, v)`: the embeddings as double lists. */
+  val cosineCte =
+    """e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+      |      FROM embeddings)""".stripMargin
+
   /** BM25 score CTE chain replaying [[graft.text.Tfidf.bm25Scores]]
     * (k1=1.2, b=0.75) for `terms` over `documents` — identical IEEE
     * op order to the Spark contribution expression, per-(doc,term)
@@ -35,6 +52,10 @@ private[queries] object Fragments {
        |       FROM sc GROUP BY doc_id)""".stripMargin
   }
 
+  /** DuckDB SQL computing [[graft.similarity.Ann.rhpSignature]] for a
+    * 64-dim double-list expression `v` — same integer hash, same
+    * double arithmetic order, so the signatures agree bit-for-bit.
+    */
   def rhpSigSql(planes: Int, v: String): String =
     // quadratic pair-hash weights (k = j·1024 + d) — must stay
     // bit-identical to Ann.hyperplane/rhpSigUdf; the affine form it

@@ -19,11 +19,11 @@ object GraphQueries extends QueryPack {
 
   /** q66/q67 share the corpus-level PageRank over one co-occurrence
     * graph, so the 10-iteration power loop runs once per session. The
-    * scores are already persisted by [[TextRank.pagerank]].
+    * scores are already cached by [[TextRank.pagerank]].
     */
   private val corpusScores = FitStore.slot((s, dir) =>
-    TextRank.wordScores(
-      table(s, dir, "documents").select(toks.as("toks")), "toks", Iters))
+    FitStore.owned(TextRank.wordScores(
+      table(s, dir, "documents").select(toks.as("toks")), "toks", Iters)))
 
   /** q181, q220 and the k-core query walk the SAME thresholded
     * co-order graph — the 1.2M-pair order self-join is the dominant
@@ -31,7 +31,7 @@ object GraphQueries extends QueryPack {
     * support cut, cheap to hold) is pinned and the pair volume is paid
     * once per session.
     */
-  private val coorderEdges = FitStore.slot { (s, dir) =>
+  private[queries] val coorderEdges = FitStore.slot { (s, dir) =>
     val li = table(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()

@@ -19,19 +19,24 @@ object MlQueries extends QueryPack {
   private def toks = TextFunctions.tokens(col("text"))
 
   /** q63/q64 take their two views off one seeded LDA fit. */
-  private val fittedLda = FitStore.slot((s, dir) =>
-    Topics.fitLda(table(s, dir, "documents")
+  private val fittedLda = FitStore.slot { (s, dir) =>
+    val f = Topics.fitLda(table(s, dir, "documents")
       .select(col("doc_id"), toks.as("toks")), "toks",
-      k = 5, maxIter = 5, seed = 42L, vocabSize = 1000))
+      k = 5, maxIter = 5, seed = 42L, vocabSize = 1000)
+    FitStore.owned(f.vectorized)
+    f
+  }
 
-  /** q189/q190/q194 share one exact-integer EM fit (topic.LdaEm); the
-    * two persisted tables are vocabulary- and nnz-bounded.
+  /** q189/q190/q194 share one exact-integer EM fit (topic.LdaEm); its
+    * two pins (a vocabulary-bounded cache, an nnz-bounded cut) live
+    * as long as the session.
     */
   private val emFit = FitStore.slot { (s, dir) =>
     val docs = table(s, dir, "documents")
       .select(col("doc_id"), toks.as("toks"))
-    graft.topic.LdaEm.fit(docs, "doc_id", "toks",
+    val (vocab, assign) = graft.topic.LdaEm.fit(docs, "doc_id", "toks",
       k = 4, vocabSize = 100, iters = 3)
+    (FitStore.owned(vocab), FitStore.owned(assign))
   }
 
   /** q191's SPPMI embedding, pinned: the sparse rows are

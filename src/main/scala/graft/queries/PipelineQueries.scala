@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.Components
 import graft.io.Tables.table
-import graft.ops.{Packing, Snapshots}
+import graft.ops.{Packing, Pin, Snapshots}
 import graft.text.{Redact, TextFunctions => T}
 
 /** LLM-training-pipeline operators beyond the reference's surface:
@@ -21,6 +21,7 @@ import graft.text.{Redact, TextFunctions => T}
   * over near-pair edges) — the shapes that survive a 100 TB corpus.
   */
 object PipelineQueries extends QueryPack {
+  import Fragments.toks
 
   /** Deterministic synthetic PII appended to each doc (the test
     * corpus carries none): the oracle synthesizes identically, so
@@ -321,16 +322,17 @@ object PipelineQueries extends QueryPack {
       // shuffle width) — production callers pass their natural
       // partitioning; the per-batch one-text-scan contract is
       // IngestBatchSpec's accumulator pin, unaffected here
-      val corpus = b0.unionByName(nearCopies).unionByName(vecTwins)
-        .repartition(2).localCheckpoint()
+      val corpus = Pin.cut(b0.unionByName(nearCopies).unionByName(vecTwins)
+        .repartition(2))
       val bench = d.filter(col("doc_id") < 5)
-      val rows = (0 until 3).map { b =>
+      val rows = try (0 until 3).map { b =>
         val r = graft.pipeline.Pipelines.ingestBatch(s,
           corpus.filter(col("doc_id") % 3 === b), "doc_id", "text",
           exName, nrName, bench, "text", b, minChars = 100,
           vecReg = Some(vcName), vecCol = Some("embedding"))
+        Pin.release(r.survivors)
         (b, r.nIn, r.nQuality, r.nExact, r.nNear, r.nVec, r.nClean)
-      }
+      } finally Pin.release(corpus)
       import s.implicits._
       rows.toDF("batch_no", "n_in", "n_q", "n_exact", "n_near",
           "n_vec", "n_clean")
@@ -363,20 +365,24 @@ object PipelineQueries extends QueryPack {
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 200)
       // same fixture-prep pin as q244: 2 partitions for a 280-row demo
-      val corpus = d
+      val corpus = Pin.cut(d
         .unionByName(d.filter(col("doc_id") < 40)
           .select((col("doc_id") + 300001L).as("doc_id"), col("text")))
         .unionByName(d.filter(col("doc_id") < 40)
           .select((col("doc_id") + 600001L).as("doc_id"),
             concat(col("text"), lit(" zz yy")).as("text")))
-        .repartition(2).localCheckpoint()
+        .repartition(2))
       val bench = d.filter(col("doc_id") < 5)
-      def run(b: Int) = graft.pipeline.Pipelines.ingestBatch(s,
-        corpus.filter(col("doc_id") % 2 === b), "doc_id", "text",
-        exName, nrName, bench, "text", b, minChars = 100)
-      val r0 = run(0)
-      val r1 = run(1)
-      val r1r = run(1) // the replay: same batch number, same rows
+      def run(b: Int) = {
+        val r = graft.pipeline.Pipelines.ingestBatch(s,
+          corpus.filter(col("doc_id") % 2 === b), "doc_id", "text",
+          exName, nrName, bench, "text", b, minChars = 100)
+        Pin.release(r.survivors)
+        r
+      }
+      // the third call is the replay: same batch number, same rows
+      val (r0, r1, r1r) =
+        try (run(0), run(1), run(1)) finally Pin.release(corpus)
       import s.implicits._
       Seq((0, 0, r0.nQuality, r0.nExact, r0.nNear, r0.nClean),
           (1, 1, r1.nQuality, r1.nExact, r1.nNear, r1.nClean),
@@ -389,8 +395,6 @@ object PipelineQueries extends QueryPack {
   )
 
   // ---- oracle SQL ----
-
-  private val toks = "string_split(text, ' ')"
 
   /** Trigrams of a token list column `l` (empty below 3 tokens —
     * generate_series(1, len-2) is empty when len < 3).

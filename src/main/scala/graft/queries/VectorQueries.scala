@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Registry
 import graft.io.Tables.table
+import graft.ops.Pin
 import graft.similarity.{Ann, Clustering, Pq}
 
 /** Vector-at-scale surface beyond q48/q49: IVF cluster-then-probe
@@ -18,6 +19,7 @@ import graft.similarity.{Ann, Clustering, Pq}
   * oracle computes the same dedup for real.
   */
 object VectorQueries extends QueryPack {
+  import Fragments.cosineCte
 
   /** embeddings ∪ two copies of vec_id < 20 (ids +100000/+200000). */
   private def withInjectedDups(s: SparkSession, dir: String): DataFrame = {
@@ -48,16 +50,15 @@ object VectorQueries extends QueryPack {
       val qv = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("__qv"),
           Ann.norm(col("embedding")).as("__qn"))
-      val cand = emb.filter(col("vec_id") =!= 0)
+      // referenced 3x (rel + both sim sides): pinned
+      val cand = Pin.cache(emb.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(qv))
         .select(col("vec_id").as("id"),
           floor(lit(1000000.0) * Ann.dot(col("embedding"), col("__qv"))
             / (Ann.norm(col("embedding")) * col("__qn")))
             .cast("long").as("rel_e6"),
           col("embedding"))
-        .orderBy(col("rel_e6").desc, col("id")).limit(30)
-        .persist()
-      cand.count() // referenced 3x (rel + both sim sides): pin it
+        .orderBy(col("rel_e6").desc, col("id")).limit(30), eager = true)
       val a = cand.select(col("id").as("id_a"), col("embedding").as("__va"))
       val b = cand.select(col("id").as("id_b"), col("embedding").as("__vb"))
       val sims = a.join(b, col("id_a") =!= col("id_b"))
@@ -65,9 +66,10 @@ object VectorQueries extends QueryPack {
           floor(lit(1000000.0) * Ann.dot(col("__va"), col("__vb"))
             / (Ann.norm(col("__va")) * Ann.norm(col("__vb"))))
             .cast("long").as("sim_e6"))
-      val out = graft.similarity.Mmr.rerank(
+      // rerank collects; the result is local rows
+      val out = try graft.similarity.Mmr.rerank(
         cand.select(col("id"), col("rel_e6")), sims, k = 8, lamTen = 7)
-      cand.unpersist() // rerank collected; the result is local rows
+      finally Pin.release(cand)
       out.orderBy(col("rank"))
     }),
 
@@ -153,14 +155,12 @@ object VectorQueries extends QueryPack {
         .withColumn("vec_id", col("vec_id") + 100001L))
       val b0 = corpus.filter(col("vec_id") % 2 === 0)
       val b1 = corpus.filter(col("vec_id") % 2 === 1)
-      val n0 = (0, b0.count(),
-        Registry.ingest(s, Registry.Vec(), n8, b0, "vec_id", "embedding", 0)
-          .count())
+      val n0 = (0, b0.count(), DedupQueries.keptCount(
+        Registry.ingest(s, Registry.Vec(), n8, b0, "vec_id", "embedding", 0)))
       Registry.rekeyVec(s, n8, n16, s"$base/p16", buckets = 8,
         newPlanes = 16)
-      val n1 = (1, b1.count(),
-        Registry.ingest(s, Registry.Vec(), n16, b1, "vec_id", "embedding",
-          1).count())
+      val n1 = (1, b1.count(), DedupQueries.keptCount(
+        Registry.ingest(s, Registry.Vec(), n16, b1, "vec_id", "embedding", 1)))
       import s.implicits._
       Seq(n0, n1).toDF("batch_no", "n_in", "n_kept")
         .select(col("batch_no").cast("int"), col("n_in"), col("n_kept"))
@@ -226,10 +226,11 @@ object VectorQueries extends QueryPack {
     // (kmeansAssign) stays the production path, spec-covered on
     // separable fixtures.
     "q120_embed_clusters" -> ((s, dir) => {
-      Clustering.lloydAssign(table(s, dir, "embeddings"),
+      val assigned = Clustering.lloydAssign(table(s, dir, "embeddings"),
         "vec_id", "embedding", k = 8, iters = 2)
+      Pin.untilUsed(assigned
         .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
-        .orderBy(col("cluster"))
+        .orderBy(col("cluster")), assigned)
     }),
 
     // SemDeDup (Clustering.semDedup): cluster first (8 deterministic
@@ -322,19 +323,15 @@ object VectorQueries extends QueryPack {
         .agg(count(lit(1)).as(s"n_$tag"),
           expr("cast(sum(cast(__r_e6 as decimal(38,0))) div count(1) " +
             "as bigint)").as(s"mean_radius_${tag}_e6"))
-      meter(assigned, "base")
+      Pin.untilUsed(meter(assigned, "base")
         .join(meter(fresh, "new"), Seq("cent_id"), "left")
         .select(col("cent_id").cast("long").as("cent_id"), col("n_base"),
           col("mean_radius_base_e6"),
           coalesce(col("n_new"), lit(0L)).as("n_new"),
           col("mean_radius_new_e6"))
-        .orderBy(col("cent_id"))
+        .orderBy(col("cent_id")), assigned)
     })
   )
-
-  private val cosineCte =
-    """e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      |      FROM embeddings)""".stripMargin
 
   private def cosSql(a: String, b: String): String =
     s"round(list_dot_product($a, $b) / " +

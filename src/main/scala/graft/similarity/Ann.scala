@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** Similarity search over embedding columns (training-data-pipeline
   * extension; the reference exports vectors for external similarity
   * dedup — NewsDeduplication.scala:48-71 — our engine computes it
@@ -104,7 +106,9 @@ object Ann {
       roundTo: Int = 6): DataFrame = {
     val (cents, assigned) =
       ivfIndex(corpus, idCol, vecCol, nCentroids, roundTo)
-    ivfProbe(cents, assigned, queries, idCol, vecCol, nProbe, k, roundTo)
+    Pin.untilUsed(
+      ivfProbe(cents, assigned, queries, idCol, vecCol, nProbe, k, roundTo),
+      assigned)
   }
 
   /** Nearest-centroid ranking for an arbitrary vector table against
@@ -131,18 +135,17 @@ object Ann {
   /** Build the IVF index: (centroids, inverted file). Centroids are
     * (cent_id, cv, cn) — the id<nCentroids convention; the inverted
     * file is one (neighbor_id, cent_id, v, vn) row per corpus
-    * vector, persisted (read once per probed cluster join). Both
-    * halves are what [[IndexStore.saveIvf]] persists to parquet so
-    * the one corpus scan is paid offline, once.
+    * vector, a lazy cache the caller releases (read once per probed
+    * cluster join). Both halves are what [[IndexStore.saveIvf]]
+    * persists to parquet so the one corpus scan is paid offline, once.
     */
   def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, roundTo: Int = 6): (DataFrame, DataFrame) = {
     val cents = corpus.filter(col(idCol) < nCentroids)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cv"),
         norm(col(vecCol)).as("cn"))
-    val assigned =
-      nearestCents(corpus, idCol, vecCol, cents, "neighbor_id", 1, roundTo)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Pin.cache(
+      nearestCents(corpus, idCol, vecCol, cents, "neighbor_id", 1, roundTo))
     (cents, assigned)
   }
 
@@ -189,19 +192,18 @@ object Ann {
     */
   def cosineDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, roundTo: Int = 6): DataFrame = {
-    val side = corpus.select(col(idCol), col(vecCol),
-      norm(col(vecCol)).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    side.count() // materialize once; both self-join sides read it
+    // filled once; both self-join sides read it
+    val side = Pin.cache(corpus.select(col(idCol), col(vecCol),
+      norm(col(vecCol)).as("nrm")), eager = true)
     val a = side.select(col(idCol).as("id_a"), col(vecCol).as("va"),
       col("nrm").as("na"))
     val b = side.select(col(idCol).as("id_b"), col(vecCol).as("vb"),
       col("nrm").as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
+    Pin.untilUsed(a.join(b, col("id_a") < col("id_b"))
       .withColumn("cos",
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), roundTo))
       .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+      .select(col("id_a"), col("id_b"), col("cos")), side)
   }
 
   /** LSH-bucketed embedding near-duplicate pairs: candidates share a
@@ -214,21 +216,20 @@ object Ann {
     */
   def lshDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Int, threshold: Double, roundTo: Int = 6): DataFrame = {
-    val sig = corpus.select(col(idCol), col(vecCol),
+    // filled once before the self-join races it
+    val sig = Pin.cache(corpus.select(col(idCol), col(vecCol),
       rhpSignature(col(vecCol), planes).as("sig"),
-      norm(col(vecCol)).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count() // materialize once before the self-join races it
+      norm(col(vecCol)).as("nrm")), eager = true)
     val a = sig.select(col("sig"), col(idCol).as("id_a"),
       col(vecCol).as("va"), col("nrm").as("na"))
     val b = sig.select(col("sig"), col(idCol).as("id_b"),
       col(vecCol).as("vb"), col("nrm").as("nb"))
-    a.join(b, "sig")
+    Pin.untilUsed(a.join(b, "sig")
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos",
         round(dot(col("va"), col("vb")) / (col("na") * col("nb")), roundTo))
       .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+      .select(col("id_a"), col("id_b"), col("cos")), sig)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane j,
@@ -301,13 +302,12 @@ object Ann {
     */
   def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
       planes: Int, k: Int, roundTo: Int = 6): DataFrame = {
-    // persisted: both self-join sides read signatures + norms
-    val sig = corpus.select(col(idCol), col(vecCol),
+    // cached: both self-join sides read signatures + norms; filled
+    // now — a lazy cache is raced (and thus computed twice) by the two
+    // sides of the self-join
+    val sig = Pin.cache(corpus.select(col(idCol), col(vecCol),
       rhpSignature(col(vecCol), planes).as("sig"),
-      norm(col(vecCol)).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count() // materialize once — a lazy cache is raced (and thus
-                // computed twice) by the two sides of the self-join
+      norm(col(vecCol)).as("nrm")), eager = true)
     val a = sig.select(col("sig"), col(idCol).as("query_id"),
       col(vecCol).as("qv"), col("nrm").as("qn"))
     val b = sig.select(col("sig"), col(idCol).as("neighbor_id"),
@@ -318,9 +318,10 @@ object Ann {
         round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+    Pin.untilUsed(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank")),
+      sig)
   }
 
   /** Hard-negative mining, brute baseline: for each query vector,
@@ -362,11 +363,10 @@ object Ann {
   def hardNegativesLsh(corpus: DataFrame, idCol: String, vecCol: String,
       labelCol: String, planes: Int, k: Int,
       roundTo: Int = 6): DataFrame = {
-    val sig = corpus.select(col(idCol), col(vecCol), col(labelCol),
+    // filled once for the two self-join sides
+    val sig = Pin.cache(corpus.select(col(idCol), col(vecCol), col(labelCol),
       rhpSignature(col(vecCol), planes).as("sig"),
-      norm(col(vecCol)).as("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sig.count() // materialize once for the two self-join sides
+      norm(col(vecCol)).as("nrm")), eager = true)
     val a = sig.select(col("sig"), col(idCol).as("query_id"),
       col(labelCol).as("__ql"), col(vecCol).as("qv"), col("nrm").as("qn"))
     val b = sig.select(col("sig"), col(idCol).as("neighbor_id"),
@@ -380,7 +380,7 @@ object Ann {
     val out = scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
-    graft.ops.CacheRelease.afterFirstUse(out, sig)
+    Pin.untilUsed(out, sig)
   }
 
   /** Per-vector int8 quantization — the 4× storage compression an

@@ -5,6 +5,8 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** Embedding-space clustering for corpus curation (beyond-reference;
   * the "cluster, then balance/inspect/dedup per cluster" step modern
   * pipelines run between embedding extraction and mixing — SemDeDup
@@ -72,11 +74,10 @@ object Clustering {
     require(embeddings.schema(idCol).dataType.isInstanceOf[
       org.apache.spark.sql.types.NumericType],
       s"lloydAssign needs a numeric id column, got $idCol")
-    val pts = embeddings.select(col(idCol).as("__id"),
+    val pts = Pin.cache(embeddings.select(col(idCol).as("__id"),
       transform(col(vecCol),
-        x => floor(x.cast("double") * quantScale).cast("long")).as("__qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pts.count()
+        x => floor(x.cast("double") * quantScale).cast("long")).as("__qv")),
+      eager = true)
     val init = pts.filter(col("__id") < k)
       .select(col("__id").cast("int").as("__cid"), col("__qv").as("__cq"))
     require(init.count() == k,
@@ -116,10 +117,12 @@ object Clustering {
           s => s.getField("__m")).as("__cq"))
         .select(col("cluster").as("__cid"), col("__cq"))
     }
-    val out = assign(cents).select(col("__id").as(idCol), col("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before releasing the point cache
-    pts.unpersist(blocking = false)
+    // filled before the point cache is released; the caller
+    // releases `out`
+    val out = Pin.cache(
+      assign(cents).select(col("__id").as(idCol), col("cluster")),
+      eager = true)
+    Pin.release(pts)
     out
   }
 
@@ -163,7 +166,7 @@ object Clustering {
     // compares (__ccos, −cent_id) first — exactly the window's
     // (cos desc, cent_id asc) order; cent_id is unique per point so
     // the payload fields never decide.
-    val assigned = embeddings
+    val assigned = Pin.cache(embeddings
       .select(col(idCol), col(vecCol).as("v"), A.norm(col(vecCol)).as("vn"))
       .crossJoin(cents)
       .withColumn("__ccos",
@@ -172,9 +175,8 @@ object Clustering {
       .agg(max(struct(col("__ccos"), (-col("cent_id")).as("__nc"),
         col("cent_id"), col("v"), col("vn"))).as("__w"))
       .select(col(idCol), col("__w.cent_id").as("cluster"),
-        col("__w.v").as("v"), col("__w.vn").as("vn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // materialize once; both self-join sides read it
+        col("__w.v").as("v"), col("__w.vn").as("vn")),
+      eager = true) // filled once; both self-join sides read it
     val a = assigned.select(col("cluster"), col(idCol).as("__ida"),
       col("v").as("va"), col("vn").as("na"))
     val b = assigned.select(col("cluster"), col(idCol).as("__idb"),
@@ -189,6 +191,6 @@ object Clustering {
       .join(dupIds, Seq(idCol), "left")
       .select(col(idCol), col("cluster"),
         coalesce(col("__dup"), lit(false)).as("is_dup"))
-    graft.ops.CacheRelease.afterFirstUse(out, assigned)
+    Pin.untilUsed(out, assigned)
   }
 }

@@ -3,7 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.ops.Pin
 
 /** Product quantization over an `Array[Float]` embedding column
   * (beyond-reference; the reference exports vectors for external
@@ -99,17 +99,21 @@ object Pq {
       org.apache.spark.sql.types.NumericType],
       s"Pq needs a numeric id column, got $idCol")
     val subDim = dim / m
-    val sub = subvectors(embeddings, idCol, vecCol, m, subDim, quantScale)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sub.count()
+    val sub = Pin.cache(
+      subvectors(embeddings, idCol, vecCol, m, subDim, quantScale),
+      eager = true)
     val init = sub.filter(col("__id") < k)
       .select(col("__s"), col("__id").cast("int").as("__cid"),
         col("__qv").as("__cq"))
     require(init.count() == m.toLong * k,
       s"IVF-convention init needs ids 0..${k - 1} present")
     var cents = init
-    for (_ <- 1 to iters) {
-      cents = assign(sub, cents)
+    for (i <- 1 to iters) {
+      // each round's m·k-row codebook is cut so the next round's
+      // broadcast doesn't re-run the whole previous round twice (a
+      // local checkpoint of a tiny table; same role as q120's cache);
+      // loop scope releases the round before
+      val round = assign(sub, cents)
         .select(col("__s"), col("__cid"), posexplode(col("__qv")))
         .groupBy(col("__s"), col("__cid"), col("pos"))
         .agg(sum(col("col")).as("__sum"), count(lit(1)).as("__n"))
@@ -118,16 +122,14 @@ object Pq {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("__m")))),
           s => s.getField("__m")).as("__cq"))
-      // materialize the m·k-row codebook so the next round's broadcast
-      // doesn't re-run the whole previous round twice (driver-side
-      // localCheckpoint of a tiny table; same role as q120's persist)
-      cents = cents.localCheckpoint(eager = true)
+      cents = if (i == 1) Pin.cut(round) else Pin.next(cents)(Pin.cut(round))
     }
-    val codes = assign(sub, cents)
-      .select(col("__id"), col("__s"), col("__cid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    codes.count() // materialize before releasing the subvector cache
-    sub.unpersist(blocking = false)
+    // filled before the subvector cache is released; the caller
+    // releases both codebooks and codes
+    val codes = Pin.cache(
+      assign(sub, cents).select(col("__id"), col("__s"), col("__cid")),
+      eager = true)
+    Pin.release(sub)
     (cents, codes)
   }
 
@@ -163,7 +165,7 @@ object Pq {
       trainEncode(embeddings, idCol, vecCol, dim, m, k, iters, quantScale)
     val out = adcTopKWith(cents, codes, queries, idCol, vecCol,
       dim, m, topK, quantScale)
-    graft.ops.CacheRelease.afterFirstUse(out, codes)
+    Pin.untilUsed(out, codes, cents)
   }
 
   /** ADC top-k against a PREBUILT index — the probe path an offline

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.ops.Pin
+
 /** Structured Streaming module (SURVEY.md §2.1 S14-S18, §2.11;
   * reference DataLoader.scala:96-253 source/sink wrappers).
   *
@@ -471,9 +473,9 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
-        handler(graft.dedup.Registry.ingest(s, lane, registryName, batch,
-          idCol, srcCol,
-          epochBatchNo(s, registryName, checkpoint, id)), id)
+        val kept = graft.dedup.Registry.ingest(s, lane, registryName, batch,
+          idCol, srcCol, epochBatchNo(s, registryName, checkpoint, id))
+        try handler(kept, id) finally Pin.release(kept)
       }
       .start()
 
@@ -512,11 +514,12 @@ object Streams {
         // the chain's epoch anchors at the EXACT registry; the one
         // batch number stamps every lane, so the member registries
         // must not be shared with differently-anchored streams
-        handler(graft.pipeline.Pipelines.ingestBatch(
+        val r = graft.pipeline.Pipelines.ingestBatch(
           s, batch, idCol, textCol, exactReg, nearReg,
           bench, benchTextCol,
           epochBatchNo(s, exactReg, checkpoint, id), minChars,
-          vecReg = vecReg, vecCol = vecCol, minhashReg = minhashReg), id)
+          vecReg = vecReg, vecCol = vecCol, minhashReg = minhashReg)
+        try handler(r, id) finally Pin.release(r.survivors)
       }
       .start()
 

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** Tokenizer-training primitives: the corpus-statistics side of BPE
   * (Sennrich et al. 2016, "Neural Machine Translation of Rare Words
   * with Subword Units"). A BPE trainer's inner loop counts adjacent
@@ -70,15 +72,13 @@ object Bpe {
       checkpointEvery: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = wordCounts(docs, textCol)
+    val words = Pin.cache(wordCounts(docs, textCol)
       // supplementary-plane guard: Spark's split(w, "") cuts UTF-16
       // code units (a surrogate pair becomes two lone-surrogate
       // "symbols") while SQL engines split codepoints — the oracle
       // could never agree. Both sides drop such words (the SQL twin
       // filters '[\x{10000}-\x{10FFFF}]'); BMP text is unaffected.
-      .filter(!col("w").rlike("[\\uD800-\\uDFFF]"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    words.count()
+      .filter(!col("w").rlike("[\\uD800-\\uDFFF]")), eager = true)
     var seg = words.withColumn("s",
       concat(lit(" "), array_join(split(col("w"), ""), " ")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
@@ -106,7 +106,7 @@ object Bpe {
           replace(col("s"), lit(" " + pair),
             lit(" " + pair.replace(" ", ""))))
         if (r % checkpointEvery == 0 && r < k)
-          seg = seg.localCheckpoint(true)
+          seg = Pin.next(seg)(Pin.cut(seg))
       } else {
         // the merge space is EXHAUSTED — every word has collapsed to
         // a single symbol (possible on a small vocabulary: at most
@@ -119,7 +119,7 @@ object Bpe {
     }
     val out = merges.toSeq.toDF("rank", "pair")
       .withColumn("merged", regexp_replace(col("pair"), " ", ""))
-    words.unpersist(blocking = false)
+    Pin.release(words, seg)
     out
   }
 

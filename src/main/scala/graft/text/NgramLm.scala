@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** N-gram language-model perplexity scoring — the CCNet-style
   * quality filter (beyond-reference; published method: Wenzek et
   * al., "CCNet: Extracting High Quality Monolingual Datasets from
@@ -57,8 +59,7 @@ object NgramLm {
     // the unigram table feeds THREE consumers (totals + two joins);
     // persisting the vocab-sized aggregate keeps the target corpus
     // at two scans (uni, bi) instead of four
-    val uni = uniRaw.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val uni = Pin.cache(uniRaw)
     // (N, V) as a broadcast 1-row crossJoin: it re-aggregates the
     // TARGET corpus (small by construction), never the raw stream —
     // a window-over-the-gram-stream backfill would single-partition
@@ -76,7 +77,7 @@ object NgramLm {
         .otherwise(lit(0.0)) +
       (lit(1.0) - lam) * (coalesce(col("c2"), lit(0L)) + lit(1.0)) /
         (col("n_tok") + col("v"))
-    val out = stream
+    val out = Pin.cache(stream
       .join(broadcast(bi), Seq("g"), "left")
       .join(broadcast(uni.select(col("w").as("w1"), col("c1"))),
         Seq("w1"), "left")
@@ -86,13 +87,13 @@ object NgramLm {
       .withColumn("nll_e6", floor(lit(-1000000.0) * log(p)).cast("long"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"),
-        floor(sum(col("nll_e6")) / count(lit(1))).cast("long").as("nll_e6"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the model cache — a long-lived
+        floor(sum(col("nll_e6")) / count(lit(1))).cast("long").as("nll_e6")),
+      eager = true)
+    // materialized, then the model cache is released — a long-lived
     // session scoring many corpora would otherwise accumulate
-    // vocab-sized caches (the pagerank lifecycle idiom)
-    out.count()
-    uni.unpersist(blocking = false)
+    // vocab-sized caches (the pagerank lifecycle idiom); `out` is the
+    // caller's to release
+    Pin.release(uni)
     out
   }
 }

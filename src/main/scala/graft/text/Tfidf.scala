@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** DataFrame-native TF-IDF (SURVEY.md M3; reference TFIDF.scala:21-162
   * hand-rolls this over RDD reduceByKey with an 80M-bucket HashingTF).
   *
@@ -105,18 +107,16 @@ object Tfidf {
     val stats = d.agg(count(lit(1)).as("__n"),
       sum(col("__dl")).cast("double").as("__sdl"))
     val qArr = array(queryTerms.map(lit): _*)
-    // persisted: df derives from it and the score join reads it —
+    // cached: df derives from it and the score join reads it —
     // without the cache Catalyst re-scans and re-explodes the corpus
     // for the df aggregate (plan-audited). Bounded by matching docs
     // × |query| rows, so the cache is small by construction.
-    val tf = d
+    val tf = Pin.cache(d
       .select(col(idCol), col("__dl"),
         explode(filter(col("__toks"), t => array_contains(qArr, t)))
           .as("__term"))
       .groupBy(col(idCol), col("__dl"), col("__term"))
-      .agg(count(lit(1)).as("__tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tf.count()
+      .agg(count(lit(1)).as("__tf")), eager = true)
     val df = tf.groupBy(col("__term")).agg(count(lit(1)).as("__df"))
     val avgdl = col("__sdl") / col("__n")
     val idf = log((col("__n") - col("__df") + 0.5) / (col("__df") + 0.5) + 1.0)
@@ -127,6 +127,6 @@ object Tfidf {
       .select(col(idCol), contrib.as("__st"))
       .groupBy(col(idCol))
       .agg(sum(col("__st")).as("bm25"))
-    graft.ops.CacheRelease.afterFirstUse(out, tf)
+    Pin.untilUsed(out, tf)
   }
 }

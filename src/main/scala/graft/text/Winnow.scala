@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Exprs.bind
+import graft.ops.Pin
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
   * "Winnowing: Local Algorithms for Document Fingerprinting",
@@ -175,11 +176,11 @@ object Winnow {
   def sharedFingerprintPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 4, minShared: Int = 8,
       maxDf: Int = 16): DataFrame = {
-    val fp = docs
+    // materialized once: the df aggregate + the semi join
+    val fp = Pin.cache(docs
       .select(col(idCol).as("__id"),
-        explode(fingerprintsFast(col(textCol), k, w)).as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.count() // materialize once: the df aggregate + the semi join
+        explode(fingerprintsFast(col(textCol), k, w)).as("__h")),
+      eager = true)
     val rare = fp.groupBy("__h").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf)
       .select("__h")
@@ -187,10 +188,9 @@ object Winnow {
     // it, and without its own cache each side would rebuild the df
     // aggregate + semi join (plan-audited: the broadcast built twice).
     // fp's cache is released once pruned is materialized.
-    val pruned = fp.join(rare, Seq("__h"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pruned.count()
-    fp.unpersist()
+    val pruned =
+      Pin.cache(fp.join(rare, Seq("__h"), "left_semi"), eager = true)
+    Pin.release(fp)
     val a = pruned.select(col("__id").as("id_a"), col("__h").as("__ha"))
     val b = pruned.select(col("__id").as("id_b"), col("__h").as("__hb"))
     val pairs = a.join(b, col("__ha") === col("__hb") && col("id_a") < col("id_b"))
@@ -198,7 +198,7 @@ object Winnow {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
     // pruned's cache is released after the caller's first action
-    graft.ops.CacheRelease.afterFirstUse(pairs, pruned)
+    Pin.untilUsed(pairs, pruned)
   }
 
   /** Per-document duplicate-passage stats over winnowed

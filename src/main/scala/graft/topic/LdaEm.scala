@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pin
+
 /** Exact-integer hard-EM topic fitting — the ORACLE-COMPLETE twin of
   * the seeded mllib LDA fits (q63/q64), on the q120 exact-Lloyd
   * precedent: mllib's variational inference is seeded-deterministic
@@ -40,12 +42,11 @@ import org.apache.spark.sql.functions._
   * an un-truncated LOGICAL plan fans out 6^i subtree copies — with
   * plain persist the execution reads cache but CATALYST still
   * analyzes the whole tree, and the post-fit queries spent 16-38 s
-  * in pure planning at iters=3. [[fit]] therefore eagerly
-  * `localCheckpoint`s each iteration's assignments — the plan resets
-  * to a scan of cached blocks, O(1) analysis per round. The
-  * intermediate checkpoints (iters × nnz rows) stay cached for the
-  * session; on a real cluster at large nnz use a reliable
-  * checkpoint dir, same contract as the BPE trainer.
+  * in pure planning at iters=3. [[fit]] therefore cuts
+  * ([[graft.ops.Pin.cut]]) each iteration's assignments — the plan
+  * resets to a scan of checkpointed blocks, O(1) analysis per round,
+  * and each round's cut is released once the next is materialised
+  * (loop scope), so at most two rounds of nnz rows are held.
   */
 object LdaEm {
 
@@ -56,8 +57,8 @@ object LdaEm {
 
   /** (vocab, assignments): vocab = (__t, __w) top-`vocabSize` tokens
     * by (count desc, token asc); assignments = (__d, __w, __cnt,
-    * __z) after `iters` hard-EM rounds. Both persisted; caller
-    * releases.
+    * __z) after `iters` hard-EM rounds. The vocabulary is a cache and
+    * the assignments a cut; the caller releases both.
     */
   def fit(docs: DataFrame, idCol: String, tokensCol: String,
       k: Int, vocabSize: Int, iters: Int): (DataFrame, DataFrame) = {
@@ -73,15 +74,14 @@ object LdaEm {
     // vocabulary-bounded single-partition window — the same
     // documented trade as every vocab indexer here (W2 pattern)
     val vw = Window.partitionBy().orderBy(col("__n").desc, col("__t"))
-    val vocab = dw0.groupBy(col("__t")).agg(sum(col("__cnt")).as("__n"))
-      .withColumn("__w", row_number().over(vw).cast("long") - 1)
-      .filter(col("__w") < vocabSize)
-      .select(col("__t"), col("__w"))
-      .persist()
-    var a = dw0.join(vocab, "__t")
+    val vocab = Pin.cache(
+      dw0.groupBy(col("__t")).agg(sum(col("__cnt")).as("__n"))
+        .withColumn("__w", row_number().over(vw).cast("long") - 1)
+        .filter(col("__w") < vocabSize)
+        .select(col("__t"), col("__w")))
+    var a = Pin.cut(dw0.join(vocab, "__t")
       .select(col("__d"), col("__w"), col("__cnt"),
-        (col("__w") % k).as("__z"))
-      .localCheckpoint(true)
+        (col("__w") % k).as("__z")))
     // E-step via per-key PIVOTED count rows instead of a k-fold
     // crossJoin (r16 optimization, results bit-identical): the old
     // plan expanded nnz×k rows, left-joined three count tables and
@@ -122,15 +122,14 @@ object LdaEm {
         when(col("__s0") === col("__ms"), lit(0L))) { (acc, z) =>
         acc.when(col(s"__s$z") === col("__ms"), lit(z.toLong))
       }
-      a = a
+      a = Pin.next(a)(Pin.cut(a
         .join(da, Seq("__d"))
         .join(wa, Seq("__w"))
         .crossJoin(broadcast(nz))
         .select((col("__d") +: col("__w") +: col("__cnt") +: scores): _*)
         .withColumn("__ms", ms)
         .select(col("__d"), col("__w"), col("__cnt"),
-          argmax.as("__z"))
-        .localCheckpoint(true)
+          argmax.as("__z"))))
     }
     (vocab, a)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, Word2
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.CacheRelease
+import graft.ops.Pin
 
 /** Topic-model and embedding operators (SURVEY.md M12/M13/M15;
   * reference NewsLDA.scala:74-127, NewsLDAModel.scala:25-116,
@@ -37,7 +37,7 @@ object Topics {
   /** A fitted LDA model (M12/M13) with the vocabulary it indexes and
     * its vectorized input, and the two views the reference takes off
     * one fit (NewsLDA describes topics, then tags documents).
-    * `vectorized` is persisted; whoever holds the fit releases it.
+    * `vectorized` is a cache; whoever holds the fit releases it.
     */
   final case class LdaFit(vocabulary: Array[String], model: LDAModel,
       vectorized: DataFrame) {
@@ -76,7 +76,7 @@ object Topics {
     // handful of partitions more than halves the fit time; at real
     // scale the partition count follows the data and this coalesce is
     // the knob that keeps tasks ~100 MB.
-    val vec = vectorized.coalesce(8).persist()
+    val vec = Pin.cache(vectorized.coalesce(8))
     val model = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
       .setFeaturesCol("features").fit(vec.select("features"))
     LdaFit(cvModel.vocabulary, model, vec)
@@ -87,7 +87,7 @@ object Topics {
       maxIter: Int = 10, vocabSize: Int = 1000, seed: Long = 42L,
       termsPerTopic: Int = 5): DataFrame = {
     val f = fitLda(df, tokensCol, k, maxIter, vocabSize, seed)
-    CacheRelease.afterFirstUse(f.topics(termsPerTopic), f.vectorized)
+    Pin.untilUsed(f.topics(termsPerTopic), f.vectorized)
   }
 
   /** Full-parameter LDA fit with model evaluation (M13 full surface;
@@ -114,9 +114,8 @@ object Topics {
     val spark = df.sparkSession
     import spark.implicits._
     val (_, vectorized) = countVectorize(df, tokensCol, vocabSize)
-    val feats = vectorized.select("features")
-      .coalesce(8) // see fitLda: tiny per-iteration jobs
-      .persist()
+    val feats = Pin.cache(vectorized.select("features")
+      .coalesce(8)) // see fitLda: tiny per-iteration jobs
     val model = new LDA().setK(k).setMaxIter(maxIter).setSeed(seed)
       .setOptimizer(optimizer)
       .setDocConcentration(docConcentration)
@@ -127,7 +126,7 @@ object Topics {
     val ll = model.logLikelihood(feats)
     val lp = model.logPerplexity(feats)
     val estAlpha = model.estimatedDocConcentration.toArray.sum / k
-    feats.unpersist(blocking = false)
+    Pin.release(feats)
     Seq((optimizer, k, ll, lp, estAlpha))
       .toDF("optimizer", "k", "log_likelihood", "log_perplexity",
         "est_doc_concentration")
@@ -140,7 +139,7 @@ object Topics {
       k: Int, maxIter: Int = 10, vocabSize: Int = 1000,
       seed: Long = 42L): DataFrame = {
     val f = fitLda(df, tokensCol, k, maxIter, vocabSize, seed)
-    CacheRelease.afterFirstUse(f.dominantTopic(idCol), f.vectorized)
+    Pin.untilUsed(f.dominantTopic(idCol), f.vectorized)
   }
 
   /** Word2Vec embeddings (M15): token sequences → word vectors,

@@ -10,7 +10,7 @@ class CacheReleaseSpec extends SparkSpec {
     val inter = spark.range(1000).toDF("v")
       .persist(StorageLevel.MEMORY_AND_DISK)
     inter.count()
-    val out = CacheRelease.afterFirstUse(
+    val out = Pin.untilUsed(
       inter.groupBy().sum("v").toDF("s"), inter)
     // an unrelated action must NOT release the cache
     spark.range(10).count()
@@ -29,7 +29,7 @@ class CacheReleaseSpec extends SparkSpec {
     val inter = spark.range(100).toDF("v")
       .persist(StorageLevel.MEMORY_AND_DISK)
     inter.count()
-    val out = CacheRelease.afterFirstUse(
+    val out = Pin.untilUsed(
       inter.selectExpr("v * 2 AS d"), inter)
     assert(out.count() == 100)
     // second action recomputes without the cache — still correct

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.storage.StorageLevel
+
 import graft.SparkSpec
 
 /** The CLI ingest loop's exactly-once contract (r13 verdict #7):
@@ -53,6 +55,22 @@ class PipelineDriverSpec extends SparkSpec {
       s"$base/reg", buckets = 4, batchNo = 1, bench = None))
     assert(spark.read.parquet(s"$base/out1")
       .select($"doc_id").as[Long].collect().toSet == Set(11L))
+  }
+
+  test("a runIngest batch with compaction on leaves no pinned RDD behind") {
+    val base = Files.createTempDirectory("graft-cli-pins").toString
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs
+      .filter(_._2.getStorageLevel != StorageLevel.NONE).keySet.toSet
+    val before = pinned
+    val docs = ((0 until 8).map(i => (i.toLong, long(s"p$i"))) :+
+      (99L, long("p0"))).toDF("doc_id", "text")
+    assert(PipelineDriver.runIngest(spark, docs, s"$base/out",
+      s"$base/reg", buckets = 2, batchNo = 0, bench = None,
+      autoCompact = true, compactThreshold = 0))
+    assert(spark.read.parquet(s"$base/out").count() == 8L)
+    val left = pinned -- before
+    assert(left.isEmpty, s"runIngest left pinned RDDs ${left.map(sc.getPersistentRDDs)}")
   }
 
   test("auto-compact: after enough small ingests the threshold trips, " +
