@@ -466,7 +466,7 @@ object Registry {
     */
   sealed abstract class Lane(val family: String,
       private[dedup] val ddl: String, val bucketCol: String,
-      private[dedup] val sigCol: String, private[dedup] val idCol: String,
+      private[graft] val sigCol: String, private[graft] val idCol: String,
       private[dedup] val healKey: Seq[String],
       private[dedup] val out: Seq[String]) {
     private[dedup] def stamps: Map[String, String] = Map.empty
@@ -477,7 +477,10 @@ object Registry {
     private[dedup] def signed(batch: DataFrame, id: String,
         src: String): DataFrame =
       batch.select(col(id).cast("long").as(idCol), sign(col(src)).as(sigCol))
-    private[dedup] def valid(sig: Column): Column = sig.isNotNull
+    /** Whether a signature can be probed: a row its lane cannot sign
+      * is neither probed nor stored.
+      */
+    private[graft] def valid(sig: Column): Column = sig.isNotNull
     private[dedup] def collapse(signed: DataFrame): DataFrame =
       signed.filter(valid(col(sigCol))).groupBy(col(sigCol))
         .agg(min(col(idCol)).as(idCol))
@@ -566,7 +569,7 @@ object Registry {
     /** Two null shapes: a null array (null text) and k nulls (empty
       * shingle set — array_min of nothing is null per position).
       */
-    override private[dedup] def valid(sig: Column) =
+    override private[graft] def valid(sig: Column) =
       sig.isNotNull && size(filter(sig, x => x.isNotNull)) > 0
     override private[dedup] def stored(df: DataFrame): DataFrame =
       df.select(col("doc_id"), col("sig"),

@@ -3,7 +3,7 @@ package graft.ops
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{classic, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -32,15 +32,25 @@ import org.apache.spark.storage.StorageLevel
   * recomputing. `Dataset.unpersist` does not free a cut — it only drops
   * cache entries, and a cut is an RDD scan, not a cache entry — so
   * [[release]] unpersists the checkpointed RDD under the plan.
+  *
+  * Spark keeps one cache entry per plan result, so two caches of
+  * equivalent plans share an entry. Each [[cache]] call is one owner of
+  * its entry, and [[release]] frees the entry only when its last owner
+  * releases it.
   */
 object Pin {
 
   /** A cut: `df` checkpointed locally and eagerly (one job). */
   def cut(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
-  /** A cache of `df`; `eager` fills it now with one `count`. */
+  /** A cache of `df`; `eager` fills it now with one `count` (also when
+    * the entry already exists and this call only joins its owners).
+    */
   def cache(df: DataFrame, eager: Boolean = false): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
+    owners.synchronized {
+      if (entryOf(df).isEmpty) df.persist(StorageLevel.MEMORY_AND_DISK)
+      entryOf(df).foreach(e => owners.put(e, owners.getOrDefault(e, 0) + 1))
+    }
     if (eager) df.count()
     df
   }
@@ -53,13 +63,30 @@ object Pin {
     * such a view reads); anything else that is not a pin is left alone.
     */
   def release(pins: Dataset[_]*): Unit = pins.foreach { ds =>
-    if (ds.storageLevel != StorageLevel.NONE) ds.unpersist(blocking = false)
-    else cutOf(ds.queryExecution.logical).foreach(_.unpersist(blocking = false))
+    val cached = owners.synchronized {
+      entryOf(ds).map { e =>
+        val n = owners.getOrDefault(e, 1)
+        if (n > 1) owners.put(e, n - 1)
+        else { owners.remove(e); ds.unpersist(blocking = false) }
+      }
+    }
+    if (cached.isEmpty)
+      cutOf(ds.queryExecution.logical).foreach(_.unpersist(blocking = false))
   }
 
   /** Release RDD caches now. */
   def release(pins: RDD[_]*)(implicit d: DummyImplicit): Unit =
     pins.foreach(_.unpersist(blocking = false))
+
+  /** Owner count per cache entry, keyed by the entry's plan instance
+    * (kept when Spark rebuilds the entry's data after a refresh).
+    */
+  private val owners = new java.util.IdentityHashMap[LogicalPlan, Int]
+
+  private def entryOf(ds: Dataset[_]): Option[LogicalPlan] =
+    ds.sparkSession.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(ds.asInstanceOf[classic.Dataset[_]])
+      .map(_.plan)
 
   private def cutOf(plan: LogicalPlan): Option[RDD[_]] = plan match {
     case r: LogicalRDD => Some(r.rdd)

@@ -179,8 +179,9 @@ object Pipelines {
 
   /** What one [[ingestBatch]] call did, stage by stage: input rows,
     * quality survivors, exact-registry survivors, near-registry
-    * survivors, vector-registry survivors (= nNear when no vector
-    * lane is configured), and decontamination survivors. `survivors`
+    * survivors, the last lane's survivors (`nVec`: the vector lane's,
+    * or nMinhash / nNear without it), decontamination survivors and
+    * minhash-lane survivors (−1 without that lane). `survivors`
     * is the final (doc_id, h, simhash) relation — the rows a caller
     * appends to the corpus. It reads a cut ([[graft.ops.Pin]]): the
     * caller releases it with `Pin.release(survivors)` once done.
@@ -189,47 +190,45 @@ object Pipelines {
       nIn: Long, nQuality: Long, nExact: Long, nNear: Long,
       nVec: Long, nClean: Long, nMinhash: Long = -1L)
 
-  /** Incremental-curate driver — ONE new batch through the whole
-    * registry family in one call: quality floor → exact-digest
-    * registry → SimHash near-dup registry → optional vector registry
-    * (each a [[graft.dedup.Registry.ingest]] over its lane)
-    * → n-gram decontamination against a benchmark corpus. This is
-    * the operator a continuously-fed 100 TB corpus actually calls:
-    * the per-modality registries (q237/q241/q242) each dedup a
-    * batch alone; a real ingest chains them so every stage's input
-    * is the previous stage's survivors, and replaying batches in
+  /** Incremental-curate driver — ONE new batch through a chain of
+    * dedup registries in one call: quality floor → each of `lanes`, a
+    * `(registry table, lane)` list, as a [[graft.dedup.Registry.ingest]]
+    * on the previous lane's survivors → n-gram decontamination against
+    * a benchmark corpus. The chain order is fixed: exact → near →
+    * (minhash) → (vec); any other list is refused before a registry is
+    * touched. This is the operator a continuously-fed 100 TB corpus
+    * actually calls: the per-modality registries (q237/q241/q242) each
+    * dedup a batch alone; a real ingest chains them so every stage's
+    * input is the previous stage's survivors, and replaying batches in
     * order equals a from-scratch curate of the union under the
     * (batch_no, id) tie rule (the q244 oracle replays exactly that).
     *
     * The batch TEXT is read ONCE: the first projection derives every
-    * text-dependent column — length, content digest, simhash,
-    * distinct `n`-grams — and is pinned with localCheckpoint, so the
-    * registry appends' refresh-by-path cannot re-trigger the scan
-    * and no later stage touches `textCol` again (IngestBatchSpec
-    * pins one scan in the executed plan). History is never read at
-    * all — each registry probe joins its bucketed index table. The
-    * survivors are pinned the same way, and the funnel counts are one
-    * aggregate over pinned frames: the lane chain runs once per call,
-    * and reading `survivors` afterwards is one job.
+    * text-dependent column — length, distinct `n`-grams and each
+    * lane's signature at its registry's stamped parameters
+    * ([[graft.dedup.Registry.resolve]]; the vec lane signs the
+    * `embedding` column) — and is cut, so the registry appends'
+    * refresh-by-path cannot re-trigger the scan and no later stage
+    * touches `textCol` again (IngestBatchSpec pins one scan in the
+    * executed plan). History is never read at all — each registry
+    * probe joins its bucketed index table.
+    *
+    * Signing rule, the same for every lane: a row its lane cannot sign
+    * (a null embedding; a text with no 3-token shingle for minhash)
+    * skips that lane — it is neither probed nor stored — and survives
+    * on its other verdicts. Exact and near sign every text past the
+    * quality floor.
+    *
+    * Every lane's survivors, tagged with their lane, and the last
+    * lane's decontamination verdicts land in ONE cut, so the funnel
+    * counts are one aggregate over pinned frames and reading
+    * `survivors` afterwards is one job.
     *
     * Stage order is a documented choice: registries record their
     * stage's survivors BEFORE decontamination, so a future copy of a
     * contaminated document drops cheaply at the exact stage instead
     * of re-running the gate; the contaminated original still never
     * reaches `survivors`.
-    *
-    * The optional vector lane (`vecCol` naming an embedding column
-    * on `batch`, `vecReg` a [[graft.dedup.Registry.Vec]] lane
-    * table) catches semantic duplicates whose TEXT the near-dup lane
-    * missed — re-encoded or paraphrased copies sharing an embedding.
-    * Rows with a NULL embedding skip the lane and survive on their
-    * text verdicts alone (documented convention, r13 advisory #1).
-    * An optional MINHASH lane (`minhashReg` naming a
-    * [[graft.dedup.Registry.Minhash]] lane table) slots between the
-    * SimHash and vector stages — Jaccard/set-overlap duplicates, the
-    * q249 rule — with its signature derived in the same single text
-    * scan at the registry's stamped (k, bands); `nMinhash` reports
-    * its survivors (−1 when the lane is off).
     *
     * REPLAY-IDEMPOTENT under the registry batch-number contract
     * ([[graft.dedup.Registry]]): re-running a batch under the SAME
@@ -242,77 +241,43 @@ object Pipelines {
     * append is therefore recoverable by simply re-running the batch.
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, idCol: String,
-      textCol: String, exactReg: String, nearReg: String,
+      textCol: String, lanes: Seq[(String, graft.dedup.Registry.Lane)],
       bench: DataFrame, benchTextCol: String, batchNo: Int,
-      minChars: Int = 100, n: Int = 3,
-      vecReg: Option[String] = None, vecCol: Option[String] = None,
-      maxHamming: Int = 20,
-      minhashReg: Option[String] = None,
-      minMatches: Int = 6): IngestBatchResult = {
+      minChars: Int = 100, n: Int = 3): IngestBatchResult = {
     import graft.dedup.Registry
-    import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
-    require(vecReg.isDefined == vecCol.isDefined,
-      "vecReg and vecCol come together (the vector lane needs both)")
-    // the minhash lane signs with the REGISTRY's (k, bands, shingle
-    // width) — ALL read from the marker (r14 ADVICE #4: a hardcoded
-    // width drifts from a registry maintained at another width and
-    // silently re-admits every Jaccard duplicate) — before the
-    // one-text-scan projection so the signature derives in the same
-    // pass as every other text-dependent column
-    val nearLane = Near(maxHamming)
-    val minhash = minhashReg.map(r =>
-      r -> Registry.resolve(spark, Minhash(minMatches = minMatches), r))
-    val toks = TextFunctions.tokens(col(textCol))
+    val families = lanes.map(_._2.family)
+    val chain = Seq("exact", "near", "minhash", "vec")
+    require(families.take(2) == chain.take(2) && families ==
+      chain.filter(families.contains), s"lanes run $chain in order: $families")
+    val resolved = lanes.map(r => r._1 -> Registry.resolve(spark, r._2, r._1))
     // THE one batch-text scan: every text-derived column in one
     // projection, cut (the cut severs lineage, so the registry
     // appends' table refreshes cannot reach back here)
     val derived = Pin.cut(batch.select(
-      (col(idCol).cast("long").as("doc_id") +:
-        length(col(textCol)).as("__len") +:
-        Exact.sign(col(textCol)).as("h") +:
-        nearLane.sign(col(textCol)).as("simhash") +:
-        array_distinct(TextFunctions.ngramsFast(toks, n)).as("__grams") +:
-        (vecCol.toSeq.map(c => col(c).as("__vec")) ++
-          minhash.toSeq.map(_._2.sign(col(textCol)).as("__msig")))): _*))
+      (Seq(col(idCol).cast("long").as("doc_id"),
+        length(col(textCol)).as("__len"),
+        array_distinct(TextFunctions.ngramsFast(
+          TextFunctions.tokens(col(textCol)), n)).as("__grams")) ++
+        resolved.map { case (_, l) =>
+          l.sign(col(if (l.family == "vec") "embedding" else textCol))
+            .as(l.sigCol)
+        }): _*))
 
+    // the lane fold: a lane ingests the rows alive after the lane before
+    // it that it can sign; a row survives the lane if its registry kept
+    // it or the lane cannot sign it. Both id sets are batch-bounded, so
+    // the survivor semi-join broadcasts them.
     val quality = derived.filter(col("__len") >= minChars)
-
-    val keptDigests = Registry.ingest(spark, Exact, exactReg,
-      quality.select(col("doc_id").as("keep_id"), col("h")), batchNo)
-    val exact = quality.join(
-      keptDigests.select(col("h"), col("keep_id").as("doc_id")),
-      Seq("doc_id", "h"), "left_semi")
-
-    val keptNear = Registry.ingest(spark, nearLane, nearReg,
-      exact.select(col("doc_id"), col("simhash")), batchNo)
-    val near = exact.join(keptNear.select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-
-    // optional Jaccard lane (the q249 registry) between the SimHash
-    // and vector lanes: catches set-overlap duplicates whose hamming
-    // distance passed the near gate — enabled when the caller
-    // maintains a minhash registry; the signature derives in the one
-    // text scan above at the registry's own (k, bands)
-    val keptM = minhash.map { case (reg, lane) =>
-      Registry.ingest(spark, lane, reg,
-        near.select(col("doc_id"), col("__msig").as("sig")), batchNo)
-    }
-    val jac = keptM.fold(near)(k =>
-      near.join(k.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-
-    // a doc with a NULL embedding cannot probe the vector lane
-    // (its collapse excludes nulls whole), but it must NOT vanish from
-    // the corpus (r13 advisory #1): only non-null rows pass through
-    // the vec gate; null-embedding survivors rejoin the survivor set
-    // unchanged — unique TEXT with a missing embedding stays a
-    // survivor, documented convention
-    val keptVec = vecReg.map(reg => Registry.ingest(spark, Vec(), reg,
-      jac.filter(col("__vec").isNotNull), "doc_id", "__vec", batchNo))
-    val vec = keptVec.fold(jac)(k =>
-      jac.filter(col("__vec").isNotNull)
-        .join(k.select(col("vec_id").as("doc_id")), Seq("doc_id"),
-          "left_semi")
-        .unionByName(jac.filter(col("__vec").isNull)))
+    val (survived, kept) = resolved.foldLeft(
+        Seq.empty[(DataFrame, DataFrame)]) { case (done, (reg, l)) =>
+      val alive = done.lastOption.fold(quality)(_._1)
+      val sig = col(l.sigCol)
+      val k = Registry.ingest(spark, l, reg, alive.filter(l.valid(sig))
+        .select(col("doc_id").as(l.idCol), sig), batchNo)
+      val passed = k.select(col(l.idCol).as("doc_id"))
+        .unionByName(quality.filter(!l.valid(sig)).select(col("doc_id")))
+      done :+ (alive.join(broadcast(passed), Seq("doc_id"), "left_semi") -> k)
+    }.unzip
 
     // decontamination: any shared distinct n-gram with the benchmark
     // flags the doc; the benchmark side is benchmark-bounded and
@@ -322,60 +287,44 @@ object Pipelines {
       .select(explode(array_distinct(TextFunctions.ngramsFast(
         TextFunctions.tokens(col(benchTextCol)), n))).as("__g"))
       .distinct())
-    val contaminated = vec
+    val contaminated = survived.last
       .select(col("doc_id"), explode(col("__grams")).as("__g"))
       .join(benchGrams, Seq("__g"))
       .select(col("doc_id"), lit(true).as("__dirty")).distinct()
-    // THE survivor pin: the lane chain and the decontamination join
-    // run once, here. Every pre-decontamination survivor keeps its
-    // gate verdict (and, for the funnel, whether it skipped the
-    // vector lane), so the counts below and every later read of
-    // `survivors` — the caller's corpus write — scan this pin instead
-    // of re-running the semi-join chain (IngestBatchSpec pins one job
-    // per survivor read)
-    val verdicts = Pin.cut(vec.join(contaminated, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("h"), col("simhash"),
-        col("__dirty").isNull.as("__clean"),
-        (if (keptVec.isDefined) col("__vec").isNull else lit(false))
-          .as("__novec")))
+    // THE verdict pin: every lane's survivors, tagged with the lane, and
+    // the last lane's decontamination verdict. The lane chain and the
+    // decontamination join run once, here; the funnel below and every
+    // later read of `survivors` — the caller's corpus write — scan this
+    // pin (IngestBatchSpec pins one job per survivor read)
+    def staged(s: DataFrame, family: String, clean: Column) =
+      s.select(col("doc_id"), col("h"), col("simhash"),
+        lit(family).as("__stage"), clean.as("__clean"))
+    val verdicts = Pin.cut((families.zip(survived).init.map {
+      case (f, s) => staged(s, f, lit(false)) } :+
+      staged(survived.last.join(contaminated, Seq("doc_id"), "left_outer"),
+        families.last, col("__dirty").isNull))
+      .reduce(_.unionByName(_)))
 
-    // every funnel count in ONE aggregate over frames already pinned —
-    // the batch projection, each lane's kept set and the verdicts — so
-    // no count re-executes a join. nExact/nNear/nMinhash equal their
-    // kept sets BY CONSTRUCTION (each kept digest/signature names
-    // exactly one surviving batch row — IngestBatchSpec pins the
-    // funnels); the vector lane's survivors are its kept set plus the
-    // null-embedding rows that skipped it. After it, only `verdicts`
-    // is read again: the batch projection and the kept sets are
-    // released here, the verdicts cut by the caller.
-    val kept = Seq(keptDigests, keptNear) ++ keptM ++ keptVec
-    val funnel = (Seq(
-      derived.select(lit(true).as("in"),
-        (col("__len") >= minChars).as("quality")),
-      keptDigests.select(lit(true).as("exact")),
-      keptNear.select(lit(true).as("near")),
-      verdicts.select(col("__clean").as("clean"),
-        col("__novec").as("novec"))) ++
-      keptM.map(_.select(lit(true).as("minhash"))) ++
-      keptVec.map(_.select(lit(true).as("vec"))))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    // every funnel count in ONE aggregate over the batch projection and
+    // the verdicts; the batch projection and the kept sets are released
+    // here, the verdicts cut by the caller
+    val funnel = derived.select(lit(true).as("in"),
+        (col("__len") >= minChars).as("quality"))
+      .unionByName(verdicts.select(families.map(f =>
+          (col("__stage") === f).as(f)) :+ col("__clean").as("clean"): _*),
+        allowMissingColumns = true)
     val stages = funnel.columns.toSeq
     val row =
       try funnel.select(stages.map(s => count_if(col(s))): _*).head()
       finally Pin.release(derived +: kept: _*)
     val c = stages.zipWithIndex.map { case (s, i) => s -> row.getLong(i) }
       .toMap
-    val nMinhash = c.getOrElse("minhash", -1L)
-    val nVec =
-      if (keptVec.isDefined) c("vec") + c("novec")
-      else if (keptM.isDefined) nMinhash
-      else c("near")
 
     IngestBatchResult(
       verdicts.filter(col("__clean"))
         .select(col("doc_id"), col("h"), col("simhash")),
-      c("in"), c("quality"), c("exact"), c("near"), nVec, c("clean"),
-      nMinhash)
+      c("in"), c("quality"), c("exact"), c("near"), c(families.last),
+      c("clean"), c.getOrElse("minhash", -1L))
   }
 
   /** Temperature-based mixture resampling (the α=0.5 data-mixing
@@ -508,11 +457,11 @@ object PipelineDriver {
     // whose plans were all seen before reads near zero)
     def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compiled0 = compiled
-    val hasVec = docs.columns.contains("embedding")
-    // one lane per registry dir, named graft_cli_<dir>
+    // one lane per registry dir <regBase>/<dir>, table graft_cli_<dir>,
+    // in chain order
     val lanes = Seq[(String, Registry.Lane)]("ex" -> Exact, "nr" -> Near()) ++
-      (if (hasVec) Seq("vc" -> Vec()) else Nil) ++
-      (if (minhash) Seq("mh" -> Minhash()) else Nil)
+      (if (minhash) Seq("mh" -> Minhash()) else Nil) ++
+      (if (docs.columns.contains("embedding")) Seq("vc" -> Vec()) else Nil)
     lanes.foreach { case (dir, lane) =>
       val (nm, p) = (s"graft_cli_$dir", s"$regBase/$dir")
       if (Registry.exists(spark, p))
@@ -520,12 +469,8 @@ object PipelineDriver {
       else Registry.create(spark, lane, nm, p, buckets)
     }
     val r = Pipelines.ingestBatch(spark, docs, "doc_id", "text",
-      "graft_cli_ex", "graft_cli_nr",
-      bench.getOrElse(docs.limit(0)), "text", batchNo,
-      minChars = 100,
-      vecReg = if (hasVec) Some("graft_cli_vc") else None,
-      vecCol = if (hasVec) Some("embedding") else None,
-      minhashReg = if (minhash) Some("graft_cli_mh") else None)
+      lanes.map { case (dir, lane) => s"graft_cli_$dir" -> lane },
+      bench.getOrElse(docs.limit(0)), "text", batchNo, minChars = 100)
     try r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
     finally Pin.release(r.survivors)
     println(s"[ingest] batch=$batchNo in=${r.nIn} q=${r.nQuality} " +

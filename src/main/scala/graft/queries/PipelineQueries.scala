@@ -328,8 +328,8 @@ object PipelineQueries extends QueryPack {
       val rows = try (0 until 3).map { b =>
         val r = graft.pipeline.Pipelines.ingestBatch(s,
           corpus.filter(col("doc_id") % 3 === b), "doc_id", "text",
-          exName, nrName, bench, "text", b, minChars = 100,
-          vecReg = Some(vcName), vecCol = Some("embedding"))
+          Seq(exName -> Registry.Exact, nrName -> Registry.Near(),
+            vcName -> Registry.Vec()), bench, "text", b, minChars = 100)
         Pin.release(r.survivors)
         (b, r.nIn, r.nQuality, r.nExact, r.nNear, r.nVec, r.nClean)
       } finally Pin.release(corpus)
@@ -376,7 +376,8 @@ object PipelineQueries extends QueryPack {
       def run(b: Int) = {
         val r = graft.pipeline.Pipelines.ingestBatch(s,
           corpus.filter(col("doc_id") % 2 === b), "doc_id", "text",
-          exName, nrName, bench, "text", b, minChars = 100)
+          Seq(exName -> Registry.Exact, nrName -> Registry.Near()),
+          bench, "text", b, minChars = 100)
         Pin.release(r.survivors)
         r
       }

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,14 +30,36 @@ object IndexStore {
     * Same semantics: loud failure while held, 30-min stale takeover,
     * and the same FENCING — release is owner-checked, and the append
     * paths re-validate the token immediately before their write, so
-    * a usurped writer aborts instead of double-appending.
+    * a usurped writer aborts instead of double-appending. Every
+    * mutation first heals a compaction that died mid-swap ([[heal]]).
     */
   private def withLock[T](spark: SparkSession, path: String)(
       body: graft.dedup.Registry.Lease => T): T = {
     val lease = graft.dedup.Registry.acquireLock(spark, path)
-    try body(lease)
-    finally graft.dedup.Registry.releaseLock(spark, lease)
+    try {
+      Seq("codes", "inverted").foreach(d => heal(spark, s"$path/$d"))
+      body(lease)
+    } finally graft.dedup.Registry.releaseLock(spark, lease)
   }
+
+  /** Undo a compaction that died between its two renames ([[swapDirs]]):
+    * the live dir is gone and `.compact-old` holds the original, so it
+    * moves back and the staged copy drops (compaction never changes
+    * content, so the original is always right). Only under the lease:
+    * a lock-free load can see a live compaction between its renames.
+    */
+  private def heal(spark: SparkSession, dir: String): Unit = {
+    val live = new Path(dir)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bak = sibling(live, ".compact-old")
+    if (!fs.exists(live) && fs.exists(bak)) {
+      require(fs.rename(bak, live), s"rename $bak -> $live failed")
+      fs.delete(sibling(live, ".compact-tmp"), true)
+    }
+  }
+
+  private def sibling(live: Path, suffix: String): Path =
+    new Path(live.getParent, live.getName + suffix)
 
   /** Persist a PQ index: codebooks (m·k rows), codes (m per vector),
     * and (dim, m, quantScale) — what [[Pq.adcTopKWith]] needs.
@@ -144,11 +167,8 @@ object IndexStore {
     * unreplicated localCheckpoint state — a JVM crash mid-write
     * destroyed the index; r13 advisory.)
     */
-  private def swapDirs(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path): Unit = {
-    val bak = new org.apache.hadoop.fs.Path(live.getParent,
-      live.getName + ".compact-old")
+  private def swapDirs(fs: FileSystem, live: Path, tmp: Path): Unit = {
+    val bak = sibling(live, ".compact-old")
     fs.delete(bak, true)
     require(fs.rename(live, bak), s"rename $live -> $bak failed")
     require(fs.rename(tmp, live), s"rename $tmp -> $live failed")
@@ -159,10 +179,9 @@ object IndexStore {
   private def compactDir(spark: SparkSession, dir: String,
       keys: Seq[String], crashBeforeSwap: Boolean,
       preSwap: () => Unit = () => ()): Unit = {
-    val live = new org.apache.hadoop.fs.Path(dir)
+    val live = new Path(dir)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(live.getParent,
-      live.getName + ".compact-tmp")
+    val tmp = sibling(live, ".compact-tmp")
     fs.delete(tmp, true)
     // reads the live files, writes the staged copy — no truncation,
     // no pinned-in-memory-only state

@@ -482,9 +482,9 @@ object Streams {
   /** The FULL incremental-curate chain as an ingestion stream — the
     * per-lane maintenance stream above composed the way a
     * production feed runs them: each micro-batch flows through
-    * [[graft.pipeline.Pipelines.ingestBatch]] (quality → exact
-    * registry → near registry → optional vector registry → n-gram
-    * decontam), batch text scanned once, history never; the handler
+    * [[graft.pipeline.Pipelines.ingestBatch]] (quality → the `lanes`
+    * registries in chain order → n-gram decontam), batch text scanned
+    * once, history never; the handler
     * receives the per-stage funnel plus the surviving rows to
     * append to the corpus. Micro-batch ids are the batch numbers,
     * so replaying the stream equals the sequential batch replay
@@ -501,24 +501,20 @@ object Streams {
     * pattern StreamsSpec pins by invoking a batch's ingest twice).
     */
   def ingestStream(docs: DataFrame, idCol: String, textCol: String,
-      exactReg: String, nearReg: String, bench: DataFrame,
-      benchTextCol: String, checkpoint: String, minChars: Int = 100,
-      vecReg: Option[String] = None, vecCol: Option[String] = None,
-      minhashReg: Option[String] = None)(
+      lanes: Seq[(String, graft.dedup.Registry.Lane)], bench: DataFrame,
+      benchTextCol: String, checkpoint: String, minChars: Int = 100)(
       handler: (graft.pipeline.Pipelines.IngestBatchResult, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
-        // the chain's epoch anchors at the EXACT registry; the one
-        // batch number stamps every lane, so the member registries
+        // the chain's epoch anchors at its first (exact) registry; the
+        // one batch number stamps every lane, so the member registries
         // must not be shared with differently-anchored streams
-        val r = graft.pipeline.Pipelines.ingestBatch(
-          s, batch, idCol, textCol, exactReg, nearReg,
-          bench, benchTextCol,
-          epochBatchNo(s, exactReg, checkpoint, id), minChars,
-          vecReg = vecReg, vecCol = vecCol, minhashReg = minhashReg)
+        val r = graft.pipeline.Pipelines.ingestBatch(s, batch, idCol,
+          textCol, lanes, bench, benchTextCol,
+          epochBatchNo(s, lanes.head._1, checkpoint, id), minChars)
         try handler(r, id) finally Pin.release(r.survivors)
       }
       .start()
@@ -961,10 +957,9 @@ object Streams {
       throw new IllegalStateException(s"state dir $stateDir belongs to " +
         s"another stream lineage; checkpoint $checkpoint would restart " +
         "at batch 0 and overwrite its versions")
-    val prior = Option(new java.io.File(stateDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .map(_.getName.drop(1).toLong).filter(_ < id)
+    val prior = fs.listStatus(owner.getParent)
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("v"))
+      .map(_.getPath.getName.drop(1).toLong).filter(_ < id)
     if (prior.isEmpty) None
     else Some(spark.read.parquet(s"$stateDir/v${prior.max}"))
   }

@@ -57,4 +57,16 @@ class PinSpec extends SparkSpec {
     Pin.release(cur)
     assert(pinnedIds == before)
   }
+
+  test("two caches of one plan share an entry: releasing one pin keeps " +
+      "the entry for the other") {
+    val base = spark.range(300).toDF("v")
+    val a = Pin.cache(base.select(col("v")), eager = true)
+    val b = Pin.cache(base.select(col("v")), eager = true)
+    Pin.release(a)
+    assert(b.storageLevel != StorageLevel.NONE,
+      "the other pin's entry was freed")
+    Pin.release(b)
+    assert(b.storageLevel == StorageLevel.NONE)
+  }
 }

@@ -52,8 +52,8 @@ class IngestBatchSpec extends SparkSpec {
       (12L, a, vec(3))
     ).toDF("doc_id", "text", "embedding")
     val r0 = Pipelines.ingestBatch(spark, b0, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 0, minChars = 100)
     assert((r0.nIn, r0.nQuality, r0.nExact, r0.nNear, r0.nVec, r0.nClean)
       == ((3L, 2L, 1L, 1L, 1L, 1L)))
     assert(r0.survivors.select($"doc_id").as[Long].collect().toSet
@@ -76,8 +76,8 @@ class IngestBatchSpec extends SparkSpec {
       (24L, longText("hh"), vec(7))
     ).toDF("doc_id", "text", "embedding")
     val r1 = Pipelines.ingestBatch(spark, b1, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 1, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 1, minChars = 100)
     assert((r1.nIn, r1.nQuality, r1.nExact, r1.nNear, r1.nVec, r1.nClean)
       == ((5L, 5L, 4L, 3L, 2L, 1L)),
       s"funnel was (${r1.nIn}, ${r1.nQuality}, ${r1.nExact}, " +
@@ -92,7 +92,8 @@ class IngestBatchSpec extends SparkSpec {
     val b = Seq((1L, longText("p1")), (2L, longText("p2")))
       .toDF("doc_id", "text")
     val r = Pipelines.ingestBatch(spark, b, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 0, minChars = 100)
+      Seq(ex -> Exact, nr -> Near()),
+      bench, "text", batchNo = 0, minChars = 100)
     assert((r.nNear, r.nVec, r.nClean) == ((2L, 2L, 2L)))
   }
 
@@ -107,8 +108,8 @@ class IngestBatchSpec extends SparkSpec {
       .withColumn("text", counting(col("raw")))
       .select(col("doc_id"), col("text"), col("embedding"))
     val r = Pipelines.ingestBatch(spark, b, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 0, minChars = 100)
     // the one derivation projection may reference the column a few
     // times within its single pass; without the localCheckpoint pin
     // every one of the ~8 downstream actions re-runs the scan
@@ -133,8 +134,8 @@ class IngestBatchSpec extends SparkSpec {
       (3L, longText("oc") + " " + longText("bench"), vec(3))
     ).toDF("doc_id", "text", "embedding")
     val r = Pipelines.ingestBatch(spark, b, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 0, minChars = 100)
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
@@ -171,8 +172,8 @@ class IngestBatchSpec extends SparkSpec {
       (12L, longText("na"), nullVec)
     ).toDF("doc_id", "text", "embedding")
     val r0 = Pipelines.ingestBatch(spark, b0, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 0, minChars = 100)
     assert(r0.survivors.select($"doc_id").as[Long].collect().toSet
       == Set(10L, 11L),
       "null-embedding doc must survive; its exact text copy must drop")
@@ -185,8 +186,8 @@ class IngestBatchSpec extends SparkSpec {
     val b1 = Seq((20L, longText("nc"), vec(1))).toDF(
       "doc_id", "text", "embedding")
     val r1 = Pipelines.ingestBatch(spark, b1, "doc_id", "text",
-      ex, nr, bench, "text", batchNo = 1, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", batchNo = 1, minChars = 100)
     assert(r1.survivors.count() == 0L && r1.nVec == 0L)
   }
 
@@ -204,12 +205,12 @@ class IngestBatchSpec extends SparkSpec {
       (12L, longText("rd") + " " + longText("bench"), vec(4)), // decontam
       (13L, longText("re"), vec(5))           // survivor
     ).toDF("doc_id", "text", "embedding")
-    Pipelines.ingestBatch(spark, b0, "doc_id", "text", ex, nr,
-      bench, "text", 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+    Pipelines.ingestBatch(spark, b0, "doc_id", "text",
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", 0, minChars = 100)
     val first = Pipelines.ingestBatch(spark, b1, "doc_id", "text",
-      ex, nr, bench, "text", 1, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", 1, minChars = 100)
     val firstSurv = first.survivors
       .select($"doc_id", $"h", $"simhash")
       .as[(Long, String, Long)].collect().toSet
@@ -218,8 +219,8 @@ class IngestBatchSpec extends SparkSpec {
     // the crash happened AFTER all registry appends but BEFORE the
     // caller appended survivors to the corpus; the scheduler re-runs
     val replay = Pipelines.ingestBatch(spark, b1, "doc_id", "text",
-      ex, nr, bench, "text", 1, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", 1, minChars = 100)
     assert((replay.nIn, replay.nQuality, replay.nExact, replay.nNear,
       replay.nVec, replay.nClean) == ((first.nIn, first.nQuality,
       first.nExact, first.nNear, first.nVec, first.nClean)),
@@ -238,9 +239,9 @@ class IngestBatchSpec extends SparkSpec {
     val bench = Seq((0L, longText("bench"))).toDF("doc_id", "text")
     val b0 = Seq((1L, longText("ma"), vec(1))).toDF(
       "doc_id", "text", "embedding")
-    Pipelines.ingestBatch(spark, b0, "doc_id", "text", ex, nr,
-      bench, "text", 0, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+    Pipelines.ingestBatch(spark, b0, "doc_id", "text",
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", 0, minChars = 100)
     // simulate the crashed attempt of batch 1: ONLY the exact-stage
     // append landed (same digest derivation ingestBatch uses)
     val b1 = Seq((10L, longText("mb"), vec(2)), (11L, longText("ma"), vec(3)))
@@ -253,9 +254,9 @@ class IngestBatchSpec extends SparkSpec {
       batchNo = 1)
     val exRows = spark.table(ex).count()
     // the retry runs the full chain under the same batch number
-    val r = Pipelines.ingestBatch(spark, b1, "doc_id", "text", ex, nr,
-      bench, "text", 1, minChars = 100,
-      vecReg = Some(vc), vecCol = Some("embedding"))
+    val r = Pipelines.ingestBatch(spark, b1, "doc_id", "text",
+      Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+      bench, "text", 1, minChars = 100)
     assert(r.survivors.select($"doc_id").as[Long].collect().toSet
       == Set(10L), "11 duplicates batch 0's text; 10 survives")
     assert(spark.table(ex).count() == exRows,
@@ -292,9 +293,9 @@ class IngestBatchSpec extends SparkSpec {
       rows.toDF("doc_id", "text", "embedding")
     // 4-lane chained driver
     val rs = Seq(b0, b1).zipWithIndex.map { case (rows, b) =>
-      Pipelines.ingestBatch(spark, df(rows), "doc_id", "text", ex, nr,
-        bench, "text", b, minChars = 100, vecReg = Some(vc),
-        vecCol = Some("embedding"), minhashReg = Some(mh))
+      Pipelines.ingestBatch(spark, df(rows), "doc_id", "text",
+        Seq(ex -> Exact, nr -> Near(), mh -> Minhash(), vc -> Vec()),
+        bench, "text", b, minChars = 100)
     }
     // manual composition: quality → exact → near → minhash → vec
     // (empty bench keeps decontam a no-op in both paths)
@@ -333,6 +334,25 @@ class IngestBatchSpec extends SparkSpec {
     assert(spark.table(vc).count() == spark.table(vc2).count())
   }
 
+  test("a document the minhash lane cannot sign skips that lane and " +
+      "survives on its other verdicts; no minhash row is stored for it") {
+    val (ex, nr, vc) = freshRegs("mhskip")
+    val mh = "graft_ib_mh_mhskip"
+    Registry.create(spark, Minhash(), mh, s"$tmp/graft_ib/mhskip/mh", 4)
+    val bench = Seq((0L, longText("bench"))).toDF("doc_id", "text")
+    // 120 characters in one token: past the quality floor, no shingle
+    val b = Seq((1L, "z" * 120, vec(1)), (2L, longText("sk"), vec(2)))
+      .toDF("doc_id", "text", "embedding")
+    val r = Pipelines.ingestBatch(spark, b, "doc_id", "text",
+      Seq(ex -> Exact, nr -> Near(), mh -> Minhash(), vc -> Vec()),
+      bench, "text", 0, minChars = 100)
+    assert(r.survivors.select($"doc_id").as[Long].collect().toSet
+      == Set(1L, 2L))
+    assert((r.nMinhash, r.nVec, r.nClean) == ((2L, 2L, 2L)))
+    assert(spark.table(mh).select($"doc_id").as[Long].collect().toSet
+      == Set(2L))
+  }
+
   test("replaying batches equals the from-scratch first-seen rule " +
       "on the union (ids increasing across batches)") {
     val (ex, nr, vc) = freshRegs("replay")
@@ -349,8 +369,8 @@ class IngestBatchSpec extends SparkSpec {
     val kept = batches.zipWithIndex.flatMap { case (rows, b) =>
       Pipelines.ingestBatch(spark,
         rows.toDF("doc_id", "text", "embedding"), "doc_id", "text",
-        ex, nr, bench, "text", b, minChars = 100,
-        vecReg = Some(vc), vecCol = Some("embedding"))
+        Seq(ex -> Exact, nr -> Near(), vc -> Vec()),
+        bench, "text", b, minChars = 100)
         .survivors.select($"doc_id").as[Long].collect()
     }.toSet
     // from scratch: min id per distinct text (ids increase with

@@ -222,6 +222,26 @@ class IndexStoreSpec extends SparkSpec {
       .orderBy($"query_id", $"rank")
       .as[(Long, Long, Long, Int)].collect().toList
     assert(afterCompact == before)
+    // a crash BETWEEN the two renames: `codes` is gone, the original
+    // sits in `.compact-old` and the staged copy in `.compact-tmp`; the
+    // next append restores the original before it writes
+    IndexStore.compactPqStaged(spark, path)
+    assert(new java.io.File(s"$path/codes")
+      .renameTo(new java.io.File(s"$path/codes.compact-old")))
+    val nCodes = spark.read.parquet(s"$path/codes.compact-old").count()
+    IndexStore.appendPq(spark, path,
+      (300 until 310).map(i =>
+        (i.toLong, Array(-10f, -10f - i * 0.01f, 0f, 0f))).toDF("id", "vec"),
+      "id", "vec")
+    assert(spark.read.parquet(s"$path/codes").count() == nCodes + 20,
+      "the original codes plus the batch (m=2 codes per vector)")
+    assert(!new java.io.File(s"$path/codes.compact-old").exists() &&
+      !new java.io.File(s"$path/codes.compact-tmp").exists())
+    // the batch sits far from query 0, so its neighbours are unchanged
+    val healed = IndexStore.pqTopK(spark, path, queries, "id", "vec", 20)
+      .filter($"query_id" === 0L).orderBy($"rank")
+      .as[(Long, Long, Long, Int)].collect().toList
+    assert(healed == before.filter(_._1 == 0L))
   }
 
   test("artifact mutations hold the single-writer lease: a second " +

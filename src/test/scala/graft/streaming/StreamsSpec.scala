@@ -666,7 +666,8 @@ class StreamsSpec extends SparkSpec {
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     val survivors = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = Streams.ingestStream(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", "graft_ingstr_ex", "graft_ingstr_nr",
+      "doc_id", "text",
+      Seq("graft_ingstr_ex" -> Exact, "graft_ingstr_nr" -> Near()),
       bench, "text", s"$base/chk") { (r, id) =>
       funnels += ((id, r.nIn, r.nNear, r.nClean))
       survivors ++= r.survivors.select($"doc_id").as[Long].collect()
@@ -705,7 +706,8 @@ class StreamsSpec extends SparkSpec {
       r.survivors.write.mode("overwrite")
         .parquet(s"$base/corpus/batch_no=$id")
     val q = Streams.ingestStream(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", "graft_ingrp_ex", "graft_ingrp_nr",
+      "doc_id", "text",
+      Seq("graft_ingrp_ex" -> Exact, "graft_ingrp_nr" -> Near()),
       bench, "text", s"$base/chk")(sink)
     val a = long("aa")
     try {
@@ -724,7 +726,8 @@ class StreamsSpec extends SparkSpec {
     // call the stream's wrapper makes, same batch id
     val replayed = graft.pipeline.Pipelines.ingestBatch(spark,
       Seq((10L, a), (11L, long("cc"))).toDF("doc_id", "text"),
-      "doc_id", "text", "graft_ingrp_ex", "graft_ingrp_nr",
+      "doc_id", "text",
+      Seq("graft_ingrp_ex" -> Exact, "graft_ingrp_nr" -> Near()),
       bench, "text", batchNo = 1, minChars = 100)
     assert(replayed.survivors.select($"doc_id").as[Long].collect().toSet
       == Set(11L), "replayed batch must see its original survivors")
@@ -755,7 +758,8 @@ class StreamsSpec extends SparkSpec {
     def runOnce(): Unit = {
       val q = Streams.ingestStream(
         spark.readStream.schema(schema).parquet(s"$base/in"),
-        "doc_id", "text", "graft_ingrs_ex", "graft_ingrs_nr",
+        "doc_id", "text",
+        Seq("graft_ingrs_ex" -> Exact, "graft_ingrs_nr" -> Near()),
         bench, "text", s"$base/chk")(sink)
       try q.processAllAvailable() finally q.stop()
     }
@@ -781,8 +785,8 @@ class StreamsSpec extends SparkSpec {
     Seq((b0, 0), (b1, 1)).foreach { case (rows, b) =>
       graft.pipeline.Pipelines.ingestBatch(spark,
         rows.toDF("doc_id", "text"), "doc_id", "text",
-        "graft_ingrs_ex2", "graft_ingrs_nr2", bench, "text", b,
-        minChars = 100)
+        Seq("graft_ingrs_ex2" -> Exact, "graft_ingrs_nr2" -> Near()),
+        bench, "text", b, minChars = 100)
     }
     assert(spark.table("graft_ingrs_ex").as[(String, Long, Int)]
       .collect().toSet ==
@@ -797,29 +801,33 @@ class StreamsSpec extends SparkSpec {
   test("hllMaintStream: maintained registers == from-scratch; estimates agree") {
     import java.nio.file.Files
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, String)]
     val base = Files.createTempDirectory("graft-hll").toString
-    val stateDir = s"$base/state"
-    val q = Streams.maintainStream(Maintained.hll("k", Seq("g")),
-      input.toDF().toDF("g", "k"), stateDir, s"$base/chk")
-    try {
-      val b1 = (1 to 400).map(i => ("a", s"u${i % 150}")) ++
-        (1 to 100).map(i => ("b", s"v$i"))
-      val b2 = (1 to 300).map(i => ("a", s"u${100 + i}")) ++
-        (1 to 50).map(i => ("b", s"v${i + 80}"))
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-      val maintained = spark.read.parquet(s"$stateDir/v1")
-      val scratch = graft.ops.Hll.registers(
-        (b1 ++ b2).toDF("g", "k"), "k", Seq("g"))
-      assert(maintained.as[(String, Int, Int)].collect().toSet ==
-        scratch.as[(String, Int, Int)].collect().toSet)
-      val estM = graft.ops.Hll.estimate(maintained, Seq("g"))
-        .as[(String, Long, Long)].collect().toSet
-      val estS = graft.ops.Hll.estimate(scratch, Seq("g"))
-        .as[(String, Long, Long)].collect().toSet
-      assert(estM == estS)
-    } finally q.stop()
+    // the state dir as a plain path and as a Hadoop `file:` URI: the
+    // prior version must be found through either form
+    Seq(s"$base/state", s"file:$base/state_uri").zipWithIndex.foreach {
+        case (stateDir, n) =>
+      val input = MemoryStream[(String, String)]
+      val q = Streams.maintainStream(Maintained.hll("k", Seq("g")),
+        input.toDF().toDF("g", "k"), stateDir, s"$base/chk$n")
+      try {
+        val b1 = (1 to 400).map(i => ("a", s"u${i % 150}")) ++
+          (1 to 100).map(i => ("b", s"v$i"))
+        val b2 = (1 to 300).map(i => ("a", s"u${100 + i}")) ++
+          (1 to 50).map(i => ("b", s"v${i + 80}"))
+        input.addData(b1: _*); q.processAllAvailable()
+        input.addData(b2: _*); q.processAllAvailable()
+        val maintained = spark.read.parquet(s"$stateDir/v1")
+        val scratch = graft.ops.Hll.registers(
+          (b1 ++ b2).toDF("g", "k"), "k", Seq("g"))
+        assert(maintained.as[(String, Int, Int)].collect().toSet ==
+          scratch.as[(String, Int, Int)].collect().toSet, stateDir)
+        val estM = graft.ops.Hll.estimate(maintained, Seq("g"))
+          .as[(String, Long, Long)].collect().toSet
+        val estS = graft.ops.Hll.estimate(scratch, Seq("g"))
+          .as[(String, Long, Long)].collect().toSet
+        assert(estM == estS)
+      } finally q.stop()
+    }
   }
 
   test("nearRegistryMaintStream: streamed near-dedup equals the sequential replay") {
