@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Pin
@@ -22,7 +23,7 @@ import graft.text.TextFunctions
   * Scale shape: the registry holds 16-byte digests + keeper ids —
   * the INDEX, never the corpus (at 100 TB of text the digest table
   * is ~0.01% of corpus bytes). A batch ingest pays: one batch-side
-  * digest aggregate, one equi-join against the bucketed registry
+  * representative window, one equi-join against the bucketed registry
   * (registry side exchange-free off the bucket layout; only the
   * batch — the small side by construction — shuffles to align),
   * and one bucket-aligned append of the new digests. History text
@@ -390,14 +391,22 @@ object Registry {
     markerAt(fs, dir).flatMap(_.extras.get("lease_ms")).map(_.toLong)
       .getOrElse(DefaultLeaseMs)
 
+  /** Run `body` holding the leases of the registries at `paths`,
+    * taken in that order and released in reverse; `body` gets each
+    * path's lease. A retired registry is refused before its lease.
+    */
+  private def withLocks[T](spark: SparkSession, paths: Seq[String])(
+      body: Map[String, Lease] => T): T =
+    paths.foldRight(body) { (path, inner) => held =>
+      val dir = new Path(path)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      requireNotRetired(markerAt(fs, dir), dir)
+      val lease = acquireLock(spark, path, leaseHorizon(fs, dir))
+      try inner(held + (path -> lease)) finally releaseLock(spark, lease)
+    }(Map.empty)
+
   private def withLock[T](spark: SparkSession, path: String)(
-      body: Lease => T): T = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotRetired(markerAt(fs, dir), dir)
-    val lease = acquireLock(spark, path, leaseHorizon(fs, dir))
-    try body(lease) finally releaseLock(spark, lease)
-  }
+      body: Lease => T): T = withLocks(spark, Seq(path))(l => body(l(path)))
 
   /** The table's physical location — the registry directory every
     * lease, marker and compaction swap is anchored to.
@@ -441,7 +450,7 @@ object Registry {
   /** One dedup registry family: exact digests, SimHash windows
     * (near), MinHash bands or RHP-bucketed vectors. A lane holds only
     * what differs between the families; [[create]], [[attach]],
-    * [[ingest]], [[compact]] and the stream twin
+    * [[ingestChain]], [[compact]] and the stream twin
     * ([[graft.streaming.Streams.registryMaintStream]]) are written
     * once over it. Per lane:
     *
@@ -451,14 +460,15 @@ object Registry {
     *    ([[resolve]]) instead of trusted from the caller, because a
     *    probe signed differently matches nothing and silently
     *    re-admits every duplicate;
-    *  - the signing step (text, or the embedding, → signature);
-    *  - the representative collapse: nulls dropped (a null key never
-    *    matches a join, so it would re-append every batch forever),
-    *    min id per signature;
-    *  - the explode of representatives into stored-row shape
-    *    (`stored`: none, windows, bands, or the RHP signature);
+    *  - the signing step (text, or the embedding, → signature) and
+    *    which signatures are valid (a null one never matches a join,
+    *    so it would re-append every batch forever);
+    *  - the probe keys of a signature (`keys`: one key row per
+    *    stored row — the digest, the windows, the bands or the RHP
+    *    signature); a stored row is a key row plus the id and the
+    *    signature;
     *  - the match predicate between a probe and a stored row sharing
-    *    its bucket keys (none: key equality is the match);
+    *    its keys (none: key equality is the match);
     *  - the heal key a replay anti-joins its own prior rows on.
     *
     * A lane value carries its match parameters; the defaults are the
@@ -468,7 +478,7 @@ object Registry {
       private[dedup] val ddl: String, val bucketCol: String,
       private[graft] val sigCol: String, private[graft] val idCol: String,
       private[dedup] val healKey: Seq[String],
-      private[dedup] val out: Seq[String]) {
+      private[dedup] val keyCols: Seq[String]) {
     private[dedup] def stamps: Map[String, String] = Map.empty
     /** This lane at the physical parameters a marker stamped. */
     private[dedup] def stamped(m: Map[String, String], at: Path): Lane = this
@@ -481,11 +491,15 @@ object Registry {
       * is neither probed nor stored.
       */
     private[graft] def valid(sig: Column): Column = sig.isNotNull
-    private[dedup] def collapse(signed: DataFrame): DataFrame =
-      signed.filter(valid(col(sigCol))).groupBy(col(sigCol))
-        .agg(min(col(idCol)).as(idCol))
-    private[dedup] def stored(reps: DataFrame): DataFrame = reps
-    private[dedup] def probeKeys: Seq[String] = Seq(bucketCol)
+    /** A signature's key rows: an array of `keyCols` structs. */
+    private[dedup] def keys(sig: Column): Column
+    /** (id, signature) rows → stored rows, in the table's column order. */
+    private[dedup] def stored(df: DataFrame): DataFrame =
+      df.select(explode(keys(col(sigCol))).as("__k"), col(idCol), col(sigCol))
+        .select(keyCols.map(k => col(s"__k.$k").as(k)) ++
+          (idCol +: Seq(sigCol).diff(keyCols)).map(col): _*)
+    /** What [[ingest]] returns per kept (id, signature) row. */
+    private[dedup] def out: Seq[Column] = Seq(col(idCol), col(sigCol))
     private[dedup] def matches(p: Column, r: Column): Option[Column] = None
   }
 
@@ -494,8 +508,10 @@ object Registry {
     */
   case object Exact extends Lane("exact",
       "(h STRING, keep_id BIGINT, batch_no INT)", "h", "h", "keep_id",
-      Seq("h"), Seq("h", "keep_id")) {
+      Seq("h"), Seq("h")) {
     def sign(text: Column): Column = TextFunctions.contentHash(text)
+    private[dedup] def keys(h: Column) = array(struct(h.as("h")))
+    override private[dedup] def out = Seq(col("h"), col("keep_id"))
   }
 
   /** Hamming-close token distributions (SimHash): one row per
@@ -509,20 +525,14 @@ object Registry {
     */
   final case class Near(maxHamming: Int = 20) extends Lane("near",
       "(w INT, bucket BIGINT, doc_id BIGINT, simhash BIGINT, batch_no INT)",
-      "bucket", "simhash", "doc_id", Seq("w", "doc_id"),
-      Seq("doc_id", "simhash")) {
+      "bucket", "simhash", "doc_id", Seq("w", "doc_id"), Seq("w", "bucket")) {
     val tables = 2
     def sign(text: Column) = Dedup.simhash60(TextFunctions.tokens(text))
     /** Window t is the 15-bit slice at bits [60−15(t+1), 60−15t). */
-    override private[dedup] def stored(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("simhash"),
-          explode(array((0 until tables).map(t => struct(
-            lit(t).as("w"),
-            shiftright(col("simhash"), 60 - 15 * (t + 1))
-              .bitwiseAND(lit(32767L)).as("bucket"))): _*)).as("__wb"))
-        .select(col("__wb.w").as("w"), col("__wb.bucket").as("bucket"),
-          col("doc_id"), col("simhash"))
-    override private[dedup] def probeKeys = Seq("w", "bucket")
+    private[dedup] def keys(simhash: Column) =
+      array((0 until tables).map(t => struct(lit(t).as("w"),
+        shiftright(simhash, 60 - 15 * (t + 1)).bitwiseAND(lit(32767L))
+          .as("bucket"))): _*)
     override private[dedup] def matches(p: Column, r: Column) =
       Some(Dedup.hammingDist(p, r) <= maxHamming)
   }
@@ -542,7 +552,7 @@ object Registry {
   final case class Minhash(k: Int = 8, bands: Int = 4, shingleW: Int = 3,
       minMatches: Int = 6) extends Lane("minhash",
       "(b INT, bucket STRING, doc_id BIGINT, sig ARRAY<STRING>, batch_no INT)",
-      "bucket", "sig", "doc_id", Seq("b", "doc_id"), Seq("doc_id", "sig")) {
+      "bucket", "sig", "doc_id", Seq("b", "doc_id"), Seq("b", "bucket")) {
     require(k % bands == 0, s"bands must divide k; got k=$k bands=$bands")
     require(shingleW >= 1, s"shingleW must be >= 1; got $shingleW")
     require(minMatches >= k / bands,
@@ -571,11 +581,9 @@ object Registry {
       */
     override private[graft] def valid(sig: Column) =
       sig.isNotNull && size(filter(sig, x => x.isNotNull)) > 0
-    override private[dedup] def stored(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("sig"),
-          posexplode(Dedup.bandKeys(col("sig"), bands, k / bands)))
-        .select(col("pos").cast("int").as("b"), col("col").as("bucket"),
-          col("doc_id"), col("sig"))
+    private[dedup] def keys(sig: Column) =
+      transform(Dedup.bandKeys(sig, bands, k / bands),
+        (key, b) => struct(b.as("b"), key.as("bucket")))
     override private[dedup] def matches(p: Column, r: Column) =
       Some(size(filter(zip_with(p, r, (x, y) => x === y), m => m))
         >= minMatches)
@@ -599,7 +607,7 @@ object Registry {
   final case class Vec(planes: Int = 16, threshold: Double = 0.99,
       roundTo: Int = 6) extends Lane("vec",
       "(sig BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>, batch_no INT)",
-      "sig", "embedding", "vec_id", Seq("vec_id"), Seq("vec_id", "sig")) {
+      "sig", "embedding", "vec_id", Seq("vec_id"), Seq("sig")) {
     override private[dedup] def stamps =
       Map("planes" -> planes.toString, "hash" -> RhpHashVersion)
     override private[dedup] def stamped(m: Map[String, String], at: Path) = {
@@ -609,15 +617,14 @@ object Registry {
           "(every duplicate silently re-admitted); rekeyVec to migrate"))
       copy(planes = m.get("planes").fold(planes)(_.toInt))
     }
-    /** The embedding is its own signature; the RHP bucket key is
-      * derived once per representative.
+    /** The embedding is its own signature; the RHP bucket key is its
+      * one key row.
       */
     def sign(v: Column): Column = v
-    override private[dedup] def collapse(signed: DataFrame) =
-      super.collapse(signed)
-        .withColumn("sig", Ann.rhpSignature(col("embedding"), planes))
-    override private[dedup] def stored(df: DataFrame): DataFrame =
-      df.select(col("sig"), col("vec_id"), col("embedding"))
+    private[dedup] def keys(v: Column) =
+      array(struct(Ann.rhpSignature(v, planes).as("sig")))
+    override private[dedup] def out = Seq(col("vec_id"),
+      Ann.rhpSignature(col("embedding"), planes).as("sig"))
     override private[dedup] def matches(p: Column, r: Column) =
       Some(round(Ann.dot(p, r) / (Ann.norm(p) * Ann.norm(r)), roundTo)
         >= threshold)
@@ -731,7 +738,8 @@ object Registry {
     */
   def dedupBatch(spark: SparkSession, name: String, batch: DataFrame,
       idCol: String, textCol: String): DataFrame =
-    Exact.collapse(Exact.signed(batch, idCol, textCol))
+    Exact.signed(batch, idCol, textCol).filter(col("h").isNotNull)
+      .groupBy(col("h")).agg(min(col("keep_id")).as("keep_id"))
       .join(spark.table(name).select(col("h")), Seq("h"), "left_anti")
 
   /** Ingest one raw batch: [[Lane.sign]] `srcCol` (text, or the
@@ -744,79 +752,137 @@ object Registry {
     ingest(spark, lane, name,
       resolve(spark, lane, name).signed(batch, idCol, srcCol), batchNo)
 
-  /** Ingest one batch of PRECOMPUTED signatures — `signed` holds the
-    * lane's (id, signature) columns: (keep_id, h) for [[Exact]],
-    * (doc_id, simhash) for [[Near]], (doc_id, sig) for [[Minhash]]
-    * at the marker's parameters, (vec_id, embedding) for [[Vec]].
-    * This is the entry a single-scan pipeline uses
-    * ([[graft.pipeline.Pipelines.ingestBatch]]): the caller derives
-    * every text-dependent column in one projection and each registry
-    * stage consumes its slice without re-reading the text.
-    *
-    * A batch row survives iff it is its signature's representative
-    * (min id within the batch) and no registered row matches it
-    * ([[Lane]]). History text is never read — signatures are the
-    * whole state. The survivors' rows append bucket-aligned
-    * (insertInto keeps the table's bucket spec), stamped `batchNo`;
-    * returns the survivors' [[Lane]] output columns — a view of a cut
-    * the caller releases with `graft.ops.Pin.release`.
-    *
-    * Replay safety (see the object doc): the probe anti-joins the
-    * registry MINUS this batch's own prior rows (null-safe, so a
-    * legacy null stamp still counts as "someone else's"), making the
-    * survivor set a pure function of (batch, everyone-else's state);
-    * the append then skips rows a crashed attempt already committed.
-    * Re-ingesting the same batch under a NEW number appends nothing
-    * and returns zero rows (its signatures are history now).
+  /** Ingest one batch of PRECOMPUTED signatures into one registry — a
+    * chain of one ([[ingestChain]]). `signed` holds the lane's (id,
+    * signature) columns: (keep_id, h) for [[Exact]], (doc_id, simhash)
+    * for [[Near]], (doc_id, sig) for [[Minhash]] at the marker's
+    * parameters, (vec_id, embedding) for [[Vec]]. Returns the kept
+    * rows' lane output columns — (h, keep_id), (doc_id, simhash),
+    * (doc_id, sig), (vec_id, RHP sig) — a view of a cut the caller
+    * releases with `graft.ops.Pin.release`. Re-ingesting the same
+    * batch under a NEW number appends nothing and returns zero rows
+    * (its signatures are history now).
     */
   def ingest(spark: SparkSession, lane: Lane, name: String,
       signed: DataFrame, batchNo: Int): DataFrame = {
-    val loc = tableLocation(spark, name)
     val l = resolve(spark, lane, name)
-    withLock(spark, registryRoot(loc).toString) { lease =>
-      // reps PINNED: it feeds both the probe and the kept anti-join —
-      // un-materialized, the signature kernel and the collapse re-ran
-      // per reference, and an AQE join-strategy flip on the anti-join
-      // could re-run them again. One checkpoint of the batch-bounded
-      // representatives makes both harmless, and licenses dropping a
-      // distinct on the matched ids: the left_anti tests key
-      // existence, so duplicate matches (bounded by candidates per
-      // probe) change nothing.
-      val reps = Pin.cut(l.collapse(signed))
-      val others = spark.table(name)
-        .filter(!(col("batch_no") <=> lit(batchNo)))
-      val keys = l.probeKeys
-      val fresh = l.matches(col(l.sigCol), col("__r")) match {
-        case None =>
-          reps.join(others.select(keys.map(col): _*), keys, "left_anti")
-        case Some(hit) =>
-          val matched = l.stored(reps)
-            .join(others.select(keys.map(col) :+ col(l.sigCol).as("__r"): _*),
-              keys)
-            .filter(hit).select(col(l.idCol))
-          reps.join(matched, Seq(l.idCol), "left_anti")
+    // the chain reads its input twice (probes, verdicts): one cut
+    // signs the batch once
+    val in = Pin.cut(signed.select(
+      col(l.idCol).cast("long").as("doc_id"), col(l.sigCol)))
+    try ingestChain(spark, Seq(name -> l), in, batchNo)
+      .filter(kept(l)).select(col("doc_id").as(l.idCol), col(l.sigCol))
+      .select(l.out: _*)
+    finally Pin.release(in)
+  }
+
+  /** In [[ingestChain]]'s verdicts: whether `lane` kept the row — it is
+    * its signature's representative and no registered row matches it.
+    */
+  def kept(lane: Lane): Column = col(s"__kept_${lane.family}")
+
+  /** In [[ingestChain]]'s verdicts: whether the row is alive after
+    * `lane` — alive before it and kept, or not signable by it.
+    */
+  def survived(lane: Lane): Column = col(s"__alive_${lane.family}")
+
+  /** One batch through a chain of registries — the `(registry table,
+    * lane)` list in order, each lane seeing the rows alive after the
+    * lane before it. `signed` holds one row per document: a long
+    * `doc_id`, each lane's signature column at its registry's
+    * stamped parameters ([[resolve]]) and any further columns, which
+    * ride along into the verdicts. It is read once per lane for the
+    * probes and once for the verdicts, so it should be a cut or a
+    * cheap plan over one. `entry` marks the rows that enter the chain
+    * (a quality floor); the rest stay in the verdicts as never alive.
+    *
+    * A row is a lane's representative when it is alive before the
+    * lane, the lane can sign it, and it has the least id among such
+    * rows with its signature; the lane keeps a representative no
+    * registered row matches ([[Lane]]). A row is alive after the lane
+    * when it was alive before it and is kept, or when the lane cannot
+    * sign it (a null embedding, no shingle) — it skips that lane. The
+    * kept rows append to the lane's registry, bucket-aligned and
+    * stamped `batchNo`. History text is never read — signatures are
+    * the whole state.
+    *
+    * Every lane's lease is taken first, in name order, and held until
+    * the last append. Then ONE plan over `signed` computes every
+    * lane's probe verdict, representatives and survival flags
+    * ([[kept]], [[survived]]), and one cut pins that per-document
+    * verdict table. Each lane's probe joins the batch's key rows with
+    * its registry, scanned once and streaming past the batch side, and
+    * the ids of the rows a registered row matches (batch-bounded)
+    * broadcast to the verdicts. Each lane's representative window
+    * partitions the batch by that lane's signature, as a per-lane
+    * aggregate would; a batch row id that repeats with one signature
+    * keeps one row. Then, lane by lane, the lease is validated and the
+    * lane's kept rows, read from the cut, append. Probing every lane
+    * before any append gives the verdicts of probing each lane just
+    * before its own, because no lane reads another lane's table and no
+    * other writer can append while the leases are held. The cut severs
+    * lineage, so an append's refresh of its table cannot make the
+    * verdicts recompute against the grown registry.
+    *
+    * Replay safety (see the object doc): each probe reads its registry
+    * MINUS this batch's own prior rows (null-safe, so a legacy null
+    * stamp still counts as "someone else's"), making the verdicts a
+    * pure function of (batch, everyone-else's state); each append then
+    * skips the rows a crashed attempt already committed. Returns the
+    * verdicts, a cut the caller releases with `graft.ops.Pin.release`.
+    */
+  def ingestChain(spark: SparkSession, lanes: Seq[(String, Lane)],
+      signed: DataFrame, batchNo: Int,
+      entry: Column = lit(true)): DataFrame = {
+    require(lanes.map(_._2.family).distinct.size == lanes.size,
+      s"one lane per family: ${lanes.map(_._2.family)}")
+    val regs = lanes.map { case (name, lane) =>
+      (name, tableLocation(spark, name), resolve(spark, lane, name))
+    }
+    def root(loc: Path) = registryRoot(loc).toString
+    withLocks(spark, regs.sortBy(_._1).map(r => root(r._2))) { leases =>
+      val judged = regs.foldLeft(signed.withColumn("__alive", entry)) {
+        case (f, (name, _, l)) =>
+          val sig = col(l.sigCol)
+          // the probe: the batch's key rows join the registry on the
+          // keys (the batch side builds, the registry streams past it)
+          // and a registered row matching the signature is a hit; the
+          // hit ids, batch-bounded, broadcast to the lane's verdicts
+          val probes = signed.filter(l.valid(sig))
+            .select(col("doc_id").as("__h"), sig.as("__p"), inline(l.keys(sig)))
+          val pairs = broadcast(probes).join(spark.table(name)
+            .filter(!(col("batch_no") <=> lit(batchNo)))
+            .select(l.keyCols.map(col) :+ col(l.sigCol).as("__r"): _*),
+            l.keyCols)
+          val hits = l.matches(col("__p"), col("__r")).fold(pairs)(pairs.filter)
+            .select(col("__h"))
+          val hit = broadcast(hits).where(col("__h") === col("doc_id").outer())
+            .exists()
+          // the representative: the least id among the eligible rows
+          // sharing the signature
+          val eligible = col("__alive") && l.valid(sig)
+          val rank = Window.partitionBy(sig).orderBy(!eligible, col("doc_id"))
+          f.withColumn(s"__kept_${l.family}", eligible &&
+              row_number().over(rank) === 1 && !hit)
+            .withColumn("__alive", col("__alive") &&
+              (!l.valid(sig) || kept(l)))
+            .withColumn(s"__alive_${l.family}", col("__alive"))
       }
-      // the survivor set must be pinned BEFORE the append, and a
-      // cache is NOT enough: the insert refreshes the table by path,
-      // which invalidates every cached plan referencing it —
-      // including the survivors, which would lazily recompute against
-      // the just-updated registry and vanish. A cut severs the
-      // lineage (the plan becomes an RDD scan with no table
-      // reference), so the refresh cannot touch it. `reps` is dead
-      // once `kept` is cut; `kept` is the caller's to release.
-      val kept = Pin.cut(fresh.select(reps.columns.map(col): _*))
-      Pin.release(reps)
-      validateLease(spark, lease)
-      // a replay only appends what the crashed attempt missed; the
-      // explicit re-select after the join restores the stored column
-      // order (the join key leads the join output, and insertInto
-      // binds by POSITION)
-      val rows = l.stored(kept)
-      rows.join(ownRows(spark, name, loc, batchNo)
-          .select(l.healKey.map(col): _*), l.healKey, "left_anti")
-        .select(rows.columns.map(col) :+ lit(batchNo).as("batch_no"): _*)
-        .write.mode(SaveMode.Append).insertInto(name)
-      kept.select(l.out.map(col): _*)
+      val verdicts = Pin.cut(judged.drop("__alive"))
+      try regs.foreach { case (name, loc, l) =>
+        validateLease(spark, leases(root(loc)))
+        // a replay only appends what the crashed attempt missed; the
+        // explicit re-select after the join restores the stored column
+        // order (the join key leads the join output, and insertInto
+        // binds by POSITION)
+        val rows = l.stored(verdicts.filter(kept(l))
+          .select(col("doc_id").as(l.idCol), col(l.sigCol)))
+        rows.join(ownRows(spark, name, loc, batchNo)
+            .select(l.healKey.map(col): _*), l.healKey, "left_anti")
+          .select(rows.columns.map(col) :+ lit(batchNo).as("batch_no"): _*)
+          .write.mode(SaveMode.Append).insertInto(name)
+      } catch { case e: Throwable => Pin.release(verdicts); throw e }
+      verdicts
     }
   }
 

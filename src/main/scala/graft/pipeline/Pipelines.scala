@@ -191,17 +191,18 @@ object Pipelines {
       nVec: Long, nClean: Long, nMinhash: Long = -1L)
 
   /** Incremental-curate driver — ONE new batch through a chain of
-    * dedup registries in one call: quality floor → each of `lanes`, a
-    * `(registry table, lane)` list, as a [[graft.dedup.Registry.ingest]]
-    * on the previous lane's survivors → n-gram decontamination against
-    * a benchmark corpus. The chain order is fixed: exact → near →
-    * (minhash) → (vec); any other list is refused before a registry is
-    * touched. This is the operator a continuously-fed 100 TB corpus
-    * actually calls: the per-modality registries (q237/q241/q242) each
-    * dedup a batch alone; a real ingest chains them so every stage's
-    * input is the previous stage's survivors, and replaying batches in
-    * order equals a from-scratch curate of the union under the
-    * (batch_no, id) tie rule (the q244 oracle replays exactly that).
+    * dedup registries in one call: quality floor → `lanes`, a
+    * `(registry table, lane)` list, as one
+    * [[graft.dedup.Registry.ingestChain]] → n-gram decontamination
+    * against a benchmark corpus. The chain order is fixed: exact →
+    * near → (minhash) → (vec); any other list is refused before a
+    * registry is touched. This is the operator a continuously-fed
+    * 100 TB corpus actually calls: the per-modality registries
+    * (q237/q241/q242) each dedup a batch alone; a real ingest chains
+    * them so every stage's input is the previous stage's survivors,
+    * and replaying batches in order equals a from-scratch curate of
+    * the union under the (batch_no, id) tie rule (the q244 oracle
+    * replays exactly that).
     *
     * The batch TEXT is read ONCE: the first projection derives every
     * text-dependent column — length, distinct `n`-grams and each
@@ -219,10 +220,10 @@ object Pipelines {
     * on its other verdicts. Exact and near sign every text past the
     * quality floor.
     *
-    * Every lane's survivors, tagged with their lane, and the last
-    * lane's decontamination verdicts land in ONE cut, so the funnel
-    * counts are one aggregate over pinned frames and reading
-    * `survivors` afterwards is one job.
+    * The decontamination flag is computed in the chain's one verdict
+    * plan, so the batch makes two cuts — the projection and the
+    * verdicts — and the funnel counts are one aggregate over the
+    * verdicts and reading `survivors` afterwards is one job.
     *
     * Stage order is a documented choice: registries record their
     * stage's survivors BEFORE decontamination, so a future copy of a
@@ -263,66 +264,36 @@ object Pipelines {
             .as(l.sigCol)
         }): _*))
 
-    // the lane fold: a lane ingests the rows alive after the lane before
-    // it that it can sign; a row survives the lane if its registry kept
-    // it or the lane cannot sign it. Both id sets are batch-bounded, so
-    // the survivor semi-join broadcasts them.
-    val quality = derived.filter(col("__len") >= minChars)
-    val (survived, kept) = resolved.foldLeft(
-        Seq.empty[(DataFrame, DataFrame)]) { case (done, (reg, l)) =>
-      val alive = done.lastOption.fold(quality)(_._1)
-      val sig = col(l.sigCol)
-      val k = Registry.ingest(spark, l, reg, alive.filter(l.valid(sig))
-        .select(col("doc_id").as(l.idCol), sig), batchNo)
-      val passed = k.select(col(l.idCol).as("doc_id"))
-        .unionByName(quality.filter(!l.valid(sig)).select(col("doc_id")))
-      done :+ (alive.join(broadcast(passed), Seq("doc_id"), "left_semi") -> k)
-    }.unzip
-
     // decontamination: any shared distinct n-gram with the benchmark
     // flags the doc; the benchmark side is benchmark-bounded and
     // broadcasts (the q94 shape — a Bloom filter takes over when it
-    // stops fitting, decontaminateBloom)
+    // stops fitting, decontaminateBloom); each document then tests
+    // the batch-bounded flagged ids for its own
     val benchGrams = broadcast(bench
       .select(explode(array_distinct(TextFunctions.ngramsFast(
-        TextFunctions.tokens(col(benchTextCol)), n))).as("__g"))
-      .distinct())
-    val contaminated = survived.last
-      .select(col("doc_id"), explode(col("__grams")).as("__g"))
-      .join(benchGrams, Seq("__g"))
-      .select(col("doc_id"), lit(true).as("__dirty")).distinct()
-    // THE verdict pin: every lane's survivors, tagged with the lane, and
-    // the last lane's decontamination verdict. The lane chain and the
-    // decontamination join run once, here; the funnel below and every
-    // later read of `survivors` — the caller's corpus write — scan this
-    // pin (IngestBatchSpec pins one job per survivor read)
-    def staged(s: DataFrame, family: String, clean: Column) =
-      s.select(col("doc_id"), col("h"), col("simhash"),
-        lit(family).as("__stage"), clean.as("__clean"))
-    val verdicts = Pin.cut((families.zip(survived).init.map {
-      case (f, s) => staged(s, f, lit(false)) } :+
-      staged(survived.last.join(contaminated, Seq("doc_id"), "left_outer"),
-        families.last, col("__dirty").isNull))
-      .reduce(_.unionByName(_)))
+        TextFunctions.tokens(col(benchTextCol)), n))).as("__g")))
+    val quality = col("__len") >= minChars
+    val dirty = derived.filter(quality)
+      .select(col("doc_id").as("__d"), explode(col("__grams")).as("__g"))
+      .join(benchGrams, Seq("__g"), "left_semi")
+    val signed = derived.drop("__grams").withColumn("__dirty",
+      dirty.where(col("__d") === col("doc_id").outer()).exists())
+    val verdicts =
+      try Registry.ingestChain(spark, resolved, signed, batchNo, quality)
+      finally Pin.release(derived)
 
-    // every funnel count in ONE aggregate over the batch projection and
-    // the verdicts; the batch projection and the kept sets are released
-    // here, the verdicts cut by the caller
-    val funnel = derived.select(lit(true).as("in"),
-        (col("__len") >= minChars).as("quality"))
-      .unionByName(verdicts.select(families.map(f =>
-          (col("__stage") === f).as(f)) :+ col("__clean").as("clean"): _*),
-        allowMissingColumns = true)
-    val stages = funnel.columns.toSeq
+    // every funnel count in ONE aggregate over the verdicts
+    val clean = Registry.survived(lanes.last._2) && !col("__dirty")
+    val counts = Seq(lit(true), quality) ++
+      lanes.map(l => Registry.survived(l._2)) :+ clean
     val row =
-      try funnel.select(stages.map(s => count_if(col(s))): _*).head()
-      finally Pin.release(derived +: kept: _*)
-    val c = stages.zipWithIndex.map { case (s, i) => s -> row.getLong(i) }
-      .toMap
+      try verdicts.select(counts.map(count_if): _*).head()
+      catch { case e: Throwable => Pin.release(verdicts); throw e }
+    val c = (Seq("in", "quality") ++ families :+ "clean").zipWithIndex
+      .map { case (s, i) => s -> row.getLong(i) }.toMap
 
     IngestBatchResult(
-      verdicts.filter(col("__clean"))
-        .select(col("doc_id"), col("h"), col("simhash")),
+      verdicts.filter(clean).select(col("doc_id"), col("h"), col("simhash")),
       c("in"), c("quality"), c("exact"), c("near"), c(families.last),
       c("clean"), c.getOrElse("minhash", -1L))
   }
@@ -473,9 +444,11 @@ object PipelineDriver {
       bench.getOrElse(docs.limit(0)), "text", batchNo, minChars = 100)
     try r.survivors.write.mode(SaveMode.Overwrite).parquet(out)
     finally Pin.release(r.survivors)
+    val survived = Map("exact" -> r.nExact, "near" -> r.nNear,
+      "minhash" -> r.nMinhash, "vec" -> r.nVec)
     println(s"[ingest] batch=$batchNo in=${r.nIn} q=${r.nQuality} " +
-      s"exact=${r.nExact} near=${r.nNear} vec=${r.nVec} " +
-      s"clean=${r.nClean} compiled=${compiled - compiled0}")
+      lanes.map { case (_, l) => s"${l.family}=${survived(l.family)} " }
+        .mkString + s"clean=${r.nClean} compiled=${compiled - compiled0}")
     fs.mkdirs(committed.getParent)
     fs.create(committed).close()
     // opt-in self-maintenance (r14 verdict #6): the fileStats trigger

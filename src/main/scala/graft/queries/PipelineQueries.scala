@@ -317,7 +317,7 @@ object PipelineQueries extends QueryPack {
         .select((col("doc_id") + 600001L).as("doc_id"), col("text"),
           col("embedding"))
       // fixture prep, not operator cost: pin the 580-row demo corpus
-      // once at 2 partitions so the ~30 chained jobs per batch inside
+      // once at 2 partitions so the jobs per batch inside
       // ingestBatch run 2-task, not 32-task (the fixture join's
       // shuffle width) — production callers pass their natural
       // partitioning; the per-batch one-text-scan contract is

@@ -536,6 +536,68 @@ class RegistrySpec extends SparkSpec {
     Registry.releaseLock(spark, c) // no-op: token no longer present
   }
 
+  test("chain fencing: a lane whose lease is usurped between the verdict " +
+      "cut and its append fails the batch; the replay lands the verdicts " +
+      "of an uninterrupted run, with no duplicate registry row") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_test_reg"
+    val lanes = Seq("ex" -> Exact, "nr" -> Near(), "mh" -> Minhash(),
+      "vc" -> Vec())
+    def regs(tag: String) = lanes.map { case (dir, lane) =>
+      val name = s"graft_test_reg_chain${tag}_$dir"
+      Registry.create(spark, lane, name, s"$base/chain${tag}_$dir", 4)
+      name -> lane
+    }
+    val (cut, clean) = (regs("f"), regs("c"))
+    def text(salt: String) = (1 to 30).map(i => s"tk${salt}x$i").mkString(" ")
+    def vec(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      Array.fill(16)(r.nextFloat() - 0.5f)
+    }
+    val benchText = text("bench")
+    val b0 = Seq((1L, text("fa"), vec(1)), (2L, text("fb"), vec(2)))
+      .toDF("doc_id", "text", "embedding")
+    // exact, near, vec copies of batch 0, a contaminated and a novel doc
+    val b1 = Seq((10L, text("fa"), vec(3)),
+      (11L, text("fa").split(" ").reverse.mkString(" "), vec(4)),
+      (12L, text("fc"), vec(1)), (13L, text("fd") + " " + benchText, vec(5)),
+      (14L, text("fe"), vec(6))).toDF("doc_id", "text", "embedding")
+    val bench = Seq((0L, benchText)).toDF("doc_id", "text")
+    def ingest(chain: Seq[(String, Registry.Lane)], b: Int,
+        bch: org.apache.spark.sql.DataFrame) = {
+      val r = graft.pipeline.Pipelines.ingestBatch(spark, Seq(b0, b1)(b),
+        "doc_id", "text", chain, bch, "text", b, minChars = 100)
+      try (r.survivors.select($"doc_id").as[Long].collect().toSet,
+        (r.nIn, r.nQuality, r.nExact, r.nNear, r.nMinhash, r.nVec, r.nClean))
+      finally graft.ops.Pin.release(r.survivors)
+    }
+    ingest(clean, 0, bench)
+    val expected = ingest(clean, 1, bench)
+    ingest(cut, 0, bench)
+    // the benchmark is read inside the verdict plan, after every lease
+    // is taken and before any append: reading it hands the third
+    // lane's lock to another writer
+    val mhPath = s"$base/chainf_mh"
+    ChainFence.lock = Some(new java.io.File(s"$mhPath.lock").toPath)
+    val usurp = udf { (t: String) => ChainFence.usurp(); t }
+      .asNondeterministic()
+    val e = intercept[IllegalStateException] {
+      ingest(cut, 1, bench.withColumn("text", usurp(col("text"))))
+    }
+    assert(e.getMessage.contains("usurped"), e.getMessage)
+    assert(ChainFence.lock.isEmpty, "the lease was never usurped")
+    assert(spark.table(cut(2)._1).count() == spark.table(clean(2)._1)
+      .filter($"batch_no" === 0).count(), "the fenced lane appended")
+    Registry.breakLock(spark, mhPath) // the other writer is done
+    assert(ingest(cut, 1, bench) == expected,
+      "the replay must land the uninterrupted run's survivors and funnel")
+    cut.zip(clean).foreach { case ((f, _), (c, _)) =>
+      val rows = spark.table(f).collect().map(_.toString).toSeq
+      assert(rows.distinct.size == rows.size, s"$f holds a duplicate row")
+      assert(rows.sorted == spark.table(c).collect().map(_.toString)
+        .toSeq.sorted, s"$f differs from the uninterrupted $c")
+    }
+  }
+
   test("compact crash before the swap leaves the live registry intact " +
       "and serving; the staged version dir is inert until the pointer " +
       "lands; re-running compact completes; vacuum reclaims") {
@@ -1131,5 +1193,19 @@ class RegistrySpec extends SparkSpec {
     spark.sql(s"REFRESH TABLE ${name}_s")
     assert(rows(s"${name}_s") == rows(s"${name}_b"),
       "stream twin and direct ingest must build the same registry")
+  }
+}
+
+/** The chain-fencing case's other writer: the first [[usurp]] after
+  * `lock` is set overwrites that lock file with a foreign token.
+  */
+object ChainFence {
+  @volatile var lock: Option[java.nio.file.Path] = None
+  def usurp(): Unit = synchronized {
+    lock.foreach { p =>
+      java.nio.file.Files.write(p,
+        "token=another-writer t=0\n".getBytes("UTF-8"))
+      lock = None
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dedup.Registry
 import graft.dedup.Registry.{Exact, Minhash, Near, Vec}
+import graft.ops.Pin
 
 /** The incremental-curate driver's contract: every stage drops
   * exactly the docs its registry/gate owns, replaying batches equals
@@ -154,6 +155,47 @@ class IngestBatchSpec extends SparkSpec {
     assert(got == Set(1L, 2L))
     assert(jobs.get() == 1,
       s"reading the survivors launched ${jobs.get()} jobs")
+  }
+
+  test("one 4-lane ingestBatch call stays inside its job budget: the " +
+      "projection and the verdicts are its only cuts, and no lane adds " +
+      "a cut of its own") {
+    val (ex, nr, vc) = freshRegs("budget")
+    val mh = "graft_ib_mh_budget"
+    Registry.create(spark, Minhash(), mh, s"$tmp/graft_ib/budget/mh", 4)
+    val lanes = Seq(ex -> Exact, nr -> Near(), mh -> Minhash(), vc -> Vec())
+    val bench = Seq((0L, longText("bench"))).toDF("doc_id", "text")
+    val a = longText("ba")
+    Pin.release(Pipelines.ingestBatch(spark, Seq((1L, a, vec(1)),
+        (2L, longText("bb"), vec(2))).toDF("doc_id", "text", "embedding"),
+      "doc_id", "text", lanes, bench, "text", 0, minChars = 100).survivors)
+    val b1 = Seq((10L, a, vec(3)), (11L, longText("bc"), vec(1)),
+      (12L, longText("bd"), vec(4))).toDF("doc_id", "text", "embedding")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftListenerDrain.drain(sc)
+    sc.addSparkListener(counter)
+    val r = try {
+      val r = Pipelines.ingestBatch(spark, b1, "doc_id", "text", lanes,
+        bench, "text", 1, minChars = 100)
+      org.apache.spark.GraftListenerDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(counter)
+    try assert(r.survivors.select($"doc_id").as[Long].collect().toSet
+      == Set(12L))
+    finally Pin.release(r.survivors)
+    // the projection cut (1); the verdict cut with its benchmark and
+    // flagged-id broadcasts and, per lane, a probe-side and a hit-id
+    // broadcast and a representative-window shuffle (15); two per lane
+    // append (8); the funnel (2): 26
+    assert(jobs.get() <= 26,
+      s"one 4-lane ingestBatch call launched ${jobs.get()} jobs")
   }
 
   test("a NULL embedding skips the vector lane but the doc SURVIVES " +
